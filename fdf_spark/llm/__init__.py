@@ -14,7 +14,6 @@ document corpora.
 from fdf_spark.llm.classifier import score_logreg, train_logreg  # noqa: F401
 from fdf_spark.llm.decontam import decontaminate  # noqa: F401
 from fdf_spark.llm.dedup import (  # noqa: F401
-    distinct_gram_hashes,
     gram_hash_rows,
     exact_dedup,
     lsh_candidate_pairs,

@@ -14,12 +14,12 @@ Scale design (100 TB corpus vs a ~MB benchmark set):
   join — the corpus is never shuffled for the probe.
 - Corpus shingles join against the broadcast set map-side on the
   8-byte portable hash.
-- Per-document shingle dedup is map-LOCAL: hashes are computed and
-  ``array_distinct``-ed inside each row (:func:`distinct_gram_hashes`),
-  so no (doc, shingle) relation is ever shuffled; exploding the
-  already-distinct array is narrow, and the operator's only corpus
-  exchange is the final per-document aggregation, whose map-side
-  partial reduces each task's output to one row per document.
+- Per-document shingle dedup is map-LOCAL: each document's distinct
+  hashes come out of one Arrow pass (``dedup.gram_hash_rows``), so no
+  (doc, shingle) relation is ever shuffled, and the operator's only
+  corpus exchange is the final per-document aggregation, whose
+  map-side partial reduces each task's output to one row per
+  document.
 """
 
 from __future__ import annotations
@@ -37,7 +37,6 @@ def decontaminate(
     threshold: float = 0.2,
     text: str = "text",
     id_col: str = "doc_id",
-    gram_mode: str = "arrow",
 ) -> DataFrame:
     """Per-document benchmark-overlap profile.
 
@@ -47,23 +46,18 @@ def decontaminate(
     above ``threshold``. Documents with fewer than ``n`` words have no
     shingles and report a zero profile (never flagged).
     """
-    # per-document dedup is MAP-LOCAL (array_distinct inside the row,
-    # 8-byte hashes — a 2^-60 collision is mirrored by the oracle's
-    # identical hashing, never a mismatch); exploding an
-    # already-distinct array is narrow, so the only corpus exchange in
-    # the operator is the final per-document aggregation
-    # r15: both gram passes run in the Arrow tier by default (see
-    # dedup.gram_hash_rows — the interpreted HOF tree re-evaluates
-    # split(lower()) per gram; bit-identical, pinned). Plan shape
-    # downstream (broadcast probe join + one doc aggregation) unchanged.
-    corpus_sh = gram_hash_rows(docs, text=text, id_col=id_col, n=n, mode=gram_mode)
+    # per-document dedup is MAP-LOCAL (gram_hash_rows, 8-byte hashes —
+    # a 2^-60 collision is mirrored by the oracle's identical hashing,
+    # never a mismatch), so the only corpus exchange in the operator is
+    # the final per-document aggregation
+    corpus_sh = gram_hash_rows(docs, text=text, id_col=id_col, n=n)
     bench_src = (
         benchmark
         if id_col in benchmark.columns
         else benchmark.select(F.lit(0).cast("long").alias(id_col), F.col(text))
     )
     bench_sh = (
-        gram_hash_rows(bench_src, text=text, id_col=id_col, n=n, mode=gram_mode)
+        gram_hash_rows(bench_src, text=text, id_col=id_col, n=n)
         .select("sh")
         .distinct()
         .withColumn("__hit", F.lit(1))
@@ -100,7 +94,6 @@ def semantic_decontaminate_indexed(
     bench_vec: str = "bench_vec",
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
-    probe_mode: str = "expr",
 ) -> DataFrame:
     """Semantic decontamination against a PERSISTED IVF index
     (``llm/similarity.write_ivf_index``'s cell-partitioned layout) —
@@ -127,7 +120,7 @@ def semantic_decontaminate_indexed(
     from fdf_spark.llm.similarity import _ivf_index_probes, cosine
 
     probes, cells = _ivf_index_probes(
-        spark, index_path, benchmark, bench_id, bench_vec, nprobe, probe_mode
+        spark, index_path, benchmark, bench_id, bench_vec, nprobe
     )
     corpus = spark.read.parquet(f"{index_path}/corpus").filter(F.col("cell").isin(cells))
     scored = (
@@ -154,7 +147,6 @@ def semantic_decontaminate(
     corpus_vec: str = "embedding",
     bench_id: str = "bench_id",
     bench_vec: str = "bench_vec",
-    score_mode: str = "arrow",
 ) -> DataFrame:
     """Embedding-level decontamination — the SEMANTIC twin of the
     n-gram pass: a paraphrased or translated benchmark question shares
@@ -164,137 +156,63 @@ def semantic_decontaminate(
     Returns ``(corpus_id, best_bench, max_cos, contaminated)`` — each
     corpus vector's nearest benchmark item by cosine (ties to the
     smaller benchmark id), flagged at ``max_cos >= threshold``.  EVERY
-    corpus row gets a verdict: a row with no benchmark match (empty
-    benchmark set, or NULL cosine against every benchmark vector)
-    comes back ``(NULL, NULL, false)`` rather than silently vanishing —
-    a decontamination pass that DROPS unmatched rows would discard the
-    whole corpus on an empty benchmark (ADVICE r8).
+    corpus row gets exactly one verdict, duplicate ids included: a row
+    with no finite cosine (empty benchmark set, or NULL/NaN cosine
+    against every benchmark vector) comes back ``(NULL, NULL, false)``
+    rather than silently vanishing — a decontamination pass that DROPS
+    unmatched rows would discard the whole corpus on an empty
+    benchmark (ADVICE r8).
 
-    Scale shape (the same asymmetry the n-gram pass exploits): the
-    benchmark is thousands of items against a 100 TB corpus, so the
-    benchmark side BROADCASTS and the corpus embeddings are scanned
-    once and never shuffled — scoring is a map-side fold per (corpus
-    row, benchmark row) pair inside the broadcast join, the argmax is
-    an AGGREGATION (max-of-struct), not a window, and its map-side
-    partial already collapses each corpus row's |benchmark| scores to
-    one row, so the operator's single exchange carries one narrow
-    (id, best) row per corpus row — never the embeddings and never
-    the |corpus|x|benchmark| score relation.  For benchmark sets past
-    broadcast size, route through :func:`ivf_pq_ann_topk` with the
-    benchmark as queries instead.  Deterministic and
-    oracle-replayable: the cosine is the engine's portable 6-dp
-    expression (q153).
-
-    ``score_mode="arrow"`` (default, r15): the per-pair cosine fold is
-    an interpreted ``zip_with``/``aggregate`` HOF — |corpus|×|benchmark|
-    interpreted 64-dim passes; the Arrow tier scores each corpus batch
-    against the (tiny, collected — the same relation the broadcast
-    join shipped) benchmark matrix under the pinned ``_assign_arrow``
-    conventions (sequential dim accumulation, ``_round6_np``,
-    argmax-first over ascending bench ids == ties-to-smaller-id) and
-    emits one (id, best_bench, max_cos) row per matched corpus row —
-    the identical narrow relation the expression argmax aggregates
-    to, with ZERO corpus exchange (the expression plan's single
-    exchange is gone too).  Bit-identical, pinned in pytest + oracle;
-    ``score_mode="expr"`` keeps the expression plan.
+    The benchmark is collected EAGERLY while the plan is built (one
+    Spark job): it is thousands of items against a 100 TB corpus, so
+    it ships to every task as a small matrix.  Scoring is one Arrow
+    pass per corpus batch under the :func:`~fdf_spark.llm.similarity.cosine`
+    contract (``similarity._centroid_cosines``: sequential dim
+    accumulation, 6-dp ``F.round``-exact rounding); argmax-first over
+    ascending bench ids gives ties to the smaller id.  The corpus
+    embeddings are scanned once and never shuffled — the operator has
+    no exchange at all.
+    For benchmark sets too big to collect, route through
+    :func:`ivf_pq_ann_topk` with the benchmark as queries instead.
+    Deterministic and oracle-replayable (q153).
     """
-    from fdf_spark.llm.similarity import cosine
+    import numpy as np
+    import pandas as pd
 
-    if score_mode not in ("arrow", "expr"):
-        raise ValueError(f"unknown score_mode {score_mode!r}")
-    if score_mode == "arrow":
-        import numpy as np
-        import pandas as pd
+    from fdf_spark.llm.similarity import _centroid_cosines
 
-        from fdf_spark.llm.similarity import _round6_np
+    bench = [(r[0], r[1]) for r in benchmark.select(bench_id, bench_vec).collect()]
+    if bench:
+        ids, _, cos_to = _centroid_cosines(bench)  # ascending bench ids
 
-        rows = benchmark.select(bench_id, bench_vec).collect()
-        rows.sort(key=lambda r: r[0])
-        ids = np.array([r[0] for r in rows], dtype=np.int64)
-        bm = (
-            np.array([np.asarray(r[1], dtype=np.float64) for r in rows])
-            if rows
-            else np.zeros((0, 0))
-        )
-        k, d = bm.shape if rows else (0, 0)
-        bn = np.zeros(k)
-        for i in range(d):  # sequential fold == _norm
-            bn += bm[:, i] * bm[:, i]
-        bn = np.sqrt(bn)
-
-        def score(batches):
-            for pdf in batches:
-                if k == 0 or not len(pdf):
-                    yield pd.DataFrame(
-                        {
-                            corpus_id: pd.Series([], dtype="int64"),
-                            "best_bench": pd.Series([], dtype="int64"),
-                            "max_cos": pd.Series([], dtype="float64"),
-                        }
-                    )
-                    continue
-                x = np.array(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[corpus_vec]]
-                )
-                dot = np.zeros((len(pdf), k))
-                xn = np.zeros(len(pdf))
-                for i in range(d):  # sequential fold == _dot
-                    dot += x[:, i : i + 1] * bm[None, :, i]
-                    xn += x[:, i] * x[:, i]
+    def score(batches):
+        for pdf in batches:
+            n = len(pdf)
+            if not n:
+                continue
+            best, top = np.zeros(n, dtype=np.int64), np.full(n, -np.inf)
+            if bench:
+                x = np.array([np.asarray(v, dtype=np.float64) for v in pdf[corpus_vec]])
                 with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = dot / (np.sqrt(xn)[:, None] * bn[None, :])
-                cos = _round6_np(cos)
-                # the expression path filters NULL cosines before the
-                # argmax: mask non-finite scores; rows with no finite
-                # score emit nothing (the caller's left join re-attaches)
-                finite = np.isfinite(cos)
-                any_ok = finite.any(axis=1)
-                masked = np.where(finite, cos, -np.inf)
-                # argmax picks the FIRST max over ascending bench ids —
-                # the ties-to-smaller-id rule of max(struct(cos, -id))
+                    cos = cos_to(x)
+                # non-finite scores never win; argmax takes the FIRST max
+                # over ascending bench ids == ties to the smaller id
+                masked = np.where(np.isfinite(cos), cos, -np.inf)
                 j = np.argmax(masked, axis=1)
-                sel = np.flatnonzero(any_ok)
-                yield pd.DataFrame(
-                    {
-                        corpus_id: pdf[corpus_id].to_numpy()[sel],
-                        "best_bench": ids[j[sel]],
-                        "max_cos": masked[sel, j[sel]],
-                    }
-                )
+                best, top = ids[j], masked[np.arange(n), j]
+            hit = np.isfinite(top)  # no finite score → NULL, NULL, false
+            yield pd.DataFrame(
+                {
+                    corpus_id: pdf[corpus_id].to_numpy(),
+                    "best_bench": pd.Series(best, dtype="Int64").where(hit),
+                    "max_cos": pd.Series(top, dtype="Float64").where(hit),
+                }
+            )
 
-        id_type = corpus.schema[corpus_id].dataType.simpleString()
-        best = corpus.select(corpus_id, corpus_vec).mapInPandas(
-            score, schema=f"{corpus_id} {id_type}, best_bench long, max_cos double"
-        )
-        return corpus.select(corpus_id).join(best, corpus_id, "left").select(
-            corpus_id,
-            "best_bench",
-            "max_cos",
-            F.coalesce(F.col("max_cos") >= threshold, F.lit(False)).alias(
-                "contaminated"
-            ),
-        )
-
-    b = F.broadcast(benchmark.select(bench_id, bench_vec))
-    scored = corpus.select(corpus_id, corpus_vec).join(b).select(
-        corpus_id,
-        F.col(bench_id),
-        cosine(F.col(corpus_vec), F.col(bench_vec)).alias("cos"),
+    id_type = corpus.schema[corpus_id].dataType.simpleString()
+    best = corpus.select(corpus_id, corpus_vec).mapInPandas(
+        score, schema=f"{corpus_id} {id_type}, best_bench long, max_cos double"
     )
-    # per-row argmax as an aggregation (max over (cos, -bench_id)
-    # structs), NOT a window: no corpus exchange — ascending struct
-    # order on (cos, neg id) makes the max "highest cosine, ties to
-    # the smaller benchmark id"
-    best = scored.filter(F.col("cos").isNotNull()).groupBy(corpus_id).agg(
-        F.max(F.struct(F.col("cos"), (-F.col(bench_id)).alias("nid"))).alias("b")
-    )
-    # keyed by the CORPUS, not by rows that happened to score: the
-    # left join re-attaches unmatched corpus rows (empty benchmark /
-    # all-NULL cosines) with contaminated=false — still one narrow
-    # exchange, the argmax relation is ≤ |corpus| ids
-    return corpus.select(corpus_id).join(best, corpus_id, "left").select(
-        corpus_id,
-        (-F.col("b.nid")).cast("long").alias("best_bench"),
-        F.col("b.cos").alias("max_cos"),
-        F.coalesce(F.col("b.cos") >= threshold, F.lit(False)).alias("contaminated"),
+    return best.withColumn(
+        "contaminated", F.coalesce(F.col("max_cos") >= threshold, F.lit(False))
     )

@@ -23,7 +23,7 @@ hash (fdf_spark.llm.hashing) so DuckDB can replay them bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -102,34 +102,16 @@ def word_shingles(df: DataFrame, text: str = "text", id_col: str = "doc_id", n: 
     return out.distinct() if distinct else out
 
 
-def distinct_gram_hashes(text_col: Column, n: int) -> Column:
-    """Map-side column: the document's DISTINCT word-n-gram 60-bit
-    hashes as an array — hashing and per-document dedup both happen
-    inside the row (``transform`` + ``array_distinct``), so no
-    (doc, shingle) relation ever reaches an exchange. Exploding the
-    result is narrow; consumers pay only their own downstream shuffles.
-    """
-    words = F.split(F.lower(text_col), r"\s+")
-    idx = F.sequence(F.lit(1), F.size(words) - (n - 1))
-    grams = F.when(
-        F.size(words) >= n,
-        F.transform(
-            idx, lambda i: portable_hash60(F.concat_ws(" ", F.slice(words, i, n)))
-        ),
-    ).otherwise(F.array().cast("array<long>"))
-    return F.array_distinct(grams)
-
-
 def _py_gram_hashes(text: str | None, n: int):
-    """Per-document distinct gram hashes in Python, bit-identical to
-    :func:`distinct_gram_hashes` (pinned in pytest): ``re.ASCII`` makes
+    """Per-document DISTINCT word-n-gram hashes, first occurrence first
+    — the values the SQL oracles compute with ``split(lower(text),
+    '\\s+')`` + ``array_distinct`` over the portable md5 hash
+    (:func:`fdf_spark.llm.hashing.portable_hash60`): ``re.ASCII`` makes
     Python's ``\\s`` the same ``[ \\t\\n\\x0B\\f\\r]`` class Java regex
     uses by default (Spark's ``split``); ``str.lower`` matches
-    UTF8String's Locale.ROOT lowercase on the corpus envelope;
-    ``dict.fromkeys`` keeps first-occurrence order like
-    ``array_distinct``; the hash is the same md5 15-hex-digit prefix.
-    Row order is the only thing allowed to differ (consumers aggregate
-    or join; none is order-sensitive)."""
+    UTF8String's Locale.ROOT lowercase on the corpus envelope; the
+    hash is the same md5 15-hex-digit prefix.  ``None`` for a NULL
+    text, ``()`` for a document shorter than ``n`` words."""
     import hashlib
     import re
 
@@ -155,37 +137,22 @@ def gram_hash_rows(
     text: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    mode: str = "arrow",
     with_size: bool = False,
 ) -> DataFrame:
     """→ (``id_col``, [``sz``,] ``sh``): one row per DISTINCT word-n-gram
     hash of each document (``sz`` = the document's full distinct-set
     size, the jaccard denominator term — free at explode time).
 
-    ``mode="arrow"`` (default) computes the per-document gram hashing in
-    one vectorized Python pass (:func:`_py_gram_hashes`) instead of the
-    interpreted ``transform``/``array_distinct`` lambda tree — Spark
-    HOFs are CodegenFallback and get no common-subexpression
-    elimination, so the expression path re-evaluates ``split(lower())``
-    per gram; measured 7.2 s → 0.6 s on the sf0.1 corpus (guide §4.2).
-    Values are bit-identical (md5/byte-level pinned in pytest + both
-    DuckDB oracle SFs); ``mode="expr"`` keeps the expression plan.
+    One Arrow pass (:func:`_py_gram_hashes`) per document, map-side:
+    no (doc, gram) relation reaches an exchange, so consumers pay only
+    their own downstream shuffles.  NULL and shorter-than-``n``
+    documents yield no rows.
     """
-    if mode not in ("arrow", "expr"):
-        raise ValueError(f"unknown gram mode {mode!r}")
+    import pandas as pd
+
     from fdf_spark.sources.tables import spread
 
     src = spread(df)
-    if mode == "expr":
-        grams = src.select(
-            F.col(id_col), distinct_gram_hashes(F.col(text), n).alias("__g")
-        )
-        cols = [F.col(id_col)]
-        if with_size:
-            cols.append(F.size("__g").alias("sz"))
-        return grams.select(*cols, F.explode("__g").alias("sh"))
-
-    import pandas as pd
 
     def gen(batches):
         for pdf in batches:
@@ -419,7 +386,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.2,
     max_shingle_freq: int | None = DEFAULT_MAX_SHINGLE_FREQ,
-    gram_mode: str = "arrow",
 ) -> DataFrame:
     """N2 (exact): document pairs with word-n-gram Jaccard ≥ threshold.
 
@@ -436,8 +402,8 @@ def ngram_jaccard_pairs(
     # join on the 60-bit shingle hash, not the string: 8-byte shuffle/compare
     # keys instead of ~25-byte text (collisions are negligible at 2^60 and,
     # because the oracle hashes identically, exactly mirrored there).
-    # Per-document dedup is map-LOCAL (hash + array_distinct inside the
-    # row) — the old corpus-wide (id, sh) distinct exchange is gone.
+    # Per-document dedup is map-LOCAL (gram_hash_rows) — no corpus-wide
+    # (id, sh) distinct exchange.
     # r14: the document's shingle-set SIZE rides along each exploded row
     # (``size()`` of the same per-row array — free at explode time), so
     # the jaccard denominator needs NO per-id size aggregation and NO
@@ -450,12 +416,8 @@ def ngram_jaccard_pairs(
     # thins intersection candidates, so a capped shingle now lowers the
     # affected pair's jaccard instead of silently shrinking both set
     # sizes — strictly closer to the exact relation.
-    # r15: the gram-hash pass runs in the Arrow tier by default — the
-    # interpreted HOF tree was ~80% of this operator's cold cost (see
-    # gram_hash_rows; 10.5 s → 0.6 s for the pass at sf0.1, bit-identical,
-    # pinned). Plan shape downstream is unchanged.
     sh = gram_hash_rows(
-        df, text=text, id_col=id_col, n=n, mode=gram_mode, with_size=True
+        df, text=text, id_col=id_col, n=n, with_size=True
     ).withColumnRenamed(id_col, "id")
     if max_shingle_freq is not None:
         # frequency filter as an unbounded window count, not groupBy+join:
@@ -531,114 +493,57 @@ def minhash_signatures(
     id_col: str = "doc_id",
     num_hashes: int = 16,
     n: int = 3,
-    sig_mode: str = "arrow",
 ) -> DataFrame:
     """N2 (sketch): long-format MinHash signature → (id_col, seed, minhash).
 
     Universal-hash family over one base md5 hash per shingle:
     ``h_i(x) = (a_i*x + b_i) mod 2^31-1`` with ``x = md5_60(shingle) mod p``
-    — ONE expensive hash per shingle. r14: the whole signature is
-    computed INSIDE the row (one ``transform`` building the shingle
-    base-hash array, then per-coefficient ``array_min`` lambdas over
-    it) — a document never leaves its scan partition, so the old
-    explode → groupBy plan's shingle-row Generate, two HashAggregates
-    and doc-keyed Exchange are all gone (guide §2.4: zero shuffles
-    fundamentally required — minhash is a per-document quantity). min
-    over the shingle multiset == min over the distinct set, so no
-    distinct pass either. The base-hash array is materialized in its
-    own projection and referenced ONCE by the signature expression —
-    CollapseProject cannot duplicate the md5 work per coefficient.
-
-    r15: ``sig_mode="arrow"`` (default) computes the whole signature in
-    one vectorized Python pass — the per-gram md5 runs in C
+    — ONE expensive hash per shingle.  The whole signature is computed
+    inside one Arrow pass per document: the per-gram md5 runs in C
     (:func:`_py_gram_hashes`; min over the DISTINCT gram set == min
     over the multiset) and the ``num_hashes`` universal hashes are one
-    int64 numpy matrix op (``a·x+b < 2^62``: no overflow, same
-    arithmetic as the expression/oracle). Bit-identical, pinned in
-    pytest + oracle; ``sig_mode="expr"`` keeps the expression plan.
+    int64 numpy matrix op (``a·x+b < 2^62``: no overflow, the same
+    arithmetic as the SQL oracle).  A document never leaves its scan
+    partition — minhash is a per-document quantity, so no shuffle is
+    required; documents with no shingle yield no rows.
     """
-    if sig_mode not in ("arrow", "expr"):
-        raise ValueError(f"unknown sig mode {sig_mode!r}")
+    import numpy as np
+    import pandas as pd
+
     from fdf_spark.sources.tables import spread
 
-    if sig_mode == "arrow":
-        import numpy as np
-        import pandas as pd
+    A = np.array([minhash_coeff(i)[0] for i in range(num_hashes)], dtype=np.int64)
+    B = np.array([minhash_coeff(i)[1] for i in range(num_hashes)], dtype=np.int64)
+    seeds = np.arange(num_hashes, dtype=np.int32)
 
-        A = np.array([minhash_coeff(i)[0] for i in range(num_hashes)], dtype=np.int64)
-        B = np.array([minhash_coeff(i)[1] for i in range(num_hashes)], dtype=np.int64)
-        seeds = np.arange(num_hashes, dtype=np.int32)
-
-        def gen(batches):
-            for pdf in batches:
-                ids, seed_out, mins = [], [], []
-                for did, txt in zip(pdf[id_col], pdf[text]):
-                    hs = _py_gram_hashes(txt, n)
-                    if not hs:
-                        continue
-                    xs = np.fromiter(hs, dtype=np.int64, count=len(hs)) % MINHASH_P
-                    sig = ((A[:, None] * xs[None, :] + B[:, None]) % MINHASH_P).min(
-                        axis=1
-                    )
-                    ids.extend([did] * num_hashes)
-                    seed_out.append(seeds)
-                    mins.append(sig)
-                yield pd.DataFrame(
-                    {
-                        id_col: ids,
-                        "seed": np.concatenate(seed_out)
-                        if seed_out
-                        else np.array([], dtype=np.int32),
-                        "minhash": np.concatenate(mins)
-                        if mins
-                        else np.array([], dtype=np.int64),
-                    }
-                )
-
-        src = spread(df)
-        id_type = src.schema[id_col].dataType.simpleString()
-        return src.select(id_col, text).mapInPandas(
-            gen, schema=f"{id_col} {id_type}, seed int, minhash long"
-        )
-
-    words = F.split(F.lower(F.col(text)), r"\s+")
-    idx = F.sequence(F.lit(1), F.size(words) - (n - 1))
-    xs = F.when(
-        F.size(words) >= n,
-        F.transform(
-            idx,
-            lambda i: portable_hash60(F.concat_ws(" ", F.slice(words, i, n)))
-            % MINHASH_P,
-        ),
-    ).otherwise(F.array().cast("array<long>"))
-    coefs = F.array(
-        *[
-            F.struct(
-                F.lit(minhash_coeff(i)[0]).alias("a"),
-                F.lit(minhash_coeff(i)[1]).alias("b"),
+    def gen(batches):
+        for pdf in batches:
+            ids, seed_out, mins = [], [], []
+            for did, txt in zip(pdf[id_col], pdf[text]):
+                hs = _py_gram_hashes(txt, n)
+                if not hs:
+                    continue
+                xs = np.fromiter(hs, dtype=np.int64, count=len(hs)) % MINHASH_P
+                sig = ((A[:, None] * xs[None, :] + B[:, None]) % MINHASH_P).min(axis=1)
+                ids.extend([did] * num_hashes)
+                seed_out.append(seeds)
+                mins.append(sig)
+            yield pd.DataFrame(
+                {
+                    id_col: ids,
+                    "seed": np.concatenate(seed_out)
+                    if seed_out
+                    else np.array([], dtype=np.int32),
+                    "minhash": np.concatenate(mins)
+                    if mins
+                    else np.array([], dtype=np.int64),
+                }
             )
-            for i in range(num_hashes)
-        ]
-    )
-    sig = F.transform(
-        coefs,
-        lambda c: F.array_min(
-            F.transform(F.col("__xs"), lambda x: (c["a"] * x + c["b"]) % MINHASH_P)
-        ),
-    )
-    return (
-        spread(df)
-        .select(F.col(id_col), xs.alias("__xs"))
-        .select(F.col(id_col), F.posexplode(sig).alias("seed", "minhash"))
-        # a doc with no shingle produced no group in the old explode →
-        # groupBy plan, hence no output rows; here it yields 16 null
-        # mins (array_min of the empty base-hash array) — drop them
-        # ABOVE the Generate, where the predicate touches only the
-        # generated column (a pre-projection filter on size(__xs) gets
-        # pushed below the md5 projection and re-evaluates the whole
-        # hash array per row — measured as a doubled md5 node in the
-        # plan)
-        .filter(F.col("minhash").isNotNull())
+
+    src = spread(df)
+    id_type = src.schema[id_col].dataType.simpleString()
+    return src.select(id_col, text).mapInPandas(
+        gen, schema=f"{id_col} {id_type}, seed int, minhash long"
     )
 
 

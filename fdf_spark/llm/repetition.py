@@ -9,10 +9,10 @@ keep/drop pipeline every corpus pass runs, attributing each dropped
 document to the FIRST rule it fails (so rule counts are disjoint and
 sum to total − kept, like a real funnel report).
 
-Scale: one explode + (doc_id, gram) groupBy per n-gram order — the
-same shuffle shape as word_shingles; per-doc outputs re-aggregate
-map-side. The funnel is a single conditional aggregation over the
-stats relation (no per-rule passes).
+Scale: the per-document counters come out of one Arrow pass inside
+each scan partition — no (doc, gram) explode and no exchange. The
+funnel is a single conditional aggregation over the stats relation
+(no per-rule passes).
 """
 
 from __future__ import annotations
@@ -22,9 +22,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 
-def repetition_stats(
-    df: DataFrame, text: str = "text", id_col: str = "doc_id", mode: str = "arrow"
-) -> DataFrame:
+def repetition_stats(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Per-document repetition profile → (id_col, n_words,
     dup_word_ratio, top_2gram_frac, dup_2gram_frac), ratios rounded to
     6 dp (oracle-portable int/int divisions).
@@ -37,94 +35,61 @@ def repetition_stats(
 
     Documents with fewer than 2 words have no 2-grams → null fracs.
 
-    ``mode="arrow"`` (default, r15): all five counters are per-document
-    quantities, so they compute in ONE Python pass inside the row's
-    partition — no interpreted 2-gram ``transform`` (CodegenFallback),
-    no (doc, gram) explode, no exchanges at all (the expression plan
-    shuffled the exploded gram relation twice). Counts are exact ints
-    either way and the ratio arithmetic/rounding stays in the JVM —
-    bit-identical, pinned in pytest + oracle. ``mode="expr"`` keeps the
-    expression plan.
+    Words are ``split(lower(text), '\\s+')`` with Java's ASCII ``\\s``
+    (leading/trailing empties count, as in the SQL oracle).  All five
+    counters are exact per-document ints computed in ONE Python pass
+    inside the row's partition — no exchange at all; the ratio
+    arithmetic and rounding stay in the JVM.
     """
-    if mode not in ("arrow", "expr"):
-        raise ValueError(f"unknown repetition mode {mode!r}")
+    import pandas as pd
+
     from fdf_spark.sources.tables import spread
 
-    if mode == "arrow":
-        import pandas as pd
+    def counters(batches):
+        import re
 
-        def counters(batches):
-            import re
+        ws = re.compile(r"\s+", re.ASCII)
+        for pdf in batches:
+            ids, nw, nd, t2, top2, d2 = [], [], [], [], [], []
+            for did, txt in zip(pdf[id_col], pdf[text]):
+                ids.append(did)
+                if txt is None:
+                    nw.append(None); nd.append(None)
+                    t2.append(None); top2.append(None); d2.append(None)
+                    continue
+                w = ws.split(txt.lower())
+                nw.append(len(w))
+                nd.append(len(set(w)))
+                if len(w) >= 2:
+                    counts: dict[str, int] = {}
+                    for i in range(len(w) - 1):
+                        g = w[i] + " " + w[i + 1]
+                        counts[g] = counts.get(g, 0) + 1
+                    t2.append(len(w) - 1)
+                    top2.append(max(counts.values()))
+                    d2.append(len(counts))
+                else:
+                    t2.append(None); top2.append(None); d2.append(None)
+            yield pd.DataFrame(
+                {
+                    id_col: ids,
+                    "n_words": pd.Series(nw, dtype="Int32"),
+                    "n_distinct_words": pd.Series(nd, dtype="Int32"),
+                    "total2": pd.Series(t2, dtype="Int64"),
+                    "top2": pd.Series(top2, dtype="Int64"),
+                    "distinct2": pd.Series(d2, dtype="Int64"),
+                }
+            )
 
-            ws = re.compile(r"\s+", re.ASCII)
-            for pdf in batches:
-                ids, nw, nd, t2, top2, d2 = [], [], [], [], [], []
-                for did, txt in zip(pdf[id_col], pdf[text]):
-                    ids.append(did)
-                    if txt is None:
-                        nw.append(None); nd.append(None)
-                        t2.append(None); top2.append(None); d2.append(None)
-                        continue
-                    w = ws.split(txt.lower())
-                    nw.append(len(w))
-                    nd.append(len(set(w)))
-                    if len(w) >= 2:
-                        counts: dict[str, int] = {}
-                        for i in range(len(w) - 1):
-                            g = w[i] + " " + w[i + 1]
-                            counts[g] = counts.get(g, 0) + 1
-                        t2.append(len(w) - 1)
-                        top2.append(max(counts.values()))
-                        d2.append(len(counts))
-                    else:
-                        t2.append(None); top2.append(None); d2.append(None)
-                yield pd.DataFrame(
-                    {
-                        id_col: ids,
-                        "n_words": pd.Series(nw, dtype="Int32"),
-                        "n_distinct_words": pd.Series(nd, dtype="Int32"),
-                        "total2": pd.Series(t2, dtype="Int64"),
-                        "top2": pd.Series(top2, dtype="Int64"),
-                        "distinct2": pd.Series(d2, dtype="Int64"),
-                    }
-                )
-
-        src = spread(df)
-        id_type = src.schema[id_col].dataType.simpleString()
-        out = src.select(id_col, text).mapInPandas(
-            counters,
-            schema=(
-                f"{id_col} {id_type}, n_words int, n_distinct_words int,"
-                " total2 long, top2 long, distinct2 long"
-            ),
-        )
-    else:
-        words = F.split(F.lower(F.col(text)), r"\s+")
-        base = spread(df).select(F.col(id_col), words.alias("w"))
-        uni = base.select(
-            id_col,
-            F.size("w").alias("n_words"),
-            F.size(F.array_distinct("w")).alias("n_distinct_words"),
-        )
-        grams = base.select(
-            F.col(id_col),
-            F.explode(
-                F.when(
-                    F.size("w") >= 2,
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("w") - 1),
-                        lambda i: F.concat_ws(" ", F.slice(F.col("w"), i, 2)),
-                    ),
-                ).otherwise(F.array().cast("array<string>"))
-            ).alias("gram"),
-        )
-        per_gram = grams.groupBy(id_col, "gram").agg(F.count(F.lit(1)).alias("c"))
-        per_doc = per_gram.groupBy(id_col).agg(
-            F.sum("c").alias("total2"),
-            F.max("c").alias("top2"),
-            F.count(F.lit(1)).alias("distinct2"),
-        )
-        out = uni.join(per_doc, id_col, "left")
+    src = spread(df)
+    id_type = src.schema[id_col].dataType.simpleString()
+    out = src.select(id_col, text).mapInPandas(
+        counters,
+        schema=(
+            f"{id_col} {id_type}, n_words int, n_distinct_words int,"
+            " total2 long, top2 long, distinct2 long"
+        ),
+    )
     return out.select(
         id_col,
         "n_words",

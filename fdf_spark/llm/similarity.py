@@ -59,76 +59,110 @@ def _round6_np(a):
     on the shortest repr — so a value whose shortest decimal repr
     terminates exactly at a 7th-digit 5 (e.g. ``5e-07``: scaled binary
     product is 0.4999…94, floors DOWN; BigDecimal rounds UP) can
-    diverge.  Elements within ~an ulp of a half boundary therefore take
-    a scalar fixup through Python ``Decimal(repr(x))`` —
-    ``repr``/``Double.toString`` are both shortest-round-trip and
-    ``ROUND_HALF_UP`` matches Java's (away from zero) — which replays
-    the JVM result bit-for-bit.  The band is empty on real cosine/L2
-    folds (pytest boundary pin + two-SF oracle sweeps), so the hot path
-    stays one vectorized pass."""
+    diverge.  Elements the fast path cannot decide (:func:`_exact6_mask`)
+    therefore take a scalar fixup through Python ``Decimal(repr(x))``
+    (:func:`_half_up6`) — ``repr``/``Double.toString`` are both
+    shortest-round-trip and ``ROUND_HALF_UP`` matches Java's (away from
+    zero) — which replays the JVM result bit-for-bit.  The band is
+    empty on real cosine/L2 folds (pytest boundary pin + two-SF oracle
+    sweeps), so the hot path stays one vectorized pass.  Non-finite
+    elements pass through."""
+    import numpy as np
+    from decimal import Decimal
+
+    a = np.asarray(a, dtype=np.float64)
+    with np.errstate(invalid="ignore"):
+        r = np.sign(a) * np.floor(np.abs(a) * 1e6 + 0.5) / 1e6
+        fix = _exact6_mask(a) & np.isfinite(a)
+    if fix.any():
+        r[fix] = [float(Decimal(_half_up6(float(v))).scaleb(-6)) for v in a[fix]]
+    return r
+
+
+def _exact6_mask(a):
+    """Elements where ``floor(|x|·1e6 + 0.5)`` may disagree with
+    :func:`_half_up6`: |x|·1e6 at or past 2^53 (no longer an exact
+    float integer; includes inf/nan), or within the float error of a
+    half boundary.  That error is the repr-vs-binary gap plus the
+    product's rounding, each ≤ |x|·1e6·2^-53, so the band grows with
+    the magnitude (a fixed band misses e.g. ``518.6913645``)."""
     import numpy as np
 
-    r = np.sign(a) * np.floor(np.abs(a) * 1e6 + 0.5) / 1e6
     y = np.abs(a) * 1e6
-    frac = y - np.floor(y)
-    near = (np.abs(frac - 0.5) < 1e-8) & np.isfinite(a)
-    if near.any():
-        from decimal import ROUND_HALF_UP, Decimal
+    band = np.maximum(1e-8, y * 2.0**-50)
+    return ~(y < 2.0**53) | (np.abs(y - np.floor(y) - 0.5) < band)
 
-        q = Decimal("0.000001")
-        r[near] = [
-            float(Decimal(repr(float(v))).quantize(q, rounding=ROUND_HALF_UP))
-            for v in np.asarray(a)[near]
-        ]
-    return r
+
+def _half_up6(v: float) -> int:
+    """``round6(v) × 1e6`` exactly: HALF_UP (away from zero, like
+    Java's) at 6 dp of ``Decimal(repr(v))``, the decimal Spark casts
+    and rounds."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return int(Decimal(repr(v)).scaleb(6).to_integral_value(rounding=ROUND_HALF_UP))
 
 
 def _scaled6_int_np(a):
     """Vectorized int64 of ``round6(x) × 1e6`` — the exact integer
     behind Spark's ``cast(double AS decimal(p,6))`` (HALF_UP at 6 dp of
     the shortest repr, the same contract :func:`_round6_np` pins).
-    Same fast path + half-boundary Decimal fixup; used by the Arrow
-    mean-partials tier so per-partition sums are plain int64 adds."""
+    The mean-partials kernels sum these as plain int64 adds.
+
+    Envelope: the float fast path is exact only while |x|·1e6 < 2^53
+    and away from a half boundary; every other element
+    (:func:`_exact6_mask`) takes its integer from ``Decimal(repr(x))``
+    without passing through float64.  A non-finite element, or one
+    whose integer leaves int64, raises ``ValueError``."""
     import numpy as np
 
-    y = np.abs(a) * 1e6
-    k = np.floor(y + 0.5)
-    frac = y - np.floor(y)
-    near = (np.abs(frac - 0.5) < 1e-8) & np.isfinite(a)
-    if near.any():
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q = Decimal("0.000001")
-        k[near] = [
-            float(
-                Decimal(repr(abs(float(v)))).quantize(q, rounding=ROUND_HALF_UP)
-                * 1_000_000
-            )
-            for v in np.asarray(a)[near]
-        ]
-    return (np.sign(a) * k).astype(np.int64)
+    a = np.asarray(a, dtype=np.float64)
+    with np.errstate(invalid="ignore"):
+        fix = _exact6_mask(a)
+        fast = np.sign(a) * np.floor(np.abs(a) * 1e6 + 0.5)
+        out = np.where(fix, 0.0, fast).astype(np.int64)
+    if fix.any():
+        out[fix] = [_scaled6_int_exact(float(v)) for v in a[fix]]
+    return out
 
 
-def _cell_means_arrow(assigned: DataFrame, corpus_vec: str, dim: int):
-    """Per-cell per-dimension decimal-exact means, Arrow tier →
+def _scaled6_int_exact(v: float) -> int:
+    """:func:`_half_up6` inside the int64 envelope; raises outside it."""
+    k = _half_up6(v) if math.isfinite(v) else None
+    if k is None or abs(k) >= 2**63:
+        raise ValueError(
+            f"_scaled6_int_np: {v!r} is outside the scaled-6-dp envelope "
+            "(finite, |round6(x)·1e6| < 2^63)"
+        )
+    return k
+
+
+def _int64_colsum(s):
+    """Column sums of a block of :func:`_scaled6_int_np` integers;
+    raises instead of letting an int64 sum wrap."""
+    import numpy as np
+
+    if len(s) and int(np.abs(s).max()) > (2**63 - 1) // len(s):
+        raise ValueError(
+            f"scaled-6-dp partial sum of {len(s)} rows may leave int64 "
+            f"(max |round6(x)·1e6| = {int(np.abs(s).max())})"
+        )
+    return s.sum(axis=0, dtype=np.int64)
+
+
+def _cell_means(assigned: DataFrame, corpus_vec: str, dim: int):
+    """Per-cell per-dimension decimal-exact means →
     sorted ``[(cell, [mean_0..mean_dim-1]), ...]``.
 
-    Numerically identical to the ``cast(sum(cast(x as decimal(*,6)))
-    as double) / count(*)`` expression aggregate (pinned in pytest):
-    each element contributes its 6-dp HALF_UP decimal
-    (:func:`_scaled6_int_np` — an exact scaled int64), per-BATCH sums
-    stay within int64 (10k-row batches × |scaled| ≤ 1e12), cross-batch
+    The values are those of the SQL aggregate
+    ``cast(sum(cast(x as decimal(25,6))) as double) / count(*)`` the
+    oracle replays: each element contributes its 6-dp HALF_UP decimal
+    (:func:`_scaled6_int_np` — an exact scaled int64), per-batch sums
+    are int64 adds guarded by :func:`_int64_colsum`, cross-batch
     totals accumulate as Python ints (unbounded), and the final
-    ``float(Decimal(total).scaleb(-6)) / n`` replays the JVM's
-    decimal→double nearest rounding then double division.  Why: the
-    expression form plans+codegens ``dim`` aggregate columns per Lloyd
-    iteration — 1.24 s per iteration at 64 dims on a 2k-row fixture,
-    ~all of it driver/codegen, none of it data (r15 measurement) —
-    while this tier ships one (cell, n, sums) row per cell per batch
-    (KB; the same O(cells×dim) driver state the model collect already
-    is).  Shuffle shape at scale: NO exchange at all — partials ride
-    the collect, the same contract as the expression groupBy's
-    map-side combine."""
+    ``float(Decimal(total).scaleb(-6)) / n`` replays the decimal→double
+    nearest rounding then double division.  One (cell, n, sums) row
+    per cell per batch reaches the driver (KB; the same O(cells×dim)
+    state the model collect already is), and there is no exchange."""
     import numpy as np
     import pandas as pd
 
@@ -144,7 +178,7 @@ def _cell_means_arrow(assigned: DataFrame, corpus_vec: str, dim: int):
                 m = cells == c
                 out_c.append(int(c))
                 out_n.append(int(m.sum()))
-                out_s.append(s[m].sum(axis=0, dtype=np.int64))
+                out_s.append(_int64_colsum(s[m]))
             yield pd.DataFrame({"cell": out_c, "n": out_n, "sums": out_s})
 
     parts = assigned.select("cell", corpus_vec).mapInPandas(
@@ -220,67 +254,61 @@ def knn_predict(
     )
 
 
-def _cell_scores(vec: Column, cents: list[tuple[int, list[float]]]) -> Column:
-    """array<struct<neg_sim, cent_id>> of (−cosine, id) per centroid.
+def _centroid_cosines(cents):
+    """``(ids, C, cos_to)`` over the centroids in ascending-id order:
+    ``cos_to(x)`` is the (rows, cells) cosine matrix of a float64 batch
+    against ``C`` under the :func:`cosine` contract — dot and norms
+    accumulate SEQUENTIALLY over dimensions, the division is
+    ``dot / (norm(x) * norm(c))``, and the result rounds 6 dp exactly
+    like ``F.round`` (:func:`_round6_np`)."""
+    import numpy as np
 
-    Negated similarity so that plain ascending struct ordering
-    (array_min / array_sort) means "most similar first, ties to the
-    smaller centroid id" — the same order the oracle's
-    ``ROW_NUMBER() ... ORDER BY cos DESC, cent_id`` produces.
-    """
-    return F.array(
-        *[
-            F.struct(
-                (-cosine(vec, _lit_vec(cvec))).alias("neg_sim"),
-                F.lit(int(cid)).cast("long").alias("cent_id"),
-            )
-            for cid, cvec in cents
-        ]
-    )
+    order = sorted(range(len(cents)), key=lambda i: cents[i][0])
+    ids = np.array([cents[i][0] for i in order], dtype=np.int64)
+    C = np.array([cents[i][1] for i in order], dtype=np.float64)  # (k, d)
+    d = C.shape[1]
+    cn = np.zeros(len(ids))
+    for i in range(d):  # sequential fold == _norm
+        cn += C[:, i] * C[:, i]
+    cn = np.sqrt(cn)
+
+    def cos_to(x):
+        dot = np.zeros((len(x), len(ids)))
+        xn = np.zeros(len(x))
+        for i in range(d):  # sequential fold == _dot / _norm
+            dot += x[:, i : i + 1] * C[None, :, i]
+            xn += x[:, i] * x[:, i]
+        return _round6_np(dot / (np.sqrt(xn)[:, None] * cn[None, :]))
+
+    return ids, C, cos_to
 
 
-def _assign_arrow(
+def _assign(
     corpus: DataFrame,
     cents: list[tuple[int, list[float]]],
     corpus_id: str,
     corpus_vec: str,
 ) -> DataFrame:
-    """Arrow-batched nearest-centroid assignment, numerically identical
-    to the ``_cell_scores`` expression path: dot/norm accumulation runs
-    SEQUENTIALLY over dimensions (matching the zip_with fold), cosine
-    rounds 6 dp half-away-from-zero (matching F.round/HALF_UP), and
-    argmax-first-occurrence over ascending-id centroids reproduces the
-    ties-to-smaller-centroid rule.  Measured ~7x end-to-end on a 2-iter
-    kmeans_refine (200k vecs/30.5 s expr vs 1M/22.3 s arrow; the
-    cells*dim lambda tree falls out of codegen, numpy does not).
-    Equivalence is pytest-asserted on the fixtures."""
+    """Arrow-batched nearest-centroid assignment → (id, vec, cell).
+
+    Numeric contract (the one the SQL oracles replay): dot/norm
+    accumulate SEQUENTIALLY over dimensions (the :func:`cosine` fold
+    order), cosine rounds 6 dp exactly like ``F.round``
+    (:func:`_round6_np`), and argmax-first-occurrence over
+    ascending-id centroids gives ties to the smaller centroid id."""
     import numpy as np
     import pandas as pd
 
-    order = sorted(range(len(cents)), key=lambda i: cents[i][0])
-    ids = np.array([cents[i][0] for i in order], dtype=np.int64)
-    c = np.array([cents[i][1] for i in order], dtype=np.float64)  # (k, d)
-    d = c.shape[1]
-    cn = np.zeros(len(ids))
-    for i in range(d):  # sequential fold == _norm
-        cn += c[:, i] * c[:, i]
-    cn = np.sqrt(cn)
+    ids, _, cos_to = _centroid_cosines(cents)
 
     def assign(batches):
         for pdf in batches:
             x = np.array([np.asarray(v, dtype=np.float64) for v in pdf[corpus_vec]])
-            dot = np.zeros((len(pdf), len(ids)))
-            xn = np.zeros(len(pdf))
-            for i in range(d):
-                dot += x[:, i : i + 1] * c[None, :, i]
-                xn += x[:, i] * x[:, i]
-            cos = dot / (np.sqrt(xn)[:, None] * cn[None, :])
-            cos = _round6_np(cos)  # 6 dp, F.round-exact incl. half boundaries
             yield pd.DataFrame(
                 {
                     corpus_id: pdf[corpus_id],
                     corpus_vec: pdf[corpus_vec],
-                    "cell": ids[np.argmax(cos, axis=1)],
+                    "cell": ids[np.argmax(cos_to(x), axis=1)],
                 }
             )
 
@@ -305,14 +333,14 @@ def all_pairs_cosine(
     projection: measured 187 s → 1.0 s at 2 k vectors / sf0.1 with
     bit-identical output).
 
-    Numeric contract (the same one :func:`_assign_arrow` pins):
+    Numeric contract (the same one :func:`_assign` pins):
     elements widen to float64 exactly like the fold's per-element
     ``cast("double")``; dot/norm accumulate SEQUENTIALLY over
     dimensions (one fused multiply-add per dim — IEEE-identical to the
     zip_with/aggregate left fold); cosine divides by
     ``norm(a) * norm(b)`` in that order and rounds 6 dp
     half-away-from-zero, matching ``F.round``/HALF_UP. Equality with
-    the expression path is pytest-pinned (test_llm).
+    the :func:`cosine` expression is pytest-pinned (test_llm).
 
     Scale shape: all-pairs is the EXACT tier — quadratic because the
     answer is (every qualifying pair must be scored); at 100 TB the
@@ -391,7 +419,6 @@ def ivf_assign(
     num_cells: int = 16,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
-    assign_mode: str = "expr",
 ) -> tuple[list[tuple[int, list[float]]], DataFrame]:
     """IVF index build: (centroids, corpus-with-cell).
 
@@ -399,32 +426,16 @@ def ivf_assign(
     deterministic, so the whole index replays in a SQL oracle (a
     k-means refinement would drop in here at scale without changing
     the query shape). They are collected to the driver (tiny: cells ×
-    dim floats) and shipped as literals, making assignment a pure
-    per-row expression — the corpus is scanned once and NEVER
-    shuffled (the join+window formulation would hash-exchange the
-    whole corpus on row id just to run a per-row argmin).
-    ``assign_mode="arrow"`` swaps the expression argmin for the
-    numerically-identical numpy path (:func:`_assign_arrow`) — the
-    throughput tier for big cells×dim products.
+    dim floats) and shipped to the per-batch numpy argmin
+    (:func:`_assign`) — the corpus is scanned once and NEVER shuffled
+    (the join+window formulation would hash-exchange the whole corpus
+    on row id just to run a per-row argmin).
     """
     cents = [
         (r[corpus_id], list(r[corpus_vec]))
         for r in corpus.orderBy(corpus_id).limit(num_cells).select(corpus_id, corpus_vec).collect()
     ]
-    assigned = _assign(corpus, cents, corpus_id, corpus_vec, assign_mode)
-    return cents, assigned
-
-
-def _assign(corpus, cents, corpus_id, corpus_vec, assign_mode):
-    if assign_mode == "arrow":
-        return _assign_arrow(corpus, cents, corpus_id, corpus_vec)
-    if assign_mode != "expr":
-        raise ValueError(f"unknown assign_mode {assign_mode!r}")
-    return corpus.select(
-        corpus_id,
-        corpus_vec,
-        F.array_min(_cell_scores(F.col(corpus_vec), cents))["cent_id"].alias("cell"),
-    )
+    return cents, _assign(corpus, cents, corpus_id, corpus_vec)
 
 
 def ivf_ann_topk(
@@ -438,8 +449,6 @@ def ivf_ann_topk(
     query_vec: str = "query_vec",
     corpus_vec: str = "embedding",
     exclude_self: bool = True,
-    assign_mode: str = "expr",
-    probe_mode: str = "expr",
 ) -> DataFrame:
     """Approximate top-k via an inverted-file (IVF) coarse quantizer.
 
@@ -449,24 +458,10 @@ def ivf_ann_topk(
     partitioned by ``cell`` so a probe is a partition-pruned scan; in
     one plan (here) the probe set broadcasts onto an unshuffled corpus
     scan. Deterministic centroids ⇒ unlike LSH, this variant has a
-    full DuckDB oracle (q73). ``assign_mode="arrow"`` swaps the
-    cell-assignment argmin for the numerically-identical Arrow tier
-    (the right choice once cells×dim outgrows codegen — see
-    :func:`ivf_assign`).
+    full DuckDB oracle (q73).
     """
-    cents, assigned = ivf_assign(corpus, num_cells, corpus_id, corpus_vec, assign_mode)
-    if probe_mode not in ("expr", "arrow"):
-        raise ValueError(f"unknown probe_mode {probe_mode!r}")  # ADVICE r14
-    if probe_mode == "arrow":
-        probes = _cells_arrow(queries, cents, nprobe, query_id, query_vec)
-    else:
-        probes = queries.select(
-            query_id,
-            query_vec,
-            F.explode(
-                F.slice(F.array_sort(_cell_scores(F.col(query_vec), cents)), 1, nprobe)
-            ).alias("__pr"),
-        ).select(query_id, query_vec, F.col("__pr")["cent_id"].alias("cell"))
+    cents, assigned = ivf_assign(corpus, num_cells, corpus_id, corpus_vec)
+    probes = _probe_cells(queries, cents, nprobe, query_id, query_vec)
     cand = assigned.join(F.broadcast(probes), "cell")
     if exclude_self:
         cand = cand.filter(F.col(query_id) != F.col(corpus_id))
@@ -485,7 +480,6 @@ def semantic_dedup(
     threshold: float = 0.3,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
-    assign_mode: str = "expr",
 ) -> DataFrame:
     """Embedding-level near-duplicate removal (N14) — SemDeDup,
     Abbas et al. 2023 (arXiv:2303.09540): cluster the corpus coarsely,
@@ -494,9 +488,9 @@ def semantic_dedup(
     duplicate group (smallest id — the same survivor rule as the
     text-level ``near_dedup``). Returns surviving (corpus_id, cell).
 
-    Scale shape: cell assignment reuses :func:`ivf_assign` (centroid
-    literals, corpus scanned once, NO shuffle); the pairwise stage is
-    an equi-join on ``cell`` — cluster-bounded Σ|cell|² work, never an
+    Scale shape: cell assignment reuses :func:`ivf_assign` (centroids
+    on the driver, corpus scanned once, NO shuffle); the pairwise stage
+    is an equi-join on ``cell`` — cluster-bounded Σ|cell|² work, never an
     all-pairs corpus join, exactly the trick that makes SemDeDup
     tractable where a global pairwise pass is not. At 100 TB,
     ``num_cells`` scales with the corpus so a cell stays ~constant
@@ -506,7 +500,7 @@ def semantic_dedup(
     import numpy as np
     import pandas as pd
 
-    _, assigned = ivf_assign(corpus, num_cells, corpus_id, corpus_vec, assign_mode)
+    _, assigned = ivf_assign(corpus, num_cells, corpus_id, corpus_vec)
 
     # Within-cell pairwise stage, vectorized (r14): the old cell-keyed
     # self-join scored every within-cell pair with the interpreted HOF
@@ -556,7 +550,6 @@ def write_ivf_index(
     num_cells: int = 16,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
-    assign_mode: str = "expr",
 ) -> None:
     """Materialize the IVF index as a **cell-partitioned** parquet layout.
 
@@ -568,7 +561,7 @@ def write_ivf_index(
     """
     from fdf_spark.sources.tables import local_df
 
-    cents, assigned = ivf_assign(corpus, num_cells, corpus_id, corpus_vec, assign_mode)
+    cents, assigned = ivf_assign(corpus, num_cells, corpus_id, corpus_vec)
     assigned.write.partitionBy("cell").mode("overwrite").parquet(f"{path}/corpus")
     spark = corpus.sparkSession
     # r14: Arrow-backed local frame — coalesce(1) over the pickle-RDD
@@ -619,8 +612,7 @@ def ivf_probe_pruned(
 
 
 def _ivf_index_probes(
-    spark, index_path: str, df: DataFrame, id_col: str, vec_col: str, nprobe: int,
-    probe_mode: str = "expr",
+    spark, index_path: str, df: DataFrame, id_col: str, vec_col: str, nprobe: int
 ) -> tuple[DataFrame, list[int]]:
     """Shared probe construction over a :func:`write_ivf_index` layout:
     load the centroid sidecar, build the per-row (id, vec, cell) probe
@@ -637,18 +629,7 @@ def _ivf_index_probes(
             key=lambda r: r["cent_id"],
         )
     ]
-    if probe_mode not in ("expr", "arrow"):
-        raise ValueError(f"unknown probe_mode {probe_mode!r}")  # ADVICE r14
-    if probe_mode == "arrow":
-        probes = _cells_arrow(df, cents, nprobe, id_col, vec_col).localCheckpoint()
-    else:
-        probes = df.select(
-            id_col,
-            vec_col,
-            F.explode(
-                F.slice(F.array_sort(_cell_scores(F.col(vec_col), cents)), 1, nprobe)
-            ).alias("__pr"),
-        ).select(id_col, vec_col, F.col("__pr")["cent_id"].alias("cell")).localCheckpoint()
+    probes = _probe_cells(df, cents, nprobe, id_col, vec_col).localCheckpoint()
     cells = sorted({r["cell"] for r in probes.select("cell").distinct().collect()})
     return probes, cells
 
@@ -714,18 +695,13 @@ def lsh_planes(
     ]
 
 
-def _lsh_sig_arrow(df: DataFrame, tables, id_col: str, vec_col: str) -> DataFrame:
-    """Arrow LSH signature tier (r15, VERDICT r14 #6): the per-(row,
-    table) bucket relation of :func:`lsh_ann_topk`, numerically
-    identical to the expression fold — each plane bit is the SAME
+def _lsh_sig(df: DataFrame, tables, id_col: str, vec_col: str) -> DataFrame:
+    """Per-(row, table) bucket relation of :func:`lsh_ann_topk` →
+    (id, vec, __tbl, __b), one Arrow pass.  Each plane bit is a
     sequential per-dimension fold (``acc += x[i]·p[i]`` from 0.0, the
-    :func:`_assign_arrow` convention) compared ``>= 0`` (IEEE: −0.0
-    qualifies on both engines), signatures are exact integer bit sums.
-    Equality with the expression path is pytest-pinned.  The win is the
-    same class as the ANN family's assign/probe tiers: tables×planes
-    zip_with/aggregate folds are CodegenFallback trees that cost more
-    in Catalyst analysis per plan build than the query executes
-    (q75 profile: 3.3 s build / 1.2 s exec at sf0.1)."""
+    :func:`_assign` convention) compared ``>= 0`` (IEEE: −0.0
+    qualifies, as in the SQL replay); a signature is the exact integer
+    sum of its bits."""
     import numpy as np
     import pandas as pd
 
@@ -772,113 +748,38 @@ def lsh_ann_topk(
     corpus_id: str = "vec_id",
     query_vec: str = "query_vec",
     corpus_vec: str = "embedding",
-    sig_mode: str = "expr",
 ) -> DataFrame:
     """Approximate top-k via multi-table random-hyperplane LSH.
 
     ``num_tables`` independent tables of ``num_planes`` sign bits each
-    (planes generated driver-side from ``seed``, shipped as literals —
-    tiny). Candidates share a full bucket in ANY table, or any 1-bit
-    multiprobe flip of the query's bucket; exact cosine re-rank on the
-    candidate set only. Recall/cost dial: more tables → higher recall,
-    more candidates; fewer planes → bigger buckets.
-    ``sig_mode="arrow"`` computes the signatures in the pinned
-    numerically-identical numpy tier (:func:`_lsh_sig_arrow`).
+    (planes generated driver-side from ``seed`` and shipped to the
+    Arrow signature kernel :func:`_lsh_sig` — tiny). Candidates share
+    a full bucket in ANY table, or any 1-bit multiprobe flip of the
+    query's bucket; exact cosine re-rank on the candidate set only.
+    Recall/cost dial: more tables → higher recall, more candidates;
+    fewer planes → bigger buckets.
     """
     tables = lsh_planes(num_planes, num_tables, dim, seed)
-    if sig_mode not in ("expr", "arrow"):
-        raise ValueError(f"unknown sig_mode {sig_mode!r}")
-    if sig_mode == "arrow":
-        # only (id, vec) ever reach the output/re-rank — project early
-        # (guide §2.3) so the opaque Arrow stage ships two columns
-        c = _lsh_sig_arrow(
-            corpus.select(corpus_id, corpus_vec), tables, corpus_id, corpus_vec
-        )
-        qsig = _lsh_sig_arrow(
-            queries.select(query_id, query_vec), tables, query_id, query_vec
-        )
-        # probes are 1-bit flips of the signature COLUMN — identical
-        # (tbl, bucket) pairs to the expression path's struct array
-        q = qsig.withColumn(
-            "__b",
-            F.explode(
-                F.array(
-                    F.col("__b"),
-                    *[F.col("__b").bitwiseXOR(F.lit(1 << i)) for i in range(num_planes)],
-                )
-            ),
-        )
-        cand = c.join(F.broadcast(q), ["__tbl", "__b"]).filter(
-            F.col(query_id) != F.col(corpus_id)
-        ).drop("__tbl", "__b")
-        scored = cand.withColumn(
-            "cos_sim", cosine(F.col(query_vec), F.col(corpus_vec))
-        ).dropDuplicates([query_id, corpus_id])
-        w = W.partitionBy(query_id).orderBy(F.col("cos_sim").desc(), F.col(corpus_id))
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, corpus_id, "cos_sim", "rank")
-        )
-
-    def signature(vec: Column, planes: list[list[float]]) -> Column:
-        bits = [
-            F.when(
-                F.aggregate(
-                    F.zip_with(
-                        vec,
-                        _lit_vec(p),
-                        lambda x, y: x.cast("double") * y,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                >= 0,
-                F.lit(1),
-            ).otherwise(F.lit(0)).cast("long")
-            for p in planes
-        ]
-        sig = F.lit(0).cast("long")
-        for i, b in enumerate(bits):
-            sig = sig + F.shiftleft(b, i)
-        return sig
-
-    # corpus rows fan out to one (table, bucket) per table; query rows
-    # to (table, bucket) plus all 1-bit probes — join on both.
-    c_buckets = F.array(
-        *[F.struct(F.lit(t).alias("tbl"), signature(F.col(corpus_vec), p).alias("b"))
-          for t, p in enumerate(tables)]
+    # only (id, vec) ever reach the output/re-rank — project early
+    # (guide §2.3) so the opaque Arrow stage ships two columns
+    c = _lsh_sig(corpus.select(corpus_id, corpus_vec), tables, corpus_id, corpus_vec)
+    qsig = _lsh_sig(queries.select(query_id, query_vec), tables, query_id, query_vec)
+    # query rows fan out to their bucket plus every 1-bit flip of it
+    q = qsig.withColumn(
+        "__b",
+        F.explode(
+            F.array(
+                F.col("__b"),
+                *[F.col("__b").bitwiseXOR(F.lit(1 << i)) for i in range(num_planes)],
+            )
+        ),
     )
-    c = corpus.withColumn("__tb", F.explode(c_buckets))
-    # each table's signature is computed ONCE into a column and the
-    # (num_planes+1) probes are bit-flips of that column — the old form
-    # re-embedded the full planes×dim fold tree per probe
-    # ((num_planes+1)×num_tables copies), which cost more in Catalyst
-    # analysis of the replicated tree than the query ran in total
-    # (26.9 s build / 3.9 s exec at sf0.1 → 3.3 s end-to-end).
-    # CollapseProject keeps the staging projection because the
-    # aggregate fold is non-cheap and multiply-referenced; values and
-    # join semantics are unchanged (same bits, same XOR probes).
-    q_sigs = queries.select(
-        "*", *[signature(F.col(query_vec), p).alias(f"__sig{t}") for t, p in enumerate(tables)]
-    )
-    q_probes = F.array(
-        *[
-            F.struct(F.lit(t).alias("tbl"), probe.alias("b"))
-            for t in range(len(tables))
-            for probe in [F.col(f"__sig{t}")]
-            + [F.col(f"__sig{t}").bitwiseXOR(F.lit(1 << i)) for i in range(num_planes)]
-        ]
-    )
-    q = q_sigs.withColumn("__tb", F.explode(q_probes)).drop(
-        *[f"__sig{t}" for t in range(len(tables))]
-    )
-    cand = c.join(F.broadcast(q), c["__tb"] == q["__tb"]).filter(
+    cand = c.join(F.broadcast(q), ["__tbl", "__b"]).filter(
         F.col(query_id) != F.col(corpus_id)
-    )
-    scored = cand.withColumn("cos_sim", cosine(F.col(query_vec), F.col(corpus_vec))).dropDuplicates(
-        [query_id, corpus_id]
-    )
+    ).drop("__tbl", "__b")
+    scored = cand.withColumn(
+        "cos_sim", cosine(F.col(query_vec), F.col(corpus_vec))
+    ).dropDuplicates([query_id, corpus_id])
     w = W.partitionBy(query_id).orderBy(F.col("cos_sim").desc(), F.col(corpus_id))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -893,8 +794,6 @@ def kmeans_refine(
     iters: int = 2,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
-    assign_mode: str = "expr",
-    mean_mode: str = "expr",
 ) -> tuple[list[tuple[int, list[float]]], DataFrame]:
     """Lloyd k-means refinement of the deterministic IVF seed centroids.
 
@@ -909,43 +808,18 @@ def kmeans_refine(
     refined centroid doubles are identical regardless of partitioning.
 
     Scale shape (classic distributed Lloyd, what MLlib's KMeans also
-    does): per iteration ONE corpus scan + one map-side-combining
-    groupBy with ``dim`` decimal accumulators per cell — the exchange
-    carries ≤ cells rows of (dim+1) accumulators, and the (cells × dim)
-    model state collected to the driver is a few KB. The corpus is
-    never shuffled and there is no per-dimension row fan-out (the
-    posexplode formulation would multiply corpus rows × dim before
-    aggregating). Empty cells drop out of the model, mirroring the SQL
-    replay.
+    does): per iteration ONE corpus scan whose per-batch partial sums
+    (:func:`_cell_means`) ride the collect — ≤ cells rows of (dim+1)
+    accumulators per batch, and the (cells × dim) model state on the
+    driver is a few KB. The corpus is never shuffled and there is no
+    per-dimension row fan-out. Empty cells drop out of the model,
+    mirroring the SQL replay.
     """
-    if mean_mode not in ("arrow", "expr"):
-        raise ValueError(f"unknown mean_mode {mean_mode!r}")
     dim = len(corpus.select(corpus_vec).first()[0])
-    cents, assigned = ivf_assign(corpus, num_cells, corpus_id, corpus_vec, assign_mode)
+    cents, assigned = ivf_assign(corpus, num_cells, corpus_id, corpus_vec)
     for _ in range(iters):
-        if mean_mode == "arrow":
-            # r15: one mapInPandas partial-sum pass instead of `dim`
-            # aggregate columns — the expression form's cost is the
-            # per-iteration plan/codegen of 64 aggregates (1.24 s at
-            # sf0.1, ~none of it data); numerically identical
-            # (_cell_means_arrow, pinned in pytest)
-            cents = _cell_means_arrow(assigned, corpus_vec, dim)
-        else:
-            # parsed expressions (r14): dim Column-composed aggregates
-            # cost more py4j/driver time per iteration than the scan
-            # they drive; the parsed tree is the identical expression
-            aggs = [
-                F.expr(
-                    f"cast(sum(cast(cast(`{corpus_vec}`[{i}] as double) as decimal(25,6))) "
-                    f"as double) / count(*)"
-                ).alias(f"m{i}")
-                for i in range(dim)
-            ]
-            rows = assigned.groupBy("cell").agg(*aggs).collect()
-            cents = sorted(
-                (int(r["cell"]), [r[f"m{i}"] for i in range(dim)]) for r in rows
-            )
-        assigned = _assign(corpus, cents, corpus_id, corpus_vec, assign_mode)
+        cents = _cell_means(assigned, corpus_vec, dim)
+        assigned = _assign(corpus, cents, corpus_id, corpus_vec)
     return cents, assigned
 
 
@@ -961,25 +835,11 @@ def _l2(a: Column, b: Column, decimals: int | None = 6) -> Column:
     return F.round(d, decimals) if decimals is not None else d
 
 
-def _l2_flat(vec: Column, base: int, cvec: list[float]) -> Column:
-    """Squared L2 of ``vec[base:base+len(cvec)]`` against literal
-    ``cvec`` as a FLAT scalar expression — bit-identical to :func:`_l2`
-    (left-assoc sum; 0.0+d0==d0) but whole-stage-codegen friendly: no
-    lambda, no slice/array allocation per evaluation."""
-    s: Column | None = None
-    for i, c in enumerate(cvec):
-        x = vec.getItem(base + i).cast("double") - F.lit(float(c))
-        t = x * x
-        s = t if s is None else s + t
-    return F.round(s, 6)
-
-
 def _l2_sub(qsub: Column, c: Column) -> Column:
     """Squared L2 of a pre-cast double subvector against a RUNTIME
-    array (a codebook row iterated by ``F.transform``) — bit-identical
-    to :func:`_l2_flat`: zip_with squares element-wise, aggregate sums
-    left-assoc from 0.0 (exact: 0.0+d0==d0, and every term is a square
-    so never −0.0), same round(…, 6)."""
+    array (a codebook row iterated by ``F.transform``): zip_with
+    squares element-wise, aggregate sums left-assoc from 0.0 (every
+    term is a square, so never −0.0), then round(…, 6)."""
     return F.round(
         F.aggregate(
             F.zip_with(qsub, c, lambda x, y: (x - y) * (x - y)),
@@ -990,6 +850,26 @@ def _l2_sub(qsub: Column, c: Column) -> Column:
     )
 
 
+def _pq_dists_np(x, books_np):
+    """(rows, m, ks) squared distances of each row's ``m`` subvectors
+    to every codeword: accumulated SEQUENTIALLY over the subvector (the
+    :func:`_l2_sub` fold order the SQL replay uses) and rounded 6 dp
+    like ``F.round`` (:func:`_round6_np`; distances are ≥ 0, so
+    half-away == half-up)."""
+    import numpy as np
+
+    m, ks, sub = books_np.shape
+    out = np.empty((len(x), m, ks))
+    for j in range(m):
+        xj = x[:, j * sub : (j + 1) * sub]
+        acc = np.zeros((len(x), ks))
+        for i in range(sub):  # sequential i-order == _l2_sub fold
+            d = xj[:, i : i + 1] - books_np[j][None, :, i]
+            acc += d * d
+        out[:, j] = _round6_np(acc)
+    return out
+
+
 def pq_encode(
     corpus: DataFrame,
     m: int = 8,
@@ -997,7 +877,6 @@ def pq_encode(
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
     dim: int = 64,
-    encode_mode: str = "expr",
     keep: tuple[str, ...] = (),
     codebooks: list[list[list[float]]] | None = None,
 ) -> tuple[list[list[list[float]]], DataFrame]:
@@ -1009,84 +888,39 @@ def pq_encode(
 
     Codebooks are deterministic (the ``ks`` smallest-id vectors'
     subvectors, same convention as :func:`ivf_assign` — no rand(), so
-    the whole encode replays in a SQL oracle; :func:`kmeans_refine`'s
-    Lloyd step applies per-subspace when trained codebooks are wanted
-    and changes nothing structural). Returns ``(codebooks, codes)``
-    where ``codebooks[j][c]`` is centroid ``c`` of subspace ``j`` and
-    ``codes`` has an ``array<int> code`` column of length ``m``.
+    the whole encode replays in a SQL oracle; :func:`train_pq_codebooks`
+    applies the Lloyd step per subspace when trained codebooks are
+    wanted and changes nothing structural). Returns ``(codebooks,
+    codes)`` where ``codebooks[j][c]`` is centroid ``c`` of subspace
+    ``j`` and ``codes`` has an ``array<int> code`` column of length
+    ``m``; ``keep`` columns pass through.
 
-    Scale — two encode strategies, both one corpus scan, zero shuffles,
-    output 100-1000x smaller than the embeddings (the ADC scan in
-    :func:`pq_ann_topk` then reads codes instead of vectors):
-
-    - ``encode_mode="expr"`` (default): pure column expressions —
-      bit-exact against the DuckDB oracle, but the m×ks×(dim/m)-term
-      tree exceeds janino's method limit and falls back to interpreted
-      eval, ~0.03 Mvec/s/node.
-    - ``encode_mode="arrow"``: Arrow-batched ``mapInPandas`` — numpy
-      does (B, ks) distance accumulation per subspace with the SAME
-      sequential i-order as the expr fold and half-away-from-zero
-      rounding, ~30x faster (tools/stress.py).  Equivalence to expr
-      mode is asserted on the fixtures in pytest; the only conceivable
-      divergence is a distance landing within one float ulp of a
-      0.5e-6 rounding boundary (Java BigDecimal vs scaled-float
-      rounding), which the equivalence test would catch.
+    Scale: one Arrow-batched corpus scan — a code is the argmin of
+    :func:`_pq_dists_np`, first occurrence, so ties go to the smaller
+    ordinal — zero shuffles, output 100-1000x smaller than the
+    embeddings (the ADC scan in :func:`pq_ann_topk` then reads codes
+    instead of vectors).
     """
+    import numpy as np
+
     sub = dim // m
     if codebooks is not None:
         books = codebooks  # externally supplied (trained, or residual-seeded)
     else:
         books = _pq_seed_books(corpus, corpus_vec, corpus_id, m, ks, sub)
+    books_np = np.array(books)  # (m, ks, sub)
+    cols = (corpus_id, corpus_vec, *keep)
+    schema = ", ".join(f"{c} {corpus.schema[c].dataType.simpleString()}" for c in cols)
 
-    if encode_mode == "arrow":
-        import numpy as np
-        import pandas as pd
+    def encode_iter(batches):
+        for pdf in batches:
+            x = np.array([np.asarray(v, dtype=np.float64) for v in pdf[corpus_vec]])
+            codes = np.argmin(_pq_dists_np(x, books_np), axis=2).astype(np.int32)
+            yield pdf.assign(code=list(codes))
 
-        books_np = np.array(books)  # (m, ks, sub)
-        id_type = corpus.schema[corpus_id].dataType.simpleString()
-        vec_type = corpus.schema[corpus_vec].dataType.simpleString()
-        keep_schema = "".join(
-            f", {c} {corpus.schema[c].dataType.simpleString()}" for c in keep
-        )
-        out_schema = f"{corpus_id} {id_type}, {corpus_vec} {vec_type}{keep_schema}, code array<int>"
-
-        def encode_iter(batches):
-            for pdf in batches:
-                x = np.array([np.asarray(v, dtype=np.float64) for v in pdf[corpus_vec]])
-                codes = np.empty((len(pdf), m), dtype=np.int32)
-                for j in range(m):
-                    xj = x[:, j * sub : (j + 1) * sub]
-                    acc = np.zeros((len(pdf), ks))
-                    for i in range(sub):  # sequential i-order == expr fold
-                        d = xj[:, i : i + 1] - books_np[j][None, :, i]
-                        acc += d * d
-                    dist = _round6_np(acc)  # half-up (dists >= 0), F.round-exact
-                    codes[:, j] = np.argmin(dist, axis=1)  # first min == smaller ord
-                yield pd.DataFrame(
-                    {
-                        corpus_id: pdf[corpus_id],
-                        corpus_vec: pdf[corpus_vec],
-                        **{c: pdf[c] for c in keep},
-                        "code": list(codes),
-                    }
-                )
-
-        return books, corpus.select(corpus_id, corpus_vec, *keep).mapInPandas(
-            encode_iter, schema=out_schema
-        )
-
-    if encode_mode != "expr":
-        raise ValueError(f"unknown encode_mode {encode_mode!r}")
-
-    codes = corpus.select(
-        corpus_id,
-        corpus_vec,
-        *keep,
-        F.array(
-            *[_pq_code_col(F.col(corpus_vec), books[j], j * sub) for j in range(m)]
-        ).alias("code"),
+    return books, corpus.select(*cols).mapInPandas(
+        encode_iter, schema=f"{schema}, code array<int>"
     )
-    return books, codes
 
 
 def _pq_seed_books(
@@ -1103,34 +937,11 @@ def _pq_seed_books(
     return [[[float(v[j * sub + i]) for i in range(sub)] for v in seeds] for j in range(m)]
 
 
-def _pq_code_col(vec: Column, book_j, base: int) -> Column:
-    """Nearest-centroid code for one subspace.
-
-    The codebook rides as ONE constant-folded literal array and
-    ``F.transform`` computes the per-centroid distance with a single
-    lambda body — identical IEEE order to the old flat expansion
-    (:func:`_l2_sub`) but O(sub) generated code instead of O(ks·sub):
-    the flat form's m·ks·sub terms blew janino's 64 KB method limit
-    and silently dropped the whole encode projection to INTERPRETED
-    evaluation (VERDICT r10 #5 — the 'ERROR CodeGenerator' in the
-    sweep), which costs far more than the per-row array the fold
-    allocates."""
-    sub = len(book_j[0])
-    qsub = F.array(*[vec.getItem(base + i).cast("double") for i in range(sub)])
-    cents = F.array(*[_lit_vec(cvec) for cvec in book_j])
-    scores = F.transform(
-        cents,
-        lambda c, i: F.struct(_l2_sub(qsub, c).alias("dist"), i.alias("cent_ord")),
-    )
-    return F.array_min(scores)["cent_ord"]
-
-
 def train_pq_codebooks(
     df: DataFrame,
     vec_col: str,
     initial: list[list[list[float]]],
     iters: int = 2,
-    mode: str = "arrow",
 ) -> list[list[list[float]]]:
     """Per-subspace Lloyd training of PQ codebooks — what FAISS's
     ProductQuantizer::train does, in the engine's deterministic
@@ -1138,14 +949,15 @@ def train_pq_codebooks(
     kmeans_refine recipe — partition-order independent, so the trained
     books replay in a SQL oracle).
 
-    Scale shape: per iteration ONE scan of ``df`` — a projection
-    computes all ``m`` subspace codes per row once, then a single
-    global aggregate with m*ks*(sub+1) conditional accumulators
-    (map-side combine; the exchange carries ONE row).  The corpus is
-    never shuffled and there is no per-subspace row fan-out.  At
-    100 TB you train on a deterministic hash-sample (llm/hashing) —
-    the FAISS convention too — so the scan is of the sample, not the
-    corpus.  Empty codebook entries keep their previous value.
+    Scale shape: per iteration ONE Arrow pass over ``df`` — each batch
+    encodes its rows like :func:`pq_encode` and emits per-(subspace,
+    codeword) partials (n, exact scaled-int64 sums from
+    :func:`_scaled6_int_np`), which the driver combines with Decimal
+    ``scaleb`` + one float division.  The corpus is never shuffled and
+    there is no per-subspace row fan-out.  At 100 TB you train on a
+    deterministic hash-sample (llm/hashing) — the FAISS convention too
+    — so the scan is of the sample, not the corpus.  Empty codebook
+    entries keep their previous value.
 
     Why this matters (measured, tests/test_llm.py): seed codebooks
     only resolve the structure the seeds happen to span; on residuals
@@ -1153,111 +965,46 @@ def train_pq_codebooks(
     codebook around the actual noise distribution and recall rises
     with no query-time cost.
     """
+    from decimal import Decimal
+
+    import numpy as np
+    import pandas as pd
+
     # shape is the initial codebooks' shape — a separate m/ks that
     # disagreed would silently truncate or crash mid-aggregation
-    if mode not in ("arrow", "expr"):
-        raise ValueError(f"unknown train mode {mode!r}")
     m, ks, sub = len(initial), len(initial[0]), len(initial[0][0])
     books = [list(b) for b in initial]
-    if mode == "arrow":
-        # r15 (VERDICT r14 #7): the expression iteration builds
-        # m·ks·(sub+1) Column-composed aggregates — the construction
-        # alone is thousands of py4j round trips and the resulting
-        # plan/codegen dwarfs the data (the q111 Lloyd finding at 18×
-        # the width).  One mapInPandas pass per iteration instead:
-        # codes via the pinned numpy encoder (same sequential i-order
-        # + _round6_np as encode_mode="arrow"), per-(j,c) partials as
-        # (n, scaled-int64 sums) — _scaled6_int_np is the exact integer
-        # behind the decimal(25,6) cast — combined on the driver with
-        # Decimal scaleb + the same Python float division the expr path
-        # already does.  Bit-identical (pinned in pytest); expr kept.
-        import numpy as np
-        import pandas as pd
-
-        from decimal import Decimal
-
-        for _ in range(iters):
-            books_np = np.array(books)  # (m, ks, sub)
-
-            def partials(batches):
-                for pdf in batches:
-                    x = np.array(
-                        [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                    )
-                    out_j, out_c, out_n, out_s = [], [], [], []
-                    for j in range(m):
-                        xj = x[:, j * sub : (j + 1) * sub]
-                        acc = np.zeros((len(pdf), ks))
-                        for i in range(sub):  # sequential i-order == expr fold
-                            dlt = xj[:, i : i + 1] - books_np[j][None, :, i]
-                            acc += dlt * dlt
-                        dist = _round6_np(acc)
-                        codes = np.argmin(dist, axis=1)
-                        sj = _scaled6_int_np(xj)  # (rows, sub) exact ints
-                        for c in np.unique(codes):
-                            msk = codes == c
-                            out_j.append(j)
-                            out_c.append(int(c))
-                            out_n.append(int(msk.sum()))
-                            out_s.append(sj[msk].sum(axis=0, dtype=np.int64))
-                    yield pd.DataFrame(
-                        {"j": out_j, "c": out_c, "n": out_n, "s": out_s}
-                    )
-
-            parts = df.select(vec_col).mapInPandas(
-                partials, schema="j int, c int, n long, s array<long>"
-            )
-            acc: dict[tuple[int, int], tuple[int, list[int]]] = {}
-            for r in parts.collect():
-                n0, s0 = acc.get((r.j, r.c), (0, [0] * sub))
-                acc[(r.j, r.c)] = (n0 + r.n, [a + b for a, b in zip(s0, r.s)])
-            books = [
-                [
-                    (
-                        [
-                            float(Decimal(t).scaleb(-6)) / acc[(j, c)][0]
-                            for t in acc[(j, c)][1]
-                        ]
-                        if (j, c) in acc
-                        else books[j][c]
-                    )
-                    for c in range(ks)
-                ]
-                for j in range(m)
-            ]
-        return books
     for _ in range(iters):
-        sel = df.select(
-            F.col(vec_col).alias("__v"),
-            *[
-                _pq_code_col(F.col(vec_col), books[j], j * sub).alias(f"__c{j}")
-                for j in range(m)
-            ],
+        books_np = np.array(books)  # (m, ks, sub)
+
+        def partials(batches):
+            for pdf in batches:
+                x = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+                codes = np.argmin(_pq_dists_np(x, books_np), axis=2)
+                s = _scaled6_int_np(x)  # (rows, dim) exact ints
+                out_j, out_c, out_n, out_s = [], [], [], []
+                for j in range(m):
+                    sj = s[:, j * sub : (j + 1) * sub]
+                    for c in np.unique(codes[:, j]):
+                        msk = codes[:, j] == c
+                        out_j.append(j)
+                        out_c.append(int(c))
+                        out_n.append(int(msk.sum()))
+                        out_s.append(_int64_colsum(sj[msk]))
+                yield pd.DataFrame({"j": out_j, "c": out_c, "n": out_n, "s": out_s})
+
+        parts = df.select(vec_col).mapInPandas(
+            partials, schema="j int, c int, n long, s array<long>"
         )
-        aggs = []
-        for j in range(m):
-            for c in range(ks):
-                cond = F.col(f"__c{j}") == c
-                aggs.append(F.count(F.when(cond, 1)).alias(f"n_{j}_{c}"))
-                for i in range(sub):
-                    aggs.append(
-                        F.sum(
-                            F.when(
-                                cond,
-                                F.col("__v")[j * sub + i]
-                                .cast("double")
-                                .cast("decimal(25,6)"),
-                            )
-                        )
-                        .cast("double")
-                        .alias(f"s_{j}_{c}_{i}")
-                    )
-        row = sel.agg(*aggs).collect()[0]
+        acc: dict[tuple[int, int], tuple[int, list[int]]] = {}
+        for r in parts.collect():
+            n0, s0 = acc.get((r.j, r.c), (0, [0] * sub))
+            acc[(r.j, r.c)] = (n0 + r.n, [a + b for a, b in zip(s0, r.s)])
         books = [
             [
                 (
-                    [row[f"s_{j}_{c}_{i}"] / row[f"n_{j}_{c}"] for i in range(sub)]
-                    if row[f"n_{j}_{c}"]
+                    [float(Decimal(t).scaleb(-6)) / acc[(j, c)][0] for t in acc[(j, c)][1]]
+                    if (j, c) in acc
                     else books[j][c]
                 )
                 for c in range(ks)
@@ -1281,7 +1028,6 @@ def pq_ann_topk(
     dim: int = 64,
     exclude_self: bool = True,
     exact_decimal: bool = True,
-    encode_mode: str = "expr",
 ) -> DataFrame:
     """ANN top-k by PQ asymmetric distance (ADC): per query, a lookup
     table of (subspace, centroid) → partial distance is precomputed
@@ -1305,7 +1051,7 @@ def pq_ann_topk(
     hot cost at millions of rows; measured in tools/stress.py) — the
     production setting.
     """
-    books, codes = pq_encode(corpus, m, ks, corpus_id, corpus_vec, dim, encode_mode)
+    books, codes = pq_encode(corpus, m, ks, corpus_id, corpus_vec, dim)
     q = queries.select(
         query_id, query_vec, _pq_lut(books, query_vec, m, ks, dim).alias("lut")
     )
@@ -1316,13 +1062,12 @@ def pq_ann_topk(
     )
 
 
-def _pq_lut(books, query_vec: str | Column, m: int, ks: int, dim: int) -> Column:
-    """Per-query ADC lookup table: computed by the same Spark
-    expressions that encode the corpus (never in Python — keeps
-    rounding semantics identical).  ``query_vec`` may be a column
-    name or an expression (the residual tier passes q − centroid)."""
+def _pq_lut(books, query_vec: str, m: int, ks: int, dim: int) -> Column:
+    """Per-query ADC lookup table as Spark expressions under the
+    :func:`_l2_sub` contract — the one the encoder
+    (:func:`_pq_dists_np`) and the SQL replay share."""
     sub = dim // m
-    vec = F.col(query_vec) if isinstance(query_vec, str) else query_vec
+    vec = F.col(query_vec)
     luts = []
     for j in range(m):
         # constant-folded literal codebook + one transform lambda: the
@@ -1399,8 +1144,7 @@ def _adc_score_topk(
 
 def _centroid_array(cents, cell_col: Column) -> Column:
     """Per-row centroid vector as a literal CASE chain on the cell id
-    (cells × dim literal nodes — the same budget _cell_scores already
-    spends; stays whole-stage codegen, no join)."""
+    (cells × dim literal nodes; stays whole-stage codegen, no join)."""
     expr = None
     for cid, cvec in cents:
         arr = _lit_vec(cvec)
@@ -1431,11 +1175,8 @@ def ivf_pq_ann_topk(
     dim: int = 64,
     exclude_self: bool = True,
     exact_decimal: bool = True,
-    assign_mode: str = "expr",
-    encode_mode: str = "expr",
     by_residual: bool = False,
     train_iters: int = 0,
-    probe_mode: str = "expr",
 ) -> DataFrame:
     """IVF-PQ composition — the FAISS ``IVFx,PQy`` layout actually
     deployed at 100 TB: the coarse quantizer prunes WHICH vectors are
@@ -1471,13 +1212,9 @@ def ivf_pq_ann_topk(
     in both engines (q152's oracle).
     """
     cents, books, codes = _ivf_pq_build(
-        corpus, num_cells, m, ks, dim, by_residual, train_iters,
-        assign_mode, encode_mode, corpus_id, corpus_vec,
+        corpus, num_cells, m, ks, dim, by_residual, train_iters, corpus_id, corpus_vec
     )
-    probes = _ivf_pq_probes(
-        queries, cents, books, nprobe, m, ks, dim, by_residual, query_id, query_vec,
-        probe_mode,
-    )
+    probes = _ivf_pq_probes(queries, cents, books, nprobe, by_residual, query_id, query_vec)
     scored = codes.join(F.broadcast(probes), "cell")
     return _adc_score_topk(
         scored, queries, corpus, k, m, rerank,
@@ -1493,8 +1230,6 @@ def _ivf_pq_build(
     dim: int,
     by_residual: bool,
     train_iters: int,
-    assign_mode: str,
-    encode_mode: str,
     corpus_id: str,
     corpus_vec: str,
 ) -> tuple[list, list, DataFrame]:
@@ -1502,7 +1237,7 @@ def _ivf_pq_build(
     cell).  ONE corpus scan builds both structures map-side; shared by
     the inline query path (:func:`ivf_pq_ann_topk`) and the persisted
     index writer (:func:`write_ivf_pq_index`)."""
-    cents, assigned = ivf_assign(corpus, num_cells, corpus_id, corpus_vec, assign_mode)
+    cents, assigned = ivf_assign(corpus, num_cells, corpus_id, corpus_vec)
     if by_residual:
         rcol = _residual(F.col(corpus_vec), _centroid_array(cents, F.col("cell")))
         src, vcol = assigned.select(corpus_id, rcol.alias("__rvec"), "cell"), "__rvec"
@@ -1517,7 +1252,7 @@ def _ivf_pq_build(
     # transform just those rows. Identical rows, identical books.
     head = corpus.select(corpus_id, corpus_vec).orderBy(corpus_id).limit(ks + seed_skip)
     if by_residual:
-        head_src = _assign(head, cents, corpus_id, corpus_vec, assign_mode).select(
+        head_src = _assign(head, cents, corpus_id, corpus_vec).select(
             corpus_id,
             _residual(F.col(corpus_vec), _centroid_array(cents, F.col("cell"))).alias(vcol),
         )
@@ -1526,140 +1261,44 @@ def _ivf_pq_build(
     books = _pq_seed_books(head_src, vcol, corpus_id, m, ks, dim // m, skip=seed_skip)
     if train_iters:
         books = train_pq_codebooks(src, vcol, books, train_iters)
-    books, codes = pq_encode(
-        src, m, ks, corpus_id, vcol, dim, encode_mode, keep=("cell",), codebooks=books
-    )
+    books, codes = pq_encode(src, m, ks, corpus_id, vcol, dim, keep=("cell",), codebooks=books)
     return cents, books, codes
 
 
-def _probes_arrow(
-    queries: DataFrame,
-    cents,
-    books,
-    nprobe: int,
-    m: int,
-    ks: int,
-    dim: int,
-    by_residual: bool,
-    query_id: str,
-    query_vec: str,
-) -> DataFrame:
-    """Arrow probe tier (r14): numerically identical to the expression
-    path of :func:`_ivf_pq_probes` — cosine cell routing uses the
-    :func:`_assign_arrow` contract (sequential fold, 6 dp half-away
-    rounding; −0.0 and +0.0 order equal under numpy exactly as the
-    rounded expression path's BigDecimal zero does under Java), probe
-    order is ascending (−cos, cent_id) like the expr path's struct
-    sort, the residual is the same float64 subtraction, and LUT
-    entries replay the ``_l2_sub`` fold (sequential squared-diff sum,
-    round 6 dp half-up — non-negative, so half-away == half-up; the
-    :func:`pq_encode` arrow convention). Equivalence to the expr path
-    is pytest-pinned for both residual modes. The win is DRIVER time:
-    the expr probe tree (cells×dim cosine structs + m×ks×sub LUT
-    lambdas, per projection step) cost ~3.6 s of construction/analysis
-    per plan build against ~0.3 s of execution (q152 profile)."""
+def _probe_order(cos, nprobe: int):
+    """Each row's ``nprobe`` best centroids, most similar first with
+    ties to the smaller id (−0.0 and +0.0 order equal, as the rounded
+    SQL cosine's do) → flat (row index, centroid index) arrays."""
     import numpy as np
-    import pandas as pd
 
-    order = sorted(range(len(cents)), key=lambda i: cents[i][0])
-    ids = np.array([cents[i][0] for i in order], dtype=np.int64)
-    C = np.array([cents[i][1] for i in order], dtype=np.float64)  # (k, d)
-    d = C.shape[1]
-    cn = np.zeros(len(ids))
-    for i in range(d):  # sequential fold == _norm
-        cn += C[:, i] * C[:, i]
-    cn = np.sqrt(cn)
-    books_np = np.array(books)  # (m, ks, sub)
-    sub = dim // m
-    npr = min(nprobe, len(ids))
-
-    def gen(batches):
-        for pdf in batches:
-            x = np.array([np.asarray(v, dtype=np.float64) for v in pdf[query_vec]])
-            if not len(pdf):
-                continue
-            dot = np.zeros((len(pdf), len(ids)))
-            for i in range(d):  # sequential fold == _dot
-                dot += x[:, i : i + 1] * C[None, :, i]
-            qn = np.zeros(len(pdf))
-            for i in range(d):
-                qn += x[:, i] * x[:, i]
-            cos = dot / (np.sqrt(qn)[:, None] * cn[None, :])
-            cos = _round6_np(cos)  # 6 dp, F.round-exact incl. half boundaries
-            out = {query_id: [], query_vec: [], "cell": [], "lut": []}
-            for r in range(len(pdf)):
-                probe_idx = np.lexsort((ids, -cos[r]))[:npr]
-                for ci in probe_idx:
-                    src = x[r] - C[ci] if by_residual else x[r]
-                    lut = []
-                    for j in range(m):
-                        qsub = src[j * sub : (j + 1) * sub]
-                        acc = np.zeros(ks)
-                        for i in range(sub):  # sequential fold == _l2_sub
-                            t = qsub[i] - books_np[j, :, i]
-                            acc += t * t
-                        lut.append(list(_round6_np(acc)))
-                    out[query_id].append(pdf[query_id].iloc[r])
-                    out[query_vec].append(pdf[query_vec].iloc[r])
-                    out["cell"].append(ids[ci])
-                    out["lut"].append(lut)
-            yield pd.DataFrame(out)
-
-    id_type = queries.schema[query_id].dataType.simpleString()
-    vec_type = queries.schema[query_vec].dataType.simpleString()
-    return queries.select(query_id, query_vec).mapInPandas(
-        gen,
-        schema=(
-            f"{query_id} {id_type}, {query_vec} {vec_type}, "
-            "cell long, lut array<array<double>>"
-        ),
-    )
+    ties = np.broadcast_to(np.arange(cos.shape[1]), cos.shape)
+    top = np.lexsort((ties, -cos), axis=1)[:, :nprobe]
+    return np.repeat(np.arange(len(cos)), top.shape[1]), top.reshape(-1)
 
 
-def _cells_arrow(
+def _probe_cells(
     df: DataFrame,
     cents,
     nprobe: int,
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Arrow cell ROUTER (r14): the (id, vec, cell) probe relation of
-    the non-PQ paths, numerically identical to
-    ``explode(slice(array_sort(_cell_scores(…)), 1, nprobe))`` — same
-    rounded-cosine order, ties to the smaller cent_id (the
-    :func:`_probes_arrow` contract, pytest-pinned)."""
+    """Cell router of the non-PQ IVF paths → (id, vec, cell), one row
+    per probed cell: each row's ``nprobe`` nearest centroids by rounded
+    cosine (:func:`_centroid_cosines`, :func:`_probe_order`)."""
     import numpy as np
-    import pandas as pd
 
-    order = sorted(range(len(cents)), key=lambda i: cents[i][0])
-    ids = np.array([cents[i][0] for i in order], dtype=np.int64)
-    C = np.array([cents[i][1] for i in order], dtype=np.float64)
-    d = C.shape[1]
-    cn = np.zeros(len(ids))
-    for i in range(d):  # sequential fold == _norm
-        cn += C[:, i] * C[:, i]
-    cn = np.sqrt(cn)
-    npr = min(nprobe, len(ids))
+    ids, _, cos_to = _centroid_cosines(cents)
 
     def gen(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             x = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            dot = np.zeros((len(pdf), len(ids)))
-            qn = np.zeros(len(pdf))
-            for i in range(d):  # sequential fold == _dot
-                dot += x[:, i : i + 1] * C[None, :, i]
-                qn += x[:, i] * x[:, i]
-            cos = dot / (np.sqrt(qn)[:, None] * cn[None, :])
-            cos = _round6_np(cos)  # 6 dp, F.round-exact incl. half boundaries
-            out = {id_col: [], vec_col: [], "cell": []}
-            for r in range(len(pdf)):
-                for ci in np.lexsort((ids, -cos[r]))[:npr]:
-                    out[id_col].append(pdf[id_col].iloc[r])
-                    out[vec_col].append(pdf[vec_col].iloc[r])
-                    out["cell"].append(ids[ci])
-            yield pd.DataFrame(out)
+            rows, ci = _probe_order(cos_to(x), nprobe)
+            out = pdf[[id_col, vec_col]].iloc[rows].reset_index(drop=True)
+            out["cell"] = ids[ci]
+            yield out
 
     id_type = df.schema[id_col].dataType.simpleString()
     vec_type = df.schema[vec_col].dataType.simpleString()
@@ -1673,53 +1312,42 @@ def _ivf_pq_probes(
     cents,
     books,
     nprobe: int,
-    m: int,
-    ks: int,
-    dim: int,
     by_residual: bool,
     query_id: str,
     query_vec: str,
-    probe_mode: str = "expr",
 ) -> DataFrame:
-    """Per-query probe relation (query_id, query_vec, lut, cell) —
-    shared by the inline and persisted-index paths."""
-    if probe_mode == "arrow":
-        return _probes_arrow(
-            queries, cents, books, nprobe, m, ks, dim, by_residual, query_id, query_vec
-        )
-    if probe_mode != "expr":
-        raise ValueError(f"unknown probe_mode {probe_mode!r}")
-    if by_residual:
-        # per-(query, probed cell) LUT over the query's residual — must
-        # compute after the explode (it genuinely differs per cell).
-        # The residual is materialized as its OWN projection before the
-        # m*ks*sub element accesses of the LUT expand: inlined, each
-        # access would re-embed the whole zip_with+centroid-CASE tree
-        # (millions of expression nodes — measured driver OOM);
-        # CollapseProject keeps the split because zip_with is non-cheap
-        # and multiply-referenced.
-        probes = queries.select(
-            query_id,
-            query_vec,
-            F.explode(
-                F.slice(F.array_sort(_cell_scores(F.col(query_vec), cents)), 1, nprobe)
-            ).alias("__pr"),
-        ).select(query_id, query_vec, F.col("__pr")["cent_id"].alias("cell"))
-        qres = _residual(F.col(query_vec), _centroid_array(cents, F.col("cell")))
-        return probes.withColumn("__qres", qres).select(
-            query_id, query_vec, "cell", _pq_lut(books, "__qres", m, ks, dim).alias("lut")
-        )
-    # LUT computed BEFORE the probe explode: once per query, and
-    # Generate just duplicates the value per probed cell
-    # (post-explode it would re-evaluate the m*ks tree nprobe times)
-    return queries.select(
-        query_id,
-        query_vec,
-        _pq_lut(books, query_vec, m, ks, dim).alias("lut"),
-        F.explode(
-            F.slice(F.array_sort(_cell_scores(F.col(query_vec), cents)), 1, nprobe)
-        ).alias("__pr"),
-    ).select(query_id, query_vec, "lut", F.col("__pr")["cent_id"].alias("cell"))
+    """Per-query probe relation (query_id, query_vec, cell, lut) —
+    shared by the inline and persisted-index paths.
+
+    Cells are routed like :func:`_probe_cells`; the LUT of each
+    (query, probed cell) is :func:`_pq_dists_np` of the query — or of
+    its residual ``q − centroid`` when ``by_residual``."""
+    import numpy as np
+
+    ids, C, cos_to = _centroid_cosines(cents)
+    books_np = np.array(books)  # (m, ks, sub)
+
+    def gen(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            x = np.array([np.asarray(v, dtype=np.float64) for v in pdf[query_vec]])
+            rows, ci = _probe_order(cos_to(x), nprobe)
+            src = x[rows] - C[ci] if by_residual else x[rows]
+            out = pdf[[query_id, query_vec]].iloc[rows].reset_index(drop=True)
+            out["cell"] = ids[ci]
+            out["lut"] = _pq_dists_np(src, books_np).tolist()
+            yield out
+
+    id_type = queries.schema[query_id].dataType.simpleString()
+    vec_type = queries.schema[query_vec].dataType.simpleString()
+    return queries.select(query_id, query_vec).mapInPandas(
+        gen,
+        schema=(
+            f"{query_id} {id_type}, {query_vec} {vec_type}, "
+            "cell long, lut array<array<double>>"
+        ),
+    )
 
 
 def write_ivf_pq_index(
@@ -1733,8 +1361,6 @@ def write_ivf_pq_index(
     corpus_vec: str = "embedding",
     by_residual: bool = False,
     train_iters: int = 0,
-    assign_mode: str = "expr",
-    encode_mode: str = "expr",
 ) -> int:
     """Persist an IVF-PQ index as a VERSIONED TABLE — the build-once /
     probe-many contract every production ANN deployment runs (FAISS
@@ -1765,8 +1391,7 @@ def write_ivf_pq_index(
     )
 
     cents, books, codes = _ivf_pq_build(
-        corpus, num_cells, m, ks, dim, by_residual, train_iters,
-        assign_mode, encode_mode, corpus_id, corpus_vec,
+        corpus, num_cells, m, ks, dim, by_residual, train_iters, corpus_id, corpus_vec
     )
     out = codes.select(corpus_id, "cell", "code")
     # the layout rides the table's PARTITION SPEC: every writer — this
@@ -1838,8 +1463,6 @@ def ivf_pq_add(
     path: str,
     new_vectors: DataFrame,
     corpus_vec: str = "embedding",
-    assign_mode: str = "expr",
-    encode_mode: str = "expr",
 ) -> int:
     """Incrementally extend a persisted IVF-PQ index — FAISS ``add``:
     assign new vectors to the EXISTING cells, encode with the EXISTING
@@ -1856,14 +1479,14 @@ def ivf_pq_add(
     p = idx["params"]
     cents = [(cid, vec) for cid, vec in idx["cents"]]
     corpus_id = p["corpus_id"]
-    assigned = _assign(new_vectors, cents, corpus_id, corpus_vec, assign_mode)
+    assigned = _assign(new_vectors, cents, corpus_id, corpus_vec)
     if p["by_residual"]:
         rcol = _residual(F.col(corpus_vec), _centroid_array(cents, F.col("cell")))
         src, vcol = assigned.select(corpus_id, rcol.alias("__rvec"), "cell"), "__rvec"
     else:
         src, vcol = assigned, corpus_vec
     _, codes = pq_encode(
-        src, p["m"], p["ks"], corpus_id, vcol, p["dim"], encode_mode,
+        src, p["m"], p["ks"], corpus_id, vcol, p["dim"],
         keep=("cell",), codebooks=idx["books"],
     )
     out = codes.select(corpus_id, "cell", "code")
@@ -1889,8 +1512,6 @@ def sync_ivf_pq_index(
     index_path: str,
     consumer_id: str = "ivf-pq-sync",
     corpus_vec: str = "embedding",
-    assign_mode: str = "expr",
-    encode_mode: str = "expr",
 ) -> dict:
     """Keep a persisted IVF-PQ index FOLLOWING a versioned corpus via
     the change feed (r14 — the composition the 100 TB embedding
@@ -1961,10 +1582,7 @@ def sync_ivf_pq_index(
         ).select(corpus_id, corpus_vec)
         n_add = adds.count()
         if n_add:
-            ivf_pq_add(
-                index_path, adds, corpus_vec=corpus_vec,
-                assign_mode=assign_mode, encode_mode=encode_mode,
-            )
+            ivf_pq_add(index_path, adds, corpus_vec=corpus_vec)
     finally:
         feed.unpersist()  # own pin only
     ack_changes(corpus_path, consumer_id, thru)
@@ -1985,7 +1603,6 @@ def ivf_pq_probe_index(
     corpus_vec: str = "embedding",
     exclude_self: bool = True,
     exact_decimal: bool = True,
-    probe_mode: str = "expr",
 ) -> DataFrame:
     """Probe a persisted IVF-PQ index (:func:`write_ivf_pq_index`) —
     identical results to the inline :func:`ivf_pq_ann_topk` with the
@@ -2014,8 +1631,7 @@ def ivf_pq_probe_index(
     # cell whose files were pruned away, and the query pipeline is not
     # computed twice
     probes = _ivf_pq_probes(
-        queries, cents, idx["books"], nprobe, p["m"], p["ks"], p["dim"],
-        p["by_residual"], query_id, query_vec, probe_mode,
+        queries, cents, idx["books"], nprobe, p["by_residual"], query_id, query_vec
     ).localCheckpoint()
     # the probed-cell set (bounded: ≤ num_cells values) prunes the
     # manifest file list before Spark ever plans the codes scan

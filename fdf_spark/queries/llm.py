@@ -296,13 +296,9 @@ def q73_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    # r14: arrow cell assignment (bit-identical to expr mode, pinned in
-    # test_llm::test_assign_modes_agree_and_kmeans_arrow) — the 16×dim
-    # interpreted lambda tree is the dominant per-row cost at any scale
-    return ivf_ann_topk(
-        queries, emb, k=5, num_cells=16, nprobe=2, assign_mode="arrow",
-        probe_mode="arrow",
-    ).orderBy("query_id", "rank")
+    return ivf_ann_topk(queries, emb, k=5, num_cells=16, nprobe=2).orderBy(
+        "query_id", "rank"
+    )
 
 
 @query(
@@ -337,11 +333,7 @@ def q108_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fdf_spark.llm.similarity import semantic_dedup
 
     emb = T(spark, sf_dir, "embeddings")
-    # r14: arrow cell assignment (bit-identical, pytest-pinned); the
-    # pair stage itself is vectorized inside semantic_dedup
-    return semantic_dedup(emb, num_cells=16, threshold=0.3, assign_mode="arrow").orderBy(
-        "vec_id"
-    )
+    return semantic_dedup(emb, num_cells=16, threshold=0.3).orderBy("vec_id")
 
 
 @query(
@@ -464,10 +456,7 @@ def q75_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    # r15: arrow signature tier (bit-identical to the expression fold,
-    # pytest-pinned) — the expr plan spent ~3.3 s of Catalyst analysis
-    # on tables*planes interpreted fold trees per build
-    return lsh_ann_topk(queries, emb, k=5, sig_mode="arrow").orderBy("query_id", "rank")
+    return lsh_ann_topk(queries, emb, k=5).orderBy("query_id", "rank")
 
 
 _STOP = ", ".join(f"'{w}'" for w in LANG_MARKERS["en"])
@@ -2322,7 +2311,7 @@ rstats AS (
     doc="Gopher-style intra-document repetition profile: duplicate-word "
     "ratio, most-frequent-2-gram fraction, duplicate-2-gram fraction — "
     "the standard boilerplate/keyword-stuffing detectors for corpus "
-    "curation. One explode + (doc, gram) groupBy, map-side re-aggregation.",
+    "curation. Per-document counters in one Arrow pass — no exchange.",
 )
 def q93_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fdf_spark.llm.repetition import repetition_stats
@@ -2819,7 +2808,8 @@ def _kmeans_sql(iters: int = 2, cells: int = 16, dim: int = 64) -> str:
     "per-cell audit (size, mean cosine to own centroid). Fully "
     "deterministic — no rand(), decimal-exact centroid means — so the "
     "whole training loop replays in the DuckDB oracle. Scale: one "
-    "corpus scan + one cells-row map-side-combining agg per iteration; "
+    "corpus scan per iteration whose per-batch partial sums ride the "
+    "collect; "
     "the corpus is never shuffled; model state to the driver is "
     "cells x dim doubles (KB). Slots into ivf_ann_topk/semantic_dedup "
     "in place of ivf_assign without changing the query shape.",
@@ -2828,17 +2818,7 @@ def q111_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fdf_spark.functions.scalar import davg
     from fdf_spark.llm.similarity import cosine, kmeans_refine
 
-    # r14: arrow assignment (bit-identical, pytest-pinned) — each Lloyd
-    # iteration re-assigns the whole corpus, so the expr-mode lambda
-    # tree was paid 3x here (2 iters + final state)
-    # r15: arrow means too — the expression mean is `dim` aggregate
-    # columns whose plan/codegen cost 1.24 s PER ITERATION at sf0.1
-    # (2k rows — none of it data); the partial-sum tier is numerically
-    # identical (pinned) and collects the same KB of model state
-    cents, assigned = kmeans_refine(
-        T(spark, sf_dir, "embeddings"), num_cells=16, iters=2,
-        assign_mode="arrow", mean_mode="arrow",
-    )
+    cents, assigned = kmeans_refine(T(spark, sf_dir, "embeddings"), num_cells=16, iters=2)
     from fdf_spark.sources.tables import local_df
 
     cdf = local_df(
@@ -2966,8 +2946,7 @@ def q114_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    # r14: arrow encode (bit-identical to expr mode, pytest-pinned)
-    return pq_ann_topk(qs, emb, k=5, encode_mode="arrow").orderBy("query_id", "rank")
+    return pq_ann_topk(qs, emb, k=5).orderBy("query_id", "rank")
 
 
 _CHAR_VOCAB = {**{chr(c): c - 96 for c in range(97, 123)}, **{chr(c): c - 21 for c in range(48, 58)}}
@@ -3598,10 +3577,7 @@ def q151_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    # r14: arrow assign+encode (bit-identical to expr mode, pytest-pinned)
-    return ivf_pq_ann_topk(
-        qs, emb, k=5, assign_mode="arrow", encode_mode="arrow", probe_mode="arrow"
-    ).orderBy("query_id", "rank")
+    return ivf_pq_ann_topk(qs, emb, k=5).orderBy("query_id", "rank")
 
 
 def _ivfpq_residual_sql(num_cells: int = 16, nprobe: int = 2, m: int = 8, ks: int = 16,
@@ -3699,11 +3675,7 @@ def q152_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    # r14: arrow assign+encode (bit-identical to expr mode, pytest-pinned)
-    return ivf_pq_ann_topk(
-        qs, emb, k=5, by_residual=True, assign_mode="arrow", encode_mode="arrow",
-        probe_mode="arrow",
-    ).orderBy("query_id", "rank")
+    return ivf_pq_ann_topk(qs, emb, k=5, by_residual=True).orderBy("query_id", "rank")
 
 
 @query(
@@ -3732,11 +3704,11 @@ def q152_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "paraphrased benchmark leak shares few n-grams but sits next to "
     "its source in embedding space). Each corpus vector's nearest "
     "benchmark item by cosine, flagged at the threshold. The "
-    "benchmark side broadcasts (thousands of items vs a 100 TB "
-    "corpus); the argmax is a max-of-struct AGGREGATION whose "
-    "map-side partial collapses the |benchmark| scores per corpus "
-    "row before the one narrow exchange — the corpus embeddings are "
-    "never shuffled and the score relation never materializes. "
+    "benchmark (thousands of items vs a 100 TB corpus) is collected "
+    "and every corpus batch is scored against it in one Arrow pass "
+    "that emits one verdict per row — no exchange, the corpus "
+    "embeddings are never shuffled and the score relation never "
+    "materializes. "
     "Oracle replays the full argmax relation with the portable 6-dp "
     "cosine.",
 )
@@ -3869,11 +3841,8 @@ def q155_ivf_pq_persisted_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     d = tempfile.mkdtemp(prefix="fdf_ivfpq_index_")
-    # r14: arrow assign+encode for the build (bit-identical, pytest-pinned)
-    write_ivf_pq_index(emb, d, assign_mode="arrow", encode_mode="arrow")
-    out = ivf_pq_probe_index(spark, d, qs, k=5, probe_mode="arrow").orderBy(
-        "query_id", "rank"
-    )
+    write_ivf_pq_index(emb, d)
+    out = ivf_pq_probe_index(spark, d, qs, k=5).orderBy("query_id", "rank")
     return materialize_and_cleanup(out, d)
 
 
@@ -4015,12 +3984,10 @@ def q157_decontam_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = emb.filter(F.col("vec_id") >= 20)
     d = tempfile.mkdtemp(prefix="fdf_decontam_ivf_")
-    # r14: arrow cell assignment for the index build (bit-identical,
-    # pytest-pinned)
-    write_ivf_index(corpus, d, num_cells=16, assign_mode="arrow")
-    out = semantic_decontaminate_indexed(
-        spark, d, bench, threshold=0.35, nprobe=2, probe_mode="arrow"
-    ).orderBy("vec_id")
+    write_ivf_index(corpus, d, num_cells=16)
+    out = semantic_decontaminate_indexed(spark, d, bench, threshold=0.35, nprobe=2).orderBy(
+        "vec_id"
+    )
     return materialize_and_cleanup(out, d)
 
 
@@ -4241,12 +4208,7 @@ def q187_index_sync_via_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         cp, ip = f"{d}/corpus", f"{d}/index"
         commit_version(emb.filter(F.col("vec_id") >= 10), cp)
-        # r14: arrow assign+encode throughout the build/sync lifecycle
-        # (bit-identical to expr mode, pytest-pinned)
-        write_ivf_pq_index(
-            read_version(spark, cp), ip, corpus_id="vec_id",
-            assign_mode="arrow", encode_mode="arrow",
-        )
+        write_ivf_pq_index(read_version(spark, cp), ip, corpus_id="vec_id")
         commit_version(emb.filter(F.col("vec_id") < 10), cp)
         delete_where(spark, cp, "vec_id % 17 = 3")
         merge_on_read(
@@ -4256,15 +4218,13 @@ def q187_index_sync_via_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             ["vec_id"],
         )
-        sync_ivf_pq_index(
-            spark, cp, ip, "q187-etl", assign_mode="arrow", encode_mode="arrow"
-        )
+        sync_ivf_pq_index(spark, cp, ip, "q187-etl")
         qs = emb.filter(F.col("vec_id") < 5).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
         )
         out = ivf_pq_probe_index(
             spark, ip, qs, k=5, nprobe=64, rerank=10**6,
-            corpus=read_version(spark, cp), probe_mode="arrow",
+            corpus=read_version(spark, cp),
         ).orderBy("query_id", "rank")
         rows = out.collect()
         from fdf_spark.sources.tables import local_df

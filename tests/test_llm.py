@@ -14,6 +14,15 @@ from fdf_spark.sources.tables import load_table
 from tests.conftest import SMOKE_DIR
 
 
+def _digest(rows) -> str:
+    """Order-free fingerprint of a relation: ``repr`` is exact for
+    ints, floats (shortest round-trip) and bytes, so two digests agree
+    only on bitwise-equal rows."""
+    import hashlib
+
+    return hashlib.sha256(repr(sorted(rows)).encode()).hexdigest()[:16]
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     return load_table(spark, SMOKE_DIR, "documents")
@@ -788,16 +797,16 @@ def test_pq_ann_recall_and_rerank(spark):
 
 
 def test_pq_encode_modes_agree(spark):
-    # arrow (numpy) encode mirrors the expr fold: same sequential
-    # accumulation order, same half-up rounding — codes must be identical
+    # the numpy encode must keep the codes the retired column-expression
+    # encoder (per-subspace _l2_sub fold, F.round 6 dp, array_min ties
+    # to the smaller ordinal) produced on the fixture; digest captured
+    # from that encoder
     from fdf_spark.llm.similarity import pq_encode
 
     emb = spark.read.parquet(f"{SMOKE_DIR}/embeddings.parquet")
-    _, a = pq_encode(emb, encode_mode="expr")
-    _, b = pq_encode(emb, encode_mode="arrow")
-    ra = {r.vec_id: list(r.code) for r in a.select("vec_id", "code").collect()}
-    rb = {r.vec_id: list(r.code) for r in b.select("vec_id", "code").collect()}
-    assert ra == rb
+    _, codes = pq_encode(emb)
+    got = [(r.vec_id, tuple(r.code)) for r in codes.select("vec_id", "code").collect()]
+    assert len(got) == 500 and _digest(got) == "aec3e1a98609fbd4"
 
 
 def test_pagerank_hub_and_mass(spark):
@@ -862,18 +871,20 @@ def test_tokenize_vocab_modes_agree(spark, docs):
 
 
 def test_assign_modes_agree_and_kmeans_arrow(spark, emb):
-    # arrow assignment must reproduce the expression argmin exactly
+    # cell assignment must keep the retired expression argmin's answer
     # (sequential dot/norm order, half-away rounding, tie-to-smaller-id)
+    # and the trained centroids must stay bitwise those it produced;
+    # digests captured from the expression tier
+    import struct
+
     from fdf_spark.llm.similarity import ivf_assign, kmeans_refine
 
-    _, a = ivf_assign(emb, num_cells=8, assign_mode="expr")
-    _, b = ivf_assign(emb, num_cells=8, assign_mode="arrow")
-    ra = {r.vec_id: r.cell for r in a.collect()}
-    rb = {r.vec_id: r.cell for r in b.collect()}
-    assert ra == rb
-    ca, _ = kmeans_refine(emb, num_cells=8, iters=2, assign_mode="expr")
-    cb, _ = kmeans_refine(emb, num_cells=8, iters=2, assign_mode="arrow")
-    assert ca == cb  # trained centroids bit-identical across modes
+    _, a = ivf_assign(emb, num_cells=8)
+    assert _digest([(r.vec_id, r.cell) for r in a.collect()]) == "4a8ab5ebfc5cd021"
+    cents, _ = kmeans_refine(emb, num_cells=8, iters=2)
+    assert [c for c, _ in cents] == list(range(8))
+    packed = [(c, tuple(struct.pack("<d", x) for x in v)) for c, v in cents]
+    assert _digest(packed) == "56eefabfdf6fa5bf"
 
 
 def test_all_pairs_cosine_matches_expression_path(spark, emb):
@@ -922,10 +933,11 @@ def test_lit_vec_bitwise_identical(spark):
 
 
 def test_ivf_pq_probe_modes_agree(spark, emb):
-    # r14: the Arrow probe tier must reproduce the expression probe
-    # relation EXACTLY — same probed cells per query (rounded-cosine
-    # order, ties to smaller cent_id) and bitwise-equal LUT entries —
-    # for both residual modes
+    # the probe relation must stay EXACTLY what the retired expression
+    # probe (cosine structs + _pq_lut over q or q − centroid) produced —
+    # same probed cells per query (rounded-cosine order, ties to smaller
+    # cent_id) and bitwise-equal LUT entries — for both residual modes;
+    # digests captured from the expression tier
     import struct as _struct
 
     from pyspark.sql import functions as F
@@ -935,58 +947,53 @@ def test_ivf_pq_probe_modes_agree(spark, emb):
     qs = emb.filter(F.col("vec_id") < 7).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
+    cells = [(0, 0), (0, 1), (0, 3), (1, 1), (1, 4), (1, 7), (2, 2), (2, 5), (2, 6),
+             (3, 0), (3, 3), (3, 5), (4, 1), (4, 4), (4, 7), (5, 2), (5, 3), (5, 5),
+             (6, 2), (6, 6), (6, 7)]
+    want = {False: "a2a4b9eed035f900", True: "1881fbb3e13daedd"}
     for by_residual in (False, True):
         cents, books, _ = _ivf_pq_build(
-            emb, 8, 8, 8, 64, by_residual, 0, "arrow", "arrow", "vec_id", "embedding"
+            emb, 8, 8, 8, 64, by_residual, 0, "vec_id", "embedding"
         )
-        def rel(mode):
-            rows = _ivf_pq_probes(
-                qs, cents, books, 3, 8, 8, 64, by_residual,
-                "query_id", "query_vec", mode,
-            ).collect()
-            return sorted(
-                (
-                    r["query_id"],
-                    r["cell"],
-                    tuple(
-                        tuple(_struct.pack("<d", x) for x in sub) for sub in r["lut"]
-                    ),
-                )
-                for r in rows
+        rows = _ivf_pq_probes(qs, cents, books, 3, by_residual, "query_id", "query_vec").collect()
+        rel = [
+            (
+                r["query_id"],
+                r["cell"],
+                tuple(tuple(_struct.pack("<d", x) for x in sub) for sub in r["lut"]),
             )
-        a, b = rel("expr"), rel("arrow")
-        assert a == b and len(a) == 7 * 3, f"by_residual={by_residual}"
+            for r in rows
+        ]
+        assert sorted((q, c) for q, c, _ in rel) == cells, f"by_residual={by_residual}"
+        assert _digest(rel) == want[by_residual], f"by_residual={by_residual}"
 
 
 def test_cells_arrow_matches_expr_router(spark, emb):
-    # r14: the arrow cell router must emit the identical (id, cell)
-    # probe relation as explode(slice(array_sort(_cell_scores), 1, n))
+    # the cell router must emit the (id, cell) probe relation the retired
+    # explode(slice(array_sort(cosine structs), 1, n)) router produced;
+    # literal captured from that router
     from pyspark.sql import functions as F
 
-    from fdf_spark.llm.similarity import _cell_scores, _cells_arrow, ivf_assign
+    from fdf_spark.llm.similarity import _probe_cells, ivf_assign
 
     cents, _ = ivf_assign(emb, num_cells=8)
     qs = emb.filter(F.col("vec_id") < 9).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
-    expr = qs.select(
-        "qid",
-        F.explode(
-            F.slice(F.array_sort(_cell_scores(F.col("qv"), cents)), 1, 3)
-        ).alias("__pr"),
-    ).select("qid", F.col("__pr")["cent_id"].alias("cell"))
-    want = sorted((r.qid, r.cell) for r in expr.collect())
+    want = [(0, 0), (0, 1), (0, 3), (1, 1), (1, 4), (1, 7), (2, 2), (2, 5), (2, 6),
+            (3, 0), (3, 3), (3, 5), (4, 1), (4, 4), (4, 7), (5, 2), (5, 3), (5, 5),
+            (6, 2), (6, 6), (6, 7), (7, 2), (7, 4), (7, 7), (8, 2), (8, 6), (8, 7)]
     got = sorted(
         (r.qid, r.cell)
-        for r in _cells_arrow(qs, cents, 3, "qid", "qv").select("qid", "cell").collect()
+        for r in _probe_cells(qs, cents, 3, "qid", "qv").select("qid", "cell").collect()
     )
-    assert want == got and len(got) == 9 * 3
+    assert got == want
 
 
 def test_semantic_dedup_pair_stage_matches_join_fold(spark, emb):
     # r14: the vectorized within-cell pair stage must reproduce the old
     # cell-keyed self-join + interpreted cosine fold exactly — same
-    # survivor set AND cells under both assign modes
+    # survivor set AND cells
     from pyspark.sql import functions as F
 
     from fdf_spark.llm.similarity import cosine, ivf_assign, semantic_dedup
@@ -1005,12 +1012,11 @@ def test_semantic_dedup_pair_stage_matches_join_fold(spark, emb):
         (r.vec_id, r.cell)
         for r in assigned.join(removed, "vec_id", "left_anti").select("vec_id", "cell").collect()
     )
-    for mode in ("expr", "arrow"):
-        got = sorted(
-            (r.vec_id, r.cell)
-            for r in semantic_dedup(emb, num_cells=8, threshold=0.3, assign_mode=mode).collect()
-        )
-        assert got == want and len(got) > 0
+    got = sorted(
+        (r.vec_id, r.cell)
+        for r in semantic_dedup(emb, num_cells=8, threshold=0.3).collect()
+    )
+    assert got == want and len(got) > 0
 
 
 # ---------------------------------------------------------------------------
@@ -2713,8 +2719,7 @@ def test_ivf_pq_persisted_probe_pruned(spark, tmp_path):
     one_q = qs.filter(F.col("query_id") == 0)
     narrow = ivf_pq_probe_index(s2, d, one_q, k=3, nprobe=1)
     cents = [(cid, vec) for cid, vec in meta["cents"]]
-    probes = _ivf_pq_probes(one_q, cents, meta["books"], 1, 8, 8, 64, False,
-                            "query_id", "query_vec")
+    probes = _ivf_pq_probes(one_q, cents, meta["books"], 1, False, "query_id", "query_vec")
     cells = {r["cell"] for r in probes.select("cell").distinct().collect()}
     # inputFiles covers the whole plan (the query side scans the
     # embeddings table too) — the pin is about the INDEX files
@@ -2775,15 +2780,15 @@ def test_ivf_pq_add_incremental(spark, tmp_path):
     meta = read_ivf_pq_meta(d)
     cents = [(cid, vec) for cid, vec in meta["cents"]]
     books = meta["books"]
-    a_half = _assign(half, cents, "vec_id", "embedding", "expr")
-    a_rest = _assign(rest, cents, "vec_id", "embedding", "expr")
+    a_half = _assign(half, cents, "vec_id", "embedding")
+    a_rest = _assign(rest, cents, "vec_id", "embedding")
     codes = None
     for part in (a_half, a_rest):
-        _, c = pq_encode(part, 8, 8, "vec_id", "embedding", 64, "expr",
+        _, c = pq_encode(part, 8, 8, "vec_id", "embedding", 64,
                          keep=("cell",), codebooks=books)
         c = c.select("vec_id", "cell", "code")
         codes = c if codes is None else codes.unionByName(c)
-    probes = _ivf_pq_probes(qs, cents, books, 2, 8, 8, 64, False, "query_id", "query_vec")
+    probes = _ivf_pq_probes(qs, cents, books, 2, False, "query_id", "query_vec")
     ref = _adc_score_topk(
         codes.join(F.broadcast(probes), "cell"), qs, emb, 5, 8, 0,
         "query_id", "vec_id", "query_vec", "embedding", True, True,
@@ -3128,9 +3133,9 @@ def test_ivf_pq_index_optimize_compaction(spark, tmp_path):
 
 
 def test_pq_codegen_compiles_strict(spark):
-    """Guard for VERDICT r10 #5: the PQ encode + ADC LUT expressions
-    must stay inside janino's 64 KB method limit — the old flat
-    m·ks·sub expansion compiled FINE as far as pytest could see
+    """Guard for VERDICT r10 #5: the ADC LUT and decimal-fold
+    expressions must stay inside janino's 64 KB method limit — the old
+    flat m·ks·sub expansion compiled FINE as far as pytest could see
     (Spark silently falls back to interpreted eval) but lost
     whole-stage codegen on the hottest ANN column.  Running with
     ``spark.sql.codegen.fallback=false`` turns the silent cliff into
@@ -3332,6 +3337,9 @@ def test_round6_half_boundary_parity(spark):
         # representable): the fold outputs the emulation actually sees
         1 / 3, 2 / 3, 0.1 + 0.2, 1 / 7, 355 / 113, -1 / 3,
         0.30000049999999997, 0.3000005000000001,
+        # larger magnitudes: the float error band around the boundary
+        # grows with |x|, so a fixed-width band misses these
+        518.6913645, -67127.4725275, 8609245.0944085,
         # plus an ordinary spread, away from any boundary
         0.123456789, -0.987654321, 0.042, 17.5, -0.0,
     ]
@@ -3339,22 +3347,6 @@ def test_round6_half_boundary_parity(spark):
     got = [r[0] for r in df.select(F.round("x", 6)).collect()]
     want = [float(x) for x in _round6_np(np.array(vals))]
     assert got == want
-
-
-def test_probe_and_assign_mode_validation(spark, emb):
-    # r15 (ADVICE r14): unknown probe_mode must raise everywhere, not
-    # silently run the slow expression tier
-    from pyspark.sql import functions as F
-
-    from fdf_spark.llm.similarity import ivf_ann_topk, ivf_pq_ann_topk
-
-    qs = emb.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    with pytest.raises(ValueError, match="probe_mode"):
-        ivf_ann_topk(qs, emb, probe_mode="arow")
-    with pytest.raises(ValueError, match="probe_mode"):
-        ivf_pq_ann_topk(qs, emb, probe_mode="arow")
 
 
 def test_lit_vec_nonfinite_fallback(spark):
@@ -3369,33 +3361,29 @@ def test_lit_vec_nonfinite_fallback(spark):
 
 
 def test_lsh_sig_modes_agree(spark, emb):
-    # r15 (VERDICT r14 #6): the arrow LSH signature tier must reproduce
-    # the expression fold exactly — same (id, table, bucket) relation
-    # and the same end-to-end top-k
+    # the LSH signature kernel must keep the end-to-end top-k the
+    # retired expression fold (zip_with/aggregate per plane) produced;
+    # digest captured from that fold
     from fdf_spark.llm.similarity import lsh_ann_topk
 
     qs = emb.filter(F.col("vec_id") < 7).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    def rel(mode):
-        return sorted(
-            (r.query_id, r.vec_id, r.cos_sim, r.rank)
-            for r in lsh_ann_topk(qs, emb, k=5, sig_mode=mode).collect()
-        )
-    a, b = rel("expr"), rel("arrow")
-    assert a == b and len(a) > 0
-    with pytest.raises(ValueError, match="sig_mode"):
-        lsh_ann_topk(qs, emb, sig_mode="arow")
+    rel = [
+        (r.query_id, r.vec_id, r.cos_sim, r.rank)
+        for r in lsh_ann_topk(qs, emb, k=5).collect()
+    ]
+    assert len(rel) == 35 and _digest(rel) == "a836860743810f53"
 
 
 def test_gram_hash_modes_agree_adversarial(spark):
-    # r15: the arrow gram tier must reproduce the interpreted
+    # the gram kernel must reproduce the retired interpreted
     # transform/array_distinct plan BIT-FOR-BIT, including the regex
     # envelope edges: Java's default \s is the ASCII class (NBSP is a
-    # word char in both engines under re.ASCII), split keeps
-    # leading/trailing empties, lower() is Locale.ROOT, and
-    # array_distinct keeps first occurrence. Null/short/empty docs
-    # yield no rows on both paths.
+    # word char under re.ASCII too), split keeps leading/trailing
+    # empties, lower() is Locale.ROOT, and array_distinct keeps first
+    # occurrence. Null/short/empty docs yield no rows. The expected
+    # (doc_id, sz, sh) rows were captured from the expression plan.
     from fdf_spark.llm.dedup import gram_hash_rows
 
     rows = [
@@ -3413,70 +3401,71 @@ def test_gram_hash_modes_agree_adversarial(spark):
         (12, "İstanbul Iı dotted capital words"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    key = lambda r: (r.doc_id, r.sz, r.sh)
-    a = sorted(gram_hash_rows(df, with_size=True, mode="expr").collect(), key=key)
-    b = sorted(gram_hash_rows(df, with_size=True, mode="arrow").collect(), key=key)
-    assert [key(r) for r in a] == [key(r) for r in b] and len(a) > 0
-    # docs 1-4 are too short / null on both paths
-    assert {r.doc_id for r in b}.isdisjoint({1, 2, 3, 4})
-    with pytest.raises(ValueError, match="gram mode"):
-        gram_hash_rows(df, mode="arow")
+    want = [
+        (5, 1, 424743546561510878),
+        (6, 4, 167105503613300670), (6, 4, 344842773752383380),
+        (6, 4, 440083618781731449), (6, 4, 771289489930066954),
+        (7, 5, 22335585116289888), (7, 5, 228381004027125445),
+        (7, 5, 717443081023947323), (7, 5, 831509108048284190),
+        (7, 5, 882248666489954331),
+        (8, 3, 698605558566090997), (8, 3, 965722191376412235),
+        (8, 3, 1124068414789507741),
+        (9, 3, 553613897236631486), (9, 3, 843865202573499751),
+        (9, 3, 1037386602323100294),
+        (10, 1, 824130857548396971),
+        (11, 4, 533204320426843255), (11, 4, 960609009597319502),
+        (11, 4, 1077952207835526336), (11, 4, 1110413282161828850),
+        (12, 3, 321952854152980022), (12, 3, 707431155404796878),
+        (12, 3, 999056209682750955),
+    ]
+    got = sorted((r.doc_id, r.sz, r.sh) for r in gram_hash_rows(df, with_size=True).collect())
+    assert got == want  # docs 1-4 are too short / null: no rows
 
 
 def test_minhash_sig_modes_agree(spark, docs):
-    # r15: arrow minhash (distinct-gram md5 in C + one int64 numpy
-    # modmul per coefficient) must equal the expression fold exactly —
-    # same (doc, seed, minhash) relation and schema on the fixture
-    def rel(mode):
-        d = minhash_signatures(docs, num_hashes=16, sig_mode=mode)
-        # names+types must match (nullability may differ: posexplode's
-        # pos is non-nullable, mapInPandas output fields are nullable —
-        # invisible to every consumer and to the driver's pandas-level
-        # schema check)
-        return sorted((r.doc_id, r.seed, r.minhash) for r in d.collect()), [
-            (f.name, f.dataType) for f in d.schema.fields
-        ]
-    (a, sa), (b, sb) = rel("expr"), rel("arrow")
-    assert a == b and len(a) > 0 and sa == sb
-    with pytest.raises(ValueError, match="sig mode"):
-        minhash_signatures(docs, sig_mode="arow")
+    # minhash (distinct-gram md5 in C + one int64 numpy modmul per
+    # coefficient) must keep the (doc, seed, minhash) relation and the
+    # column names/types of the retired expression fold; digest
+    # captured from that fold
+    from pyspark.sql.types import IntegerType, LongType
+
+    d = minhash_signatures(docs, num_hashes=16)
+    rel = [(r.doc_id, r.seed, r.minhash) for r in d.collect()]
+    assert len(rel) == 8000 and _digest(rel) == "7dd5345096756a79"
+    assert [(f.name, f.dataType) for f in d.schema.fields] == [
+        ("doc_id", LongType()), ("seed", IntegerType()), ("minhash", LongType())
+    ]
 
 
 def test_ngram_and_decontam_gram_modes_agree(spark, docs):
-    # r15: end-to-end pin for the two gram-tier consumers — the pair
-    # relation and the contamination profile are mode-invariant
+    # end-to-end pin for the two gram-kernel consumers — the pair
+    # relation and the contamination profile stay what the retired
+    # expression gram plan gave; digests captured from that plan
     from fdf_spark.llm.decontam import decontaminate
 
-    pa = sorted(
+    pairs = [
         (r.id_a, r.id_b, r.jaccard)
-        for r in ngram_jaccard_pairs(docs, threshold=0.2, gram_mode="expr").collect()
-    )
-    pb = sorted(
-        (r.id_a, r.id_b, r.jaccard)
-        for r in ngram_jaccard_pairs(docs, threshold=0.2, gram_mode="arrow").collect()
-    )
-    assert pa == pb and len(pa) > 0
+        for r in ngram_jaccard_pairs(docs, threshold=0.2).collect()
+    ]
+    assert len(pairs) == 28 and _digest(pairs) == "ab1a071112fec57c"
     bench = docs.filter(F.col("doc_id") % 97 == 0)
-    da = sorted(map(tuple, decontaminate(docs, bench, gram_mode="expr").collect()))
-    db = sorted(map(tuple, decontaminate(docs, bench, gram_mode="arrow").collect()))
-    assert da == db and len(da) > 0
+    prof = [tuple(r) for r in decontaminate(docs, bench).collect()]
+    assert len(prof) == 500 and sum(r[4] for r in prof) == 8
+    assert _digest(prof) == "8719914cfecbbfa7"
 
 
 def test_kmeans_mean_modes_agree(spark, emb):
-    # r15: the arrow mean-partials tier (scaled-int64 partial sums,
-    # Decimal scaleb + double division on the driver) must reproduce
-    # the `cast(sum(cast(x as decimal)) as double)/count(*)` expression
-    # aggregate BITWISE across Lloyd iterations
+    # the mean-partials kernel (scaled-int64 partial sums, Decimal
+    # scaleb + double division on the driver) must reproduce the retired
+    # `cast(sum(cast(x as decimal(25,6))) as double)/count(*)` aggregate
+    # BITWISE across Lloyd iterations; digest captured from it
     import struct
 
     from fdf_spark.llm.similarity import kmeans_refine
 
-    pack = lambda cents: [(c, [struct.pack("<d", x) for x in v]) for c, v in cents]
-    a, _ = kmeans_refine(emb, num_cells=8, iters=2, assign_mode="arrow", mean_mode="expr")
-    b, _ = kmeans_refine(emb, num_cells=8, iters=2, assign_mode="arrow", mean_mode="arrow")
-    assert pack(a) == pack(b) and len(a) > 0
-    with pytest.raises(ValueError, match="mean_mode"):
-        kmeans_refine(emb, num_cells=8, iters=1, mean_mode="arow")
+    cents, _ = kmeans_refine(emb, num_cells=8, iters=2)
+    packed = [(c, tuple(struct.pack("<d", x) for x in v)) for c, v in cents]
+    assert len(packed) == 8 and _digest(packed) == "56eefabfdf6fa5bf"
 
 
 def test_scaled6_int_matches_round6(spark):
@@ -3491,9 +3480,60 @@ def test_scaled6_int_matches_round6(spark):
     assert np.array_equal(_scaled6_int_np(vals), np.rint(_round6_np(vals) * 1e6).astype(np.int64))
 
 
+def test_scaled6_int_exact_past_2_53(spark):
+    # |x|·1e6 >= 2^53: float64 cannot hold the odd scaled integer, so
+    # the kernel must take it from the decimal repr — checked against
+    # the unscaled integer of Spark's own cast(x AS decimal(38,6)),
+    # together with half-boundary values whose float error band is wide
+    import numpy as np
+
+    from fdf_spark.llm.similarity import _scaled6_int_np
+
+    vals = [9647665529.666325, 9301698347.849005, 9144872573.335085,
+            10071764008.613379, -9647665529.666325, 0.5, 1e6,
+            518.6913645, -67127.4725275]  # last two: half boundary past |x| ~ 100
+    df = spark.createDataFrame([(v,) for v in vals], "x double")
+    want = [
+        int(r[0].scaleb(6)) for r in df.select(F.col("x").cast("decimal(38,6)")).collect()
+    ]
+    assert want[0] % 2 == 1  # the case float64 rounds away
+    assert _scaled6_int_np(np.array(vals)).tolist() == want
+    for bad in (1e13, float("inf"), float("nan")):  # past int64 / not finite
+        with pytest.raises(ValueError, match="envelope"):
+            _scaled6_int_np(np.array([1.0, bad]))
+
+
+def test_llm_operators_have_no_tier_flags():
+    # one implementation per operator: no public llm callable may grow
+    # a `mode` / `*_mode` switch except the two that pick a tier from a
+    # property of the input (vocabulary size, document length)
+    import importlib
+    import inspect
+    import pkgutil
+
+    import fdf_spark.llm as llm
+
+    allowed = {("tokenize_vocab", "mode"), ("inverted_index", "tf_mode")}
+    found = set()
+    for info in pkgutil.iter_modules(llm.__path__):
+        mod = importlib.import_module(f"fdf_spark.llm.{info.name}")
+        for name, obj in vars(mod).items():
+            if name.startswith("_") or getattr(obj, "__module__", None) != mod.__name__:
+                continue
+            if not callable(obj):
+                continue
+            try:
+                params = inspect.signature(obj).parameters
+            except (TypeError, ValueError):
+                continue
+            found |= {(name, p) for p in params if p == "mode" or p.endswith("_mode")}
+    assert found == allowed
+
+
 def test_repetition_stats_modes_agree(spark, docs):
-    # r15: the arrow counter pass must equal the explode+groupBy
-    # expression plan exactly, incl. the <2-word / null-text null rows
+    # the counter pass must equal the retired explode+groupBy expression
+    # plan exactly, incl. the <2-word / null-text null rows; expected
+    # values captured from that plan
     from fdf_spark.llm.repetition import repetition_stats
 
     edge = spark.createDataFrame(
@@ -3501,47 +3541,80 @@ def test_repetition_stats_modes_agree(spark, docs):
          (9005, " x\ty z "), (9006, "b c b c b")],
         "doc_id long, text string",
     )
-    for frame in (docs, edge):
-        a = sorted(map(tuple, repetition_stats(frame, mode="expr").collect()))
-        b = sorted(map(tuple, repetition_stats(frame, mode="arrow").collect()))
-        assert a == b and len(a) > 0
-    with pytest.raises(ValueError, match="repetition mode"):
-        repetition_stats(docs, mode="arow")
+    assert sorted(map(tuple, repetition_stats(edge).collect())) == [
+        (9001, None, None, None, None),
+        (9002, 1, 0.0, None, None),
+        (9003, 1, 0.0, None, None),
+        (9004, 4, 0.75, 1.0, 0.666667),
+        (9005, 5, 0.2, 0.25, 0.0),
+        (9006, 5, 0.6, 0.5, 0.5),
+    ]
+    rows = [tuple(r) for r in repetition_stats(docs).collect()]
+    assert len(rows) == 500 and _digest(rows) == "1d68d3859849e844"
 
 
 def test_semantic_decontaminate_score_modes_agree(spark, emb):
-    # r15: the arrow score tier (batch numpy cosine under the pinned
-    # _assign_arrow conventions, argmax-first over ascending bench ids)
-    # must reproduce the expression broadcast-join + struct-max argmax
-    # exactly, incl. the every-row verdict and empty-benchmark contract
+    # the score kernel (batch numpy cosine under the _assign conventions,
+    # argmax-first over ascending bench ids) must reproduce the retired
+    # broadcast-join + struct-max argmax exactly, incl. the every-row
+    # verdict and empty-benchmark contract; digests captured from it
     from fdf_spark.llm.decontam import semantic_decontaminate
 
     bench = emb.filter(F.col("vec_id") < 6).select(
         F.col("vec_id").alias("bench_id"), F.col("embedding").alias("bench_vec")
     )
     corpus = emb.filter(F.col("vec_id") >= 6)
-    for b in (bench, bench.filter(F.col("bench_id") < 0)):  # incl. empty set
-        a = sorted(map(tuple, semantic_decontaminate(corpus, b, 0.3, score_mode="expr").collect()))
-        c = sorted(map(tuple, semantic_decontaminate(corpus, b, 0.3, score_mode="arrow").collect()))
-        assert a == c and len(a) > 0
-    with pytest.raises(ValueError, match="score_mode"):
-        semantic_decontaminate(corpus, bench, score_mode="arow")
+    empty = bench.filter(F.col("bench_id") < 0)
+    for b, digest, flagged in (
+        (bench, "547435481b5f2454", 23),
+        (empty, "1768d720e00b0e2e", 0),
+    ):
+        rows = [tuple(r) for r in semantic_decontaminate(corpus, b, 0.3).collect()]
+        assert len(rows) == 494 and sum(r[3] for r in rows) == flagged
+        assert _digest(rows) == digest
+
+
+def test_semantic_decontaminate_duplicate_ids(spark):
+    """One verdict per corpus ROW: an id that appears three times gets
+    exactly three rows (a join back onto the ids would give nine), with
+    and without benchmark matches."""
+    from fdf_spark.llm.decontam import semantic_decontaminate
+
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (1, [0.0, 1.0]), (1, [1.0, 1.0]), (2, [0.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    bench = spark.createDataFrame([(10, [1.0, 0.0])], "bench_id long, bench_vec array<double>")
+    got = sorted(
+        map(tuple, semantic_decontaminate(corpus, bench, threshold=0.9).collect()),
+        key=repr,
+    )
+    assert got == sorted(
+        [
+            (1, 10, 1.0, True),
+            (1, 10, 0.0, False),
+            (1, 10, 0.707107, False),
+            (2, None, None, False),  # zero vector: NaN cosine, no verdict
+        ],
+        key=repr,
+    )
+    empty = bench.filter(F.col("bench_id") < 0)
+    rows = semantic_decontaminate(corpus, empty, threshold=0.9).collect()
+    assert sorted(r["vec_id"] for r in rows) == [1, 1, 1, 2]
+    assert all(r["best_bench"] is None and not r["contaminated"] for r in rows)
 
 
 def test_train_pq_codebooks_modes_agree(spark, emb):
-    # r15 (VERDICT r14 #7): the arrow training pass (numpy codes under
-    # the pinned encode conventions + scaled-int64 partial sums) must
-    # reproduce the m*ks*(sub+1)-aggregate expression iteration BITWISE
-    # (measured 59 s -> 2.5 s on the smoke fixture; the expression
-    # construction alone is thousands of py4j round trips)
+    # the training pass (numpy codes under the encode conventions +
+    # scaled-int64 partial sums) must reproduce the retired
+    # m*ks*(sub+1)-aggregate expression iteration BITWISE; digest of the
+    # packed codebooks captured from that iteration
+    import hashlib
     import struct
 
     from fdf_spark.llm.similarity import _pq_seed_books, train_pq_codebooks
 
     seeds = _pq_seed_books(emb, "embedding", "vec_id", 4, 8, 16)
-    pack = lambda books: [[tuple(struct.pack("<d", x) for x in c) for c in b] for b in books]
-    a = train_pq_codebooks(emb, "embedding", seeds, iters=1, mode="expr")
-    b = train_pq_codebooks(emb, "embedding", seeds, iters=1, mode="arrow")
-    assert pack(a) == pack(b)
-    with pytest.raises(ValueError, match="train mode"):
-        train_pq_codebooks(emb, "embedding", seeds, iters=1, mode="arow")
+    books = train_pq_codebooks(emb, "embedding", seeds, iters=1)
+    packed = [[tuple(struct.pack("<d", x) for x in c) for c in b] for b in books]
+    assert hashlib.sha256(repr(packed).encode()).hexdigest()[:16] == "7c5011cfe596d4b0"

@@ -345,7 +345,7 @@ def main() -> None:
     pqq = corpus.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    timed("pq adc topk (N3)", n, pq_ann_topk(pqq, corpus, k=10, exact_decimal=False, encode_mode="arrow"))
+    timed("pq adc topk (N3)", n, pq_ann_topk(pqq, corpus, k=10, exact_decimal=False))
 
     # 16e1b) IVF ANN with MEASURED recall@10 (N3): 2M clustered 16-dim
     # vectors, 64 cells, default nprobe=2 — the probe plan touches
@@ -371,9 +371,7 @@ def main() -> None:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     t0 = time.perf_counter()
-    ann_rows = ivf_ann_topk(
-        ann_q, corpus, k=10, num_cells=n_cells, nprobe=2, assign_mode="arrow"
-    ).collect()
+    ann_rows = ivf_ann_topk(ann_q, corpus, k=10, num_cells=n_cells, nprobe=2).collect()
     dt = time.perf_counter() - t0
     exact_rows = cosine_topk(ann_q, corpus, k=10).collect()
     ex, an = {}, {}
@@ -418,7 +416,7 @@ def main() -> None:
     t0 = time.perf_counter()
     ann_rows = ivf_pq_ann_topk(
         ann_q, corpus, k=10, num_cells=n_cells, nprobe=4, rerank=12,
-        by_residual=True, exact_decimal=False, assign_mode="arrow", encode_mode="arrow",
+        by_residual=True, exact_decimal=False,
     ).collect()
     dt = time.perf_counter() - t0
     exact_rows = cosine_topk(ann_q, corpus, k=10).collect()
@@ -448,10 +446,7 @@ def main() -> None:
     d = tempfile.mkdtemp(prefix="stress_ivfpq_idx_")
     try:
         t0 = time.perf_counter()
-        write_ivf_pq_index(
-            corpus, d, num_cells=n_cells, by_residual=True,
-            assign_mode="arrow", encode_mode="arrow",
-        )
+        write_ivf_pq_index(corpus, d, num_cells=n_cells, by_residual=True)
         dtb = time.perf_counter() - t0
         print(
             f"{'ivf-pq index build (N17)':28s} {n/1e6:8.1f} Mrows {dtb:7.2f} s {n/dtb/1e6:8.1f} Mrows/s",
@@ -498,8 +493,8 @@ def main() -> None:
         shutil.rmtree(d, ignore_errors=True)
 
     # 16e2) trained coarse quantizer (N3): 2 Lloyd iterations over 1M
-    # 64-dim vectors, 32 cells — arrow assignment (numerically identical
-    # to the expr path, ~15x faster), one cells-row agg per iteration
+    # 64-dim vectors, 32 cells — Arrow assignment, one per-batch
+    # partial-sum pass per iteration
     from fdf_spark.llm.similarity import kmeans_refine
 
     n = 1_000_000
@@ -509,7 +504,7 @@ def main() -> None:
     )
     corpus = spark.range(0, n, 1, 64).select(F.col("id").alias("vec_id"), vecp.alias("embedding"))
     t0 = time.perf_counter()
-    _, asg = kmeans_refine(corpus, num_cells=32, iters=2, assign_mode="arrow")
+    _, asg = kmeans_refine(corpus, num_cells=32, iters=2)
     asg.write.format("noop").mode("overwrite").save()
     dt = time.perf_counter() - t0
     print(f"{'kmeans 2 iters (N3)':28s} {n/1e6:8.1f} Mrows {dt:7.2f} s {n/dt/1e6:8.1f} Mrows/s", flush=True)
