@@ -835,27 +835,12 @@ def _l2(a: Column, b: Column, decimals: int | None = 6) -> Column:
     return F.round(d, decimals) if decimals is not None else d
 
 
-def _l2_sub(qsub: Column, c: Column) -> Column:
-    """Squared L2 of a pre-cast double subvector against a RUNTIME
-    array (a codebook row iterated by ``F.transform``): zip_with
-    squares element-wise, aggregate sums left-assoc from 0.0 (every
-    term is a square, so never −0.0), then round(…, 6)."""
-    return F.round(
-        F.aggregate(
-            F.zip_with(qsub, c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        ),
-        6,
-    )
-
-
 def _pq_dists_np(x, books_np):
     """(rows, m, ks) squared distances of each row's ``m`` subvectors
     to every codeword: accumulated SEQUENTIALLY over the subvector (the
-    :func:`_l2_sub` fold order the SQL replay uses) and rounded 6 dp
-    like ``F.round`` (:func:`_round6_np`; distances are ≥ 0, so
-    half-away == half-up)."""
+    ``list_sum`` fold order of the ``_l2_sql`` replay in
+    ``queries/llm.py``) and rounded 6 dp like ``F.round``
+    (:func:`_round6_np`; distances are ≥ 0, so half-away == half-up)."""
     import numpy as np
 
     m, ks, sub = books_np.shape
@@ -863,7 +848,7 @@ def _pq_dists_np(x, books_np):
     for j in range(m):
         xj = x[:, j * sub : (j + 1) * sub]
         acc = np.zeros((len(x), ks))
-        for i in range(sub):  # sequential i-order == _l2_sub fold
+        for i in range(sub):  # sequential i-order == _l2_sql's list_sum
             d = xj[:, i : i + 1] - books_np[j][None, :, i]
             acc += d * d
         out[:, j] = _round6_np(acc)
@@ -1034,10 +1019,13 @@ def pq_ann_topk(
     once, and scoring a corpus vector is ``m`` table lookups summed —
     no float vector math on the scan.
 
-    Scale shape: the LUT is queries × m × ks doubles (KB), shipped as
-    literals inside the broadcast query row; the corpus side reads the
-    CODES relation (32x smaller than the embeddings), stays map-side
-    through scoring, and only the per-query top-k window shuffles.
+    Visibly eager on the queries: the build collects them (one job) and
+    computes each LUT on the driver with :func:`_pq_dists_np`, the
+    encoder's kernel; a bad query vector raises ``ValueError`` there.
+    Scale shape: the LUTs (queries × m × ks doubles, KB) are broadcast;
+    the corpus side reads the CODES relation (32x smaller than the
+    embeddings), stays map-side through scoring, and only the
+    per-query top-k window shuffles.
     ``rerank > 0`` re-scores the top ``rerank*k`` ADC candidates with
     exact distances on the (partition-pruned) embedding rows — the
     standard recall knob.
@@ -1052,34 +1040,43 @@ def pq_ann_topk(
     production setting.
     """
     books, codes = pq_encode(corpus, m, ks, corpus_id, corpus_vec, dim)
-    q = queries.select(
-        query_id, query_vec, _pq_lut(books, query_vec, m, ks, dim).alias("lut")
-    )
-    scored = codes.join(F.broadcast(q))
+    scored = codes.join(F.broadcast(_query_luts(queries, books, query_id, query_vec, dim)))
     return _adc_score_topk(
         scored, queries, corpus, k, m, rerank,
         query_id, corpus_id, query_vec, corpus_vec, exclude_self, exact_decimal,
     )
 
 
-def _pq_lut(books, query_vec: str, m: int, ks: int, dim: int) -> Column:
-    """Per-query ADC lookup table as Spark expressions under the
-    :func:`_l2_sub` contract — the one the encoder
-    (:func:`_pq_dists_np`) and the SQL replay share."""
-    sub = dim // m
-    vec = F.col(query_vec)
-    luts = []
-    for j in range(m):
-        # constant-folded literal codebook + one transform lambda: the
-        # old per-entry flat expansion generated m·ks·sub terms in one
-        # projection and tripped janino's 64 KB method limit (VERDICT
-        # r10 #5) — interpreted fallback on the probe's hottest column
-        qsub = F.array(*[vec.getItem(j * sub + i).cast("double") for i in range(sub)])
-        cents = F.array(*[_lit_vec(books[j][c]) for c in range(ks)])
-        # closure factory, NOT a default arg: pyspark counts lambda
-        # params, and a defaulted second param reads as (element, index)
-        luts.append(F.transform(cents, (lambda q: lambda c: _l2_sub(q, c))(qsub)))
-    return F.array(*luts)
+def _query_luts(queries: DataFrame, books, query_id: str, query_vec: str, dim: int) -> DataFrame:
+    """Per-query ADC lookup tables as a local ``(query_id, lut)``
+    relation: the queries are collected once (the broadcast puts them on
+    the driver anyway) and each LUT is :func:`_pq_dists_np` of the query
+    vector.  A NULL vector, one shorter than ``dim``, or a NULL or
+    non-finite element raises ``ValueError`` naming the query id."""
+    import numpy as np
+
+    from fdf_spark.sources.tables import local_df
+
+    rows = queries.select(query_id, query_vec).collect()
+    x = np.full((len(rows), dim), np.nan)
+    for i, (qid, v) in enumerate(rows):
+        head = np.asarray((v or [])[:dim], dtype=np.float64)
+        x[i, : len(head)] = head
+        if not np.isfinite(x[i]).all():
+            got = (
+                "NULL" if v is None
+                else f"length {len(v)}" if len(v) < dim
+                else "a NULL or non-finite element"
+            )
+            raise ValueError(
+                f"pq_ann_topk: query {qid!r} has {query_vec} {got}; expected {dim} finite values"
+            )
+    id_type = queries.schema[query_id].dataType.simpleString()
+    return local_df(
+        queries.sparkSession,
+        [(r[0], lut) for r, lut in zip(rows, _pq_dists_np(x, np.array(books)).tolist())],
+        f"{query_id} {id_type}, lut array<array<double>>",
+    )
 
 
 def _adc_score_topk(

@@ -2311,7 +2311,7 @@ rstats AS (
     doc="Gopher-style intra-document repetition profile: duplicate-word "
     "ratio, most-frequent-2-gram fraction, duplicate-2-gram fraction — "
     "the standard boilerplate/keyword-stuffing detectors for corpus "
-    "curation. Per-document counters in one Arrow pass — no exchange.",
+    "curation. Per-document counters in one Arrow pass — no aggregation exchange.",
 )
 def q93_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fdf_spark.llm.repetition import repetition_stats

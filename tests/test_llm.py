@@ -798,15 +798,58 @@ def test_pq_ann_recall_and_rerank(spark):
 
 def test_pq_encode_modes_agree(spark):
     # the numpy encode must keep the codes the retired column-expression
-    # encoder (per-subspace _l2_sub fold, F.round 6 dp, array_min ties
-    # to the smaller ordinal) produced on the fixture; digest captured
-    # from that encoder
+    # encoder (per-subspace zip_with/aggregate fold, F.round 6 dp,
+    # array_min ties to the smaller ordinal) produced on the fixture;
+    # digest captured from that encoder
     from fdf_spark.llm.similarity import pq_encode
 
     emb = spark.read.parquet(f"{SMOKE_DIR}/embeddings.parquet")
     _, codes = pq_encode(emb)
     got = [(r.vec_id, tuple(r.code)) for r in codes.select("vec_id", "code").collect()]
     assert len(got) == 500 and _digest(got) == "aec3e1a98609fbd4"
+
+
+def test_pq_query_luts_match_expression_lut(spark, emb):
+    # the driver-side numpy LUTs must keep, bitwise, the values of the
+    # retired expression LUT (literal codebooks + transform/zip_with/
+    # aggregate fold, F.round 6 dp) at the q114 shape (m=8, ks=16) and
+    # the codegen test's m=8/ks=8; digests captured from that tier
+    import struct as _struct
+
+    from fdf_spark.llm.similarity import _pq_seed_books, _query_luts
+
+    qs = emb.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    want = {16: "38384dc0a088ac1d", 8: "a8b621866773faee"}
+    for ks, digest in want.items():
+        books = _pq_seed_books(emb, "embedding", "vec_id", 8, ks, 8)
+        rows = _query_luts(qs, books, "query_id", "query_vec", 64).collect()
+        rel = [
+            (r["query_id"], tuple(tuple(_struct.pack("<d", x) for x in s) for s in r["lut"]))
+            for r in rows
+        ]
+        assert len(rel) == 10 and all(len(lut) == 8 and len(lut[0]) == ks for _, lut in rel)
+        assert _digest(rel) == digest, f"ks={ks}"
+
+
+def test_pq_ann_topk_rejects_bad_query_vectors(spark, emb):
+    # a NULL query vector used to return k "neighbours" at adist NULL,
+    # and a short one died with INVALID_ARRAY_INDEX inside the broadcast
+    # job; both must raise at build time, naming the query and dim
+    from fdf_spark.llm.similarity import pq_ann_topk
+
+    v = [list(r.embedding) for r in emb.filter("vec_id < 2").orderBy("vec_id").collect()]
+    vt = emb.schema["embedding"].dataType.simpleString()
+    schema = f"query_id long, query_vec {vt}"
+    cases = ((None, "NULL"), (v[1][:40], "length 40"), (v[1][:63] + [None], "a NULL or"))
+    for bad, got in cases:
+        qs = spark.createDataFrame([(0, v[0]), (1, bad)], schema)
+        with pytest.raises(ValueError, match=f"query 1 has query_vec {got}.*expected 64"):
+            pq_ann_topk(qs, emb, k=3)
+    empty = pq_ann_topk(spark.createDataFrame([], schema), emb, k=3)
+    assert empty.columns == ["query_id", "vec_id", "adist", "rank"]
+    assert empty.collect() == []
 
 
 def test_pagerank_hub_and_mass(spark):
@@ -934,7 +977,8 @@ def test_lit_vec_bitwise_identical(spark):
 
 def test_ivf_pq_probe_modes_agree(spark, emb):
     # the probe relation must stay EXACTLY what the retired expression
-    # probe (cosine structs + _pq_lut over q or q − centroid) produced —
+    # probe (cosine structs + a literal-codebook LUT over q or
+    # q − centroid) produced —
     # same probed cells per query (rounded-cosine order, ties to smaller
     # cent_id) and bitwise-equal LUT entries — for both residual modes;
     # digests captured from the expression tier
@@ -3133,11 +3177,12 @@ def test_ivf_pq_index_optimize_compaction(spark, tmp_path):
 
 
 def test_pq_codegen_compiles_strict(spark):
-    """Guard for VERDICT r10 #5: the ADC LUT and decimal-fold
-    expressions must stay inside janino's 64 KB method limit — the old
-    flat m·ks·sub expansion compiled FINE as far as pytest could see
-    (Spark silently falls back to interpreted eval) but lost
-    whole-stage codegen on the hottest ANN column.  Running with
+    """Guard for VERDICT r10 #5: the decimal ADC fold must stay inside
+    janino's 64 KB method limit (the LUTs are numpy-built data now, so
+    the fold is the only generated ADC expression left) — a method
+    past it compiles FINE as far as pytest can see (Spark silently
+    falls back to interpreted eval) but loses whole-stage codegen on
+    the hottest ANN column.  Running with
     ``spark.sql.codegen.fallback=false`` turns the silent cliff into
     a hard failure."""
     from fdf_spark.llm.similarity import ivf_pq_ann_topk, pq_ann_topk
