@@ -1,8 +1,12 @@
 """Scalar / aggregate function library (SURVEY §2.8 F1-F12, §2.4).
 
-Everything here is a native Column expression — JVM-side, codegen'd,
-no Python UDFs — so the hot path stays inside whole-stage codegen at
-any scale.
+Everything here but one is a native Column expression — JVM-side,
+codegen'd, no Python UDFs — so the hot path stays inside whole-stage
+codegen at any scale.  The exception is :func:`dsum_partials`, the one
+Arrow kernel for exact scaled-6-dp partial sums (decimal aggregates
+with many measures, and the driver-side k-means / PQ models), which
+lives here with the numpy 6-dp helpers it and the similarity kernels
+share (``_round6_np``, ``_scaled6_int_np``).
 
 Oracle-stability note (drives the ``dsum``/``davg`` shape): summing
 doubles is order-dependent, and a 1000-partition shuffle sums in a
@@ -13,6 +17,8 @@ the final result back to double. The SQL-oracle twin of
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -57,114 +63,107 @@ def dsum(col: Column | str) -> Column:
     return F.sum(c.cast(SUM_DECIMAL)).cast("double")
 
 
-def dsum_partials_arrow(df, keys, measures):
-    """Arrow partial-sum tier for a ``groupBy(keys).agg(dsum(...)...)``
-    block → ``(keys…, n long, s_<name> decimal(38,0)…)`` with ONE
-    partial row per group per task.
+def dsum_partials(df, key_schema: str, batch_fn):
+    """Exact per-task partial sums behind the decimal(25,6) aggregates →
+    ``(keys…, n long, s array<decimal(38,0)>)`` with ONE row per key
+    per task.
 
-    Each measure value contributes its exact 6-dp HALF_UP decimal as a
-    scaled integer (``_scaled6_int_np`` — the same integer behind
-    ``cast(double AS decimal(18,6))``), per-task sums accumulate as
-    unbounded Python ints (chunked int64 adds, so no width ever
-    overflows silently), and the partial crosses the wire as
-    decimal(38,0).  The caller finishes with ``F.sum(s)`` (exact
-    decimal adds) and ``(s / 1000000).cast("double")`` — the division
-    result is decimal(38,6), exact because the value has ≤ 6
-    fractional digits, and the final cast is the same
-    correctly-rounded decimal→double both dsum and the DuckDB twin
-    perform.  Bitwise-equal to the dsum aggregate (pinned in pytest);
-    the win is that the per-row work is one numpy pass instead of a
-    per-row BigDecimal allocation per measure (~0.5 s per dsum column
-    at 600k rows — the r15 q48 decomposition), and the exchange
-    carries groups×tasks narrow rows either way (dsum's map-side
-    combine did the same).
+    ``batch_fn(pdf)`` maps each Arrow batch of ``df`` to
+    ``(key arrays, (rows, w) float64 matrix)`` pairs; ``key_schema`` is
+    the keys' DDL (``"cell long"``).  Each matrix value contributes its
+    exact 6-dp HALF_UP decimal as a scaled integer
+    (:func:`_scaled6_int_np` — the integer behind ``cast(double AS
+    decimal(p,6))``), rows group by key on pandas' C path
+    (``.indices``), and the integers sum per column in int64 chunks
+    that cannot wrap (:func:`_exact_colsum`) into unbounded Python ints
+    accumulated over every batch of the task.  ``s[i]`` is 10^6 × the
+    exact total of column ``i``.
 
-    Envelope (same one :func:`dsum` declares, enforced loudly): every
-    measure value must be finite and non-null — dsum's ANSI cast
-    raises on out-of-range and the fixture contract has no NaN/Inf/
-    NULL measures; this tier raises ``ValueError`` on any of them
-    rather than diverging silently.
+    Finish in the JVM with ``F.sum`` over the partials and
+    :func:`dsum_finish` (bitwise-equal to the :func:`dsum` aggregate,
+    pinned in pytest), or on the driver with :func:`dsum_means`.  The
+    per-row work is one numpy pass instead of a BigDecimal allocation
+    per value, and the partial relation is keys × tasks narrow rows —
+    what dsum's map-side combine shipped too.  Matrix columns computed
+    from other columns (e.g. ``p*(1-d)``) must use the IEEE op order of
+    the Column expression they stand for.
 
-    ``measures`` is ``{name: fn(pdf) -> float64 ndarray}`` — derived
-    columns (e.g. ``p*(1-d)``) compute inside the batch with the same
-    IEEE op order as the Column expression they replace.
+    Envelope (the one :func:`dsum` declares, enforced loudly): every
+    value must be finite and non-null with ``|round6(x)·1e6| < 2^63``;
+    anything else raises ``ValueError`` rather than diverging silently.
     """
     import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F811 — local alias
+    from pyspark.sql.types import StructType
 
-    from fdf_spark.llm.similarity import _scaled6_int_np
-
-    names = list(measures)
-
-    def _exact_sum(arr) -> int:
-        import numpy as np
-
-        if not len(arr):
-            return 0
-        m = int(np.abs(arr).max())
-        if m == 0:
-            return 0
-        step = max(1, (1 << 62) // (m + 1))
-        if step >= len(arr):
-            return int(arr.sum(dtype=np.int64))
-        return sum(
-            int(arr[i : i + step].sum(dtype=np.int64))
-            for i in range(0, len(arr), step)
-        )
+    names = StructType.fromDDL(key_schema).names
 
     def partials(batches):
-        import numpy as np
-
         acc: dict[tuple, list] = {}
         for pdf in batches:
-            vals = []
-            for name in names:
-                v = np.asarray(measures[name](pdf), dtype=np.float64)
-                if not np.isfinite(v).all():
-                    raise ValueError(
-                        f"dsum_partials_arrow: non-finite/null values in "
-                        f"measure {name!r} — outside the dsum envelope"
-                    )
-                vals.append(_scaled6_int_np(v))
-            # C-path grouping (pandas .indices), not a Python zip/tuple
-            # factorize — with one measure the Python key pass would
-            # dominate the batch (r15 q19 measurement)
-            idx = pdf.groupby(keys, sort=False, dropna=False).indices
-            for k, pos in idx.items():
-                if not isinstance(k, tuple):
-                    k = (k,)
-                n = len(pos)
-                sums = [_exact_sum(v[pos]) for v in vals]
-                a = acc.get(k)
-                if a is None:
-                    acc[k] = [n, sums]
-                else:
-                    a[0] += n
-                    a[1] = [x + y for x, y in zip(a[1], sums)]
-        out = {k: [] for k in keys}
-        out["n"] = []
-        for name in names:
-            out[f"s_{name}"] = []
-        for k, (n, sums) in acc.items():
-            for kc, kv in zip(keys, k):
-                out[kc].append(kv)
-            out["n"].append(n)
-            for name, s in zip(names, sums):
-                out[f"s_{name}"].append(s)
-        yield pd.DataFrame(out)
+            for key_arrays, x in batch_fn(pdf):
+                s = _scaled6_int_np(x)
+                keys = pd.DataFrame(dict(enumerate(key_arrays)))
+                groups = keys.groupby(list(keys.columns), sort=False, dropna=False)
+                for k, pos in groups.indices.items():  # one key → scalar k
+                    k = k if isinstance(k, tuple) else (k,)
+                    _add_partial(acc, k, len(pos), _exact_colsum(s[pos]))
+        if acc:  # an empty list column has no list<decimal> Arrow conversion
+            yield pd.DataFrame(
+                {
+                    **{name: [k[i] for k in acc] for i, name in enumerate(names)},
+                    "n": [n for n, _ in acc.values()],
+                    "s": [s for _, s in acc.values()],
+                }
+            )
 
-    key_schema = ", ".join(
-        f"{k} {df.schema[k].dataType.simpleString()}" for k in keys
+    return df.mapInPandas(
+        partials, schema=f"{key_schema}, n long, s array<decimal(38,0)>"
     )
-    s_schema = ", ".join(f"s_{name} decimal(38,0)" for name in names)
-    return df.mapInPandas(partials, schema=f"{key_schema}, n long, {s_schema}")
+
+
+def _add_partial(acc: dict, key: tuple, n: int, sums: list[int]) -> None:
+    """Fold one ``(n, column sums)`` partial into ``acc[key]``."""
+    a = acc.get(key)
+    if a is None:
+        acc[key] = [n, sums]
+    else:
+        a[0] += n
+        a[1] = [x + y for x, y in zip(a[1], sums)]
+
+
+def _exact_colsum(block) -> list[int]:
+    """Exact column sums of an int64 block as Python ints: int64 adds
+    over row chunks short enough that no chunk sum can wrap."""
+    import numpy as np
+
+    step = max(1, (1 << 62) // (int(np.abs(block).max(initial=0)) + 1))
+    tot = [0] * block.shape[1]
+    for i in range(0, len(block), step):
+        chunk = block[i : i + step].sum(axis=0, dtype=np.int64).tolist()
+        tot = [a + b for a, b in zip(tot, chunk)]
+    return tot
+
+
+def dsum_means(rows) -> dict[tuple, list[float]]:
+    """Driver finish of collected :func:`dsum_partials` rows → ``{keys:
+    [mean_0..mean_w-1]}``, each the value of the SQL aggregate
+    ``cast(sum(cast(x AS decimal(25,6))) AS double) / count(*)``: the
+    per-key totals are exact Python ints, ``t / 10**6`` is the
+    correctly-rounded decimal→double (CPython's int true division
+    rounds correctly, as the JVM and DuckDB casts do), then one double
+    division."""
+    acc: dict[tuple, list] = {}
+    for r in rows:
+        _add_partial(acc, tuple(r[:-2]), r[-2], [int(v) for v in r[-1]])
+    return {k: [t / 1000000 / n for t in s] for k, (n, s) in acc.items()}
 
 
 def dsum_finish(name: str) -> Column:
-    """The exact finish for a :func:`dsum_partials_arrow` total after
-    ``F.sum(s_<name>)``: decimal(38,0)/10^6 is decimal(38,6) and EXACT
-    (≤ 6 fractional digits), and the cast is the correctly-rounded
-    decimal→double both dsum and the oracle twin perform."""
+    """The exact finish for a :func:`dsum_partials` total summed as
+    ``F.sum(F.col("s")[i]).alias(f"s_{name}")``: decimal(38,0)/10^6 is
+    decimal(38,6) and EXACT (≤ 6 fractional digits), and the cast is
+    the correctly-rounded decimal→double both dsum and the oracle twin
+    perform."""
     return (F.col(f"s_{name}") / F.lit(1000000)).cast("double")
 
 
@@ -186,6 +185,95 @@ def sql_dsum(expr: str) -> str:
 def sql_davg(expr: str) -> str:
     """SQL twin of :func:`davg`."""
     return f"{sql_dsum(expr)} / COUNT({expr})"
+
+
+# --- exact 6-dp numerics (numpy twins of F.round / cast AS decimal(p,6)) ---
+
+def _round6_np(a):
+    """Vectorized 6-dp round matching ``F.round`` EXACTLY — including
+    at the ×1e6 half-way boundary (VERDICT r14 #8 / ADVICE r14).
+
+    Fast path: ``sign(x)·floor(|x|·1e6+0.5)/1e6`` (half-away-from-zero
+    in binary float64).  Spark's ``Round`` on a double is
+    ``BigDecimal.valueOf(x).setScale(6, HALF_UP)`` — DECIMAL arithmetic
+    on the shortest repr — so a value whose shortest decimal repr
+    terminates exactly at a 7th-digit 5 (e.g. ``5e-07``: scaled binary
+    product is 0.4999…94, floors DOWN; BigDecimal rounds UP) can
+    diverge.  Elements the fast path cannot decide (:func:`_exact6_mask`)
+    therefore take a scalar fixup through Python ``Decimal(repr(x))``
+    (:func:`_half_up6`) — ``repr``/``Double.toString`` are both
+    shortest-round-trip and ``ROUND_HALF_UP`` matches Java's (away from
+    zero) — which replays the JVM result bit-for-bit.  The band is
+    empty on real cosine/L2 folds (pytest boundary pin + two-SF oracle
+    sweeps), so the hot path stays one vectorized pass.  Non-finite
+    elements pass through."""
+    import numpy as np
+    from decimal import Decimal
+
+    a = np.asarray(a, dtype=np.float64)
+    with np.errstate(invalid="ignore"):
+        r = np.sign(a) * np.floor(np.abs(a) * 1e6 + 0.5) / 1e6
+        fix = _exact6_mask(a) & np.isfinite(a)
+    if fix.any():
+        r[fix] = [float(Decimal(_half_up6(float(v))).scaleb(-6)) for v in a[fix]]
+    return r
+
+
+def _exact6_mask(a):
+    """Elements where ``floor(|x|·1e6 + 0.5)`` may disagree with
+    :func:`_half_up6`: |x|·1e6 at or past 2^53 (no longer an exact
+    float integer; includes inf/nan), or within the float error of a
+    half boundary.  That error is the repr-vs-binary gap plus the
+    product's rounding, each ≤ |x|·1e6·2^-53, so the band grows with
+    the magnitude (a fixed band misses e.g. ``518.6913645``)."""
+    import numpy as np
+
+    y = np.abs(a) * 1e6
+    band = np.maximum(1e-8, y * 2.0**-50)
+    return ~(y < 2.0**53) | (np.abs(y - np.floor(y) - 0.5) < band)
+
+
+def _half_up6(v: float) -> int:
+    """``round6(v) × 1e6`` exactly: HALF_UP (away from zero, like
+    Java's) at 6 dp of ``Decimal(repr(v))``, the decimal Spark casts
+    and rounds."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return int(Decimal(repr(v)).scaleb(6).to_integral_value(rounding=ROUND_HALF_UP))
+
+
+def _scaled6_int_np(a):
+    """Vectorized int64 of ``round6(x) × 1e6`` — the exact integer
+    behind Spark's ``cast(double AS decimal(p,6))`` (HALF_UP at 6 dp of
+    the shortest repr, the same contract :func:`_round6_np` pins).
+    :func:`dsum_partials` sums these.
+
+    Envelope: the float fast path is exact only while |x|·1e6 < 2^53
+    and away from a half boundary; every other element
+    (:func:`_exact6_mask`) takes its integer from ``Decimal(repr(x))``
+    without passing through float64.  A non-finite element, or one
+    whose integer leaves int64, raises ``ValueError``."""
+    import numpy as np
+
+    a = np.asarray(a, dtype=np.float64)
+    with np.errstate(invalid="ignore"):
+        fix = _exact6_mask(a)
+        fast = np.sign(a) * np.floor(np.abs(a) * 1e6 + 0.5)
+        out = np.where(fix, 0.0, fast).astype(np.int64)
+    if fix.any():
+        out[fix] = [_scaled6_int_exact(float(v)) for v in a[fix]]
+    return out
+
+
+def _scaled6_int_exact(v: float) -> int:
+    """:func:`_half_up6` inside the int64 envelope; raises outside it."""
+    k = _half_up6(v) if math.isfinite(v) else None
+    if k is None or abs(k) >= 2**63:
+        raise ValueError(
+            f"_scaled6_int_np: {v!r} is non-finite or outside the scaled-6-dp envelope "
+            "(finite, |round6(x)·1e6| < 2^63)"
+        )
+    return k
 
 
 # --- unit conversions (reference post-process hooks) -----------------------

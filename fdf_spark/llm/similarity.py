@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from fdf_spark.functions.scalar import _round6_np, dsum_means, dsum_partials
+
 
 def _lit_vec(xs) -> Column:
     """Literal double-array column in ONE py4j/parser round trip.
@@ -47,153 +49,6 @@ def _lit_vec(xs) -> Column:
     if not all(math.isfinite(v) for v in vals):
         return F.array(*[F.lit(v) for v in vals])
     return F.expr("array(" + ",".join(repr(v) + "D" for v in vals) + ")")
-
-
-def _round6_np(a):
-    """Vectorized 6-dp round matching ``F.round`` EXACTLY — including
-    at the ×1e6 half-way boundary (VERDICT r14 #8 / ADVICE r14).
-
-    Fast path: ``sign(x)·floor(|x|·1e6+0.5)/1e6`` (half-away-from-zero
-    in binary float64).  Spark's ``Round`` on a double is
-    ``BigDecimal.valueOf(x).setScale(6, HALF_UP)`` — DECIMAL arithmetic
-    on the shortest repr — so a value whose shortest decimal repr
-    terminates exactly at a 7th-digit 5 (e.g. ``5e-07``: scaled binary
-    product is 0.4999…94, floors DOWN; BigDecimal rounds UP) can
-    diverge.  Elements the fast path cannot decide (:func:`_exact6_mask`)
-    therefore take a scalar fixup through Python ``Decimal(repr(x))``
-    (:func:`_half_up6`) — ``repr``/``Double.toString`` are both
-    shortest-round-trip and ``ROUND_HALF_UP`` matches Java's (away from
-    zero) — which replays the JVM result bit-for-bit.  The band is
-    empty on real cosine/L2 folds (pytest boundary pin + two-SF oracle
-    sweeps), so the hot path stays one vectorized pass.  Non-finite
-    elements pass through."""
-    import numpy as np
-    from decimal import Decimal
-
-    a = np.asarray(a, dtype=np.float64)
-    with np.errstate(invalid="ignore"):
-        r = np.sign(a) * np.floor(np.abs(a) * 1e6 + 0.5) / 1e6
-        fix = _exact6_mask(a) & np.isfinite(a)
-    if fix.any():
-        r[fix] = [float(Decimal(_half_up6(float(v))).scaleb(-6)) for v in a[fix]]
-    return r
-
-
-def _exact6_mask(a):
-    """Elements where ``floor(|x|·1e6 + 0.5)`` may disagree with
-    :func:`_half_up6`: |x|·1e6 at or past 2^53 (no longer an exact
-    float integer; includes inf/nan), or within the float error of a
-    half boundary.  That error is the repr-vs-binary gap plus the
-    product's rounding, each ≤ |x|·1e6·2^-53, so the band grows with
-    the magnitude (a fixed band misses e.g. ``518.6913645``)."""
-    import numpy as np
-
-    y = np.abs(a) * 1e6
-    band = np.maximum(1e-8, y * 2.0**-50)
-    return ~(y < 2.0**53) | (np.abs(y - np.floor(y) - 0.5) < band)
-
-
-def _half_up6(v: float) -> int:
-    """``round6(v) × 1e6`` exactly: HALF_UP (away from zero, like
-    Java's) at 6 dp of ``Decimal(repr(v))``, the decimal Spark casts
-    and rounds."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return int(Decimal(repr(v)).scaleb(6).to_integral_value(rounding=ROUND_HALF_UP))
-
-
-def _scaled6_int_np(a):
-    """Vectorized int64 of ``round6(x) × 1e6`` — the exact integer
-    behind Spark's ``cast(double AS decimal(p,6))`` (HALF_UP at 6 dp of
-    the shortest repr, the same contract :func:`_round6_np` pins).
-    The mean-partials kernels sum these as plain int64 adds.
-
-    Envelope: the float fast path is exact only while |x|·1e6 < 2^53
-    and away from a half boundary; every other element
-    (:func:`_exact6_mask`) takes its integer from ``Decimal(repr(x))``
-    without passing through float64.  A non-finite element, or one
-    whose integer leaves int64, raises ``ValueError``."""
-    import numpy as np
-
-    a = np.asarray(a, dtype=np.float64)
-    with np.errstate(invalid="ignore"):
-        fix = _exact6_mask(a)
-        fast = np.sign(a) * np.floor(np.abs(a) * 1e6 + 0.5)
-        out = np.where(fix, 0.0, fast).astype(np.int64)
-    if fix.any():
-        out[fix] = [_scaled6_int_exact(float(v)) for v in a[fix]]
-    return out
-
-
-def _scaled6_int_exact(v: float) -> int:
-    """:func:`_half_up6` inside the int64 envelope; raises outside it."""
-    k = _half_up6(v) if math.isfinite(v) else None
-    if k is None or abs(k) >= 2**63:
-        raise ValueError(
-            f"_scaled6_int_np: {v!r} is outside the scaled-6-dp envelope "
-            "(finite, |round6(x)·1e6| < 2^63)"
-        )
-    return k
-
-
-def _int64_colsum(s):
-    """Column sums of a block of :func:`_scaled6_int_np` integers;
-    raises instead of letting an int64 sum wrap."""
-    import numpy as np
-
-    if len(s) and int(np.abs(s).max()) > (2**63 - 1) // len(s):
-        raise ValueError(
-            f"scaled-6-dp partial sum of {len(s)} rows may leave int64 "
-            f"(max |round6(x)·1e6| = {int(np.abs(s).max())})"
-        )
-    return s.sum(axis=0, dtype=np.int64)
-
-
-def _cell_means(assigned: DataFrame, corpus_vec: str, dim: int):
-    """Per-cell per-dimension decimal-exact means →
-    sorted ``[(cell, [mean_0..mean_dim-1]), ...]``.
-
-    The values are those of the SQL aggregate
-    ``cast(sum(cast(x as decimal(25,6))) as double) / count(*)`` the
-    oracle replays: each element contributes its 6-dp HALF_UP decimal
-    (:func:`_scaled6_int_np` — an exact scaled int64), per-batch sums
-    are int64 adds guarded by :func:`_int64_colsum`, cross-batch
-    totals accumulate as Python ints (unbounded), and the final
-    ``float(Decimal(total).scaleb(-6)) / n`` replays the decimal→double
-    nearest rounding then double division.  One (cell, n, sums) row
-    per cell per batch reaches the driver (KB; the same O(cells×dim)
-    state the model collect already is), and there is no exchange."""
-    import numpy as np
-    import pandas as pd
-
-    def gen(batches):
-        for pdf in batches:
-            cells = pdf["cell"].to_numpy()
-            x = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[corpus_vec]]
-            )
-            s = _scaled6_int_np(x)
-            out_c, out_n, out_s = [], [], []
-            for c in np.unique(cells):
-                m = cells == c
-                out_c.append(int(c))
-                out_n.append(int(m.sum()))
-                out_s.append(_int64_colsum(s[m]))
-            yield pd.DataFrame({"cell": out_c, "n": out_n, "sums": out_s})
-
-    parts = assigned.select("cell", corpus_vec).mapInPandas(
-        gen, schema="cell long, n long, sums array<long>"
-    )
-    from decimal import Decimal
-
-    acc: dict[int, tuple[int, list[int]]] = {}
-    for r in parts.collect():
-        n, sums = acc.get(r.cell, (0, [0] * dim))
-        acc[r.cell] = (n + r.n, [a + b for a, b in zip(sums, r.sums)])
-    return sorted(
-        (c, [float(Decimal(t).scaleb(-6)) / n for t in sums])
-        for c, (n, sums) in acc.items()
-    )
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -808,19 +663,31 @@ def kmeans_refine(
     refined centroid doubles are identical regardless of partitioning.
 
     Scale shape (classic distributed Lloyd, what MLlib's KMeans also
-    does): per iteration ONE corpus scan whose per-batch partial sums
-    (:func:`_cell_means`) ride the collect — ≤ cells rows of (dim+1)
-    accumulators per batch, and the (cells × dim) model state on the
+    does): per iteration ONE corpus scan whose per-task partial sums
+    (:func:`_cell_sums`) ride the collect — ≤ cells rows of (dim+1)
+    accumulators per task, and the (cells × dim) model state on the
     driver is a few KB. The corpus is never shuffled and there is no
     per-dimension row fan-out. Empty cells drop out of the model,
     mirroring the SQL replay.
     """
-    dim = len(corpus.select(corpus_vec).first()[0])
     cents, assigned = ivf_assign(corpus, num_cells, corpus_id, corpus_vec)
     for _ in range(iters):
-        cents = _cell_means(assigned, corpus_vec, dim)
+        means = dsum_means(_cell_sums(assigned, corpus_vec).collect())
+        cents = sorted((c, v) for (c,), v in means.items())
         assigned = _assign(corpus, cents, corpus_id, corpus_vec)
     return cents, assigned
+
+
+def _cell_sums(assigned: DataFrame, corpus_vec: str) -> DataFrame:
+    """Exact per-task per-cell vector sums of ``assigned``
+    (:func:`dsum_partials`), the k-means mean-update partials."""
+    import numpy as np
+
+    def batch(pdf):
+        x = np.array([np.asarray(v, dtype=np.float64) for v in pdf[corpus_vec]])
+        return [((pdf["cell"].to_numpy(),), x)]
+
+    return dsum_partials(assigned.select("cell", corpus_vec), "cell long", batch)
 
 
 def _l2(a: Column, b: Column, decimals: int | None = 6) -> Column:
@@ -935,11 +802,11 @@ def train_pq_codebooks(
     books replay in a SQL oracle).
 
     Scale shape: per iteration ONE Arrow pass over ``df`` — each batch
-    encodes its rows like :func:`pq_encode` and emits per-(subspace,
-    codeword) partials (n, exact scaled-int64 sums from
-    :func:`_scaled6_int_np`), which the driver combines with Decimal
-    ``scaleb`` + one float division.  The corpus is never shuffled and
-    there is no per-subspace row fan-out.  At 100 TB you train on a
+    encodes its rows like :func:`pq_encode`, and :func:`dsum_partials`
+    turns the (subspace, codeword) subvectors into per-task partials
+    (n, exact scaled-6-dp sums), which the driver combines with
+    :func:`dsum_means`.  The corpus is never shuffled and there is no
+    per-subspace row fan-out.  At 100 TB you train on a
     deterministic hash-sample (llm/hashing) — the FAISS convention too
     — so the scan is of the sample, not the corpus.  Empty codebook
     entries keep their previous value.
@@ -950,10 +817,7 @@ def train_pq_codebooks(
     codebook around the actual noise distribution and recall rises
     with no query-time cost.
     """
-    from decimal import Decimal
-
     import numpy as np
-    import pandas as pd
 
     # shape is the initial codebooks' shape — a separate m/ks that
     # disagreed would silently truncate or crash mid-aggregation
@@ -962,40 +826,17 @@ def train_pq_codebooks(
     for _ in range(iters):
         books_np = np.array(books)  # (m, ks, sub)
 
-        def partials(batches):
-            for pdf in batches:
-                x = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-                codes = np.argmin(_pq_dists_np(x, books_np), axis=2)
-                s = _scaled6_int_np(x)  # (rows, dim) exact ints
-                out_j, out_c, out_n, out_s = [], [], [], []
-                for j in range(m):
-                    sj = s[:, j * sub : (j + 1) * sub]
-                    for c in np.unique(codes[:, j]):
-                        msk = codes[:, j] == c
-                        out_j.append(j)
-                        out_c.append(int(c))
-                        out_n.append(int(msk.sum()))
-                        out_s.append(_int64_colsum(sj[msk]))
-                yield pd.DataFrame({"j": out_j, "c": out_c, "n": out_n, "s": out_s})
-
-        parts = df.select(vec_col).mapInPandas(
-            partials, schema="j int, c int, n long, s array<long>"
-        )
-        acc: dict[tuple[int, int], tuple[int, list[int]]] = {}
-        for r in parts.collect():
-            n0, s0 = acc.get((r.j, r.c), (0, [0] * sub))
-            acc[(r.j, r.c)] = (n0 + r.n, [a + b for a, b in zip(s0, r.s)])
-        books = [
-            [
-                (
-                    [float(Decimal(t).scaleb(-6)) / acc[(j, c)][0] for t in acc[(j, c)][1]]
-                    if (j, c) in acc
-                    else books[j][c]
-                )
-                for c in range(ks)
+        def batch(pdf):
+            x = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            codes = np.argmin(_pq_dists_np(x, books_np), axis=2)
+            return [
+                ((np.full(len(x), j), codes[:, j]), x[:, j * sub : (j + 1) * sub])
+                for j in range(m)
             ]
-            for j in range(m)
-        ]
+
+        parts = dsum_partials(df.select(vec_col), "j int, c int", batch)
+        means = dsum_means(parts.collect())
+        books = [[means.get((j, c), books[j][c]) for c in range(ks)] for j in range(m)]
     return books
 
 

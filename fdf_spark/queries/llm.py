@@ -2808,7 +2808,7 @@ def _kmeans_sql(iters: int = 2, cells: int = 16, dim: int = 64) -> str:
     "per-cell audit (size, mean cosine to own centroid). Fully "
     "deterministic — no rand(), decimal-exact centroid means — so the "
     "whole training loop replays in the DuckDB oracle. Scale: one "
-    "corpus scan per iteration whose per-batch partial sums ride the "
+    "corpus scan per iteration whose per-task partial sums ride the "
     "collect; "
     "the corpus is never shuffled; model state to the driver is "
     "cells x dim doubles (KB). Slots into ivf_ann_topk/semantic_dedup "

@@ -28,6 +28,8 @@ from fdf_spark.functions.scalar import (
     davg,
     decode_shot_bytes,
     dsum,
+    dsum_finish,
+    dsum_partials,
     encode_shot_bytes,
     morton_key,
     sql_davg,
@@ -42,6 +44,22 @@ from fdf_spark.sources.tables import local_df
 # ---------------------------------------------------------------------------
 # Aggregation core
 # ---------------------------------------------------------------------------
+
+
+_Q01_KEYS = "l_returnflag string, l_linestatus string"
+
+
+def _q01_batch(pdf):
+    """q01's five measures per row (qty, price, disc_price, charge,
+    disc), each with the IEEE op order of its Column expression."""
+    import numpy as np
+
+    p = pdf["l_extendedprice"].to_numpy("float64")
+    d = pdf["l_discount"].to_numpy("float64")
+    disc_price = p * (1.0 - d)
+    charge = disc_price * (1.0 + pdf["l_tax"].to_numpy("float64"))
+    x = np.column_stack([pdf["l_quantity"].to_numpy("float64"), p, disc_price, charge, d])
+    return [((pdf["l_returnflag"].to_numpy(), pdf["l_linestatus"].to_numpy()), x)]
 
 
 @query(
@@ -65,17 +83,13 @@ from fdf_spark.sources.tables import local_df
     doc="TPC-H Q1 shape: scan-filter-group-agg, the map-side-combine workhorse.",
 )
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r15: the seven decimal accumulations ran as per-row BigDecimal
-    # casts inside the aggregate (~0.5 s per dsum column at 600k rows —
-    # the q48 decomposition); the Arrow partial-sum tier computes the
-    # same exact 6-dp scaled integers in one numpy pass per task and
-    # ships one narrow partial row per group per task (what dsum's
-    # map-side combine shipped too).  Finish is exact decimal division
-    # + the same correctly-rounded decimal→double (scalar.dsum_finish).
-    # Bitwise-equal output pinned in pytest against the dsum form;
-    # oracle green.  Measured 1.35 → 0.72 s at sf0.1.
-    from fdf_spark.functions.scalar import dsum_finish, dsum_partials_arrow
-
+    # The seven decimal accumulations as per-row BigDecimal casts inside
+    # the aggregate cost ~0.5 s per dsum column at 600k rows; the exact
+    # 6-dp partials kernel computes the same scaled integers in one
+    # numpy pass per task and ships one narrow row per group per task.
+    # The finish is exact decimal division + the same correctly-rounded
+    # decimal→double (scalar.dsum_finish); bitwise-equal to the dsum
+    # form (pinned in pytest).
     li = T(spark, sf_dir, "lineitem")
     src = li.filter(
         F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
@@ -83,23 +97,11 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_returnflag", "l_linestatus",
         "l_quantity", "l_extendedprice", "l_discount", "l_tax",
     )
-    # derived measures use the same IEEE op order as the Column exprs
-    measures = {
-        "qty": lambda pdf: pdf["l_quantity"].to_numpy("float64"),
-        "price": lambda pdf: pdf["l_extendedprice"].to_numpy("float64"),
-        "disc_price": lambda pdf: pdf["l_extendedprice"].to_numpy("float64")
-        * (1.0 - pdf["l_discount"].to_numpy("float64")),
-        "charge": lambda pdf: (
-            pdf["l_extendedprice"].to_numpy("float64")
-            * (1.0 - pdf["l_discount"].to_numpy("float64"))
-        )
-        * (1.0 + pdf["l_tax"].to_numpy("float64")),
-        "disc": lambda pdf: pdf["l_discount"].to_numpy("float64"),
-    }
-    parts = dsum_partials_arrow(src, ["l_returnflag", "l_linestatus"], measures)
+    measures = ("qty", "price", "disc_price", "charge", "disc")
+    parts = dsum_partials(src, _Q01_KEYS, _q01_batch)
     comb = parts.groupBy("l_returnflag", "l_linestatus").agg(
         F.sum("n").alias("n"),
-        *[F.sum(f"s_{m}").alias(f"s_{m}") for m in measures],
+        *[F.sum(F.col("s")[i]).alias(f"s_{m}") for i, m in enumerate(measures)],
     )
     return comb.select(
         "l_returnflag",
@@ -613,12 +615,10 @@ def q18_shot_byte_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     "never touches fact-table rows.",
 )
 def q19_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r15: a dsum_partials_arrow conversion (the q01/q48 tier) was
-    # built, proven bitwise-equal, and MEASURED AT PARITY interleaved
-    # (mins 0.51 vs 0.52, overlapping runs): with only ONE decimal
+    # All-JVM on purpose: the dsum_partials form q01 (7 measures) and
+    # q48 (5) use, built here and proven bitwise-equal, measured at
+    # parity interleaved (mins 0.51 vs 0.52 s): with only ONE decimal
     # measure the Python-boundary cost cancels the BigDecimal saving.
-    # Reverted to the simpler all-JVM two-level form; q01 (7 measures)
-    # and q48 (5) keep the tier, where it is 2.2–3×.
     from fdf_spark.functions.scalar import SUM_DECIMAL
 
     li = T(spark, sf_dir, "lineitem")
@@ -1190,29 +1190,29 @@ def q47_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle of 6 numbers per group.",
 )
 def q48_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r15: six dsum columns ≈ 6 × 0.5 s of per-row BigDecimal casts at
-    # 600k rows (decomposition in OPTIMIZATION_r15.md); same Arrow
-    # partial-sum tier as q01 — products (q*q, p*p, q*p) are double
-    # math in BOTH engines (the decimal wraps only the sum), computed
-    # here with the identical IEEE ops.  Bitwise-equal pinned; oracle
-    # green.  Measured 2.89 → 0.97 s.
-    from fdf_spark.functions.scalar import dsum_finish, dsum_partials_arrow
-
+    # Same exact 6-dp partials kernel as q01, one row per group per
+    # task, instead of five per-row BigDecimal casts (≈ 0.5 s each at
+    # 600k rows).  The products (q*q, p*p, q*p) are double math in BOTH
+    # engines (the decimal wraps only the sum), computed here with the
+    # identical IEEE ops; bitwise-equal to the dsum form (pinned).
     li = T(spark, sf_dir, "lineitem")
     src = li.select("l_returnflag", "l_quantity", "l_extendedprice")
-    qv = lambda pdf: pdf["l_quantity"].to_numpy("float64")
-    pv = lambda pdf: pdf["l_extendedprice"].to_numpy("float64")
-    measures = {
-        "sx": qv,
-        "sxx": lambda pdf: qv(pdf) * qv(pdf),
-        "sy": pv,
-        "syy": lambda pdf: pv(pdf) * pv(pdf),
-        "sxy": lambda pdf: qv(pdf) * pv(pdf),
-    }
-    parts = dsum_partials_arrow(src, ["l_returnflag"], measures)
+    measures = ("sx", "sxx", "sy", "syy", "sxy")
+
+    def batch(pdf):
+        import numpy as np
+
+        q = pdf["l_quantity"].to_numpy("float64")
+        p = pdf["l_extendedprice"].to_numpy("float64")
+        return [((pdf["l_returnflag"].to_numpy(),), np.column_stack([q, q * q, p, p * p, q * p]))]
+
+    parts = dsum_partials(src, "l_returnflag string", batch)
     m = (
         parts.groupBy("l_returnflag")
-        .agg(F.sum("n").alias("n"), *[F.sum(f"s_{k}").alias(f"s_{k}") for k in measures])
+        .agg(
+            F.sum("n").alias("n"),
+            *[F.sum(F.col("s")[i]).alias(f"s_{k}") for i, k in enumerate(measures)],
+        )
         .select(
             "l_returnflag",
             F.col("n"),

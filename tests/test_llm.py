@@ -3373,7 +3373,7 @@ def test_round6_half_boundary_parity(spark):
     import numpy as np
     from pyspark.sql import functions as F
 
-    from fdf_spark.llm.similarity import _round6_np
+    from fdf_spark.functions.scalar import _round6_np
 
     vals = [
         0.0000005, 0.0000015, 0.0000025, 0.1234565, 0.9999995,
@@ -3513,12 +3513,53 @@ def test_kmeans_mean_modes_agree(spark, emb):
     assert len(packed) == 8 and _digest(packed) == "56eefabfdf6fa5bf"
 
 
+def test_kmeans_partials_one_row_per_cell_per_task(spark, emb):
+    # the mean-update partials accumulate over every Arrow batch of a
+    # task: small batches must not multiply the rows the driver collects,
+    # and the centroids must not move
+    import struct
+
+    from fdf_spark.llm.similarity import _cell_sums, ivf_assign, kmeans_refine
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "50")
+    try:
+        _, assigned = ivf_assign(emb, 8)
+        assert _cell_sums(assigned, "embedding").count() <= 8 * emb.rdd.getNumPartitions()
+        cents, _ = kmeans_refine(emb, num_cells=8, iters=2)
+    finally:
+        spark.conf.set(key, old)
+    packed = [(c, tuple(struct.pack("<d", x) for x in v)) for c, v in cents]
+    assert _digest(packed) == "56eefabfdf6fa5bf"
+
+
+def test_kmeans_refine_large_magnitude_cell(spark):
+    # twelve ~1e12 vectors of one cell in one batch: the scaled-6-dp sum
+    # of a column (~1.2e19) is past int64, which decimal(25,6) holds; the
+    # centroid must be the SQL aggregate's value over the same rows
+    from fdf_spark.llm.similarity import ivf_assign, kmeans_refine
+
+    big = [0, *range(2, 13)]  # ids 0 and 1 seed the two cells
+    rows = [(i, [1e12 + 0.25 + i, 1e12 - 0.5 * i, 1e12 + 0.125]) for i in big]
+    rows += [(i, [-1.0 - i, 2.0, -3.0 + 0.5 * i]) for i in (1, 13, 14)]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>").coalesce(1)
+    _, seeded = ivf_assign(corpus, 2)
+    dsum_mean = lambda i: F.sum(F.col("embedding")[i].cast("decimal(25,6)")).cast("double") / F.count("*")
+    agg = seeded.groupBy("cell").agg(
+        F.count("*").alias("n"), *[dsum_mean(i).alias(f"m{i}") for i in range(3)]
+    ).collect()
+    assert sorted(r["n"] for r in agg) == [3, 12]
+    cents, _ = kmeans_refine(corpus, num_cells=2, iters=1)
+    assert dict(cents) == {r["cell"]: [r["m0"], r["m1"], r["m2"]] for r in agg}
+
+
 def test_scaled6_int_matches_round6(spark):
     # the scaled-int kernel must agree with the pinned rounder on the
     # same adversarial half-boundary values test_round6 pins
     import numpy as np
 
-    from fdf_spark.llm.similarity import _round6_np, _scaled6_int_np
+    from fdf_spark.functions.scalar import _round6_np, _scaled6_int_np
 
     vals = np.array([5e-07, 1.5e-06, 2.5e-06, -5e-07, -1.5e-06, 0.1234565,
                      0.12345649999, -0.9999995, 1.0, 0.0, -0.0, 123.4567894999])
@@ -3532,7 +3573,7 @@ def test_scaled6_int_exact_past_2_53(spark):
     # together with half-boundary values whose float error band is wide
     import numpy as np
 
-    from fdf_spark.llm.similarity import _scaled6_int_np
+    from fdf_spark.functions.scalar import _scaled6_int_np
 
     vals = [9647665529.666325, 9301698347.849005, 9144872573.335085,
             10071764008.613379, -9647665529.666325, 0.5, 1e6,

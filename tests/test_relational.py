@@ -107,6 +107,63 @@ def test_q01_q48_arrow_partials_match_dsum_form(spark):
     assert list(a.dtypes) == list(b.dtypes) and packrow(a) == packrow(b)
 
 
+def test_dsum_partials_task_retry_is_exact(tmp_path):
+    # a task that fails mid-way and is retried must leave the q01
+    # partials bitwise-unchanged, and so must a clean run on the reused
+    # Python workers after it: the kernel keeps no state outside one
+    # attempt.  Retries need their own session (local[4,2]: two attempts).
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    script = """
+import json, sys
+from pathlib import Path
+from pyspark import TaskContext
+from pyspark.sql import functions as F
+from fdf_spark.functions.scalar import dsum_partials
+from fdf_spark.queries.relational import _Q01_KEYS, _q01_batch
+from fdf_spark.session import get_spark
+from fdf_spark.sources.tables import load_table
+
+sf_dir, marker = sys.argv[1], Path(sys.argv[2])
+spark = get_spark(
+    "retry", master="local[4,2]",
+    extra_conf={"spark.sql.execution.arrow.maxRecordsPerBatch": "200"},
+)
+src = load_table(spark, sf_dir, "lineitem").filter(
+    F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
+).select("l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice", "l_discount", "l_tax")
+
+seen = []
+
+def flaky(pdf):  # the first attempt of partition 0 dies on its third batch
+    ctx = TaskContext.get()
+    seen.append(1)
+    if ctx.partitionId() == 0 and ctx.attemptNumber() == 0 and len(seen) == 3:
+        marker.touch()
+        raise RuntimeError("injected first-attempt failure")
+    return _q01_batch(pdf)
+
+rows = lambda fn: sorted(tuple(r) for r in dsum_partials(src, _Q01_KEYS, fn).collect())
+retried, clean = rows(flaky), rows(_q01_batch)  # clean second: reused workers
+print(json.dumps({"rows": len(clean), "equal": clean == retried}))
+spark.stop()
+"""
+    marker = tmp_path / "failed_once"
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    out = subprocess.run(
+        [sys.executable, "-c", script, SMOKE_DIR, str(marker)],
+        cwd=Path(__file__).resolve().parents[1], env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert marker.exists() and got["rows"] > 0 and got["equal"]
+
+
 def test_dsum_partials_arrow_rejects_nonfinite(spark):
     # the envelope must fail LOUDLY (dsum's ANSI discipline), never
     # silently diverge
@@ -114,13 +171,13 @@ def test_dsum_partials_arrow_rejects_nonfinite(spark):
 
     from pyspark.sql.utils import PythonException
 
-    from fdf_spark.functions.scalar import dsum_partials_arrow
+    from fdf_spark.functions.scalar import dsum_partials
 
     df = spark.createDataFrame(
         [("a", 1.0), ("a", float("nan"))], "k string, v double"
     )
-    parts = dsum_partials_arrow(
-        df, ["k"], {"v": lambda pdf: pdf["v"].to_numpy("float64")}
+    parts = dsum_partials(
+        df, "k string", lambda pdf: [((pdf["k"].to_numpy(),), pdf[["v"]].to_numpy("float64"))]
     )
     with _pytest.raises(PythonException, match="non-finite"):
         parts.collect()
