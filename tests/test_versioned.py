@@ -1269,10 +1269,12 @@ def test_delete_where_prunes_match_scan(spark, tmp_path):
     assert delete_where(spark, p, "k = 10000") == v
 
 
-def test_merge_on_read_prunes_and_gates_broadcast(spark, tmp_path):
+def test_merge_on_read_prunes_and_gates_broadcast(spark, tmp_path, monkeypatch):
     """VERDICT r10 #7 + #3: merge_on_read's match scan prunes by the
-    change set's key bounds, and a change set above broadcast_max_rows
-    takes the shuffle-join path — identical results either way."""
+    change set's key bounds, and a change set above
+    _MOR_BROADCAST_MAX_ROWS takes the shuffle-join path — identical
+    results either way."""
+    import fdf_spark.sources.versioned as V
     from fdf_spark.sources.versioned import _read_manifest, merge_on_read
 
     pa, pb = str(tmp_path / "bc"), str(tmp_path / "sh")
@@ -1284,8 +1286,9 @@ def test_merge_on_read_prunes_and_gates_broadcast(spark, tmp_path):
         "k long, v long, g long, is_del boolean",
     )
     va = merge_on_read(spark, pa, ch, ["k"], delete_flag="is_del")
-    vb = merge_on_read(spark, pb, ch, ["k"], delete_flag="is_del",
-                       broadcast_max_rows=0)  # force the shuffle path
+    monkeypatch.setattr(V, "_MOR_BROADCAST_MAX_ROWS", 0)  # force the shuffle path
+    vb = merge_on_read(spark, pb, ch, ["k"], delete_flag="is_del")
+    monkeypatch.undo()
     ma, mb = (_read_manifest(pa, va)["meta"]["merge_on_read"],
               _read_manifest(pb, vb)["meta"]["merge_on_read"])
     assert ma["broadcast"] is True and mb["broadcast"] is False
@@ -1546,6 +1549,58 @@ def test_wap_rebase_detects_concurrent_column_remap(spark, tmp_path):
     rename_column(p, "v", "v2")                # v2: logical v2 -> physical v
     with pytest.raises(ConcurrentCommitError):
         publish_staged(spark, p, "b1")
+
+
+def test_wap_and_commit_rebase_agree_over_concurrent_drop(spark, tmp_path, monkeypatch):
+    """A batch that never carried ``y`` rebases over a concurrent
+    drop_column(y) on BOTH append paths: publish_staged binds the staged
+    files with the batch's own schema (not the staged snapshot's, which
+    still lists the retired ``y``), exactly like
+    commit_version(on_conflict="rebase"), and both land the same
+    snapshot."""
+    import fdf_spark.sources.versioned as V
+    from fdf_spark.sources.versioned import (
+        _read_manifest,
+        drop_column,
+        publish_staged,
+        stage_commit,
+    )
+
+    base = spark.createDataFrame([(1, 10), (2, 20)], "k long, y long")
+    batch = spark.createDataFrame([(3,)], "k long")
+
+    pw = str(tmp_path / "wap")
+    commit_version(base, pw)         # v1: (k, y)
+    stage_commit(batch, pw, "nb")    # staged over v1
+    drop_column(pw, "y")             # v2 retires physical y
+    assert publish_staged(spark, pw, "nb") == 3
+
+    pc = str(tmp_path / "cv")
+    commit_version(base, pc)
+    real_publish = V._publish_manifest_atomic
+    state = {"raced": False}
+
+    def racing_publish(staged, dst):
+        if not state["raced"]:
+            state["raced"] = True
+            drop_column(pc, "y")     # takes v2 first
+        real_publish(staged, dst)
+
+    monkeypatch.setattr(V, "_publish_manifest_atomic", racing_publish)
+    assert commit_version(batch, pc, on_conflict="rebase") == 3
+    monkeypatch.undo()
+
+    for p in (pw, pc):
+        df = read_version(spark, p)
+        assert df.columns == ["k"]
+        assert sorted(r.k for r in df.collect()) == [1, 2, 3]
+    mw, mc = _read_manifest(pw, 3), _read_manifest(pc, 3)
+    for key in (
+        "parent", "mode", "schema", "column_mapping", "retired_physical",
+        "delete_files", "eq_deletes", "eq_applies", "partition_specs", "current_spec",
+    ):
+        assert mw.get(key) == mc.get(key), key
+    assert sorted(mw["file_rows"].values()) == sorted(mc["file_rows"].values())
 
 
 # --- restore (rollback-as-new-commit) ----------------------------------------
@@ -2646,3 +2701,60 @@ def test_scoped_optimize_where(spark, tmp_path):
     assert read_version(spark, p).count() == 80_000 - 1
     with pytest.raises(ValueError, match="stats-prunable"):
         optimize(spark, p, zorder=["k"], where="rand() > 0.5")
+
+
+#: the keys a new manifest inherits from its head unless its writer owns them
+_TABLE_STATE_KEYS = (
+    "files", "stats", "file_rows", "delete_files", "eq_deletes", "eq_applies",
+    "schema", "column_mapping", "retired_physical", "partition_specs",
+    "current_spec", "file_specs", "tomb_rows", "file_bytes", "column_stats",
+    "properties",
+)
+
+
+def test_metadata_writers_carry_table_state(spark, tmp_path):
+    """Every metadata-only writer's new manifest equals its head on every
+    table-state key except the keys that writer owns — positional and
+    equality masks, partition specs, column stats and properties all
+    survive each of them."""
+    import fdf_spark.sources.versioned as V
+
+    def rows(lo, hi):
+        return spark.range(lo, hi, 1, 2).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("v"),
+            (F.col("id") % 7).alias("g"), F.col("id").cast("int").alias("i"),
+        )
+
+    p = str(tmp_path / "t")
+    commit_version(rows(0, 40), p)
+    V.set_partition_spec(p, ["g"])
+    commit_version(rows(40, 80), p)
+    V.delete_where(spark, p, "k = 3")
+    V.delete_keys(spark, p, spark.createDataFrame([(5,)], "k long"), ["k"])
+    V.analyze_table(spark, p)
+    V.set_properties(p, {"owner": "etl", "tier": "gold"})
+    head = V._read_manifest(p, list_versions(p)[-1])
+    assert head["delete_files"] and head["eq_deletes"] and head["current_spec"] == 1
+
+    writers = [
+        (lambda: V.set_partition_spec(p, ["bucket(4, k)"]), {"partition_specs", "current_spec"}),
+        (lambda: V.analyze_table(spark, p, mode="exact"), {"column_stats"}),
+        (lambda: V.set_properties(p, {"a": "1"}), {"properties"}),
+        (lambda: V.unset_properties(p, ["tier"]), {"properties"}),
+        (lambda: V.rename_column(p, "v", "v2"), {"schema", "column_mapping"}),
+        (lambda: V.add_column(p, "w", "string"), {"schema"}),
+        (lambda: V.widen_column(p, "i", "long"), {"schema"}),
+        (lambda: V.drop_column(p, "w"), {"schema", "retired_physical"}),
+    ]
+    for write, owned in writers:
+        hv = list_versions(p)[-1]
+        head = V._read_manifest(p, hv)
+        write()
+        assert list_versions(p)[-1] == hv + 1
+        new = V._read_manifest(p, hv + 1)
+        assert new["parent"] == hv
+        for key in _TABLE_STATE_KEYS:
+            if key not in owned:
+                assert new.get(key) == head.get(key), (new["mode"], key)
+        assert new.get("column_stats") and new.get("properties"), new["mode"]
+    assert V.table_properties(p) == {"owner": "etl", "a": "1"}
