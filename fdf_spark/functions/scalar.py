@@ -68,7 +68,7 @@ def dsum_partials(df, key_schema: str, batch_fn):
     ``(keys…, n long, s array<decimal(38,0)>)`` with ONE row per key
     per task.
 
-    ``batch_fn(pdf)`` maps each Arrow batch of ``df`` to
+    ``batch_fn(batch)`` maps each Arrow batch of ``df`` to
     ``(key arrays, (rows, w) float64 matrix)`` pairs; ``key_schema`` is
     the keys' DDL (``"cell long"``).  Each matrix value contributes its
     exact 6-dp HALF_UP decimal as a scaled integer
@@ -95,30 +95,27 @@ def dsum_partials(df, key_schema: str, batch_fn):
     import pandas as pd
     from pyspark.sql.types import StructType
 
+    from fdf_spark.functions.kernels import arrow_kernel
+
     names = StructType.fromDDL(key_schema).names
 
     def partials(batches):
         acc: dict[tuple, list] = {}
-        for pdf in batches:
-            for key_arrays, x in batch_fn(pdf):
+        for batch in batches:
+            for key_arrays, x in batch_fn(batch):
                 s = _scaled6_int_np(x)
                 keys = pd.DataFrame(dict(enumerate(key_arrays)))
                 groups = keys.groupby(list(keys.columns), sort=False, dropna=False)
                 for k, pos in groups.indices.items():  # one key → scalar k
                     k = k if isinstance(k, tuple) else (k,)
                     _add_partial(acc, k, len(pos), _exact_colsum(s[pos]))
-        if acc:  # an empty list column has no list<decimal> Arrow conversion
-            yield pd.DataFrame(
-                {
-                    **{name: [k[i] for k in acc] for i, name in enumerate(names)},
-                    "n": [n for n, _ in acc.values()],
-                    "s": [s for _, s in acc.values()],
-                }
-            )
+        yield {
+            **{name: [k[i] for k in acc] for i, name in enumerate(names)},
+            "n": [n for n, _ in acc.values()],
+            "s": [s for _, s in acc.values()],
+        }
 
-    return df.mapInPandas(
-        partials, schema=f"{key_schema}, n long, s array<decimal(38,0)>"
-    )
+    return arrow_kernel(df, partials, f"{key_schema}, n long, s array<decimal(38,0)>")
 
 
 def _add_partial(acc: dict, key: tuple, n: int, sums: list[int]) -> None:

@@ -22,7 +22,7 @@ constant waveforms.
 
 Reference parity: none (no media surface in fdf); SURVEY §2.11 N6.
 Scale notes: decode runs per-asset inside Arrow-batched
-``mapInPandas`` (``multimodal.extract_features``), embarrassingly
+``arrow_kernel`` (``multimodal.extract_features``), embarrassingly
 parallel; payloads never enter a shuffle.
 """
 

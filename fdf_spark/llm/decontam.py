@@ -157,18 +157,18 @@ def semantic_decontaminate(
     corpus vector's nearest benchmark item by cosine (ties to the
     smaller benchmark id), flagged at ``max_cos >= threshold``.  EVERY
     corpus row gets exactly one verdict, duplicate ids included: a row
-    with no finite cosine (empty benchmark set, or NULL/NaN cosine
-    against every benchmark vector) comes back ``(NULL, NULL, false)``
-    rather than silently vanishing — a decontamination pass that DROPS
-    unmatched rows would discard the whole corpus on an empty
-    benchmark (ADVICE r8).
+    with no finite cosine (a NULL corpus vector, an empty benchmark
+    set, or NULL/NaN cosine against every benchmark vector) comes back
+    ``(NULL, NULL, false)`` rather than silently vanishing — a
+    decontamination pass that DROPS unmatched rows would discard the
+    whole corpus on an empty benchmark (ADVICE r8).
 
     The benchmark is collected EAGERLY while the plan is built (one
     Spark job): it is thousands of items against a 100 TB corpus, so
     it ships to every task as a small matrix.  Scoring is one Arrow
     pass per corpus batch under the :func:`~fdf_spark.llm.similarity.cosine`
-    contract (``similarity._centroid_cosines``: sequential dim
-    accumulation, 6-dp ``F.round``-exact rounding); argmax-first over
+    contract (``similarity._cosines``: sequential dim accumulation,
+    6-dp ``F.round``-exact rounding); argmax-first over
     ascending bench ids gives ties to the smaller id.  The corpus
     embeddings are scanned once and never shuffled — the operator has
     no exchange at all.
@@ -177,41 +177,34 @@ def semantic_decontaminate(
     Deterministic and oracle-replayable (q153).
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from fdf_spark.llm.similarity import _centroid_cosines
+    from fdf_spark.functions.kernels import arrow_kernel, vectors
+    from fdf_spark.llm.similarity import _centroids, _cosines
 
     bench = [(r[0], r[1]) for r in benchmark.select(bench_id, bench_vec).collect()]
-    if bench:
-        ids, _, cos_to = _centroid_cosines(bench)  # ascending bench ids
+    ids, C, cn = _centroids(bench, bench_vec)  # ascending bench ids
 
-    def score(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            best, top = np.zeros(n, dtype=np.int64), np.full(n, -np.inf)
-            if bench:
-                x = np.array([np.asarray(v, dtype=np.float64) for v in pdf[corpus_vec]])
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = cos_to(x)
-                # non-finite scores never win; argmax takes the FIRST max
-                # over ascending bench ids == ties to the smaller id
-                masked = np.where(np.isfinite(cos), cos, -np.inf)
-                j = np.argmax(masked, axis=1)
-                best, top = ids[j], masked[np.arange(n), j]
-            hit = np.isfinite(top)  # no finite score → NULL, NULL, false
-            yield pd.DataFrame(
-                {
-                    corpus_id: pdf[corpus_id].to_numpy(),
-                    "best_bench": pd.Series(best, dtype="Int64").where(hit),
-                    "max_cos": pd.Series(top, dtype="Float64").where(hit),
-                }
-            )
+    def score(batch):
+        n = len(batch)
+        best, top = np.zeros(n, dtype=np.int64), np.full(n, -np.inf)
+        vec = batch[corpus_vec]
+        ok = np.flatnonzero(vec.is_valid().to_numpy(zero_copy_only=False))  # NULL → no score
+        if len(ids) and len(ok):
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = _cosines(vectors(vec.take(ok), corpus_vec), C, cn)
+            # non-finite scores never win; argmax takes the FIRST max
+            # over ascending bench ids == ties to the smaller id
+            masked = np.where(np.isfinite(cos), cos, -np.inf)
+            j = np.argmax(masked, axis=1)
+            best[ok], top[ok] = ids[j], masked[np.arange(len(ok)), j]
+        miss = ~np.isfinite(top)  # no finite score → NULL, NULL, false
+        return {"best_bench": pa.array(best, mask=miss), "max_cos": pa.array(top, mask=miss)}
 
-    id_type = corpus.schema[corpus_id].dataType.simpleString()
-    best = corpus.select(corpus_id, corpus_vec).mapInPandas(
-        score, schema=f"{corpus_id} {id_type}, best_bench long, max_cos double"
+    best = arrow_kernel(
+        corpus.select(corpus_id, corpus_vec),
+        score,
+        f"{corpus_id}, best_bench long, max_cos double",
     )
     return best.withColumn(
         "contaminated", F.coalesce(F.col("max_cos") >= threshold, F.lit(False))

@@ -148,35 +148,21 @@ def gram_hash_rows(
     their own downstream shuffles.  NULL and shorter-than-``n``
     documents yield no rows.
     """
-    import pandas as pd
-
+    from fdf_spark.functions.kernels import arrow_kernel
     from fdf_spark.sources.tables import spread
 
-    src = spread(df)
+    def gen(batch):
+        rows, szs, shs = [], [], []
+        for i, txt in enumerate(batch[text].to_pylist()):
+            hs = _py_gram_hashes(txt, n)
+            if hs:
+                rows += [i] * len(hs)
+                szs += [len(hs)] * len(hs)
+                shs += hs
+        return {"sz": szs, "sh": shs}, rows
 
-    def gen(batches):
-        for pdf in batches:
-            ids, szs, shs = [], [], []
-            for did, txt in zip(pdf[id_col], pdf[text]):
-                hs = _py_gram_hashes(txt, n)
-                if not hs:
-                    continue
-                k = len(hs)
-                for h in hs:
-                    ids.append(did)
-                    szs.append(k)
-                    shs.append(h)
-            out = {id_col: ids}
-            if with_size:
-                out["sz"] = pd.Series(szs, dtype="int32")
-            out["sh"] = pd.Series(shs, dtype="int64")
-            yield pd.DataFrame(out)
-
-    id_type = src.schema[id_col].dataType.simpleString()
     sz_part = ", sz int" if with_size else ""
-    return src.select(id_col, text).mapInPandas(
-        gen, schema=f"{id_col} {id_type}{sz_part}, sh long"
-    )
+    return arrow_kernel(spread(df).select(id_col, text), gen, f"{id_col}{sz_part}, sh long")
 
 
 def exact_dedup(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -508,42 +494,29 @@ def minhash_signatures(
     required; documents with no shingle yield no rows.
     """
     import numpy as np
-    import pandas as pd
 
+    from fdf_spark.functions.kernels import arrow_kernel
     from fdf_spark.sources.tables import spread
 
     A = np.array([minhash_coeff(i)[0] for i in range(num_hashes)], dtype=np.int64)
     B = np.array([minhash_coeff(i)[1] for i in range(num_hashes)], dtype=np.int64)
-    seeds = np.arange(num_hashes, dtype=np.int32)
 
-    def gen(batches):
-        for pdf in batches:
-            ids, seed_out, mins = [], [], []
-            for did, txt in zip(pdf[id_col], pdf[text]):
-                hs = _py_gram_hashes(txt, n)
-                if not hs:
-                    continue
-                xs = np.fromiter(hs, dtype=np.int64, count=len(hs)) % MINHASH_P
-                sig = ((A[:, None] * xs[None, :] + B[:, None]) % MINHASH_P).min(axis=1)
-                ids.extend([did] * num_hashes)
-                seed_out.append(seeds)
-                mins.append(sig)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "seed": np.concatenate(seed_out)
-                    if seed_out
-                    else np.array([], dtype=np.int32),
-                    "minhash": np.concatenate(mins)
-                    if mins
-                    else np.array([], dtype=np.int64),
-                }
-            )
+    def gen(batch):
+        rows, mins = [], []
+        for i, txt in enumerate(batch[text].to_pylist()):
+            hs = _py_gram_hashes(txt, n)
+            if not hs:
+                continue
+            xs = np.fromiter(hs, dtype=np.int64, count=len(hs)) % MINHASH_P
+            mins.append(((A[:, None] * xs[None, :] + B[:, None]) % MINHASH_P).min(axis=1))
+            rows.append(i)
+        seeds = np.tile(np.arange(num_hashes, dtype=np.int32), len(rows))
+        sig = np.concatenate(mins) if mins else np.zeros(0, dtype=np.int64)
+        idx = np.repeat(np.array(rows, dtype=np.int64), num_hashes)
+        return {"seed": seeds, "minhash": sig}, idx
 
-    src = spread(df)
-    id_type = src.schema[id_col].dataType.simpleString()
-    return src.select(id_col, text).mapInPandas(
-        gen, schema=f"{id_col} {id_type}, seed int, minhash long"
+    return arrow_kernel(
+        spread(df).select(id_col, text), gen, f"{id_col}, seed int, minhash long"
     )
 
 

@@ -27,7 +27,7 @@ anywhere in rice coding, prediction, bit packing, or framing breaks
 the hash.  Roundtrip over arbitrary signals is property-tested.
 
 Reference parity: none (no media surface in fdf); SURVEY §2.11 N6.
-Scale notes: per-asset decode inside Arrow-batched ``mapInPandas``,
+Scale notes: per-asset decode inside Arrow-batched ``arrow_kernel``,
 embarrassingly parallel, payloads never shuffled.
 """
 

@@ -24,7 +24,7 @@ cross-check; tests additionally pin hand-assembled spec vectors
 Reference parity: none (the fdf reference has no media surface); this
 belongs to the training-data-pipeline extension (SURVEY §2.11 N6).
 
-Scale notes: decode runs inside Arrow-batched ``mapInPandas``
+Scale notes: decode runs inside Arrow-batched ``arrow_kernel``
 (``multimodal.extract_features``) — per-asset work is independent, so
 the operator scales with partitions; payload bytes never enter a
 shuffle (metadata predicates prune before any decode stage).

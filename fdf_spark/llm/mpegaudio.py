@@ -30,13 +30,13 @@ with no conformance vector to verify against in this sandbox would be
 untestable numerology, so PCM synthesis (and with it Layer III/MP3's
 additional hybrid filterbank + Huffman tables, and H.264) stays
 behind the native-lib seam: at production you mount ffmpeg inside the
-SAME ``mapInPandas`` decode seam this module runs in.  Everything up
+SAME ``arrow_kernel`` decode seam this module runs in.  Everything up
 to the filterbank — container, entropy layout, dequantization — is
 real here.
 
 Scale shape: identical to the other five real codecs — decode runs
 embarrassingly parallel per asset inside Arrow-batched
-``mapInPandas``, zero shuffles (plan-pinned by q138).
+``arrow_kernel``, zero shuffles (plan-pinned by q138).
 
 Reference parity: none (the reference has no codecs); part of the
 N6 multimodal tier the build brief adds.

@@ -1,7 +1,7 @@
 """Multimodal column plumbing (SURVEY §2.11 / project brief).
 
 Images/audio/video are opaque ``binary`` columns plus typed metadata
-(a struct column), processed by Arrow-batched ``mapInPandas`` UDFs —
+(a struct column), processed by Arrow kernels (``arrow_kernel``) —
 the real Spark-side machinery (schemas, partitioning, batch iteration)
 with the codec itself stubbed: the image/audio libraries are not in
 this container, so ``decode_image`` raises ``NotImplementedError``
@@ -16,13 +16,13 @@ push metadata-only predicates BEFORE any decode stage.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from fdf_spark.functions.kernels import _columns, arrow_kernel
 
 #: schema of a multimodal asset table
 ASSET_SCHEMA = T.StructType(
@@ -45,7 +45,12 @@ ASSET_SCHEMA = T.StructType(
     ]
 )
 
-FEATURE_SCHEMA = "asset_id long, media_type string, n_bytes long, header_u32 long, feat array<double>"
+#: the fixture asset rows of :func:`_synth_assets`
+SYNTH_SCHEMA = "asset_id long, media_type string, payload binary"
+
+#: output of :func:`extract_features` (an ``arrow_kernel`` DDL: bare
+#: names are the input columns carried through)
+FEATURE_SCHEMA = "asset_id, media_type, n_bytes long, header_u32 long, feat array<double>"
 
 
 def _fake_decode(payload: bytes) -> list[float]:
@@ -216,7 +221,7 @@ def register_codec(name: str, decode, magic: bytes | None = None) -> None:
 
     ``decode(payload: bytes) -> sequence`` joins :data:`REAL_CODECS`
     under ``name`` and immediately routes through the SAME
-    ``extract_features`` / ``decode_audit`` mapInPandas machinery as
+    ``extract_features`` / ``decode_audit`` Arrow-kernel machinery as
     the built-in pure-python codecs — no engine code changes.  If
     ``magic`` is given, :func:`sniff_format` also learns to classify
     payloads with that prefix as ``name`` (still a pure JVM column
@@ -292,38 +297,45 @@ def extract_features(assets: DataFrame, codec: str = "stub") -> DataFrame:
     # registered external codec only reaches them through the closure
     codecs = dict(REAL_CODECS)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if codec == "stub":
-                raise NotImplementedError(
-                    "PERCEPTUAL-codec PCM/pixel reconstruction (MP3/H.264) is a "
-                    "documented permanent boundary, not an environment accident: "
-                    "their synthesis filterbanks rest on large TABULATED spec "
-                    "data (e.g. the 512-tap window of ISO 11172-3 table 3-B.3) "
-                    "with no closed form and no conformance vectors available "
-                    "here to verify a hand-typed table against. The MPEG-1 "
-                    "Layer I bitstream itself IS decoded for real through "
-                    "requantized subband amplitudes (codec='mpeg1', "
-                    "llm/mpegaudio.py); full PCM/pixel output belongs to a "
-                    "native lib (ffmpeg) mounted inside this same mapInPandas "
-                    f"seam. Use one of {sorted(REAL_CODECS)} or codec='fake'."
-                )
-            decode = codecs.get(codec, _fake_decode)
-            feats = pdf["payload"].map(decode)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": pdf["payload"].map(len).astype("int64"),
-                    "header_u32": feats.map(lambda f: int(f[1])),
-                    "feat": feats,
-                }
+    def run(batch):
+        if codec == "stub":
+            raise NotImplementedError(
+                "PERCEPTUAL-codec PCM/pixel reconstruction (MP3/H.264) is a "
+                "documented permanent boundary, not an environment accident: "
+                "their synthesis filterbanks rest on large TABULATED spec "
+                "data (e.g. the 512-tap window of ISO 11172-3 table 3-B.3) "
+                "with no closed form and no conformance vectors available "
+                "here to verify a hand-typed table against. The MPEG-1 "
+                "Layer I bitstream itself IS decoded for real through "
+                "requantized subband amplitudes (codec='mpeg1', "
+                "llm/mpegaudio.py); full PCM/pixel output belongs to a "
+                "native lib (ffmpeg) mounted inside this same Arrow kernel "
+                f"seam. Use one of {sorted(REAL_CODECS)} or codec='fake'."
             )
+        decode = codecs.get(codec, _fake_decode)
+        payloads = batch["payload"].to_pylist()
+        feats = [decode(p) for p in payloads]
+        return {
+            "n_bytes": [len(p) for p in payloads],
+            "header_u32": [int(f[1]) for f in feats],
+            "feat": feats,
+        }
 
     # metadata-only pruning happens BEFORE this operator; here we only
     # carry the columns the codec needs (column pruning keeps payload
     # out of any upstream exchange)
-    return assets.select("asset_id", "media_type", "payload").mapInPandas(run, FEATURE_SCHEMA)
+    return arrow_kernel(assets.select("asset_id", "media_type", "payload"), run, FEATURE_SCHEMA)
+
+
+def _synth_assets(docs: DataFrame, payload_of, schema: str = SYNTH_SCHEMA) -> DataFrame:
+    """One fixture asset per doc: ``asset_id`` is the ``doc_id`` and
+    ``payload_of(doc_id)`` gives the values of the other columns of
+    ``schema`` — the one generator loop behind every ``synth_*``."""
+
+    def gen(batch):
+        return _columns([(d, *payload_of(d)) for d in batch["doc_id"].to_pylist()], schema)
+
+    return arrow_kernel(docs.select("doc_id"), gen, schema)
 
 
 def synth_media_assets(docs: DataFrame) -> DataFrame:
@@ -336,30 +348,13 @@ def synth_media_assets(docs: DataFrame) -> DataFrame:
     thing under test, with the oracle independent of both sides).
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads, kinds = [], []
-            for d in ids:
-                d = int(d)
-                if d % 2 == 0:
-                    payloads.append(
-                        encode_bmp(
-                            2 + d % 7, 1 + d % 5, (d % 256, (3 * d) % 256, (7 * d) % 256)
-                        )
-                    )
-                    kinds.append("image")
-                else:
-                    a = d % 1001 - 500
-                    payloads.append(
-                        encode_wav(8000 + 1000 * (d % 4), [a] * (40 + d % 25))
-                    )
-                    kinds.append("audio")
-            yield pd.DataFrame(
-                {"asset_id": ids, "media_type": kinds, "payload": payloads}
-            )
+    def payload_of(d):
+        if d % 2 == 0:
+            rgb = (d % 256, (3 * d) % 256, (7 * d) % 256)
+            return "image", encode_bmp(2 + d % 7, 1 + d % 5, rgb)
+        return "audio", encode_wav(8000 + 1000 * (d % 4), [d % 1001 - 500] * (40 + d % 25))
 
-    return docs.select("doc_id").mapInPandas(gen, "asset_id long, media_type string, payload binary")
+    return _synth_assets(docs, payload_of)
 
 
 def synth_png_assets(docs: DataFrame) -> DataFrame:
@@ -378,25 +373,12 @@ def synth_png_assets(docs: DataFrame) -> DataFrame:
     """
     from fdf_spark.llm.imagecodecs import encode_png
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def payload_of(d):
+        yy, xx, cc = np.mgrid[0 : 1 + d % 4, 0 : 2 + d % 6, 0:3]
+        img = ((d + 11 * xx + 23 * yy + 41 * cc) % 256).astype(np.uint8)
+        return "image", encode_png(img, filter_type=d % 5)
 
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                w, h = 2 + d % 6, 1 + d % 4
-                yy, xx, cc = np.mgrid[0:h, 0:w, 0:3]
-                img = ((d + 11 * xx + 23 * yy + 41 * cc) % 256).astype(np.uint8)
-                payloads.append(encode_png(img, filter_type=d % 5))
-            yield pd.DataFrame(
-                {"asset_id": ids, "media_type": ["image"] * len(ids), "payload": payloads}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        gen, "asset_id long, media_type string, payload binary"
-    )
+    return _synth_assets(docs, payload_of)
 
 
 def synth_jpeg_assets(docs: DataFrame) -> DataFrame:
@@ -419,34 +401,15 @@ def synth_jpeg_assets(docs: DataFrame) -> DataFrame:
     """
     from fdf_spark.llm.imagecodecs import encode_jpeg
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def payload_of(d):
+        rgb = np.zeros((8 + d % 5, 8 + d % 9, 3), np.uint8)
+        rgb[...] = (d % 256, (3 * d) % 256, (7 * d) % 256)
+        jpeg = encode_jpeg(
+            rgb, quant=16, subsample=(d % 2 == 1), restart_interval=2 if d % 3 == 0 else 0
+        )
+        return "image", jpeg
 
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                w, h = 8 + d % 9, 8 + d % 5
-                rgb = np.zeros((h, w, 3), np.uint8)
-                rgb[..., 0] = d % 256
-                rgb[..., 1] = (3 * d) % 256
-                rgb[..., 2] = (7 * d) % 256
-                payloads.append(
-                    encode_jpeg(
-                        rgb,
-                        quant=16,
-                        subsample=(d % 2 == 1),
-                        restart_interval=2 if d % 3 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame(
-                {"asset_id": ids, "media_type": ["image"] * len(ids), "payload": payloads}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        gen, "asset_id long, media_type string, payload binary"
-    )
+    return _synth_assets(docs, payload_of)
 
 
 def synth_gif_assets(docs: DataFrame) -> DataFrame:
@@ -465,24 +428,11 @@ def synth_gif_assets(docs: DataFrame) -> DataFrame:
     """
     from fdf_spark.llm.imagecodecs import encode_gif
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def payload_of(d):
+        yy, xx = np.mgrid[0 : 2 + d % 6, 0 : 3 + d % 8]
+        return "image", encode_gif(((d + 5 * xx + 9 * yy) % 256).astype(np.uint8))
 
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                w, h = 3 + d % 8, 2 + d % 6
-                yy, xx = np.mgrid[0:h, 0:w]
-                payloads.append(encode_gif(((d + 5 * xx + 9 * yy) % 256).astype(np.uint8)))
-            yield pd.DataFrame(
-                {"asset_id": ids, "media_type": ["image"] * len(ids), "payload": payloads}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        gen, "asset_id long, media_type string, payload binary"
-    )
+    return _synth_assets(docs, payload_of)
 
 
 def _synth_gif_video(docs: DataFrame, frame_index_law) -> DataFrame:
@@ -492,30 +442,13 @@ def _synth_gif_video(docs: DataFrame, frame_index_law) -> DataFrame:
     — the one thing the video fixture families differ in."""
     from fdf_spark.llm.imagecodecs import encode_gif_anim
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads, metas = [], []
-            for d in ids:
-                d = int(d)
-                w, h, nf = 2 + d % 4, 1 + d % 3, 2 + d % 5
-                yy, xx = np.mgrid[0:h, 0:w]
-                payloads.append(
-                    encode_gif_anim(
-                        [frame_index_law(d, xx, yy, f) for f in range(nf)]
-                    )
-                )
-                metas.append({"width": w, "height": h, "sample_rate": None, "n_frames": nf})
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "media_type": ["video"] * len(ids),
-                    "payload": payloads,
-                    "meta": metas,
-                }
-            )
+    def payload_of(d):
+        w, h, nf = 2 + d % 4, 1 + d % 3, 2 + d % 5
+        yy, xx = np.mgrid[0:h, 0:w]
+        gif = encode_gif_anim([frame_index_law(d, xx, yy, f) for f in range(nf)])
+        return "video", gif, {"width": w, "height": h, "sample_rate": None, "n_frames": nf}
 
-    return docs.select("doc_id").mapInPandas(gen, RESIZE_SCHEMA)
+    return _synth_assets(docs, payload_of, f"{SYNTH_SCHEMA}, meta {META_TYPE}")
 
 
 def synth_gif_anim_assets(docs: DataFrame) -> DataFrame:
@@ -542,7 +475,7 @@ def synth_gif_anim_assets(docs: DataFrame) -> DataFrame:
 
 
 FRAME_SCHEMA = (
-    "asset_id long, frame_idx int, n_frames int, width int, height int, "
+    "asset_id, frame_idx int, n_frames int, width int, height int, "
     "mean_r double, mean_g double, mean_b double"
 )
 
@@ -561,40 +494,27 @@ def frame_sample_features(assets: DataFrame, every_n: int = 2) -> DataFrame:
     tests pin by comparing against decoding everything).  The frame
     count comes from the container itself, never ``meta`` — corrupt or
     absent metadata cannot smuggle frames past the sampler.  Runs as
-    Arrow-batched ``mapInPandas``: embarrassingly parallel per asset,
-    zero shuffles (plan-pinned, q142).
+    an Arrow kernel: embarrassingly parallel per asset, zero shuffles
+    (plan-pinned, q142).
     """
     if every_n < 1:
         raise ValueError("every_n must be >= 1")
     from fdf_spark.llm.imagecodecs import decode_scanned_frame, scan_gif_frames
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "asset_id", "frame_idx", "n_frames", "width", "height",
-                "mean_r", "mean_g", "mean_b",
-            )}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                p = bytes(payload)
-                w, h, mc, frames = scan_gif_frames(p)
-                for f in range(0, len(frames), every_n):
-                    px = decode_scanned_frame(p, w, h, mc, frames[f]).astype(np.int64)
-                    sums = px.sum(axis=(0, 1))
-                    n = h * w
-                    rows["asset_id"].append(int(aid))
-                    rows["frame_idx"].append(f)
-                    rows["n_frames"].append(len(frames))
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["mean_r"].append(sums[0] / n)
-                    rows["mean_g"].append(sums[1] / n)
-                    rows["mean_b"].append(sums[2] / n)
-            yield pd.DataFrame(rows)
+    def run(batch):
+        rows, out = [], []
+        for i, p in enumerate(batch["payload"].to_pylist()):
+            w, h, mc, frames = scan_gif_frames(p)
+            for f in range(0, len(frames), every_n):
+                px = decode_scanned_frame(p, w, h, mc, frames[f]).astype(np.int64)
+                rows.append(i)
+                out.append((f, len(frames), w, h, *(px.sum(axis=(0, 1)) / (h * w))))
+        return _columns(out, FRAME_SCHEMA), rows
 
-    return (
-        assets.filter(F.col("media_type") == "video")
-        .select("asset_id", "payload")
-        .mapInPandas(run, FRAME_SCHEMA)
+    return arrow_kernel(
+        assets.filter(F.col("media_type") == "video").select("asset_id", "payload"),
+        run,
+        FRAME_SCHEMA,
     )
 
 
@@ -620,9 +540,7 @@ def synth_gif_scene_assets(docs: DataFrame) -> DataFrame:
     return _synth_gif_video(docs, law)
 
 
-SCENE_SCHEMA = (
-    "asset_id long, frame_idx int, n_frames int, delta double, is_cut boolean"
-)
+SCENE_SCHEMA = "asset_id, frame_idx int, n_frames int, delta double, is_cut boolean"
 
 
 def scene_cuts(assets: DataFrame, threshold: float = 40.0) -> DataFrame:
@@ -639,34 +557,28 @@ def scene_cuts(assets: DataFrame, threshold: float = 40.0) -> DataFrame:
     delta is exact integer arithmetic over the palette-mapped pixels
     divided once (``Σ|Δ| / (w·h·3)``) — bit-stable in any engine, so
     q143's oracle replays detector output INCLUDING the verdicts.
-    Arrow-batched ``mapInPandas``, zero shuffles, embarrassingly
-    parallel per asset.
+    An Arrow kernel, zero shuffles, embarrassingly parallel per asset.
     """
     from fdf_spark.llm.imagecodecs import decode_scanned_frame, scan_gif_frames
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("asset_id", "frame_idx", "n_frames", "delta", "is_cut")}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                p = bytes(payload)
-                w, h, mc, streams = scan_gif_frames(p)
-                prev = None
-                for f, s in enumerate(streams):
-                    cur = decode_scanned_frame(p, w, h, mc, s).astype(np.int64)
-                    if prev is not None:
-                        delta = int(np.abs(cur - prev).sum()) / (w * h * 3)
-                        rows["asset_id"].append(int(aid))
-                        rows["frame_idx"].append(f)
-                        rows["n_frames"].append(len(streams))
-                        rows["delta"].append(delta)
-                        rows["is_cut"].append(delta > threshold)
-                    prev = cur
-            yield pd.DataFrame(rows)
+    def run(batch):
+        rows, out = [], []
+        for i, p in enumerate(batch["payload"].to_pylist()):
+            w, h, mc, streams = scan_gif_frames(p)
+            prev = None
+            for f, s in enumerate(streams):
+                cur = decode_scanned_frame(p, w, h, mc, s).astype(np.int64)
+                if prev is not None:
+                    delta = int(np.abs(cur - prev).sum()) / (w * h * 3)
+                    rows.append(i)
+                    out.append((f, len(streams), delta, delta > threshold))
+                prev = cur
+        return _columns(out, SCENE_SCHEMA), rows
 
-    return (
-        assets.filter(F.col("media_type") == "video")
-        .select("asset_id", "payload")
-        .mapInPandas(run, SCENE_SCHEMA)
+    return arrow_kernel(
+        assets.filter(F.col("media_type") == "video").select("asset_id", "payload"),
+        run,
+        SCENE_SCHEMA,
     )
 
 
@@ -742,42 +654,28 @@ def synth_mixed_assets(docs: DataFrame) -> DataFrame:
     from fdf_spark.llm.flac import encode_flac
     from fdf_spark.llm.imagecodecs import encode_gif, encode_png
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                if d % 11 == 0:
-                    p = bytes(bytearray([0, 1]) + bytearray((d * 31 + i) % 256 for i in range(22)))
-                else:
-                    m = d % 5
-                    if m == 0:
-                        w, h = 2 + d % 3, 1 + d % 2
-                        yy, xx, cc = np.mgrid[0:h, 0:w, 0:3]
-                        p = encode_png(((d + 11 * xx + 23 * yy + 41 * cc) % 256).astype(np.uint8))
-                    elif m == 1:
-                        yy, xx = np.mgrid[0 : 2 + d % 3, 0 : 3 + d % 4]
-                        p = encode_gif(((d + 5 * xx + 9 * yy) % 256).astype(np.uint8))
-                    elif m == 2:
-                        p = encode_bmp(2 + d % 4, 1 + d % 3, (d % 256, (3 * d) % 256, (7 * d) % 256))
-                    elif m == 3:
-                        p = encode_wav(8000 + 1000 * (d % 4), [d % 1001 - 500] * (10 + d % 5))
-                    else:
-                        p = encode_flac(8000, [((d + 7 * i) % 512) - 256 for i in range(16)], block_size=16)
-                    if d % 7 == 0:
-                        p = p[:12]
-                payloads.append(p)
-            yield pd.DataFrame(
-                {"asset_id": ids, "media_type": ["mixed"] * len(ids), "payload": payloads}
-            )
+    def payload_of(d):
+        if d % 11 == 0:
+            return "mixed", bytes([0, 1, *((d * 31 + i) % 256 for i in range(22))])
+        m = d % 5
+        if m == 0:
+            yy, xx, cc = np.mgrid[0 : 1 + d % 2, 0 : 2 + d % 3, 0:3]
+            p = encode_png(((d + 11 * xx + 23 * yy + 41 * cc) % 256).astype(np.uint8))
+        elif m == 1:
+            yy, xx = np.mgrid[0 : 2 + d % 3, 0 : 3 + d % 4]
+            p = encode_gif(((d + 5 * xx + 9 * yy) % 256).astype(np.uint8))
+        elif m == 2:
+            p = encode_bmp(2 + d % 4, 1 + d % 3, (d % 256, (3 * d) % 256, (7 * d) % 256))
+        elif m == 3:
+            p = encode_wav(8000 + 1000 * (d % 4), [d % 1001 - 500] * (10 + d % 5))
+        else:
+            p = encode_flac(8000, [((d + 7 * i) % 512) - 256 for i in range(16)], block_size=16)
+        return "mixed", p[:12] if d % 7 == 0 else p
 
-    return docs.select("doc_id").mapInPandas(
-        gen, "asset_id long, media_type string, payload binary"
-    )
+    return _synth_assets(docs, payload_of)
 
 
-AUDIT_SCHEMA = "asset_id long, fmt string, ok boolean, err string"
+AUDIT_SCHEMA = "asset_id, fmt, ok boolean, err string"
 
 
 def decode_audit(assets: DataFrame) -> DataFrame:
@@ -798,39 +696,33 @@ def decode_audit(assets: DataFrame) -> DataFrame:
     # codecs reach executors through the closure, not the module
     codecs = dict(REAL_CODECS)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"asset_id": [], "fmt": [], "ok": [], "err": []}
-            for aid, fmt, payload in zip(pdf["asset_id"], pdf["fmt"], pdf["payload"]):
-                ok, err = False, None
-                if fmt == "unknown":
-                    err = "unknown_format"
-                else:
-                    try:
-                        p = bytes(payload)
-                        codec = fmt
-                        if fmt == "wav":
-                            # the sniff names the container; the fmt
-                            # chunk's tag names the codec (1 = PCM,
-                            # 0x11 = IMA ADPCM)
-                            tag = _riff_format_tag(p)
-                            if tag == 0x11:
-                                codec = "adpcm"
-                            elif tag != 1:
-                                raise ValueError(f"unsupported WAVE format tag {tag:#x}")
-                        codecs[codec](p)
-                        ok = True
-                    except Exception as e:  # noqa: BLE001 — the quarantine boundary
-                        err = type(e).__name__
-                rows["asset_id"].append(int(aid))
-                rows["fmt"].append(fmt)
-                rows["ok"].append(ok)
-                rows["err"].append(err)
-            yield pd.DataFrame(rows)
+    def audit(fmt, p):
+        """The quarantine verdict ``(ok, err)`` of one payload."""
+        if fmt == "unknown":
+            return False, "unknown_format"
+        try:
+            codec = fmt
+            if fmt == "wav":
+                # the sniff names the container; the fmt chunk's tag
+                # names the codec (1 = PCM, 0x11 = IMA ADPCM)
+                tag = _riff_format_tag(p)
+                if tag == 0x11:
+                    codec = "adpcm"
+                elif tag != 1:
+                    raise ValueError(f"unsupported WAVE format tag {tag:#x}")
+            codecs[codec](p)
+            return True, None
+        except Exception as e:  # noqa: BLE001 — the quarantine boundary
+            return False, type(e).__name__
 
-    return (
-        assets.select("asset_id", sniff_format(F.col("payload")).alias("fmt"), "payload")
-        .mapInPandas(run, AUDIT_SCHEMA)
+    def run(batch):
+        fmts, payloads = batch["fmt"].to_pylist(), batch["payload"].to_pylist()
+        return _columns([audit(f, p) for f, p in zip(fmts, payloads)], AUDIT_SCHEMA)
+
+    return arrow_kernel(
+        assets.select("asset_id", sniff_format(F.col("payload")).alias("fmt"), "payload"),
+        run,
+        AUDIT_SCHEMA,
     )
 
 
@@ -844,26 +736,14 @@ def synth_wav_voice_assets(docs: DataFrame, win: int = 16) -> DataFrame:
     merged segment boundaries, are pure ``doc_id`` arithmetic.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                nw, amp = 8 + d % 5, 100 + d % 50
-                s0 = 2 + d % 3
-                s1 = s0 + 1 + d % 2
-                samples = [
-                    0 if s0 <= (i // win) < s1 else amp for i in range(nw * win)
-                ]
-                payloads.append(encode_wav(8000, samples))
-            yield pd.DataFrame(
-                {"asset_id": ids, "media_type": ["audio"] * len(ids), "payload": payloads}
-            )
+    def payload_of(d):
+        nw, amp = 8 + d % 5, 100 + d % 50
+        s0 = 2 + d % 3
+        s1 = s0 + 1 + d % 2
+        samples = [0 if s0 <= (i // win) < s1 else amp for i in range(nw * win)]
+        return "audio", encode_wav(8000, samples)
 
-    return docs.select("doc_id").mapInPandas(
-        gen, "asset_id long, media_type string, payload binary"
-    )
+    return _synth_assets(docs, payload_of)
 
 
 SEGMENT_SCHEMA = (
@@ -893,33 +773,25 @@ def voice_segments(
     import io
     import wave
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            aids, widx, energy = [], [], []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
-                    if w.getsampwidth() != 2 or w.getnchannels() != 1:
-                        raise ValueError("voice_segments expects mono 16-bit PCM")
-                    nf = w.getnframes()
-                    vals = np.frombuffer(w.readframes(nf), dtype="<i2").astype(np.int64)
-                m = len(vals) // win
-                chunks = vals[: m * win].reshape(m, win)
-                aids.append(np.full(m, int(aid), dtype=np.int64))
-                widx.append(np.arange(m, dtype=np.int32))
-                energy.append((chunks * chunks).sum(axis=1) / win)
-            cat = (lambda xs, d: np.concatenate(xs) if xs else np.array([], dtype=d))
-            yield pd.DataFrame(
-                {
-                    "asset_id": cat(aids, np.int64),
-                    "win_idx": cat(widx, np.int32),
-                    "energy": cat(energy, np.float64),
-                }
-            )
+    def run(batch):
+        rows, widx, energy = [], [], []
+        for i, payload in enumerate(batch["payload"].to_pylist()):
+            with wave.open(io.BytesIO(payload), "rb") as w:
+                if w.getsampwidth() != 2 or w.getnchannels() != 1:
+                    raise ValueError("voice_segments expects mono 16-bit PCM")
+                vals = np.frombuffer(w.readframes(w.getnframes()), dtype="<i2").astype(np.int64)
+            m = len(vals) // win
+            chunks = vals[: m * win].reshape(m, win)
+            rows.append(np.full(m, i))
+            widx.append(np.arange(m, dtype=np.int32))
+            energy.append((chunks * chunks).sum(axis=1) / win)
+        cols = {"win_idx": np.concatenate(widx), "energy": np.concatenate(energy)}
+        return cols, np.concatenate(rows)
 
-    wins = (
-        assets.filter(F.col("media_type") == "audio")
-        .select("asset_id", "payload")
-        .mapInPandas(run, "asset_id long, win_idx int, energy double")
+    wins = arrow_kernel(
+        assets.filter(F.col("media_type") == "audio").select("asset_id", "payload"),
+        run,
+        "asset_id, win_idx int, energy double",
     )
     from pyspark.sql import Window
 
@@ -962,25 +834,20 @@ def synth_png_dup_assets(docs: DataFrame) -> DataFrame:
     200-doc fixture, all arithmetic a SQL oracle replays."""
     from fdf_spark.llm.imagecodecs import encode_png
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yy, xx, cc = np.mgrid[0:7, 0:9, 0:3]
-        # only 25 distinct payloads exist and the encoder is
-        # deterministic — memoize per class instead of re-deflating
-        # a byte-identical PNG per doc
-        by_class = {
-            k: encode_png(((7 * k + 11 * xx + 23 * yy + 41 * cc) % 256).astype(np.uint8))
-            for k in range(25)
-        }
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = [by_class[int(d) % 25] for d in ids]
-            yield pd.DataFrame(
-                {"asset_id": ids, "media_type": ["image"] * len(ids), "payload": payloads}
-            )
+    yy, xx, cc = np.mgrid[0:7, 0:9, 0:3]
+    # only 25 distinct payloads exist and the encoder is deterministic —
+    # memoize per class instead of re-deflating a byte-identical PNG per
+    # doc (the cache fills on the executor)
+    by_class: dict[int, bytes] = {}
 
-    return docs.select("doc_id").mapInPandas(
-        gen, "asset_id long, media_type string, payload binary"
-    )
+    def payload_of(d):
+        k = d % 25
+        if k not in by_class:
+            img = ((7 * k + 11 * xx + 23 * yy + 41 * cc) % 256).astype(np.uint8)
+            by_class[k] = encode_png(img)
+        return "image", by_class[k]
+
+    return _synth_assets(docs, payload_of)
 
 
 def synth_png_near_assets(
@@ -1009,35 +876,21 @@ def synth_png_near_assets(
     corpus: the pair space is Σ|class|²."""
     from fdf_spark.llm.imagecodecs import encode_png
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yy, xx, cc = np.mgrid[0:7, 0:9, 0:3]
-        base_cache: dict[int, np.ndarray] = {}
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                k = d % classes
-                if textured:
-                    base = base_cache.get(k)
-                    if base is None:
-                        base = np.random.RandomState(k).randint(
-                            0, 256, (7, 9, 3)
-                        ).astype(np.int64)
-                        base_cache[k] = base
-                else:
-                    base = 13 * k + 11 * xx + 23 * yy + 41 * cc
-                bump = 128 * ((xx == d % 9) & (yy == (d // 9) % 7))
-                payloads.append(
-                    encode_png(((base + bump) % 256).astype(np.uint8))
-                )
-            yield pd.DataFrame(
-                {"asset_id": ids, "media_type": ["image"] * len(ids), "payload": payloads}
-            )
+    yy, xx, cc = np.mgrid[0:7, 0:9, 0:3]
+    textures: dict[int, np.ndarray] = {}  # per-class texture, filled on the executor
 
-    return docs.select("doc_id").mapInPandas(
-        gen, "asset_id long, media_type string, payload binary"
-    )
+    def payload_of(d):
+        k = d % classes
+        if textured:
+            if k not in textures:
+                textures[k] = np.random.RandomState(k).randint(0, 256, (7, 9, 3)).astype(np.int64)
+            base = textures[k]
+        else:
+            base = 13 * k + 11 * xx + 23 * yy + 41 * cc
+        bump = 128 * ((xx == d % 9) & (yy == (d // 9) % 7))
+        return "image", encode_png(((base + bump) % 256).astype(np.uint8))
+
+    return _synth_assets(docs, payload_of)
 
 
 def image_dhash(assets: DataFrame, width: int = 9, height: int = 7) -> DataFrame:
@@ -1054,9 +907,8 @@ def image_dhash(assets: DataFrame, width: int = 9, height: int = 7) -> DataFrame
     across engines/partitionings, which is what makes it usable as an
     exact-dedup KEY downstream (`exact_dedup`-style groupBy on
     ``dhash``): re-encoded, metadata-stripped or losslessly-recoded
-    copies collapse to one group.  Arrow-batched ``mapInPandas``,
-    zero shuffles; the grouping a caller adds shuffles 8-byte hashes,
-    never pixels.
+    copies collapse to one group.  An Arrow kernel, zero shuffles; the
+    grouping a caller adds shuffles 8-byte hashes, never pixels.
     """
     if (width - 1) * height > 62:
         raise ValueError("dhash grid exceeds 62 bits — reduce width/height")
@@ -1066,32 +918,25 @@ def image_dhash(assets: DataFrame, width: int = 9, height: int = 7) -> DataFrame
         height, width - 1
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"asset_id": [], "dhash": []}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                arr = decode_png_pixels(bytes(payload)).astype(np.int64)
-                sh, sw = arr.shape[:2]
-                ys = (np.arange(height, dtype=np.int64) * sh) // height
-                xs = (np.arange(width, dtype=np.int64) * sw) // width
-                px = arr[ys][:, xs]
-                if px.shape[2] < 3:
-                    # gray / gray+alpha: the luma IS the channel — and
-                    # since 299+587+114 = 1000, a gray-recoded RGB
-                    # image lands on the identical g, so both encodings
-                    # collapse to one hash
-                    g = px[:, :, 0]
-                else:
-                    g = (299 * px[:, :, 0] + 587 * px[:, :, 1] + 114 * px[:, :, 2]) // 1000
-                bits = (g[:, 1:] > g[:, :-1]).astype(np.int64)
-                out["asset_id"].append(int(aid))
-                out["dhash"].append(int((bits * weights).sum()))
-            yield pd.DataFrame(out)
+    def dhash(payload):
+        arr = decode_png_pixels(payload).astype(np.int64)
+        sh, sw = arr.shape[:2]
+        ys = (np.arange(height, dtype=np.int64) * sh) // height
+        xs = (np.arange(width, dtype=np.int64) * sw) // width
+        px = arr[ys][:, xs]
+        if px.shape[2] < 3:
+            # gray / gray+alpha: the luma IS the channel — and since
+            # 299+587+114 = 1000, a gray-recoded RGB image lands on the
+            # identical g, so both encodings collapse to one hash
+            g = px[:, :, 0]
+        else:
+            g = (299 * px[:, :, 0] + 587 * px[:, :, 1] + 114 * px[:, :, 2]) // 1000
+        return int(((g[:, 1:] > g[:, :-1]).astype(np.int64) * weights).sum())
 
-    return (
-        assets.filter(F.col("media_type") == "image")
-        .select("asset_id", "payload")
-        .mapInPandas(run, "asset_id long, dhash long")
+    return arrow_kernel(
+        assets.filter(F.col("media_type") == "image").select("asset_id", "payload"),
+        lambda batch: {"dhash": [dhash(p) for p in batch["payload"].to_pylist()]},
+        "asset_id, dhash long",
     )
 
 
@@ -1109,25 +954,11 @@ def synth_adpcm_assets(docs: DataFrame) -> DataFrame:
     """
     from fdf_spark.llm.audiocodecs import encode_adpcm_wav
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                a = d % 1001 - 500
-                payloads.append(
-                    encode_adpcm_wav(
-                        8000 + 1000 * (d % 4), [a] * (40 + d % 25), samples_per_block=9
-                    )
-                )
-            yield pd.DataFrame(
-                {"asset_id": ids, "media_type": ["audio"] * len(ids), "payload": payloads}
-            )
+    def payload_of(d):
+        samples = [d % 1001 - 500] * (40 + d % 25)
+        return "audio", encode_adpcm_wav(8000 + 1000 * (d % 4), samples, samples_per_block=9)
 
-    return docs.select("doc_id").mapInPandas(
-        gen, "asset_id long, media_type string, payload binary"
-    )
+    return _synth_assets(docs, payload_of)
 
 
 def synth_mpeg1_assets(docs: DataFrame) -> DataFrame:
@@ -1151,35 +982,19 @@ def synth_mpeg1_assets(docs: DataFrame) -> DataFrame:
     """
     from fdf_spark.llm.mpegaudio import encode_mpeg1_layer1
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                n_alloc = 4 + d % 5
-                alloc = [0] * 32
-                sfi = [0] * 32
-                codes = [[0] * 12 for _ in range(32)]
-                for sb in range(n_alloc):
-                    nb = 2 + (d + sb) % 7
-                    alloc[sb] = nb
-                    sfi[sb] = 3 * ((d * 7 + 13 * sb) % 21)
-                    codes[sb] = [(d * 31 + 5 * sb) % (1 << nb)] * 12
-                payloads.append(
-                    encode_mpeg1_layer1(
-                        alloc, sfi, codes,
-                        sample_rate=32000,
-                        bitrate_kbps=(192, 256, 288, 320)[d % 4],
-                    )
-                )
-            yield pd.DataFrame(
-                {"asset_id": ids, "media_type": ["audio"] * len(ids), "payload": payloads}
-            )
+    def payload_of(d):
+        alloc, sfi = [0] * 32, [0] * 32
+        codes = [[0] * 12 for _ in range(32)]
+        for sb in range(4 + d % 5):  # n_alloc
+            nb = 2 + (d + sb) % 7
+            alloc[sb] = nb
+            sfi[sb] = 3 * ((d * 7 + 13 * sb) % 21)
+            codes[sb] = [(d * 31 + 5 * sb) % (1 << nb)] * 12
+        bitrate = (192, 256, 288, 320)[d % 4]
+        frame = encode_mpeg1_layer1(alloc, sfi, codes, sample_rate=32000, bitrate_kbps=bitrate)
+        return "audio", frame
 
-    return docs.select("doc_id").mapInPandas(
-        gen, "asset_id long, media_type string, payload binary"
-    )
+    return _synth_assets(docs, payload_of)
 
 
 def synth_flac_assets(docs: DataFrame) -> DataFrame:
@@ -1198,24 +1013,11 @@ def synth_flac_assets(docs: DataFrame) -> DataFrame:
     """
     from fdf_spark.llm.flac import encode_flac
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                n = 300 + d % 50
-                sig = [((d * 31 + 7 * i) % 2048) - 1024 for i in range(n)]
-                payloads.append(
-                    encode_flac(8000 + 1000 * (d % 4), sig, block_size=128)
-                )
-            yield pd.DataFrame(
-                {"asset_id": ids, "media_type": ["audio"] * len(ids), "payload": payloads}
-            )
+    def payload_of(d):
+        sig = [((d * 31 + 7 * i) % 2048) - 1024 for i in range(300 + d % 50)]
+        return "audio", encode_flac(8000 + 1000 * (d % 4), sig, block_size=128)
 
-    return docs.select("doc_id").mapInPandas(
-        gen, "asset_id long, media_type string, payload binary"
-    )
+    return _synth_assets(docs, payload_of)
 
 
 def frame_sample(assets: DataFrame, every_n: int = 10) -> DataFrame:
@@ -1231,10 +1033,10 @@ def frame_sample(assets: DataFrame, every_n: int = 10) -> DataFrame:
     )
 
 
-RESIZE_SCHEMA = (
-    "asset_id long, media_type string, payload binary, "
-    "meta struct<width:int, height:int, sample_rate:int, n_frames:int>"
-)
+META_TYPE = "struct<width:int, height:int, sample_rate:int, n_frames:int>"
+
+#: output of :func:`resize_images` (asset id and media type carried)
+RESIZE_SCHEMA = f"asset_id, media_type, payload binary, meta {META_TYPE}"
 
 
 def resize_images(assets: DataFrame, width: int, height: int, codec: str = "stub") -> DataFrame:
@@ -1262,51 +1064,39 @@ def resize_images(assets: DataFrame, width: int, height: int, codec: str = "stub
     if "meta" not in assets.columns:
         assets = assets.withColumn(
             "meta",
-            F.lit(None).cast(
-                "struct<width:int, height:int, sample_rate:int, n_frames:int>"
-            ),
+            F.lit(None).cast(META_TYPE),
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    from fdf_spark.llm.imagecodecs import decode_png_pixels, encode_png
+
+    def one(media_type, payload, meta):
+        if media_type != "image":
+            return payload, meta
+        meta = dict(meta or {})
         if codec == "png":
-            from fdf_spark.llm.imagecodecs import decode_png_pixels, encode_png
+            arr = decode_png_pixels(payload)
+            sh, sw = arr.shape[:2]
+            ys = (np.arange(height, dtype=np.int64) * sh) // height
+            xs = (np.arange(width, dtype=np.int64) * sw) // width
+            out = encode_png(arr[ys][:, xs], filter_type=0)
+        else:
+            src = payload or b"\0"
+            n = width * height
+            out = (src * (n // len(src) + 1))[:n]
+        meta["width"], meta["height"] = width, height
+        return out, meta
 
-        for pdf in batches:
-            if codec == "stub":
-                raise NotImplementedError(
-                    "real resize is implemented for the lossless codec "
-                    "(codec='png'); lossy formats re-encode through "
-                    "implementation-defined quantizers and stay behind "
-                    "the native-lib seam. Use codec='png' or 'fake'."
-                )
-
-            def one(row):
-                if row["media_type"] != "image":
-                    return row["payload"], row["meta"]
-                meta = dict(row["meta"] or {})
-                if codec == "png":
-                    arr = decode_png_pixels(bytes(row["payload"]))
-                    sh, sw = arr.shape[:2]
-                    ys = (np.arange(height, dtype=np.int64) * sh) // height
-                    xs = (np.arange(width, dtype=np.int64) * sw) // width
-                    out = encode_png(arr[ys][:, xs], filter_type=0)
-                else:
-                    src = bytes(row["payload"]) or b"\0"
-                    n = width * height
-                    out = (src * (n // len(src) + 1))[:n]
-                meta["width"], meta["height"] = width, height
-                return out, meta
-
-            resized = pdf.apply(one, axis=1, result_type="expand")
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "media_type": pdf["media_type"],
-                    "payload": resized[0],
-                    "meta": resized[1],
-                }
+    def run(batch):
+        if codec == "stub":
+            raise NotImplementedError(
+                "real resize is implemented for the lossless codec "
+                "(codec='png'); lossy formats re-encode through "
+                "implementation-defined quantizers and stay behind "
+                "the native-lib seam. Use codec='png' or 'fake'."
             )
+        cols = (batch[c].to_pylist() for c in ("media_type", "payload", "meta"))
+        return _columns([one(*row) for row in zip(*cols)], RESIZE_SCHEMA)
 
-    return assets.select("asset_id", "media_type", "payload", "meta").mapInPandas(
-        run, RESIZE_SCHEMA
+    return arrow_kernel(
+        assets.select("asset_id", "media_type", "payload", "meta"), run, RESIZE_SCHEMA
     )

@@ -41,54 +41,29 @@ def repetition_stats(df: DataFrame, text: str = "text", id_col: str = "doc_id") 
     inside the row's partition — no exchange at all; the ratio
     arithmetic and rounding stay in the JVM.
     """
-    import pandas as pd
+    import re
+    from collections import Counter
 
+    from fdf_spark.functions.kernels import arrow_kernel
     from fdf_spark.sources.tables import spread
 
-    def counters(batches):
-        import re
+    ws = re.compile(r"\s+", re.ASCII)
 
-        ws = re.compile(r"\s+", re.ASCII)
-        for pdf in batches:
-            ids, nw, nd, t2, top2, d2 = [], [], [], [], [], []
-            for did, txt in zip(pdf[id_col], pdf[text]):
-                ids.append(did)
-                if txt is None:
-                    nw.append(None); nd.append(None)
-                    t2.append(None); top2.append(None); d2.append(None)
-                    continue
-                w = ws.split(txt.lower())
-                nw.append(len(w))
-                nd.append(len(set(w)))
-                if len(w) >= 2:
-                    counts: dict[str, int] = {}
-                    for i in range(len(w) - 1):
-                        g = w[i] + " " + w[i + 1]
-                        counts[g] = counts.get(g, 0) + 1
-                    t2.append(len(w) - 1)
-                    top2.append(max(counts.values()))
-                    d2.append(len(counts))
-                else:
-                    t2.append(None); top2.append(None); d2.append(None)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "n_words": pd.Series(nw, dtype="Int32"),
-                    "n_distinct_words": pd.Series(nd, dtype="Int32"),
-                    "total2": pd.Series(t2, dtype="Int64"),
-                    "top2": pd.Series(top2, dtype="Int64"),
-                    "distinct2": pd.Series(d2, dtype="Int64"),
-                }
-            )
+    def counters(batch):
+        cols = {c: [] for c in ("n_words", "n_distinct_words", "total2", "top2", "distinct2")}
+        for txt in batch[text].to_pylist():
+            w = [] if txt is None else ws.split(txt.lower())
+            pairs = Counter(zip(w, w[1:]))
+            row = (None, None) if txt is None else (len(w), len(set(w)))
+            row += (len(w) - 1, max(pairs.values()), len(pairs)) if pairs else (None,) * 3
+            for c, v in zip(cols.values(), row):
+                c.append(v)
+        return cols
 
-    src = spread(df)
-    id_type = src.schema[id_col].dataType.simpleString()
-    out = src.select(id_col, text).mapInPandas(
+    out = arrow_kernel(
+        spread(df).select(id_col, text),
         counters,
-        schema=(
-            f"{id_col} {id_type}, n_words int, n_distinct_words int,"
-            " total2 long, top2 long, distinct2 long"
-        ),
+        f"{id_col}, n_words int, n_distinct_words int, total2 long, top2 long, distinct2 long",
     )
     return out.select(
         id_col,

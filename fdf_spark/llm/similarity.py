@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from fdf_spark.functions.kernels import arrow_kernel, vectors
 from fdf_spark.functions.scalar import _round6_np, dsum_means, dsum_partials
 
 
@@ -109,33 +110,47 @@ def knn_predict(
     )
 
 
-def _centroid_cosines(cents):
-    """``(ids, C, cos_to)`` over the centroids in ascending-id order:
-    ``cos_to(x)`` is the (rows, cells) cosine matrix of a float64 batch
-    against ``C`` under the :func:`cosine` contract — dot and norms
-    accumulate SEQUENTIALLY over dimensions, the division is
-    ``dot / (norm(x) * norm(c))``, and the result rounds 6 dp exactly
-    like ``F.round`` (:func:`_round6_np`)."""
+def _centroids(cents, name: str):
+    """``(ids, C, cn)`` of ``(id, vector)`` pairs in ascending-id order:
+    the (k, d) float64 matrix ``C`` (:func:`vectors`, whose errors name
+    the vectors ``name``) and its norms, the right-hand side of
+    :func:`_cosines`."""
+    import numpy as np
+    import pyarrow as pa
+
+    cents = sorted(cents, key=lambda c: c[0])
+    ids = np.array([c[0] for c in cents], dtype=np.int64)
+    C = vectors(pa.array([c[1] for c in cents], pa.list_(pa.float64())), name)
+    return ids, C, _norms(C)
+
+
+def _norms(x):
+    """Row norms of a float64 matrix, accumulated SEQUENTIALLY over
+    dimensions (== :func:`_norm`)."""
     import numpy as np
 
-    order = sorted(range(len(cents)), key=lambda i: cents[i][0])
-    ids = np.array([cents[i][0] for i in order], dtype=np.int64)
-    C = np.array([cents[i][1] for i in order], dtype=np.float64)  # (k, d)
-    d = C.shape[1]
-    cn = np.zeros(len(ids))
-    for i in range(d):  # sequential fold == _norm
-        cn += C[:, i] * C[:, i]
-    cn = np.sqrt(cn)
+    xn = np.zeros(len(x))
+    for i in range(x.shape[1]):
+        xn += x[:, i] * x[:, i]
+    return np.sqrt(xn)
 
-    def cos_to(x):
-        dot = np.zeros((len(x), len(ids)))
-        xn = np.zeros(len(x))
-        for i in range(d):  # sequential fold == _dot / _norm
-            dot += x[:, i : i + 1] * C[None, :, i]
-            xn += x[:, i] * x[:, i]
-        return _round6_np(dot / (np.sqrt(xn)[:, None] * cn[None, :]))
 
-    return ids, C, cos_to
+def _cosines(x, C, cn):
+    """(rows, k) cosines of the float64 rows ``x`` against ``C`` (norms
+    ``cn``, :func:`_centroids`) under the :func:`cosine` contract: dot
+    and norms accumulate SEQUENTIALLY over dimensions (one fused
+    multiply-add per dim — IEEE-identical to the zip_with/aggregate
+    left fold), the division is ``dot / (norm(x) * norm(c))``, and the
+    result rounds 6 dp exactly like ``F.round`` (:func:`_round6_np`).
+    Rows of another length than ``C``'s raise ``ValueError``."""
+    import numpy as np
+
+    if x.shape[1] != C.shape[1]:
+        raise ValueError(f"vectors have {x.shape[1]} values; the centroids have {C.shape[1]}")
+    dot = np.zeros((len(x), len(C)))
+    for i in range(C.shape[1]):  # sequential fold == _dot
+        dot += x[:, i : i + 1] * C[None, :, i]
+    return _round6_np(dot / (_norms(x)[:, None] * cn[None, :]))
 
 
 def _assign(
@@ -146,30 +161,19 @@ def _assign(
 ) -> DataFrame:
     """Arrow-batched nearest-centroid assignment → (id, vec, cell).
 
-    Numeric contract (the one the SQL oracles replay): dot/norm
-    accumulate SEQUENTIALLY over dimensions (the :func:`cosine` fold
-    order), cosine rounds 6 dp exactly like ``F.round``
-    (:func:`_round6_np`), and argmax-first-occurrence over
-    ascending-id centroids gives ties to the smaller centroid id."""
+    Numeric contract (the one the SQL oracles replay): :func:`_cosines`,
+    and argmax-first-occurrence over ascending-id centroids gives ties
+    to the smaller centroid id."""
     import numpy as np
-    import pandas as pd
 
-    ids, _, cos_to = _centroid_cosines(cents)
+    ids, C, cn = _centroids(cents, corpus_vec)
 
-    def assign(batches):
-        for pdf in batches:
-            x = np.array([np.asarray(v, dtype=np.float64) for v in pdf[corpus_vec]])
-            yield pd.DataFrame(
-                {
-                    corpus_id: pdf[corpus_id],
-                    corpus_vec: pdf[corpus_vec],
-                    "cell": ids[np.argmax(cos_to(x), axis=1)],
-                }
-            )
+    def assign(batch):
+        cos = _cosines(vectors(batch[corpus_vec], corpus_vec), C, cn)
+        return {"cell": ids[np.argmax(cos, axis=1)]}
 
-    vec_type = corpus.schema[corpus_vec].dataType.simpleString()
-    return corpus.select(corpus_id, corpus_vec).mapInPandas(
-        assign, schema=f"{corpus_id} long, {corpus_vec} {vec_type}, cell long"
+    return arrow_kernel(
+        corpus.select(corpus_id, corpus_vec), assign, f"{corpus_id}, {corpus_vec}, cell long"
     )
 
 
@@ -188,14 +192,10 @@ def all_pairs_cosine(
     projection: measured 187 s → 1.0 s at 2 k vectors / sf0.1 with
     bit-identical output).
 
-    Numeric contract (the same one :func:`_assign` pins):
-    elements widen to float64 exactly like the fold's per-element
-    ``cast("double")``; dot/norm accumulate SEQUENTIALLY over
-    dimensions (one fused multiply-add per dim — IEEE-identical to the
-    zip_with/aggregate left fold); cosine divides by
-    ``norm(a) * norm(b)`` in that order and rounds 6 dp
-    half-away-from-zero, matching ``F.round``/HALF_UP. Equality with
-    the :func:`cosine` expression is pytest-pinned (test_llm).
+    Numeric contract (the same one :func:`_assign` pins): elements
+    widen to float64 exactly like the fold's per-element
+    ``cast("double")``, then :func:`_cosines`.  Equality with the
+    :func:`cosine` expression is pytest-pinned (test_llm).
 
     Scale shape: all-pairs is the EXACT tier — quadratic because the
     answer is (every qualifying pair must be scored); at 100 TB the
@@ -217,7 +217,6 @@ def all_pairs_cosine(
     see ``test_round6_half_boundary_parity``.
     """
     import numpy as np
-    import pandas as pd
 
     from fdf_spark.sources.tables import spread
 
@@ -232,40 +231,25 @@ def all_pairs_cosine(
             f"memory."
         )
     rows = corpus.select(corpus_id, corpus_vec).collect()
-    rows.sort(key=lambda r: r[0])
-    ids_all = np.array([r[0] for r in rows], dtype=np.int64)
-    B = np.array([np.asarray(r[1], dtype=np.float64) for r in rows])
-    d = B.shape[1] if len(rows) else 0
-    bn = np.zeros(len(ids_all))
-    for i in range(d):  # sequential fold == _norm
-        bn += B[:, i] * B[:, i]
-    bn = np.sqrt(bn)
-    bc = corpus.sparkSession.sparkContext.broadcast((ids_all, B, bn))
+    bc = corpus.sparkSession.sparkContext.broadcast(_centroids(rows, corpus_vec))
     # rows per score-matrix block: ~32 MB of float64 against the corpus
-    blk = max(1, (4 << 20) // max(1, len(ids_all)))
+    blk = max(1, (4 << 20) // max(1, len(rows)))
 
-    def gen(batches):
+    def gen(batch):
         ids_b, B, bn = bc.value
-        for pdf in batches:
-            for lo in range(0, len(pdf), blk):
-                chunk = pdf.iloc[lo : lo + blk]
-                X = np.array([np.asarray(v, dtype=np.float64) for v in chunk[corpus_vec]])
-                ida = chunk[corpus_id].to_numpy(dtype=np.int64)
-                dot = np.zeros((len(chunk), len(ids_b)))
-                xn = np.zeros(len(chunk))
-                for i in range(B.shape[1]):  # sequential fold == _dot
-                    dot += X[:, i : i + 1] * B[None, :, i]
-                    xn += X[:, i] * X[:, i]
-                cos = dot / (np.sqrt(xn)[:, None] * bn[None, :])
-                cos = _round6_np(cos)  # 6 dp, F.round-exact incl. half boundaries
-                mask = (ida[:, None] < ids_b[None, :]) & (cos >= threshold)
-                ai, bi = np.nonzero(mask)
-                yield pd.DataFrame(
-                    {"id_a": ida[ai], "id_b": ids_b[bi], "cos_sim": cos[ai, bi]}
-                )
+        X = vectors(batch[corpus_vec], corpus_vec)
+        ida = batch[corpus_id].to_numpy(zero_copy_only=False).astype(np.int64)
+        pairs = []
+        for lo in range(0, len(X), blk):
+            cos = _cosines(X[lo : lo + blk], B, bn)
+            mask = (ida[lo : lo + blk, None] < ids_b[None, :]) & (cos >= threshold)
+            ai, bi = np.nonzero(mask)
+            pairs.append((ida[lo + ai], ids_b[bi], cos[ai, bi]))
+        a, b, c = (np.concatenate(p) for p in zip(*pairs))
+        return {"id_a": a, "id_b": b, "cos_sim": c}
 
-    return spread(corpus.select(corpus_id, corpus_vec)).mapInPandas(
-        gen, schema="id_a long, id_b long, cos_sim double"
+    return arrow_kernel(
+        spread(corpus.select(corpus_id, corpus_vec)), gen, "id_a long, id_b long, cos_sim double"
     )
 
 
@@ -287,7 +271,7 @@ def ivf_assign(
     on row id just to run a per-row argmin).
     """
     cents = [
-        (r[corpus_id], list(r[corpus_vec]))
+        (r[0], r[1])
         for r in corpus.orderBy(corpus_id).limit(num_cells).select(corpus_id, corpus_vec).collect()
     ]
     return cents, _assign(corpus, cents, corpus_id, corpus_vec)
@@ -354,6 +338,7 @@ def semantic_dedup(
     """
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
 
     _, assigned = ivf_assign(corpus, num_cells, corpus_id, corpus_vec)
 
@@ -361,33 +346,23 @@ def semantic_dedup(
     # self-join scored every within-cell pair with the interpreted HOF
     # cosine fold (3 × dim lambda passes per pair — measured 6.3 s of
     # the query's 6.6 s at sf0.1; 0.4 s vectorized, identical removed
-    # set). Each cell's rows land in one pandas group and numpy scores
-    # the pairwise matrix with the SAME numeric contract as
-    # :func:`all_pairs_cosine` (sequential per-dimension fold,
-    # norm(a)*norm(b) division order, 6 dp half-away rounding) —
-    # equivalence to the join+fold path is pytest-pinned. Same scale
-    # shape as before: work is cluster-bounded Σ|cell|² either way, and
-    # the A-side is blocked so a skewed giant cell bounds its score
-    # matrix instead of materializing |cell|² at once.
+    # set). Each cell's rows land in one pandas group and
+    # :func:`_cosines` scores the pairwise matrix (the
+    # :func:`all_pairs_cosine` contract) — equivalence to the join+fold
+    # path is pytest-pinned. Same scale shape as before: work is
+    # cluster-bounded Σ|cell|² either way, and the A-side is blocked so
+    # a skewed giant cell bounds its score matrix instead of
+    # materializing |cell|² at once.
     def cell_removed(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(corpus_id)
         ids = pdf[corpus_id].to_numpy(dtype=np.int64)
-        X = np.array([np.asarray(v, dtype=np.float64) for v in pdf[corpus_vec]])
-        d = X.shape[1] if len(ids) else 0
-        nn = np.zeros(len(ids))
-        for i in range(d):  # sequential fold == _norm
-            nn += X[:, i] * X[:, i]
-        n = np.sqrt(nn)
+        X = vectors(pa.array(pdf[corpus_vec]), corpus_vec)
+        n = _norms(X)
         blk = max(1, (4 << 20) // max(1, len(ids)))
         hit = np.zeros(len(ids), dtype=bool)
         for lo in range(0, len(ids), blk):
-            hi = min(lo + blk, len(ids))
-            dot = np.zeros((hi - lo, len(ids)))
-            for i in range(d):  # sequential fold == _dot
-                dot += X[lo:hi, i : i + 1] * X[None, :, i]
-            cos = dot / (n[lo:hi, None] * n[None, :])
-            cos = _round6_np(cos)  # 6 dp, F.round-exact incl. half boundaries
-            mask = (ids[lo:hi, None] < ids[None, :]) & (cos >= threshold)
+            cos = _cosines(X[lo : lo + blk], X, n)
+            mask = (ids[lo : lo + blk, None] < ids[None, :]) & (cos >= threshold)
             hit |= mask.any(axis=0)
         return pd.DataFrame({corpus_id: ids[hit]})
 
@@ -558,36 +533,24 @@ def _lsh_sig(df: DataFrame, tables, id_col: str, vec_col: str) -> DataFrame:
     qualifies, as in the SQL replay); a signature is the exact integer
     sum of its bits."""
     import numpy as np
-    import pandas as pd
 
     P = np.array(tables, dtype=np.float64)  # (tables, planes, dim)
     n_tables, n_planes, d = P.shape
 
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            sigs = np.zeros((len(pdf), n_tables), dtype=np.int64)
-            for t in range(n_tables):
-                for j in range(n_planes):
-                    acc = np.zeros(len(pdf))
-                    for i in range(d):  # sequential fold == signature()
-                        acc += x[:, i] * P[t, j, i]
-                    sigs[:, t] |= (acc >= 0).astype(np.int64) << j
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(pdf[id_col].to_numpy(), n_tables),
-                    vec_col: [v for v in pdf[vec_col] for _ in range(n_tables)],
-                    "__tbl": np.tile(np.arange(n_tables, dtype=np.int64), len(pdf)),
-                    "__b": sigs.reshape(-1),
-                }
-            )
+    def gen(batch):
+        x = vectors(batch[vec_col], vec_col)
+        sigs = np.zeros((len(x), n_tables), dtype=np.int64)
+        for t in range(n_tables):
+            for j in range(n_planes):
+                acc = np.zeros(len(x))
+                for i in range(d):  # sequential fold == signature()
+                    acc += x[:, i] * P[t, j, i]
+                sigs[:, t] |= (acc >= 0).astype(np.int64) << j
+        tbl = np.tile(np.arange(n_tables, dtype=np.int64), len(x))
+        return {"__tbl": tbl, "__b": sigs.reshape(-1)}, np.repeat(np.arange(len(x)), n_tables)
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    vec_type = df.schema[vec_col].dataType.simpleString()
-    return df.select(id_col, vec_col).mapInPandas(
-        gen, schema=f"{id_col} {id_type}, {vec_col} {vec_type}, __tbl long, __b long"
+    return arrow_kernel(
+        df.select(id_col, vec_col), gen, f"{id_col}, {vec_col}, __tbl long, __b long"
     )
 
 
@@ -681,11 +644,8 @@ def kmeans_refine(
 def _cell_sums(assigned: DataFrame, corpus_vec: str) -> DataFrame:
     """Exact per-task per-cell vector sums of ``assigned``
     (:func:`dsum_partials`), the k-means mean-update partials."""
-    import numpy as np
-
-    def batch(pdf):
-        x = np.array([np.asarray(v, dtype=np.float64) for v in pdf[corpus_vec]])
-        return [((pdf["cell"].to_numpy(),), x)]
+    def batch(b):
+        return [((b["cell"].to_numpy(),), vectors(b[corpus_vec], corpus_vec))]
 
     return dsum_partials(assigned.select("cell", corpus_vec), "cell long", batch)
 
@@ -762,17 +722,12 @@ def pq_encode(
         books = _pq_seed_books(corpus, corpus_vec, corpus_id, m, ks, sub)
     books_np = np.array(books)  # (m, ks, sub)
     cols = (corpus_id, corpus_vec, *keep)
-    schema = ", ".join(f"{c} {corpus.schema[c].dataType.simpleString()}" for c in cols)
 
-    def encode_iter(batches):
-        for pdf in batches:
-            x = np.array([np.asarray(v, dtype=np.float64) for v in pdf[corpus_vec]])
-            codes = np.argmin(_pq_dists_np(x, books_np), axis=2).astype(np.int32)
-            yield pdf.assign(code=list(codes))
+    def encode(batch):
+        x = vectors(batch[corpus_vec], corpus_vec)
+        return {"code": np.argmin(_pq_dists_np(x, books_np), axis=2).astype(np.int32)}
 
-    return books, corpus.select(*cols).mapInPandas(
-        encode_iter, schema=f"{schema}, code array<int>"
-    )
+    return books, arrow_kernel(corpus.select(*cols), encode, ", ".join(cols) + ", code array<int>")
 
 
 def _pq_seed_books(
@@ -826,8 +781,8 @@ def train_pq_codebooks(
     for _ in range(iters):
         books_np = np.array(books)  # (m, ks, sub)
 
-        def batch(pdf):
-            x = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+        def batch(b):
+            x = vectors(b[vec_col], vec_col)
             codes = np.argmin(_pq_dists_np(x, books_np), axis=2)
             return [
                 ((np.full(len(x), j), codes[:, j]), x[:, j * sub : (j + 1) * sub])
@@ -1123,26 +1078,14 @@ def _probe_cells(
 ) -> DataFrame:
     """Cell router of the non-PQ IVF paths → (id, vec, cell), one row
     per probed cell: each row's ``nprobe`` nearest centroids by rounded
-    cosine (:func:`_centroid_cosines`, :func:`_probe_order`)."""
-    import numpy as np
+    cosine (:func:`_cosines`, :func:`_probe_order`)."""
+    ids, C, cn = _centroids(cents, "centroid")
 
-    ids, _, cos_to = _centroid_cosines(cents)
+    def gen(batch):
+        rows, ci = _probe_order(_cosines(vectors(batch[vec_col], vec_col), C, cn), nprobe)
+        return {"cell": ids[ci]}, rows
 
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            rows, ci = _probe_order(cos_to(x), nprobe)
-            out = pdf[[id_col, vec_col]].iloc[rows].reset_index(drop=True)
-            out["cell"] = ids[ci]
-            yield out
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    vec_type = df.schema[vec_col].dataType.simpleString()
-    return df.select(id_col, vec_col).mapInPandas(
-        gen, schema=f"{id_col} {id_type}, {vec_col} {vec_type}, cell long"
-    )
+    return arrow_kernel(df.select(id_col, vec_col), gen, f"{id_col}, {vec_col}, cell long")
 
 
 def _ivf_pq_probes(
@@ -1162,29 +1105,19 @@ def _ivf_pq_probes(
     its residual ``q − centroid`` when ``by_residual``."""
     import numpy as np
 
-    ids, C, cos_to = _centroid_cosines(cents)
+    ids, C, cn = _centroids(cents, "centroid")
     books_np = np.array(books)  # (m, ks, sub)
 
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.array([np.asarray(v, dtype=np.float64) for v in pdf[query_vec]])
-            rows, ci = _probe_order(cos_to(x), nprobe)
-            src = x[rows] - C[ci] if by_residual else x[rows]
-            out = pdf[[query_id, query_vec]].iloc[rows].reset_index(drop=True)
-            out["cell"] = ids[ci]
-            out["lut"] = _pq_dists_np(src, books_np).tolist()
-            yield out
+    def gen(batch):
+        x = vectors(batch[query_vec], query_vec)
+        rows, ci = _probe_order(_cosines(x, C, cn), nprobe)
+        src = x[rows] - C[ci] if by_residual else x[rows]
+        return {"cell": ids[ci], "lut": _pq_dists_np(src, books_np)}, rows
 
-    id_type = queries.schema[query_id].dataType.simpleString()
-    vec_type = queries.schema[query_vec].dataType.simpleString()
-    return queries.select(query_id, query_vec).mapInPandas(
+    return arrow_kernel(
+        queries.select(query_id, query_vec),
         gen,
-        schema=(
-            f"{query_id} {id_type}, {query_vec} {vec_type}, "
-            "cell long, lut array<array<double>>"
-        ),
+        f"{query_id}, {query_vec}, cell long, lut array<array<double>>",
     )
 
 

@@ -550,7 +550,7 @@ def quantile_estimate(sketch: DataFrame, qs: Sequence[float]) -> DataFrame:
 
 def _bottomk_prune_local(df: DataFrame, keys: Sequence[str], k: int) -> DataFrame:
     """Zero-shuffle superset prune: keep ≤ k smallest-(h, v) rows per
-    key WITHIN each Arrow batch (``mapInPandas`` — no exchange at all).
+    key WITHIN each Arrow batch (``arrow_kernel`` — no exchange at all).
 
     Correctness needs only a SUPERSET of each group's global bottom-k,
     and per-batch bottom-k is one (a row in the global bottom-k is in
@@ -561,20 +561,16 @@ def _bottomk_prune_local(df: DataFrame, keys: Sequence[str], k: int) -> DataFram
     key exchange after the prune carries ≤ k·batches rows per group,
     never the group's whole row set.
     """
-    import pandas as pd  # noqa: F401 — mapInPandas contract
+    from fdf_spark.functions.kernels import arrow_kernel
 
     key_list = list(keys)
 
-    def prune(batches):
-        for pdf in batches:
-            if len(pdf):
-                yield (
-                    pdf.sort_values(["h", "v"])
-                    .groupby(key_list, sort=False, dropna=False)
-                    .head(k)
-                )
+    def prune(batch):
+        pdf = batch.select([*key_list, "h", "v"]).to_pandas()
+        kept = pdf.sort_values(["h", "v"]).groupby(key_list, sort=False, dropna=False).head(k)
+        return {}, kept.index.to_numpy()
 
-    return df.mapInPandas(prune, df.schema)
+    return arrow_kernel(df, prune, ", ".join(df.columns))
 
 
 def quantile_sketch_by(

@@ -28,25 +28,18 @@ from __future__ import annotations
 
 import os
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from fdf_spark.functions.kernels import _columns, arrow_kernel
 
 _MAGIC = b"FDFTOKB1"
 MANIFEST_SCHEMA = "shard int, n_docs long, n_tokens long, n_bytes long, file string"
 DOC_SCHEMA = "shard int, doc_id long, ids array<long>"
 
 
-def write_token_bin_shards(
-    assigned: DataFrame,
-    path: str,
-    shard_col: str = "shard",
-    id_col: str = "doc_id",
-    ids_col: str = "ids",
-) -> DataFrame:
+def write_token_bin_shards(assigned: DataFrame, path: str) -> DataFrame:
     """Write ``(shard int, doc_id long, ids array<int>)`` rows as one
     ``.tokbin`` file per shard; returns the manifest DataFrame.
 
@@ -55,20 +48,17 @@ def write_token_bin_shards(
     """
     os.makedirs(path, exist_ok=True)
     prepared = (
-        assigned.select(
-            F.col(shard_col).alias("shard"),
-            F.col(id_col).alias("doc_id"),
-            F.col(ids_col).alias("ids"),
-        )
+        assigned.select("shard", "doc_id", "ids")
         .repartition("shard")
         .sortWithinPartitions("shard", "doc_id")
     )
 
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def write_part(batches):
         by_shard: dict[int, list[tuple[int, list[int]]]] = {}
-        for pdf in batches:
-            for shard, doc_id, ids in zip(pdf["shard"], pdf["doc_id"], pdf["ids"]):
-                by_shard.setdefault(int(shard), []).append((int(doc_id), list(ids)))
+        for batch in batches:
+            cols = (batch[c].to_pylist() for c in ("shard", "doc_id", "ids"))
+            for shard, doc_id, ids in zip(*cols):
+                by_shard.setdefault(shard, []).append((doc_id, ids))
         rows = []
         for shard, docs in sorted(by_shard.items()):
             docs.sort(key=lambda d: d[0])
@@ -93,11 +83,9 @@ def write_token_bin_shards(
             with open(os.path.join(path, name), "wb") as fh:
                 fh.write(blob)
             rows.append((shard, len(docs), int(stream.size), len(blob), name))
-        yield pd.DataFrame(
-            rows, columns=["shard", "n_docs", "n_tokens", "n_bytes", "file"]
-        )
+        yield _columns(rows, MANIFEST_SCHEMA)
 
-    return prepared.mapInPandas(write_part, MANIFEST_SCHEMA)
+    return arrow_kernel(prepared, write_part, MANIFEST_SCHEMA)
 
 
 def read_token_bin_shards(spark: SparkSession, path: str) -> DataFrame:
@@ -105,45 +93,38 @@ def read_token_bin_shards(spark: SparkSession, path: str) -> DataFrame:
     one binaryFile row per shard, parsed entirely in the map stage."""
     files = spark.read.format("binaryFile").load(os.path.join(path, "*.tokbin"))
 
-    def unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                blob = bytes(content)
-                if blob[-8:] != _MAGIC:
-                    raise ValueError(f"bad magic in {fpath}")
-                n_docs, n_tokens = struct.unpack_from("<qq", blob, len(blob) - 24)
-                tok_end = n_tokens * 4
-                doctab_end = tok_end + n_docs * 16
-                if doctab_end + 24 != len(blob):
-                    raise ValueError(f"corrupt layout in {fpath}")
-                stream = np.frombuffer(blob, "<u4", n_tokens, 0).astype(np.int64)
-                name = os.path.basename(fpath)
-                shard = int(name.split("-")[1].split(".")[0])
-                off = 0
-                for d in range(n_docs):
-                    doc_id, n = struct.unpack_from("<qq", blob, tok_end + 16 * d)
-                    rows.append((shard, doc_id, stream[off : off + n].tolist()))
-                    off += n
-                if off != n_tokens:
-                    raise ValueError(f"doc sizes disagree with stream in {fpath}")
-            yield pd.DataFrame(rows, columns=["shard", "doc_id", "ids"])
+    def unpack(batch):
+        rows = []
+        for fpath, blob in zip(batch["path"].to_pylist(), batch["content"].to_pylist()):
+            if blob[-8:] != _MAGIC:
+                raise ValueError(f"bad magic in {fpath}")
+            n_docs, n_tokens = struct.unpack_from("<qq", blob, len(blob) - 24)
+            tok_end = n_tokens * 4
+            doctab_end = tok_end + n_docs * 16
+            if doctab_end + 24 != len(blob):
+                raise ValueError(f"corrupt layout in {fpath}")
+            stream = np.frombuffer(blob, "<u4", n_tokens, 0).astype(np.int64)
+            name = os.path.basename(fpath)
+            shard = int(name.split("-")[1].split(".")[0])
+            off = 0
+            for d in range(n_docs):
+                doc_id, n = struct.unpack_from("<qq", blob, tok_end + 16 * d)
+                rows.append((shard, doc_id, stream[off : off + n]))
+                off += n
+            if off != n_tokens:
+                raise ValueError(f"doc sizes disagree with stream in {fpath}")
+        return _columns(rows, DOC_SCHEMA)
 
-    return files.select("path", "content").mapInPandas(unpack, DOC_SCHEMA)
+    return arrow_kernel(files.select("path", "content"), unpack, DOC_SCHEMA)
 
 
-def codepoint_tokenize(docs: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Byte-free reference tokenizer for container tests: ids are the
-    text's unicode code points (deterministic, SQL-replayable — DuckDB
-    recomputes per-doc count and sum arithmetically).  Arrow-batched."""
+def codepoint_tokenize(docs: DataFrame) -> DataFrame:
+    """Byte-free reference tokenizer for container tests: ``(doc_id,
+    text)`` → ``(doc_id, ids)``, the ids being the text's unicode code
+    points (deterministic, SQL-replayable — DuckDB recomputes per-doc
+    count and sum arithmetically).  Arrow-batched."""
 
-    def tok(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "ids": pdf[text].map(lambda t: [ord(c) for c in t]),
-                }
-            )
+    def tok(batch):
+        return {"ids": [[ord(c) for c in t] for t in batch["text"].to_pylist()]}
 
-    return docs.select(id_col, text).mapInPandas(tok, "doc_id long, ids array<long>")
+    return arrow_kernel(docs.select("doc_id", "text"), tok, "doc_id, ids array<long>")

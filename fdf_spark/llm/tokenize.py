@@ -10,8 +10,9 @@ Two tiers, mirroring the repo's oracle discipline:
   functions, zero Python row code, zero shuffles) and exactly
   replayable in a DuckDB oracle — the driver-checkable tier.
 - :func:`tokenize_bpe` — real byte-pair-encoding with a learned merge
-  list, Arrow-batched ``mapInPandas`` (the merge loop is inherently
-  iterative per word — not expressible as finite column algebra).
+  list, an Arrow kernel (``functions.kernels.arrow_kernel``; the
+  merge loop is inherently iterative per word — not expressible as
+  finite column algebra).
   Property-tested against a pure-Python reference implementation;
   :func:`learn_bpe` trains the merge list with a distributed pair-count
   corpus scan per merge.
@@ -54,7 +55,8 @@ def tokenize_vocab(
       (analysis/codegen blow up — measured a >10 min hang at 100k
       expressions), so this tier is for the oracle-checked shape and
       char-level/POC vocabs.
-    - ``mode="arrow"``: Arrow-batched ``mapInPandas`` with the vocab
+    - ``mode="arrow"``: an Arrow kernel
+      (:func:`~fdf_spark.functions.kernels.arrow_kernel`) with the vocab
       dict closure-shipped (pickled once per task, like a broadcast
       var) — the production tier for real 50k+ vocabs; equivalence to
       expr mode is pytest-asserted on a shared small vocab.
@@ -62,25 +64,24 @@ def tokenize_vocab(
     if any(v <= UNK_ID for v in vocab.values()):
         raise ValueError("vocab ids must be >= 1 (0 is reserved for UNK)")
     if mode == "arrow":
-        import pandas as pd
+        from fdf_spark.functions.kernels import arrow_kernel
 
-        def encode(batches):
+        def encode(batch):
             get = vocab.get
-            for pdf in batches:
-                out = []
-                for t in pdf[text]:
-                    ids: list[int] = []
-                    for w in _py_word_split(t):
-                        wid = get(w)
-                        if wid is not None:
-                            ids.append(wid)
-                        else:
-                            ids.extend(get(c, UNK_ID) for c in w)
-                    out.append(ids)
-                yield pd.DataFrame({id_col: pdf[id_col], "token_ids": out})
+            out = []
+            for t in batch[text].to_pylist():
+                ids: list[int] = []
+                for w in _py_word_split(t):
+                    wid = get(w)
+                    if wid is not None:
+                        ids.append(wid)
+                    else:
+                        ids.extend(get(c, UNK_ID) for c in w)
+                out.append(ids)
+            return {"token_ids": out}
 
-        return df.select(id_col, text).mapInPandas(
-            encode, schema=f"{id_col} long, token_ids array<int>"
+        return arrow_kernel(
+            df.select(id_col, text), encode, f"{id_col}, token_ids array<int>"
         )
     if mode != "expr":
         raise ValueError(f"unknown mode {mode!r}")
@@ -130,25 +131,24 @@ def tokenize_bpe(
     ranks dict is closure-captured (broadcast with the task), and the
     output is pieces per document in word order.
     """
-    import pandas as pd
+    from fdf_spark.functions.kernels import arrow_kernel
 
     ranks = {tuple(m): i for i, m in enumerate(merges)}
+    cache: dict[str, list[str]] = {}  # word → pieces, filled on the executor
 
-    def encode(batches):
-        cache: dict[str, list[str]] = {}
-        for pdf in batches:
-            out = []
-            for t in pdf[text]:
-                pieces: list[str] = []
-                for w in _py_word_split(t):
-                    got = cache.get(w)
-                    if got is None:
-                        got = cache[w] = _bpe_encode_word(w, ranks)
-                    pieces.extend(got)
-                out.append(pieces)
-            yield pd.DataFrame({id_col: pdf[id_col], "pieces": out})
+    def encode(batch):
+        out = []
+        for t in batch[text].to_pylist():
+            pieces: list[str] = []
+            for w in _py_word_split(t):
+                got = cache.get(w)
+                if got is None:
+                    got = cache[w] = _bpe_encode_word(w, ranks)
+                pieces.extend(got)
+            out.append(pieces)
+        return {"pieces": out}
 
-    return df.select(id_col, text).mapInPandas(encode, schema=f"{id_col} long, pieces array<string>")
+    return arrow_kernel(df.select(id_col, text), encode, f"{id_col}, pieces array<string>")
 
 
 def _py_word_split(t: str) -> list[str]:

@@ -15,14 +15,14 @@ shard, this module owns the CONTAINER).
 Spark-first design:
 
 - **Write**: one tar (or several, under a byte budget) per input
-  partition, emitted by ``mapInPandas`` — executors write shards in
+  partition, emitted by an Arrow kernel — executors write shards in
   parallel and return a manifest row per shard (path, samples, bytes);
   nothing corpus-sized ever reaches the driver.  Pre-partition the
   input (e.g. by N24's shard id, or ``repartitionByRange`` on the
   key) to control shard contents.
 - **Read**: ``spark.read.format("binaryFile")`` over ``*.tar`` (one
   row per shard — Spark parallelizes across shards exactly like a
-  trainer's worker pool), then ``mapInPandas`` unpacks members to
+  trainer's worker pool), then an Arrow kernel unpacks members to
   ``(shard, key, ext, payload)`` rows; ``group_samples`` reassembles
   one row per sample with an ``ext → payload`` map.  Member payloads
   never enter a shuffle unless the caller groups them.
@@ -36,11 +36,11 @@ from __future__ import annotations
 import io
 import os
 import tarfile
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from fdf_spark.functions.kernels import _columns, arrow_kernel
 
 MEMBER_SCHEMA = "shard string, key string, ext string, payload binary"
 MANIFEST_SCHEMA = "shard string, n_samples long, n_members long, n_bytes long"
@@ -64,7 +64,7 @@ def write_webdataset(
     """
     os.makedirs(path, exist_ok=True)
 
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def write_part(batches):
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
@@ -89,24 +89,22 @@ def write_webdataset(
             buf = io.BytesIO()
             tar = tarfile.open(fileobj=buf, mode="w")
 
-        for pdf in batches:
-            for key, ext, payload in zip(pdf["key"], pdf["ext"], pdf["payload"]):
+        for batch in batches:
+            cols = (batch[c].to_pylist() for c in ("key", "ext", "payload"))
+            for key, ext, payload in zip(*cols):
                 if key != cur_key:
                     if cur_key is not None and buf.tell() >= shard_max_bytes:
                         close_shard()
                     cur_key = key
                     stats["samples"] += 1
-                payload = bytes(payload)
                 info = tarfile.TarInfo(name=f"{key}.{ext}")
                 info.size = len(payload)
                 tar.addfile(info, io.BytesIO(payload))
                 stats["members"] += 1
         close_shard()
-        yield pd.DataFrame(
-            manifests, columns=["shard", "n_samples", "n_members", "n_bytes"]
-        )
+        yield _columns(manifests, MANIFEST_SCHEMA)
 
-    return df.select("key", "ext", "payload").mapInPandas(write_part, MANIFEST_SCHEMA)
+    return arrow_kernel(df.select("key", "ext", "payload"), write_part, MANIFEST_SCHEMA)
 
 
 def read_webdataset(spark: SparkSession, path: str) -> DataFrame:
@@ -114,25 +112,23 @@ def read_webdataset(spark: SparkSession, path: str) -> DataFrame:
     rows.  One binaryFile row per shard → shards unpack in parallel;
     member bytes stay inside the map stage."""
     files = spark.read.format("binaryFile").load(os.path.join(path, "*.tar"))
+    return arrow_kernel(files.select("path", "content"), _unpack, MEMBER_SCHEMA)
 
-    def unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                shard = os.path.basename(fpath)
-                with tarfile.open(fileobj=io.BytesIO(bytes(content))) as tar:
-                    for m in tar.getmembers():
-                        if not m.isfile():
-                            continue
-                        base, dot, ext = m.name.rpartition(".")
-                        if not dot:
-                            base, ext = m.name, ""
-                        rows.append(
-                            (shard, base, ext, tar.extractfile(m).read())
-                        )
-            yield pd.DataFrame(rows, columns=["shard", "key", "ext", "payload"])
 
-    return files.select("path", "content").mapInPandas(unpack, MEMBER_SCHEMA)
+def _unpack(batch) -> dict[str, list]:
+    """Tar shard files → their ``(shard, key, ext, payload)`` members."""
+    rows = []
+    for fpath, content in zip(batch["path"].to_pylist(), batch["content"].to_pylist()):
+        shard = os.path.basename(fpath)
+        with tarfile.open(fileobj=io.BytesIO(content)) as tar:
+            for m in tar.getmembers():
+                if not m.isfile():
+                    continue
+                base, dot, ext = m.name.rpartition(".")
+                if not dot:
+                    base, ext = m.name, ""
+                rows.append((shard, base, ext, tar.extractfile(m).read()))
+    return _columns(rows, MEMBER_SCHEMA)
 
 
 def group_samples(members: DataFrame) -> DataFrame:
@@ -216,20 +212,4 @@ def read_webdataset_committed(spark: SparkSession, path: str) -> DataFrame:
     files = spark.read.format("binaryFile").load(
         [os.path.join(path, s) for s in shards]
     )
-
-    def unpack(batches):
-        for pdf in batches:
-            rows = []
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                shard = os.path.basename(fpath)
-                with tarfile.open(fileobj=io.BytesIO(bytes(content))) as tar:
-                    for m in tar.getmembers():
-                        if not m.isfile():
-                            continue
-                        base, dot, ext = m.name.rpartition(".")
-                        if not dot:
-                            base, ext = m.name, ""
-                        rows.append((shard, base, ext, tar.extractfile(m).read()))
-            yield pd.DataFrame(rows, columns=["shard", "key", "ext", "payload"])
-
-    return files.select("path", "content").mapInPandas(unpack, MEMBER_SCHEMA)
+    return arrow_kernel(files.select("path", "content"), _unpack, MEMBER_SCHEMA)

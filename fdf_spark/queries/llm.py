@@ -571,7 +571,7 @@ def q69_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators=("N6",),
     doc="Multimodal plumbing end-to-end: documents → binary asset table "
     "(payload = utf-8 bytes, typed media metadata) → Arrow-batched "
-    "mapInPandas feature extraction (deterministic fake codec) → per-type "
+    "arrow_kernel feature extraction (deterministic fake codec) → per-type "
     "rollup. The oracle re-derives the byte-length feature relationally; "
     "feat[0] is defined as the payload byte count, so avg_feat0 checks the "
     "decode path itself (exact: integer-valued doubles).",
@@ -679,7 +679,7 @@ def q107_real_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc_id%5 so all five filter types ship — then the pure-stdlib "
     "decoder (fdf_spark/llm/imagecodecs.py: chunk parse + CRC verify + "
     "inflate + unfilter + pixel fold) recovers dimensions and channel "
-    "means FROM THE BYTES inside Arrow-batched mapInPandas. The oracle "
+    "means FROM THE BYTES inside Arrow-batched arrow_kernel. The oracle "
     "recomputes the means arithmetically from the doc_id pixel law — "
     "independent of encoder and decoder — so a wrong filter inverse, "
     "stride, or channel order fails the hash. (Byte length is NOT "
@@ -745,7 +745,7 @@ def q128_png_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "decoder (llm/imagecodecs.py: segment parse, DHT canonical-code "
     "rebuild, byte-unstuffing, huffman+EXTEND, dequant, IDCT, "
     "upsample, YCbCr->RGB) recovers the color FROM THE BYTES inside "
-    "Arrow-batched mapInPandas. Solid-color fixtures make the lossy "
+    "Arrow-batched arrow_kernel. Solid-color fixtures make the lossy "
     "stage closed-form: the oracle replays the DC-only quantization "
     "law double-for-double (identical IEEE literals both sides), so a "
     "wrong huffman table, zigzag, IDCT basis, or rounding convention "
@@ -793,7 +793,7 @@ def q129_jpeg_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "codes in 255-byte sub-blocks — then the pure-python decoder "
     "(llm/imagecodecs.py: container parse, inverse LZW incl. the KwKwK "
     "case and dictionary resets, palette map) recovers the pixels FROM "
-    "THE BYTES inside Arrow-batched mapInPandas. Compressor and "
+    "THE BYTES inside Arrow-batched arrow_kernel. Compressor and "
     "decompressor are independently written inverses; the oracle "
     "recomputes the channel means from the arithmetic palette/index "
     "laws, independent of both.",
@@ -896,7 +896,7 @@ def q131_adpcm_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "remaining boundary (subband->PCM polyphase synthesis) rests on "
     "tabulated ISO window data with no closed form — documented as "
     "permanent in the module header; a native lib mounts inside the "
-    "same mapInPandas seam.",
+    "same arrow_kernel seam.",
 )
 def q138_mpeg1_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fdf_spark.llm.multimodal import extract_features, synth_mpeg1_assets
@@ -1002,7 +1002,7 @@ def q141_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     "recomputes each sampled frame's RGB means from the frame-indexed "
     "pixel law composed with the arithmetic palette, independent of "
     "encoder, scanner and decoder; exact integer sums make the means "
-    "bit-stable. Zero-shuffle plan (one mapInPandas per asset batch).",
+    "bit-stable. Zero-shuffle plan (one arrow_kernel per asset batch).",
 )
 def q142_frame_sample_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fdf_spark.llm.multimodal import frame_sample_features, synth_gif_anim_assets
@@ -1272,7 +1272,7 @@ def q147_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="WebDataset tar-shard container roundtrip (llm/webdataset.py — "
     "the de-facto multimodal training-data container): docs < 200 "
     "become (key.txt, key.json) members written as REAL USTAR tar "
-    "shards by parallel mapInPandas writers, read back through the "
+    "shards by parallel arrow_kernel writers, read back through the "
     "binaryFile source + tar unpack, samples regrouped, the json "
     "sidecar re-parsed — and the per-source doc/char audit of the "
     "ROUNDTRIPPED bytes must equal the oracle's direct computation on "
@@ -1968,7 +1968,7 @@ def q77_embedding_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     operators=("N6",),
     doc="Multimodal resize plumbing: documents → binary assets → "
-    "mapInPandas resize to 32x16 (deterministic fake codec tiles the "
+    "arrow_kernel resize to 32x16 (deterministic fake codec tiles the "
     "source bytes) → payload length + rewritten metadata per image. The "
     "oracle pins the contract (every image re-encoded to exactly "
     "width*height bytes, metadata updated, row set preserved).",

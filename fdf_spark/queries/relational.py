@@ -49,17 +49,23 @@ from fdf_spark.sources.tables import local_df
 _Q01_KEYS = "l_returnflag string, l_linestatus string"
 
 
-def _q01_batch(pdf):
+def _np(batch, col, dtype=None):
+    """One column of an Arrow batch as a numpy array (``dtype``: cast)."""
+    a = batch[col].to_numpy(zero_copy_only=False)
+    return a if dtype is None else a.astype(dtype, copy=False)
+
+
+def _q01_batch(batch):
     """q01's five measures per row (qty, price, disc_price, charge,
     disc), each with the IEEE op order of its Column expression."""
     import numpy as np
 
-    p = pdf["l_extendedprice"].to_numpy("float64")
-    d = pdf["l_discount"].to_numpy("float64")
+    p = _np(batch, "l_extendedprice", np.float64)
+    d = _np(batch, "l_discount", np.float64)
     disc_price = p * (1.0 - d)
-    charge = disc_price * (1.0 + pdf["l_tax"].to_numpy("float64"))
-    x = np.column_stack([pdf["l_quantity"].to_numpy("float64"), p, disc_price, charge, d])
-    return [((pdf["l_returnflag"].to_numpy(), pdf["l_linestatus"].to_numpy()), x)]
+    charge = disc_price * (1.0 + _np(batch, "l_tax", np.float64))
+    x = np.column_stack([_np(batch, "l_quantity", np.float64), p, disc_price, charge, d])
+    return [((_np(batch, "l_returnflag"), _np(batch, "l_linestatus")), x)]
 
 
 @query(
@@ -1199,12 +1205,11 @@ def q48_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = li.select("l_returnflag", "l_quantity", "l_extendedprice")
     measures = ("sx", "sxx", "sy", "syy", "sxy")
 
-    def batch(pdf):
+    def batch(b):
         import numpy as np
 
-        q = pdf["l_quantity"].to_numpy("float64")
-        p = pdf["l_extendedprice"].to_numpy("float64")
-        return [((pdf["l_returnflag"].to_numpy(),), np.column_stack([q, q * q, p, p * p, q * p]))]
+        q, p = _np(b, "l_quantity", np.float64), _np(b, "l_extendedprice", np.float64)
+        return [((_np(b, "l_returnflag"),), np.column_stack([q, q * q, p, p * p, q * p]))]
 
     parts = dsum_partials(src, "l_returnflag string", batch)
     m = (

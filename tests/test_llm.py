@@ -1241,7 +1241,7 @@ def test_png_multi_idat_and_unsupported_profiles():
 
 
 def test_png_extract_features_distributed(spark):
-    """The real PNG decode inside Arrow-batched mapInPandas recovers
+    """The real PNG decode inside Arrow-batched arrow_kernel recovers
     the arithmetic pixel law of the synth fixtures for every filter
     type (doc ids 0..9 cover all five)."""
     from fdf_spark.llm.multimodal import extract_features, synth_png_assets
@@ -3614,6 +3614,77 @@ def test_llm_operators_have_no_tier_flags():
                 continue
             found |= {(name, p) for p in params if p == "mode" or p.endswith("_mode")}
     assert found == allowed
+
+
+def test_python_kernels_use_the_seam():
+    # every row-wise Python kernel runs through functions/kernels.arrow_kernel:
+    # no mapInPandas anywhere, mapInArrow only inside the seam, and grouped
+    # Python only at the five sites listed here
+    import ast
+    from collections import Counter
+    from pathlib import Path
+
+    import fdf_spark
+
+    root = Path(fdf_spark.__file__).parent
+    names = {"mapInPandas", "mapInArrow", "applyInPandas", "applyInPandasWithState", "pandas_udf"}
+    found = Counter()
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if name in names:
+                    found[(path.relative_to(root).as_posix(), name)] += 1
+    assert found == Counter({
+        ("functions/kernels.py", "mapInArrow"): 1,
+        ("llm/similarity.py", "applyInPandas"): 1,
+        ("operators/fft.py", "applyInPandas"): 1,
+        ("operators/fft.py", "pandas_udf"): 1,
+        ("streaming/stateful.py", "applyInPandasWithState"): 2,
+    })
+
+
+def test_vector_kernels_reject_null_and_ragged_vectors(spark):
+    # a NULL or wrong-length embedding fails loudly with a ValueError that
+    # names the column, in the executor kernels and in the driver collect;
+    # so does a batch of vectors whose length is not the centroids'
+    from pyspark.sql.utils import PythonException
+
+    from fdf_spark.llm.similarity import _assign, _probe_cells, ivf_assign, pq_encode
+
+    ddl = "vec_id long, embedding array<double>"
+    good = [(i, [float(i), 1.0, 2.0]) for i in range(4)]
+    cents = [(0, [0.0, 1.0, 2.0]), (1, [1.0, 1.0, 2.0])]
+    books = [[[0.0, 0.0, 0.0], [1.0, 1.0, 1.0]]]
+    for bad in ([1.0, 2.0], None):
+        df = spark.createDataFrame(good + [(9, bad)], ddl).coalesce(1)
+        for run in (
+            lambda: _assign(df, cents, "vec_id", "embedding"),
+            lambda: _probe_cells(df, cents, 1, "vec_id", "embedding"),
+            lambda: pq_encode(df, m=1, ks=2, dim=3, codebooks=books)[1],
+        ):
+            with pytest.raises(PythonException, match="ValueError: embedding: row 4"):
+                run().collect()
+    wide = spark.createDataFrame([(i, [1.0, 2.0, 3.0, 4.0]) for i in range(3)], ddl)
+    with pytest.raises(PythonException, match="vectors have 4 values; the centroids have 3"):
+        _assign(wide, cents, "vec_id", "embedding").collect()
+    seeds = spark.createDataFrame([(0, None)] + good[1:], ddl)
+    with pytest.raises(ValueError, match="embedding: row 0 is a NULL vector"):
+        ivf_assign(seeds, 2)
+
+
+def test_semantic_decontaminate_null_vector_gets_a_verdict(spark):
+    # every corpus row gets exactly one verdict: a NULL embedding comes
+    # back (NULL, NULL, false) instead of failing the task
+    from fdf_spark.llm.decontam import semantic_decontaminate
+
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, None), (3, [0.0, 1.0])], "vec_id long, embedding array<double>"
+    ).coalesce(1)
+    bench = spark.createDataFrame([(10, [1.0, 0.0])], "bench_id long, bench_vec array<double>")
+    got = sorted(map(tuple, semantic_decontaminate(corpus, bench).collect()))
+    assert got == [(1, 10, 1.0, True), (2, None, None, False), (3, 10, 0.0, False)]
 
 
 def test_repetition_stats_modes_agree(spark, docs):

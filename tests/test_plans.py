@@ -187,7 +187,7 @@ EXPECT: dict[str, dict] = {
     # the merged sketch and probe set broadcast — never a corpus join
     "q127_cm_merge_estimate": dict(max_exchanges=4, min_bhj=2, max_smj=0, max_scans=4),
     # real-codec roundtrips: encode+decode run INSIDE one Arrow-batched
-    # mapInPandas over a single scan; the only exchange is the final
+    # arrow_kernel over a single scan; the only exchange is the final
     # sort — payload bytes never enter a shuffle
     "q128_png_codec_roundtrip": dict(max_exchanges=1, max_smj=0, max_scans=1),
     "q141_resize_real": dict(max_exchanges=1, max_smj=0, max_scans=1),

@@ -177,7 +177,8 @@ def test_dsum_partials_arrow_rejects_nonfinite(spark):
         [("a", 1.0), ("a", float("nan"))], "k string, v double"
     )
     parts = dsum_partials(
-        df, "k string", lambda pdf: [((pdf["k"].to_numpy(),), pdf[["v"]].to_numpy("float64"))]
+        df, "k string",
+        lambda b: [((b["k"].to_numpy(zero_copy_only=False),), b["v"].to_numpy()[:, None])],
     )
     with _pytest.raises(PythonException, match="non-finite"):
         parts.collect()

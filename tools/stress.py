@@ -744,7 +744,7 @@ def main() -> None:
     clean_ids.unpersist()
 
     # 25) real compressed-codec decode (N6): encode+decode inside ONE
-    # Arrow-batched mapInPandas — embarrassingly parallel, payload
+    # Arrow-batched arrow_kernel — embarrassingly parallel, payload
     # bytes never shuffled. Row counts sized per codec cost (JPEG's
     # python huffman bit-loop is the slow one by design — it is the
     # correctness reference, not a SIMD library).
