@@ -17,38 +17,40 @@ Semantics (Delta/Iceberg ``MERGE INTO`` subset):
 - matched + ``delete_flag`` true  → drop the row;
 - not-matched-by-source (key only in base)    → keep unchanged.
 
-Scale design — the two physical strategies:
+One merge core serves every physical commit: :func:`_change_set`
+(duplicate-key policy, update columns, live/delete split) and
+:func:`_merge_images` (updated images + NULL-filled inserts under the
+base's declared types).  :func:`merge_upsert` returns
+``untouched ∪ images`` as a new relation (``merge_versioned`` commits it
+copy-on-write); ``sources.versioned.merge_on_read`` tombstones the
+touched rows and appends the same images.
 
-``strategy="broadcast"`` (default; CDC batch ≪ base, the 100 TB case):
-the base relation is NEVER shuffled.  Three broadcast joins do all the
-work — base ⟕̸ keys (anti: untouched rows), base ⨝ changes (matched
-rows, updated column-wise), changes ⟕̸ matched-keys (inserts) — and the
-result is their union.  Base is scanned twice (anti + inner), which at
-scale is far cheaper than one full-outer shuffle of 100 TB; with the
-partition-level wrapper below the two scans are partition-pruned to the
-touched partitions only.
-
-``strategy="shuffle"`` (change set comparable to base): one full outer
-join on the keys — both sides exchange once, no broadcast.  This is the
-backfill/bulk-restate path.
-
-``merge_into_partitioned`` is the copy-on-write wrapper: it prunes base
-to the partitions the change set touches (collected from the tiny change
-relation), merges only those, and rewrites them with dynamic partition
-overwrite — untouched partitions are never read or written, so merge
-cost is O(touched data), not O(table).
+Scale design: with a CDC batch ≪ base (the 100 TB case) the base
+relation is NEVER shuffled.  Broadcast joins do all the work — base ⟕̸
+keys (anti: untouched rows), base ⨝ changes (matched rows, updated
+column-wise), changes ⟕̸ matched-keys (inserts) — and the result is
+their union.  Base is scanned twice (anti + inner), which at scale is
+far cheaper than one full-outer shuffle of 100 TB.  The broadcast hint
+is dropped only when the change set is KNOWN to exceed
+``_BROADCAST_MAX_ROWS`` (its size falls out of a job the merge already
+runs); such a batch joins through the shuffle path AQE picks instead of
+being forced into driver memory.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-_BASE = "__merge_base__"
-_CHG = "__merge_chg__"
 _RN = "__merge_rn__"
+
+#: a merge broadcast-hints its change side unless the change set is
+#: known to hold more than this many rows
+_BROADCAST_MAX_ROWS = 1_000_000
 
 
 def _reduce_changes_last_wins(
@@ -68,7 +70,7 @@ def _reduce_changes_last_wins(
     callers needing full determinism there should make ``order_col``
     unique per key (the normal CDC sequence-number contract).
     """
-    from pyspark.sql.types import ArrayType, MapType, StructType
+    from pyspark.sql.types import ArrayType, MapType
 
     def _has_map(dt) -> bool:
         if isinstance(dt, MapType):
@@ -95,50 +97,162 @@ def _reduce_changes_last_wins(
     )
 
 
+def _is_live(delete_flag: str | None):
+    """A change row is live (an update or insert) unless its
+    ``delete_flag`` is true; a NULL flag is live."""
+    return F.lit(True) if delete_flag is None else ~F.coalesce(F.col(delete_flag), F.lit(False))
+
+
 def _check_unique_live_keys(
     changes: DataFrame, keys: Sequence[str], delete_flag: str | None
-) -> None:
-    """Raise if any key carries more than one live (non-delete) change row.
+) -> int:
+    """Raise if any key carries more than one live (non-delete) change
+    row; return the change set's row count.
 
-    With duplicate keys the broadcast strategy's inner join duplicates
-    matched base rows and the shuffle strategy's full-outer join
-    multiplies them — silent snapshot corruption.  Delta's MERGE raises
-    the same way ("multiple source rows matched").  A delete row plus
-    one update row for the same key stays legal (delete wins).  This is
-    an eager check (one Spark action over the change relation — tiny by
-    contract on the broadcast path); pass
+    With duplicate keys the image join duplicates matched base rows —
+    silent snapshot corruption.  Delta's MERGE raises the same way
+    ("multiple source rows matched").  A delete row plus one update row
+    for the same key stays legal (delete wins).  This is an eager check:
+    one Spark action over the change relation, whose per-key counts fold
+    in the shuffle's reduce side (``coalesce(1)``: no second exchange),
+    so the row count comes with it.  Pass
     ``on_duplicate_keys="assume_unique"`` to skip it or
     ``"last_wins"`` with an ``order_col`` to reduce instead.
     """
-    live = changes
-    if delete_flag is not None:
-        live = changes.filter(~F.coalesce(F.col(delete_flag), F.lit(False)))
-    dup = (
-        live.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-        .limit(1)
-        .collect()
+    per_key = changes.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("__rows"),
+        F.count(F.when(_is_live(delete_flag), 1)).alias("__live"),
     )
-    if dup:
-        kv = {k: dup[0][k] for k in keys}
+    row = per_key.coalesce(1).agg(
+        F.sum("__rows").alias("n"),
+        F.max("__live").alias("most"),
+        F.max_by(F.struct(*keys), "__live").alias("key"),
+    ).collect()[0]
+    if (row["most"] or 0) > 1:
+        kv = row["key"].asDict()
         raise ValueError(
             f"merge_upsert: multiple live change rows for key {kv} — a merge "
             f"would duplicate matched base rows. Deduplicate the change set, "
             f"or pass on_duplicate_keys='last_wins' with order_col=<sequence "
             f"column> for CDC last-state reduction."
         )
+    return row["n"] or 0
 
 
-def _resolve_update_cols(
-    base: DataFrame, changes: DataFrame, keys: Sequence[str], update_cols: Sequence[str] | None
-) -> list[str]:
+@dataclass
+class _ChangeSet:
+    """A change relation ready to merge (built by :func:`_change_set`).
+
+    ``changes`` is the relation after the duplicate-key policy; ``live``
+    holds the ``payload`` columns (keys, then ``update_cols``) of its
+    non-delete rows and ``deletes`` the keys of its delete rows (``None``
+    without a delete flag); ``n_rows`` is the row count of ``changes``
+    when a job already learned it, else ``None``.
+    """
+
+    keys: list[str]
+    update_cols: list[str]
+    payload: list[str]
+    changes: DataFrame
+    live: DataFrame
+    deletes: DataFrame | None
+    n_rows: int | None
+
+    @property
+    def touched(self) -> DataFrame:
+        """Every change key, update or delete (not deduplicated)."""
+        return self.changes.select(*self.keys)
+
+    @property
+    def broadcast(self) -> bool:
+        return self.n_rows is None or self.n_rows <= _BROADCAST_MAX_ROWS
+
+    def hint(self, df: DataFrame) -> DataFrame:
+        """``df`` (change-set sized) with the broadcast hint when the gate allows it."""
+        return F.broadcast(df) if self.broadcast else df
+
+    def delete_wins(self, df: DataFrame) -> DataFrame:
+        """``df`` without the rows whose key carries a delete row."""
+        if self.deletes is None:
+            return df
+        return df.join(self.hint(self.deletes), self.keys, "left_anti")
+
+
+def _change_set(
+    base_cols: Sequence[str],
+    changes: DataFrame,
+    keys: Sequence[str],
+    update_cols: Sequence[str] | None,
+    delete_flag: str | None,
+    on_duplicate_keys: str,
+    order_col: str | None,
+) -> _ChangeSet:
+    """The change-set step of every merge: apply ``on_duplicate_keys``,
+    resolve ``update_cols`` against the base's columns ``base_cols``
+    (default: every non-key change column the base has), and split the
+    live rows from the deletes.
+
+    ``on_duplicate_keys``: ``"error"`` runs :func:`_check_unique_live_keys`
+    (and so learns the row count), ``"last_wins"`` reduces with
+    :func:`_reduce_changes_last_wins` (requires ``order_col``),
+    ``"assume_unique"`` trusts the caller.
+    """
+    keys = list(keys)
+    n_rows = None
+    if on_duplicate_keys == "last_wins":
+        if order_col is None:
+            raise ValueError("on_duplicate_keys='last_wins' requires order_col")
+        changes = _reduce_changes_last_wins(changes, keys, order_col)
+    elif on_duplicate_keys == "error":
+        n_rows = _check_unique_live_keys(changes, keys, delete_flag)
+    elif on_duplicate_keys != "assume_unique":
+        raise ValueError(f"unknown on_duplicate_keys {on_duplicate_keys!r}")
     if update_cols is None:
-        update_cols = [c for c in changes.columns if c in set(base.columns) and c not in set(keys)]
+        update_cols = [c for c in changes.columns if c in set(base_cols) and c not in set(keys)]
     missing = [c for c in update_cols if c not in changes.columns]
     if missing:
         raise ValueError(f"update_cols not in changes: {missing}")
-    return list(update_cols)
+    update_cols = list(update_cols)
+    payload = keys + [c for c in update_cols if c not in keys]
+    live = changes.filter(_is_live(delete_flag)).select(*payload)
+    deletes = None if delete_flag is None else changes.filter(F.col(delete_flag)).select(*keys)
+    return _ChangeSet(keys, update_cols, payload, changes, live, deletes, n_rows)
+
+
+def _merge_images(
+    hits: DataFrame, cs: _ChangeSet, schema: StructType, inserts: bool
+) -> DataFrame:
+    """The rows a merge writes, under the base's declared ``schema``.
+
+    For every ``hits`` row (base rows; extra columns are ignored) whose
+    key carries a live change row: its updated image — ``update_cols``
+    from the change, every other column from the hit.  With
+    ``inserts``, also one row per live change whose key no hit holds,
+    base-only columns NULL.  Delete wins: a key that also carries a
+    delete row writes nothing.
+    """
+    b, c = hits.alias("b"), cs.live.alias("c")
+    matched = b.join(
+        cs.hint(c), [F.col(f"b.{k}") == F.col(f"c.{k}") for k in cs.keys], "inner"
+    )
+    images = matched.select(
+        *[
+            (F.col(f"c.{f.name}") if f.name in cs.update_cols else F.col(f"b.{f.name}"))
+            .cast(f.dataType).alias(f.name)
+            for f in schema.fields
+        ]
+    )
+    images = cs.delete_wins(images)
+    if not inserts:
+        return images
+    matched_keys = matched.select(*[F.col(f"b.{k}").alias(k) for k in cs.keys]).distinct()
+    new = cs.delete_wins(cs.live.join(cs.hint(matched_keys), cs.keys, "left_anti")).select(
+        *[
+            (F.col(f.name) if f.name in cs.payload else F.lit(None)).cast(f.dataType).alias(f.name)
+            for f in schema.fields
+        ]
+    )
+    return images.unionByName(new)
 
 
 def merge_upsert(
@@ -147,15 +261,14 @@ def merge_upsert(
     keys: Sequence[str],
     update_cols: Sequence[str] | None = None,
     delete_flag: str | None = None,
-    strategy: str = "broadcast",
     on_duplicate_keys: str = "error",
     order_col: str | None = None,
 ) -> DataFrame:
     """Merge ``changes`` into ``base`` on ``keys``; returns the new snapshot.
 
-    Output schema == base schema (column order preserved).  ``changes``
-    may carry a subset of base's columns plus the key columns and the
-    optional boolean ``delete_flag``.
+    Output schema == base schema (column order and types preserved).
+    ``changes`` may carry a subset of base's columns plus the key
+    columns and the optional boolean ``delete_flag``.
 
     CONTRACT: at most one live (non-delete) change row per key.
     ``on_duplicate_keys`` picks the enforcement:
@@ -169,119 +282,8 @@ def merge_upsert(
       carry several changes for one key).  Requires ``order_col``.
     - ``"assume_unique"``: skip the check (caller guarantees it).
     """
-    keys = list(keys)
-    if on_duplicate_keys == "last_wins":
-        if order_col is None:
-            raise ValueError("on_duplicate_keys='last_wins' requires order_col")
-        changes = _reduce_changes_last_wins(changes, keys, order_col)
-    elif on_duplicate_keys == "error":
-        _check_unique_live_keys(changes, keys, delete_flag)
-    elif on_duplicate_keys != "assume_unique":
-        raise ValueError(f"unknown on_duplicate_keys {on_duplicate_keys!r}")
-    update_cols = _resolve_update_cols(base, changes, keys, update_cols)
-    chg_payload = keys + [c for c in update_cols if c not in keys]
-    live = changes
-    if delete_flag is not None:
-        deletes = changes.filter(F.col(delete_flag)).select(*keys)
-        live = changes.filter(~F.coalesce(F.col(delete_flag), F.lit(False)))
-    live = live.select(*chg_payload)
-
-    if strategy == "broadcast":
-        touched = changes.select(*keys)  # deletes prune matched rows too
-        untouched = base.join(F.broadcast(touched), keys, "left_anti")
-        b = base.alias("b")
-        c = live.withColumn(_CHG, F.lit(1)).alias("c")
-        cond = [F.col(f"b.{k}") == F.col(f"c.{k}") for k in keys]
-        matched = b.join(F.broadcast(c), cond, "inner")
-        updated = matched.select(
-            *[
-                (F.col(f"c.{col}") if col in update_cols else F.col(f"b.{col}")).alias(col)
-                for col in base.columns
-            ]
-        )
-        matched_keys = matched.select(*[F.col(f"b.{k}").alias(k) for k in keys]).distinct()
-        inserts = live.join(F.broadcast(matched_keys), keys, "left_anti")
-        if delete_flag is not None:
-            # delete wins when a key carries both an update and a delete row
-            updated = updated.join(F.broadcast(deletes), keys, "left_anti")
-            inserts = inserts.join(F.broadcast(deletes), keys, "left_anti")
-        inserts = inserts.select(
-            *[
-                (F.col(col) if col in chg_payload else F.lit(None).cast(base.schema[col].dataType)).alias(col)
-                for col in base.columns
-            ]
-        )
-        return untouched.unionByName(updated).unionByName(inserts)
-
-    if strategy != "shuffle":
-        raise ValueError(f"unknown strategy {strategy!r}")
-
-    b = base.withColumn(_BASE, F.lit(1)).alias("b")
-    c = live.withColumn(_CHG, F.lit(1)).alias("c")
-    cond = [F.col(f"b.{k}") == F.col(f"c.{k}") for k in keys]
-    j = b.join(c, cond, "full_outer")
-    base_here = F.col(f"b.{_BASE}").isNotNull()
-    chg_here = F.col(f"c.{_CHG}").isNotNull()
-
-    def out(col: str):
-        key_or_chg = F.coalesce(F.col(f"b.{col}"), F.col(f"c.{col}")) if col in keys else None
-        if col in keys:
-            return key_or_chg.alias(col)
-        chg_val = F.col(f"c.{col}") if col in chg_payload else F.lit(None).cast(base.schema[col].dataType)
-        return (
-            F.when(~base_here, chg_val)  # insert
-            .when(~chg_here, F.col(f"b.{col}"))  # untouched
-            .otherwise(chg_val if col in update_cols else F.col(f"b.{col}"))
-            .alias(col)
-        )
-
-    merged = j.select(*[out(col) for col in base.columns])
-    if delete_flag is not None:
-        merged = merged.join(deletes, keys, "left_anti")
-    return merged
-
-
-def merge_into_partitioned(
-    spark: SparkSession,
-    base_path: str,
-    changes: DataFrame,
-    keys: Sequence[str],
-    partition_col: str,
-    update_cols: Sequence[str] | None = None,
-    delete_flag: str | None = None,
-    on_duplicate_keys: str = "error",
-    order_col: str | None = None,
-) -> list:
-    """Copy-on-write merge into a parquet table partitioned by ``partition_col``.
-
-    Collects the (tiny) set of partition values the change set touches,
-    prunes the base scan to those partitions, merges, and rewrites ONLY
-    those partitions via dynamic partition overwrite.  Returns the
-    touched partition values.  Cost is O(touched partitions), never
-    O(table) — the 100 TB contract.
-
-    CONTRACT: the partition column is part of the record identity — a
-    change row must carry its base row's partition value. A
-    "partition-moving" update (same key, different partition) must be
-    expressed as an explicit delete (old partition) + insert (new
-    partition) pair; a bare update would land the key in the new
-    partition while the pruned merge never sees — and so never
-    retracts — the stale row in the old one. (Detecting that case
-    would require probing the base OUTSIDE the touched partitions,
-    which is exactly the O(table) scan this operator exists to avoid;
-    partitioned MERGE in Hive/Delta carries the same restriction.)
-    """
-    touched = [r[0] for r in changes.select(partition_col).distinct().collect()]
-    base = spark.read.parquet(base_path)
-    pruned = base.filter(F.col(partition_col).isin(touched))
-    merged = merge_upsert(
-        pruned, changes, keys, update_cols, delete_flag,
-        on_duplicate_keys=on_duplicate_keys, order_col=order_col,
+    cs = _change_set(
+        base.columns, changes, keys, update_cols, delete_flag, on_duplicate_keys, order_col
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(base_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return touched
+    untouched = base.join(cs.hint(cs.touched), cs.keys, "left_anti")
+    return untouched.unionByName(_merge_images(base, cs, base.schema, inserts=True))

@@ -1533,11 +1533,9 @@ def q97_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     "operators.merge.merge_upsert, then a full-table audit aggregate "
     "(status, count, exact-decimal price sum, inserted-row count) so "
     "any mis-applied update/insert/delete flips the hash. Plan: the "
-    "broadcast strategy never shuffles the base relation — three "
-    "broadcast joins (anti/inner/anti) + union; at 100 TB the "
-    "partition-level wrapper (merge_into_partitioned) additionally "
-    "prunes the scan to touched partitions and rewrites only those "
-    "(copy-on-write; tests/test_merge.py pins both).",
+    "merge never shuffles the base relation — broadcast joins "
+    "(anti/inner/anti) + union, with only change-set-sized exchanges "
+    "(tests/test_merge.py pins the plan).",
 )
 def q110_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fdf_spark.operators.merge import merge_upsert

@@ -999,7 +999,10 @@ def _tombstoned(hm: dict, *affected: dict) -> dict:
     return dv
 
 
-def _publish_row_level(path: str, parent: int, m: dict, touched, build) -> int:
+def _publish_row_level(
+    path: str, parent: int, m: dict, touched, build,
+    spark: SparkSession | None = None, checked: dict | None = None, staged=(),
+) -> int:
     """The publish loop of every row-level commit (delete_where,
     delete_keys, update_where, merge_on_read): publish ``build(hv, hm)``,
     the manifest of version ``hv + 1`` over head ``hm`` — first over the
@@ -1008,10 +1011,15 @@ def _publish_row_level(path: str, parent: int, m: dict, touched, build) -> int:
     :func:`_masks_rebasable` holds for the ``touched`` files (the staged
     tombstones address immutable files, so they bind to it verbatim) and
     ``build`` runs again over it; anything else re-raises the
-    ``ConcurrentCommitError`` and the caller re-runs."""
+    ``ConcurrentCommitError`` and the caller re-runs.  A commit that
+    stages new rows passes the ``staged`` data files and the CHECK set
+    ``checked`` they were validated against; every rebase re-checks them
+    through :func:`_recheck_staged`."""
     hv, hm = parent, m
     while True:
         manifest = build(hv, hm)
+        if checked is not None and hv != parent:
+            checked = _recheck_staged(spark, path, checked, manifest, staged)
         try:
             _stage_and_publish_manifest(path, hv + 1, manifest)
             return hv + 1
@@ -1343,11 +1351,8 @@ def update_where(spark: SparkSession, path: str, condition, set_exprs: dict) -> 
         mapping = _mapping(m)
         upd = matches.select(*[sets.get(c, F.col(c)).alias(c) for c in names])
         # updated images must satisfy the table's CHECK constraints —
-        # validated BEFORE any tombstone or image byte is staged (the
-        # constraint set is remembered: a rebase re-validates the staged
-        # images iff a constraint landed during the race — ADVICE r11)
-        cons0 = list_check_constraints(path)
-        _enforce_constraints(path, upd, schema)
+        # validated BEFORE any tombstone or image byte is staged
+        checked = _enforce_constraints(path, upd, schema)
         tomb_files, affected, n = _write_tombstones(
             spark, path, version,
             matches.select(F.col("__file").alias("file"), F.col("__pos").alias("pos")),
@@ -1379,21 +1384,15 @@ def update_where(spark: SparkSession, path: str, condition, set_exprs: dict) -> 
     }
 
     def _build(hv: int, hm: dict) -> dict:
-        nonlocal cons0
-        if hv != parent and list_check_constraints(path) != cons0:
-            # a constraint landed during the race: the staged images
-            # were never gated by it — re-validate them (O(matched
-            # rows), reading back the already-staged files) before
-            # they can publish on the new head (ADVICE r11)
-            _enforce_constraints(path, _load_files(spark, hm, staged["files"]), schema)
-            cons0 = list_check_constraints(path)
         # appended images are newer than every eq entry (sequence rule)
         return _successor(
             hm, hv + 1, "update-mor", meta,
             **_appended(hm, staged), delete_files=_tombstoned(hm, affected),
         )
 
-    return _publish_row_level(path, parent, m, affected, _build)
+    return _publish_row_level(
+        path, parent, m, affected, _build, spark=spark, checked=checked, staged=staged["files"]
+    )
 
 
 def _file_row_count(file_path: str) -> int:
@@ -1758,7 +1757,7 @@ _CONSTRAINTS_DIR = "_constraints"
 
 def add_check_constraint(spark: SparkSession, path: str, name: str, expr: str) -> None:
     """Attach a Delta-style CHECK constraint: every FUTURE write
-    (commit/stage, CDC merge on either strategy, UPDATE images)
+    (commit/stage, copy-on-write and merge-on-read CDC merges, UPDATE images)
     validates its new rows against ``expr`` (a SQL boolean over logical
     columns) BEFORE anything publishes — a violating batch raises
     :class:`ConstraintViolationError` with per-constraint violation
@@ -1855,17 +1854,18 @@ def list_check_constraints(path: str) -> dict[str, str]:
     return out
 
 
-def _enforce_constraints(path: str, df: DataFrame, parent_schema=None) -> None:
+def _enforce_constraints(path: str, df: DataFrame, parent_schema=None) -> dict[str, str]:
     """Validate a write's NEW rows (logical names) against every CHECK
     constraint in ONE combined agg job; raise with per-constraint
     violation counts.  Columns a constraint references that the batch
     doesn't carry (schema-evolution append) are evaluated as the NULLs
-    readers will see for those rows."""
+    readers will see for those rows.  Returns the constraint set it
+    checked (:func:`list_check_constraints`)."""
     from pyspark.sql import functions as F
 
     cons = list_check_constraints(path)
     if not cons:
-        return
+        return cons
     probe = df
     if parent_schema is not None:
         for f in parent_schema.fields:
@@ -1889,6 +1889,21 @@ def _enforce_constraints(path: str, df: DataFrame, parent_schema=None) -> None:
             f"CHECK {n} ({cons[n]}): {c} violating row(s)" for n, c in bad.items()
         )
         raise ConstraintViolationError(f"write to {path} rejected — {detail}")
+    return cons
+
+
+def _recheck_staged(
+    spark: SparkSession, path: str, checked: dict, manifest: dict, files
+) -> dict[str, str]:
+    """Gate a lost-race rebase: the rows staged as ``files`` were
+    validated against the CHECK set ``checked``; when the table's set is
+    no longer that (a constraint was attached during the race), the
+    staged files — read under ``manifest``, the one about to publish —
+    are validated again before they can publish.  Returns the set they
+    now satisfy."""
+    if not files or list_check_constraints(path) == checked:
+        return checked
+    return _enforce_constraints(path, _load_files(spark, manifest, list(files)))
 
 
 def commit_version(
@@ -1906,8 +1921,8 @@ def commit_version(
     the manifest (JSON) — e.g. the ingesting stream's batch id, which
     makes replay detection atomic with the commit itself.
 
-    ``on_conflict`` controls what a lost commit race costs
-    (VERDICT r9 #4).  ``"error"`` (default) raises
+    ``on_conflict`` controls what a lost commit race costs.
+    ``"error"`` (default) raises
     :class:`ConcurrentCommitError` — the caller re-runs the whole
     write, which is what a read-modify-write caller (an ingest that
     anti-joined against the head it read) NEEDS for serializability.
@@ -1928,8 +1943,8 @@ def commit_version(
     ``ConcurrentCommitError`` even though the version number itself was
     free.  Without it, a racer landing between your read and this
     call's own head read commits cleanly one version later and the
-    conflict your anti-join logic depends on never fires (r10 review
-    finding).  Mutually exclusive with ``on_conflict="rebase"``.
+    conflict your anti-join logic depends on never fires.  Mutually
+    exclusive with ``on_conflict="rebase"``.
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"unknown mode {mode!r}")
@@ -1953,12 +1968,15 @@ def commit_version(
         parent = versions[-1] if versions else None
     version = (parent + 1) if parent is not None else 1
     head = _read_manifest(path, parent) if parent is not None else None
-    bind, _ = _stage_files_and_builder(df, path, mode, meta, head, version)
+    bind, staged, checked = _stage_files_and_builder(df, path, mode, meta, head, version)
 
+    rebased = False
     while True:
         # compute OUTSIDE the try: an incompatible head raises straight
         # to the caller (a full re-run), never loops
         manifest = bind(head, version)
+        if rebased:
+            checked = _recheck_staged(df.sparkSession, path, checked, manifest, staged["files"])
         try:
             _stage_and_publish_manifest(path, version, manifest)
             return version
@@ -1967,6 +1985,7 @@ def commit_version(
                 raise
             parent, head = _head(path)
             version = parent + 1
+            rebased = True
 
 
 def _stage_files_and_builder(
@@ -1974,8 +1993,9 @@ def _stage_files_and_builder(
     head: dict | None, version: int, stage_prefix: str = "c",
 ):
     """Write ``df``'s bytes as staged parquet under ``path/data`` and
-    return ``(bind, staged)``: ``staged`` holds the files' manifest
-    entries (:func:`_stage_data_files`), and ``bind(head2, version2)``
+    return ``(bind, staged, checked)``: ``staged`` holds the files'
+    manifest entries (:func:`_stage_data_files`), ``checked`` the CHECK
+    set they were validated against, and ``bind(head2, version2)``
     is :func:`_manifest_for` over them — it binds the already-staged
     files to ANY head as parent.  :func:`commit_version` binds through
     it on the first attempt and on every rebase, :func:`stage_commit`
@@ -1989,13 +2009,13 @@ def _stage_files_and_builder(
     # CHECK constraints gate every commit path (commit_version, WAP
     # staging, merge_versioned's rewrite) BEFORE any byte is staged —
     # one combined agg over the new rows, violations raise with nothing
-    # to clean up.  The HEAD's schema rides along even for overwrite
-    # (ADVICE r11): a constraint referencing a column the batch doesn't
+    # to clean up.  The HEAD's schema rides along even for overwrite:
+    # a constraint referencing a column the batch doesn't
     # carry is evaluated over the NULLs readers would see — a
     # ConstraintViolationError, not a raw AnalysisException (an
     # overwrite that drops a constrained column must drop the
     # constraint first)
-    _enforce_constraints(path, df, _logical_schema(head) if head else None)
+    checked = _enforce_constraints(path, df, _logical_schema(head) if head else None)
     # the partition spec is TABLE metadata: it survives overwrite (the
     # data is replaced, the layout contract is not), like Iceberg's
     spec_id, spec = _current_spec(head)
@@ -2037,7 +2057,7 @@ def _stage_files_and_builder(
     def bind(head2: dict | None, version2: int) -> dict:
         return _manifest_for(head2, version2, mode, meta, df.schema, phys, staged)
 
-    return bind, staged
+    return bind, staged, checked
 
 
 def _manifest_for(
@@ -2221,6 +2241,36 @@ def _stage_and_publish_manifest(path: str, version: int, manifest: dict) -> None
     _refresh_follow_views(path)
 
 
+def _effective_stamps(path: str, versions):
+    """Yield ``(version, effective stamp)`` over ``versions`` (ascending)
+    — the running max of manifest ``ts`` in version order (the
+    monotonic-by-version rule of :func:`resolve_as_of`), ``None`` until
+    the first stamped commit.  Reads one manifest per version, lazily:
+    a caller that stops early reads no further."""
+    eff = None
+    for v in versions:
+        ts = _read_manifest(path, v).get("ts")
+        if ts is not None:
+            eff = ts if eff is None else max(eff, ts)
+        yield v, eff
+
+
+def _snapshot_version(
+    path: str, version: int | None, as_of_ts: float | None, ref: str | None
+) -> int | None:
+    """The version a snapshot selector names — ``version`` itself, the
+    :func:`resolve_as_of` of ``as_of_ts`` or the :func:`resolve_ref` of
+    ``ref``; ``None`` (the head) when none is given.  At most one may be
+    given."""
+    if sum(x is not None for x in (version, as_of_ts, ref)) > 1:
+        raise ValueError("pass at most one of version / as_of_ts / ref")
+    if as_of_ts is not None:
+        return resolve_as_of(path, as_of_ts)
+    if ref is not None:
+        return resolve_ref(path, ref)
+    return version
+
+
 def resolve_as_of(path: str, as_of_ts: float) -> int:
     """The version a ``TIMESTAMP AS OF`` read resolves to: the NEWEST
     version whose EFFECTIVE publish stamp is at-or-before ``as_of_ts``.
@@ -2235,21 +2285,16 @@ def resolve_as_of(path: str, as_of_ts: float) -> int:
     stamped successor.  Unstamped versions BEFORE the first stamp have
     no effective time at all and are never selectable — a stamp below
     the first stamped commit raises rather than silently resolving to
-    a version of unknown age (r10 review finding).  O(commits)
-    metadata reads.
+    a version of unknown age.  O(commits) metadata reads.
     """
     versions = list_versions(path)
     if not versions:
         raise FileNotFoundError(f"no versions at {path}")
     best = None
-    eff = None
     oldest = None  # first effective stamp — what "before the table existed" means
-    for v in versions:
-        ts = _read_manifest(path, v).get("ts")
-        if ts is not None:
-            eff = ts if eff is None else max(eff, ts)
-            if oldest is None:
-                oldest = eff
+    for v, eff in _effective_stamps(path, versions):
+        if oldest is None:
+            oldest = eff
         if eff is not None and eff <= as_of_ts:
             best = v
     if oldest is None:
@@ -2272,7 +2317,7 @@ def metadata_aggregate(
     ref: str | None = None,
 ) -> dict:
     """``count(*)`` and per-column ``min``/``max`` answered from the
-    MANIFEST — zero data-file reads (VERDICT r9 #5; the Iceberg/Delta
+    MANIFEST — zero data-file reads (the Iceberg/Delta
     metadata-aggregate path).
 
     Returns ``{"count": int, "min": {col: v}, "max": {col: v},
@@ -2296,7 +2341,7 @@ def metadata_aggregate(
       pruning's superset guarantee, not for an exact answer) or lacks
       footer stats in some non-empty file (nested types, all-NULL
       chunks, NaN-poisoned doubles, TIMESTAMP_NTZ).  Date/timestamp
-      extremes (r14) answer from the exact epoch-day/epoch-micros
+      extremes answer from the exact epoch-day/epoch-micros
       manifest stats, converted back through pyspark's own
       ``fromInternal`` so the value is bit-identical to a scan's
       collect — the "event-time watermark of a 100 TB table" question
@@ -2307,11 +2352,7 @@ def metadata_aggregate(
     """
     from pyspark.sql import functions as F
 
-    if version is not None and ref is not None:
-        raise ValueError("pass version OR ref, not both")
-    if ref is not None:
-        version = resolve_ref(path, ref)
-    v, m = _head(path, version)
+    v, m = _head(path, _snapshot_version(path, version, None, ref))
     files = m["files"]
     cols = list(cols)
     schema = _logical_schema(m)
@@ -2346,7 +2387,7 @@ def metadata_aggregate(
             (rows_map0[f] if f in rows_map0 else _file_row_count(f)) for f in files
         ) - sum(_file_row_count(t) for t in {t for f in files for t in dvm.get(f, [])})
         return {"count": live, "min": {}, "max": {}, "source": "metadata"}
-    # temporal columns answer from metadata too (r14): their manifest
+    # temporal columns answer from metadata too: their manifest
     # stats are exact epoch-day / epoch-micros ints recorded from
     # lossless footer values, converted back below through pyspark's
     # own internal converters so the answer is bit-identical to what a
@@ -2355,7 +2396,7 @@ def metadata_aggregate(
     _TEMPORAL = {"date", "timestamp"}
     # type checks FIRST — before paying any per-file footer reads a
     # fallback would discard; a legacy manifest without a recorded
-    # schema cannot prove a column numeric, so it scans too (r10 review)
+    # schema cannot prove a column numeric, so it scans too
     if cols and schema is None:
         return _scan()
     if any(schema[c].dataType.typeName() not in _NUMERIC | _TEMPORAL for c in cols):
@@ -2383,7 +2424,7 @@ def metadata_aggregate(
             if not all(
                 isinstance(b[0], int) and isinstance(b[1], int) for b in bounds
             ):
-                return _scan()  # pre-r13/r14 stats in a foreign domain
+                return _scan()  # older manifests' stats in a foreign domain
             # pyspark's own fromInternal — the exact value a scan's
             # collect() hands back for the same extreme row
             clo, chi = (
@@ -2429,13 +2470,7 @@ def read_version(
     still applies the row-level filter — pruning is a superset
     guarantee, not an exact selection.
     """
-    if sum(x is not None for x in (version, as_of_ts, ref)) > 1:
-        raise ValueError("pass at most one of version / as_of_ts / ref")
-    if as_of_ts is not None:
-        version = resolve_as_of(path, as_of_ts)
-    if ref is not None:
-        version = resolve_ref(path, ref)
-    v, m = _head(path, version)
+    v, m = _head(path, _snapshot_version(path, version, as_of_ts, ref))
     files = m["files"]
     if prune is not None:
         if len(prune) == 2:
@@ -2443,7 +2478,7 @@ def read_version(
             # a str/bytes "values" is almost certainly ONE intended value,
             # but list() would silently explode it into characters and
             # prune away the files that contain it — a row-loss violation
-            # of the superset guarantee (ADVICE r9). Reject loudly; wrap
+            # of the superset guarantee. Reject loudly; wrap
             # a non-iterable scalar into a one-element list instead.
             if isinstance(values, (str, bytes)):
                 raise TypeError(
@@ -2472,7 +2507,7 @@ def read_version(
         # [min, max] of a hash-routed file spans everything.
         files = _files_passing(m, files, _stat_checks(m, col, values, lo, hi))
         # …then per-file BLOOM sidecars, where built (sources/bloomskip
-        # — the r12 compute-stats action): an equality/IN probe on a
+        # — the compute-stats action): an equality/IN probe on a
         # column the layout does NOT cluster drops every file whose
         # bloom rejects all probed values; files without a sidecar are
         # kept (superset guarantee intact)
@@ -2485,7 +2520,7 @@ def read_version(
             # declared-type coercion + BLOOM_PROBE_CAP both enforced by
             # _bloom_scope/bloom_prune: a 100k-value IN-list degrades to
             # "no bloom pruning" (stats/transform pruning already ran),
-            # never to a driver stall (VERDICT r12 #2)
+            # never to a driver stall
             files = _bloom_scope(m, files, col, probe_vals)
         if not files:
             # empty relation with the snapshot schema
@@ -2508,7 +2543,7 @@ def register_versioned_view(
     follow: str | bool | None = None,
     metadata_tables: bool = False,
 ) -> int:
-    """SQL surface for versioned tables (VERDICT r11 #3): pin a
+    """SQL surface for versioned tables: pin a
     snapshot as a catalog TEMP VIEW so ``spark.sql("SELECT … FROM
     name")`` — and every downstream tool that only speaks SQL — reads
     the versioned substrate.  Returns the pinned version number.
@@ -2524,7 +2559,7 @@ def register_versioned_view(
 
     ``metadata_tables=True`` additionally registers the full
     operability surface as views — ``<name>_files`` / ``_refs`` /
-    ``_partitions`` / ``_eq_deletes`` / ``_blooms`` (r13); follower
+    ``_partitions`` / ``_eq_deletes`` / ``_blooms``; follower
     registrations re-materialize them on every refresh.
 
     ``snapshots=True`` additionally registers ``<name>_snapshots`` —
@@ -2535,7 +2570,7 @@ def register_versioned_view(
     and is likewise a snapshot of the history as of now.
 
     ``follow`` makes the view TRACK a moving pointer instead of
-    pinning (VERDICT r12 #4): ``follow=True`` (or ``"head"``) tracks
+    pinning: ``follow=True`` (or ``"head"``) tracks
     the table head; ``follow="<branch>"`` tracks a movable branch ref.
     Every ENGINE commit in this session (any writer — they all publish
     through ``_stage_and_publish_manifest`` — and every
@@ -2553,14 +2588,9 @@ def register_versioned_view(
     """
     if not _NAME_RE.match(name):
         raise ValueError(f"invalid view name {name!r}")
-    if sum(x is not None for x in (version, ref, as_of_ts)) > 1:
-        raise ValueError("pass at most one of version / as_of_ts / ref")
     if follow is not None and (version is not None or ref is not None or as_of_ts is not None):
         raise ValueError("follow is exclusive with version / as_of_ts / ref")
-    if as_of_ts is not None:
-        version = resolve_as_of(path, as_of_ts)
-    if ref is not None:
-        version = resolve_ref(path, ref)
+    version = _snapshot_version(path, version, as_of_ts, ref)
     if follow is not None:
         if follow in (True, "head"):
             follow = "head"
@@ -2894,15 +2924,9 @@ def table_changes(
     # effective (monotonic) commit stamps — stamps BEFORE the range
     # still feed the running max, one metadata read per commit
     eff_ts: dict[int, float | None] = {}
-    run = None
-    for v in list_versions(path):
-        if v > v_to:
-            break
-        ts = _read_manifest(path, v).get("ts")
-        if ts is not None:
-            run = ts if run is None else max(run, ts)
+    for v, eff in _effective_stamps(path, [x for x in list_versions(path) if x <= v_to]):
         if v >= v_from:
-            eff_ts[v] = run
+            eff_ts[v] = eff
 
     steps = []
     for v in range(v_from, v_to + 1):
@@ -2950,10 +2974,9 @@ def table_changes(
     for s in steps[1:]:
         out = out.unionByName(s, allowMissingColumns=True)
     if keys:
-        # keys present on BOTH sides of one commit are updates. r15:
-        # classified in ONE window pass over the unioned feed (was a
-        # per-commit intersect + 4 joins — O(commits) shuffling plan
-        # sections, guide §2.4); one partitionBy(commit, keys) exchange
+        # keys present on BOTH sides of one commit are updates,
+        # classified in ONE window pass over the unioned feed; one
+        # partitionBy(commit, keys) exchange
         # still runs on O(the range's delta), never O(table), and
         # duplicate keys simply classify every row of that key.  A row
         # with ANY NULL key column never reclassifies — the join-based
@@ -3446,7 +3469,7 @@ def _retained_versions(
 ) -> tuple[list[int], list[int]]:
     """The ``(live, dead)`` version split under vacuum's retention rule
     — count-based ``keep``, named-ref pins, the time window, and the
-    window-boundary snapshot (ADVICE r11).  Extracted so
+    window-boundary snapshot.  Extracted so
     :func:`metatables.plan_maintenance` can ESTIMATE a vacuum with the
     exact rule the destructive op applies (one source of truth)."""
     if keep < 1:
@@ -3458,12 +3481,8 @@ def _retained_versions(
     live_set = set(versions[-keep:]) | (refd & set(versions))
     if retain_last_s is not None:
         cutoff = time.time() - retain_last_s
-        eff = None
         boundary = None  # newest version whose effective stamp predates the window
-        for v in versions:
-            ts = _read_manifest(path, v).get("ts")
-            if ts is not None:
-                eff = ts if eff is None else max(eff, ts)
+        for v, eff in _effective_stamps(path, versions):
             if eff is None or eff >= cutoff:
                 live_set.add(v)
             else:
@@ -3473,7 +3492,7 @@ def _retained_versions(
         # version stamped <= ts, which for the window's oldest span is the
         # last pre-cutoff version — dropping it would break "keep a week
         # of time travel" for timestamps older than the earliest retained
-        # commit (ADVICE r11)
+        # commit
         if boundary is not None:
             live_set.add(boundary)
     dead = [v for v in versions if v not in live_set]
@@ -3782,7 +3801,7 @@ def stage_commit(
     parent = versions[-1] if versions else None
     head = _read_manifest(path, parent) if parent is not None else None
     version = (parent or 0) + 1
-    bind, staged = _stage_files_and_builder(
+    bind, staged, _ = _stage_files_and_builder(
         df, path, mode, meta, head, version, stage_prefix="w"
     )
     m = bind(head, version)
@@ -3904,10 +3923,7 @@ def restore_table(
     """
     if sum(x is not None for x in (version, as_of_ts, ref)) != 1:
         raise ValueError("pass exactly one of version / as_of_ts / ref")
-    if as_of_ts is not None:
-        version = resolve_as_of(path, as_of_ts)
-    if ref is not None:
-        version = resolve_ref(path, ref)
+    version = _snapshot_version(path, version, as_of_ts, ref)
     target = _head(path, version)[1]
     while True:
         head_v = list_versions(path)[-1]
@@ -3918,7 +3934,7 @@ def restore_table(
         out["parent"] = head_v
         out["mode"] = "overwrite"
         out["meta"] = {"restore": {"of": version}}
-        # r14 split: PROPERTIES are operator POLICY, not data state —
+        # PROPERTIES are operator POLICY, not data state —
         # they follow the HEAD across a restore (an appendOnly flag
         # cannot be silently dropped by restoring a pre-flag snapshot);
         # COLUMN STATS describe DATA — the target's ride along (they
@@ -3968,13 +3984,7 @@ def clone_table(
     """
     import shutil
 
-    if sum(x is not None for x in (version, ref, as_of_ts)) > 1:
-        raise ValueError("pass at most one of version / as_of_ts / ref")
-    if as_of_ts is not None:
-        version = resolve_as_of(path, as_of_ts)
-    if ref is not None:
-        version = resolve_ref(path, ref)
-    v, m = _head(path, version)
+    v, m = _head(path, _snapshot_version(path, version, as_of_ts, ref))
     if list_versions(dst):
         raise ValueError(f"clone destination {dst} already has versions")
     out = {k: val for k, val in m.items() if k != "ts"}
@@ -4032,7 +4042,7 @@ def clone_table(
         # any source-side vacuum (Iceberg's ref-retention rule).  The
         # uuid suffix keeps same-basename destinations from colliding;
         # the tag name rides in the clone's meta so operators can find
-        # and drop it when disowning the clone (code-review r12).
+        # and drop it when disowning the clone.
         tag = f"clone-{os.path.basename(os.path.abspath(dst))}-v{v}-{uuid.uuid4().hex[:6]}"
         create_tag(path, tag, v)
     out["version"] = 1
@@ -4402,11 +4412,6 @@ def merge_versioned(
     return v
 
 
-#: merge_on_read broadcast-hints a change set of at most this many rows;
-#: a larger one joins through the shuffle path
-_MOR_BROADCAST_MAX_ROWS = 1_000_000
-
-
 def merge_on_read(
     spark: SparkSession,
     path: str,
@@ -4417,10 +4422,11 @@ def merge_on_read(
     on_duplicate_keys: str = "error",
     order_col: str | None = None,
 ) -> int:
-    """CDC merge as a MERGE-ON-READ commit (VERDICT r9 #1): identical
-    result to :func:`merge_versioned` (same ``merge_upsert`` semantics,
-    same change-feed deltas — both pinned by tests), but the write is
-    O(changed rows), not O(touched file bytes):
+    """CDC merge as a MERGE-ON-READ commit: identical result to
+    :func:`merge_versioned` (the same merge core in
+    ``operators.merge``, the same change-feed deltas — both pinned by
+    tests), but the write is O(changed rows), not O(touched file
+    bytes):
 
     - matched keys (updates AND deletes) tombstone their old row's
       (file, position) — data files untouched;
@@ -4436,37 +4442,34 @@ def merge_on_read(
     keep using ``merge_versioned``.  Change-set contract and
     ``on_duplicate_keys`` exactly as :func:`merge_upsert`.
 
-    Scale guards (VERDICT r10 #3/#7): the base's match scan is PRUNED
-    by intersecting the change set's per-key [min, max] (one tiny agg
-    over the cached changes) with the manifest's per-file stats — on a
-    spec-clustered table a narrow CDC batch touches only the files
-    that can hold its keys.  The change-side broadcast hint is gated
-    on ``_MOR_BROADCAST_MAX_ROWS``: a change set above it joins via
-    the shuffle path (AQE picks the strategy) instead of
-    force-broadcasting an arbitrarily large batch into driver memory.
+    Scale guards: the base's match scan is PRUNED by intersecting the
+    change set's per-key [min, max] (one tiny agg over the cached
+    changes) with the manifest's per-file stats — on a spec-clustered
+    table a narrow CDC batch touches only the files that can hold its
+    keys.  The same agg counts the change set for the merge core's
+    broadcast gate (``operators.merge._BROADCAST_MAX_ROWS``): a change
+    set above it joins via the shuffle path (AQE picks the strategy)
+    instead of force-broadcasting an arbitrarily large batch into
+    driver memory.
 
-    LOST-RACE RECOVERY (VERDICT r11 #1): a race lost to a compatible
-    head (touched files kept identical masks, schema/mapping/spec
-    unmoved — :func:`_masks_rebasable`) does NOT re-run the merge.  The
-    staged tombstones and image files bind to the head as-is; the
-    rebase re-probes ONLY the files the head added (pruned by the same
-    key bounds / bucket memberships — a blind append with disjoint
-    keys probes zero files and lands manifest-only), tombstones racer
-    rows whose keys the change set touches, and restages a corrected
-    image over the racer's row for keys that carry a live change row —
-    so the one-live-row-per-key contract holds under merge-serializes-
-    after-the-append semantics.  Incompatible heads raise
+    LOST-RACE RECOVERY: a race lost to a compatible head (touched files
+    kept identical masks, schema/mapping/spec unmoved —
+    :func:`_masks_rebasable`) does NOT re-run the merge.  The staged
+    tombstones and image files bind to the head as-is; the rebase
+    re-probes ONLY the files the head added (pruned by the same key
+    bounds / bucket memberships — a blind append with disjoint keys
+    probes zero files and lands manifest-only), tombstones racer rows
+    whose keys the change set touches, and restages a corrected image
+    over the racer's row for keys that carry a live change row — so the
+    one-live-row-per-key contract holds under merge-serializes-after-
+    the-append semantics.  Incompatible heads raise
     ``ConcurrentCommitError`` and the caller re-runs.
     """
     import math
 
     from pyspark.sql import functions as F
 
-    from fdf_spark.operators.merge import (
-        _check_unique_live_keys,
-        _reduce_changes_last_wins,
-        _resolve_update_cols,
-    )
+    from fdf_spark.operators.merge import _change_set, _merge_images
 
     keys = list(keys)
     if not list_versions(path):
@@ -4475,39 +4478,31 @@ def merge_on_read(
         )
     parent, m = _head(path)
     version = parent + 1
+    schema = _logical_schema(m)
+    if schema is None:  # legacy manifest without a recorded schema
+        schema = _load_files(spark, m, m["files"][:1]).schema
     # one cache serves the uniqueness check, the bounds/count agg, and
     # every join below — without it the change plan re-evaluates per use
     src = changes.persist()
     hits = None  # the pinned hit set (created below), unpinned with src
     # one finally owns the cache: every exit — early return, a lost
     # commit race, a failed uniqueness check — unpins the change set
-    # (code-review finding: a retrying CDC loop leaked one cache per
-    # lost race)
     try:
-        changes = src
-        if on_duplicate_keys == "last_wins":
-            if order_col is None:
-                raise ValueError("on_duplicate_keys='last_wins' requires order_col")
-            changes = _reduce_changes_last_wins(changes, keys, order_col)
-        elif on_duplicate_keys == "error":
-            _check_unique_live_keys(changes, keys, delete_flag)
-        elif on_duplicate_keys != "assume_unique":
-            raise ValueError(f"unknown on_duplicate_keys {on_duplicate_keys!r}")
-
+        cs = _change_set(
+            schema.names, src, keys, update_cols, delete_flag, on_duplicate_keys, order_col
+        )
         # ONE tiny job: change count (broadcast gate) + per-key bounds
         # (file pruning); both metadata-sized regardless of batch size
-        row = changes.agg(
+        row = cs.changes.agg(
             F.count(F.lit(1)).alias("__n"),
             *[
                 g for k in keys
                 for g in (F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}"))
             ],
         ).collect()[0]
-        n_changes = row["__n"]
-        if n_changes == 0:
+        cs.n_rows = row["__n"]
+        if cs.n_rows == 0:
             return parent
-        broadcast = n_changes <= _MOR_BROADCAST_MAX_ROWS
-        _bc = F.broadcast if broadcast else (lambda df: df)
         bounds = {}
         for k in keys:
             lo, hi = row[f"__lo_{k}"], row[f"__hi_{k}"]
@@ -4526,51 +4521,33 @@ def merge_on_read(
         # agg over the cached batch — ≤N values) so a narrow CDC batch
         # touches only the buckets its keys route to, even though the raw
         # key [min, max] of a hash-routed file spans everything
-        memberships = _batch_bucket_memberships(m, changes, keys)
+        memberships = _batch_bucket_memberships(m, cs.changes, keys)
         scan_files = _prune_files_by_bounds(m, m["files"], bounds, memberships)
         # a SMALL change batch additionally scopes the match scan
         # through per-file BLOOM sidecars where built (bloomskip) —
         # the narrow-CDC-batch-on-unclustered-layout case range stats
         # cannot prune; NULL keys / unsupported types skip the column.
-        # _bloom_scope hashes under the DECLARED key type (ADVICE r12:
-        # a string-typed change key against an int column previously
-        # hashed cross-type and could falsely reject matching files)
-        if scan_files and n_changes <= _BLOOM_PROBE_CAP:
+        # _bloom_scope hashes under the DECLARED key type (a
+        # string-typed change key against an int column must not hash
+        # cross-type and falsely reject matching files)
+        if scan_files and cs.n_rows <= _BLOOM_PROBE_CAP:
             for kc in keys:
-                vals = [r[0] for r in changes.select(kc).distinct().collect()]
+                vals = [r[0] for r in cs.changes.select(kc).distinct().collect()]
                 if vals and all(v is not None for v in vals):
                     scan_files = _bloom_scope(m, scan_files, kc, vals)
-        # an all-pruned scan still needs the base SCHEMA for the insert
-        # images — read (at most) one file's plan, it matches zero keys
+        # an all-pruned scan still needs a base relation for the hit
+        # set — read (at most) one file's plan, it matches zero keys
         base = _effective_with_pos(spark, m, scan_files or m["files"][:1])
-        base_cols = [c for c in base.columns if c not in ("__file", "__pos")]
-        schema = _logical_schema(m)
-        if schema is None:  # legacy manifest without a recorded schema
-            schema = base.drop("__file", "__pos").schema
-        update_cols = _resolve_update_cols(
-            base.drop("__file", "__pos"), changes, keys, update_cols
-        )
-        chg_payload = keys + [c for c in update_cols if c not in keys]
-        live = changes
-        deletes = None
-        if delete_flag is not None:
-            deletes = changes.filter(F.col(delete_flag)).select(*keys)
-            live = changes.filter(~F.coalesce(F.col(delete_flag), F.lit(False)))
-        live = live.select(*chg_payload)
 
         # positions to tombstone: every live base row whose key the change
         # set touches (an update's old image and a delete both die here);
-        # the base is NEVER shuffled — a small change side broadcasts, a
-        # large one goes through the gated shuffle path (_bc above).
-        # The HIT SET (touched keys' live base rows, O(changed rows) by
-        # the merge contract) is pinned so the masked base scan runs
-        # ONCE and serves tombstones, update images and matched-keys
-        # alike — before r13 the tombstone write and the image write
-        # each re-ran the full DV/eq-masked scan (3× the base cost on
-        # an unprunable layout: 39 s → 14 s on the 20 M stress table)
-        touched = changes.select(*keys).distinct()
-        hits = base.join(_bc(touched), keys, "inner")
-        if broadcast:
+        # the base is NEVER shuffled unless the change set is too large to
+        # broadcast.  The HIT SET (touched keys' live base rows, O(changed
+        # rows) by the merge contract) is pinned so the masked base scan
+        # runs ONCE and serves tombstones, update images and matched keys
+        # alike
+        hits = base.join(cs.hint(cs.touched), keys, "left_semi")
+        if cs.broadcast:
             # pin only batch-sized hit sets: a table-scale restatement
             # (which the docstring routes to merge_versioned anyway)
             # would cache O(table) — there the re-scans amortize into
@@ -4579,52 +4556,18 @@ def merge_on_read(
         tomb_src = hits.select(
             F.col("__file").alias("file"), F.col("__pos").alias("pos")
         )
-        # rows to append: updated images of matched keys + pure inserts
-        b = hits.alias("b")
-        c = live.alias("c")
-        cond = [F.col(f"b.{k}") == F.col(f"c.{k}") for k in keys]
-        matched = b.join(_bc(c), cond, "inner")
-        updated = matched.select(
-            *[
-                (F.col(f"c.{col}") if col in update_cols else F.col(f"b.{col}")).alias(col)
-                for col in base_cols
-            ]
-        )
-        matched_keys = matched.select(*[F.col(f"b.{k}").alias(k) for k in keys]).distinct()
-        inserts = live.join(_bc(matched_keys), keys, "left_anti")
-        if deletes is not None:
-            # delete wins when a key carries both an update and a delete row
-            updated = updated.join(_bc(deletes), keys, "left_anti")
-            inserts = inserts.join(_bc(deletes), keys, "left_anti")
-        inserts = inserts.select(
-            *[
-                (
-                    F.col(col) if col in chg_payload
-                    else F.lit(None).cast(schema[col].dataType)
-                ).alias(col)
-                for col in base_cols
-            ]
-        )
-        appended = updated.unionByName(inserts)
-        # change payloads land under the table's DECLARED types (a
-        # decimal-literal CDC value into a double column must not write
-        # decimal bytes a declared-schema reader chokes on) — the same
-        # never-drift rule update_where applies to SET results
-        appended = appended.select(
-            *[F.col(c).cast(schema[c].dataType).alias(c) for c in base_cols]
-        )
-
-        # appended rows (updated images + inserts) must satisfy the
-        # table's CHECK constraints — validated before anything stages
-        # (the constraint set is remembered: a rebase re-validates the
-        # staged images iff a constraint landed during the race)
-        cons0 = list_check_constraints(path)
-        _enforce_constraints(path, appended, schema)
+        # rows to append (updated images + inserts), under the table's
+        # DECLARED types: a decimal-literal CDC value into a double
+        # column must not write decimal bytes a declared-schema reader
+        # chokes on.  They must satisfy the table's CHECK constraints —
+        # validated before anything stages
+        appended = _merge_images(hits, cs, schema, inserts=True)
+        checked = _enforce_constraints(path, appended, schema)
         # stage both sides, publish ONE manifest (atomic: a crash leaves
         # only invisible orphans, exactly like any other commit)
         tomb_files, affected, n_del = _write_tombstones(spark, path, version, tomb_src)
         mapping = _mapping(m)
-        out = appended.select(*[F.col(c).alias(mapping.get(c, c)) for c in base_cols])
+        out = appended.select(*[F.col(c).alias(mapping.get(c, c)) for c in schema.names])
         # images are stamped with the PARENT's spec they were clustered
         # under, even when a racing head moved it (as in update_where)
         written_spec, spec = _current_spec(m)
@@ -4634,27 +4577,16 @@ def merge_on_read(
         new_files = staged["files"]
         if not new_files and n_del == 0:
             return parent  # nothing matched, nothing inserted — no new version
-        # keys eligible for a corrected image on rebase: live change keys
-        # minus delete keys (delete wins, same rule as the main path)
-        live_keys = live.select(*keys).distinct()
-        if deletes is not None:
-            live_keys = live_keys.join(_bc(deletes), keys, "left_anti")
 
         def _build(hv: int, hm: dict) -> dict:
-            # LOST-RACE RECOVERY (VERDICT r11 #1): on a compatible head
-            # (every parent file we touched kept identical masks, no
-            # schema/mapping move), the staged tombstones and image
-            # files bind to the head as-is; the only thing the race can
-            # have invalidated is rows the head APPENDED with keys in
-            # the change set.  So the rebase re-probes ONLY head-added
-            # files (pruned by the same bounds/bucket memberships as
-            # the first pass — a blind append with disjoint keys probes
-            # ZERO files and the rebase is manifest-only), tombstones
-            # any racer row with a touched key, and — for keys carrying
-            # a live change row — replaces OUR stale staged image
+            # On a compatible head the staged tombstones and image files
+            # bind as-is; the only thing the race can have invalidated
+            # is rows the head APPENDED with keys in the change set.  So
+            # the rebase re-probes ONLY head-added files, tombstones any
+            # racer row with a touched key, and — for keys carrying a
+            # live change row — replaces OUR stale staged image
             # (tombstoned in place) with a corrected image built over
-            # the racer's row, preserving the one-live-row contract
-            # under merge-serializes-AFTER-the-append semantics.
+            # the racer's row.
             extra_aff: dict = {}
             n_extra = 0
             corr: dict = {"files": [], "stats": {}, "file_rows": {}, "file_specs": {}}
@@ -4667,16 +4599,11 @@ def merge_on_read(
                     if f not in set(m["files"]) and f not in staged_set
                     and hfr.get(f, 1) != 0  # zero-row files can't hold a racer row
                 ]
-                memberships_h = _batch_bucket_memberships(hm, changes, keys)
+                memberships_h = _batch_bucket_memberships(hm, cs.changes, keys)
                 probed = _prune_files_by_bounds(hm, head_new, bounds, memberships_h)
-                if list_check_constraints(path) != cons0:
-                    # a constraint landed during the race: the staged
-                    # images were never gated by it — re-validate them
-                    # (O(changed rows)) before they can publish
-                    _enforce_constraints(path, _load_files(spark, hm, new_files), schema)
                 if probed:
                     racer = _effective_with_pos(spark, hm, probed)
-                    racer_touched = racer.join(_bc(touched), keys, "left_semi").persist()
+                    racer_touched = racer.join(cs.hint(cs.touched), keys, "left_semi").persist()
                     try:
                         tomb2 = racer_touched.select(
                             F.col("__file").alias("file"), F.col("__pos").alias("pos")
@@ -4685,33 +4612,20 @@ def merge_on_read(
                         # our staged image (parent-based or NULL-filled
                         # insert) is stale — tombstone it and restage a
                         # corrected image over the racer's values
-                        conflict = racer_touched.join(_bc(live_keys), keys, "left_semi")
-                        rb = conflict.alias("b")
-                        c2 = live.alias("c")
-                        jcond = [F.col(f"b.{k}") == F.col(f"c.{k}") for k in keys]
-                        corrected = rb.join(_bc(c2), jcond, "inner").select(
-                            *[
-                                (
-                                    F.col(f"c.{col}") if col in update_cols
-                                    else F.col(f"b.{col}")
-                                ).cast(schema[col].dataType).alias(col)
-                                for col in base_cols
-                            ]
-                        )
-                        conflict_keys = conflict.select(*keys).distinct()
+                        corrected = _merge_images(racer_touched, cs, schema, inserts=False)
                         staged_rows = _to_logical(
                             _load_physical_with_pos(spark, m, new_files), m,
                             extra=("__file", "__pos"),
                         )
-                        stale = staged_rows.join(_bc(conflict_keys), keys, "left_semi").select(
-                            F.col("__file").alias("file"), F.col("__pos").alias("pos")
-                        )
+                        stale = staged_rows.join(
+                            cs.hint(corrected.select(*keys).distinct()), keys, "left_semi"
+                        ).select(F.col("__file").alias("file"), F.col("__pos").alias("pos"))
                         _enforce_constraints(path, corrected, schema)
                         _, extra_aff, n_extra = _write_tombstones(
                             spark, path, hv + 1, tomb2.unionByName(stale)
                         )
                         out2 = corrected.select(
-                            *[F.col(c).alias(mapping.get(c, c)) for c in base_cols]
+                            *[F.col(c).alias(mapping.get(c, c)) for c in schema.names]
                         )
                         corr = _stage_data_files(
                             _cluster_by_spec(out2, spec, mapping, schema=schema),
@@ -4732,7 +4646,7 @@ def merge_on_read(
                     "appended_files": len(new_files) + len(corr["files"]),
                     "files_scanned": len(scan_files),
                     "files_pruned": len(m["files"]) - len(scan_files),
-                    "broadcast": broadcast,
+                    "broadcast": cs.broadcast,
                     **rebase,
                 }
             }
@@ -4743,7 +4657,9 @@ def merge_on_read(
                 delete_files=_tombstoned(hm, affected, extra_aff),
             )
 
-        return _publish_row_level(path, parent, m, affected, _build)
+        return _publish_row_level(
+            path, parent, m, affected, _build, spark=spark, checked=checked, staged=new_files
+        )
     finally:
         src.unpersist()
         if hits is not None:

@@ -172,13 +172,26 @@ def test_overwrite_missing_constrained_column_is_violation(spark, table):
         commit_version(batch, table, mode="overwrite")
 
 
+_RACED_WRITES = {
+    "update_where": lambda spark, p: update_where(spark, p, "k <= 3", {"v": F.lit(500.0)}),
+    "merge_on_read": lambda spark, p: merge_on_read(
+        spark, p, spark.createDataFrame([(1, 500.0), (7001, 500.0)], "k long, v double"), ["k"]
+    ),
+    "commit_version": lambda spark, p: commit_version(
+        spark.createDataFrame([(7001, 500.0)], "k long, v double"), p,
+        mode="append", on_conflict="rebase",
+    ),
+}
+
+
+@pytest.mark.parametrize("write", sorted(_RACED_WRITES))
 def test_update_rebase_rechecks_constraint_added_during_race(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, write
 ):
-    """A constraint landing DURING an update_where's race window gates
-    the already-staged images on the rebase path (ADVICE r11): the
-    rebase re-reads the staged files and raises instead of publishing
-    ungated images."""
+    """A constraint landing DURING a write's race window gates the
+    already-staged rows on the rebase path: the rebase re-reads the
+    staged files and raises instead of publishing ungated rows — for
+    UPDATE images, merge-on-read images and a rebasing append alike."""
     import fdf_spark.sources.versioned as V
 
     p = str(tmp_path / "t")
@@ -189,9 +202,9 @@ def test_update_rebase_rechecks_constraint_added_during_race(
     state = {"raced": False}
 
     def racing_publish(staged, dst):
-        # fire on the UPDATE's manifest publish: land a blind append
+        # fire on the write's manifest publish: land a blind append
         # (compatible head → rebase path) AND attach a constraint the
-        # staged images violate
+        # staged rows violate
         if not state["raced"] and "_versions" in dst and "v00000002" in dst:
             state["raced"] = True
             commit_version(
@@ -203,9 +216,10 @@ def test_update_rebase_rechecks_constraint_added_during_race(
 
     monkeypatch.setattr(V, "_publish_manifest_atomic", racing_publish)
     with pytest.raises(ConstraintViolationError, match="v_small"):
-        update_where(spark, p, "k <= 3", {"v": F.lit(500.0)})
+        _RACED_WRITES[write](spark, p)
     monkeypatch.undo()
-    # nothing of the update landed; the racer's append did
+    assert state["raced"]
+    # nothing of the write landed; the racer's append did
     got = read_version(spark, p)
     assert got.filter("v >= 100").count() == 0
     assert got.filter("k = 9001").count() == 1

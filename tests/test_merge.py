@@ -1,21 +1,19 @@
 """CDC merge / upsert (operators/merge.py, SURVEY §2.11 N15).
 
 Pins: (1) exact MERGE semantics on a hand-built frame (update, insert,
-delete, not-matched-by-source), (2) broadcast and shuffle strategies
-agree bit-for-bit, (3) the copy-on-write partition wrapper rewrites
-ONLY touched partitions, (4) the broadcast plan never shuffles or
-sort-merges the base relation.
+delete, not-matched-by-source), (2) ``merge_upsert`` and the
+merge-on-read commit agree row for row, (3) the broadcast plan never
+shuffles or sort-merges the base relation.
 """
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from fdf_spark.operators.merge import merge_into_partitioned, merge_upsert
+from fdf_spark.operators.merge import merge_upsert
 from tests.conftest import SMOKE_DIR
 
 
@@ -35,26 +33,29 @@ def _tiny(spark):
 
 def test_merge_semantics_exact(spark):
     base, changes = _tiny(spark)
-    for strategy in ("broadcast", "shuffle"):
-        out = merge_upsert(
-            base, changes, ["k"], update_cols=["v"], delete_flag="deleted", strategy=strategy
-        )
-        rows = {r.k: (r.v, r.w) for r in out.collect()}
-        assert rows == {1: ("a", 10), 2: ("B", 20), 9: ("Z", None)}, strategy
-        assert out.columns == base.columns  # schema preserved, column order too
+    out = merge_upsert(base, changes, ["k"], update_cols=["v"], delete_flag="deleted")
+    rows = {r.k: (r.v, r.w) for r in out.collect()}
+    assert rows == {1: ("a", 10), 2: ("B", 20), 9: ("Z", None)}
+    assert out.columns == base.columns  # schema preserved, column order too
 
 
 def test_merge_null_update_value_is_applied(spark):
     # an update that SETS a column to NULL must not fall back to base
     base = spark.createDataFrame([Row(k=1, v="a")])
     changes = spark.createDataFrame([Row(k=1, v=None)], schema="k bigint, v string")
-    for strategy in ("broadcast", "shuffle"):
-        out = merge_upsert(base, changes, ["k"], update_cols=["v"], strategy=strategy)
-        assert out.collect() == [Row(k=1, v=None)], strategy
+    out = merge_upsert(base, changes, ["k"], update_cols=["v"])
+    assert out.collect() == [Row(k=1, v=None)]
 
 
-def test_strategies_agree_on_orders(spark):
+def test_strategies_agree_on_orders(spark, tmp_path):
+    """The two physical merges — ``merge_upsert``'s relation and
+    ``merge_on_read``'s tombstone-and-append commit on a versioned copy
+    of orders — agree row for row."""
+    from fdf_spark.sources.versioned import commit_version, merge_on_read, read_version
+
     orders = spark.read.parquet(f"{SMOKE_DIR}/orders.parquet")
+    p = str(tmp_path / "orders")
+    commit_version(orders, p)
     k = F.col("o_orderkey")
     changes = (
         orders.filter(k % 7 == 0)
@@ -66,46 +67,12 @@ def test_strategies_agree_on_orders(spark):
                     F.lit(True).alias("deleted"))
         )
     )
-    a = merge_upsert(orders, changes, ["o_orderkey"], ["o_totalprice"], "deleted", "broadcast")
-    b = merge_upsert(orders, changes, ["o_orderkey"], ["o_totalprice"], "deleted", "shuffle")
+    a = merge_upsert(orders, changes, ["o_orderkey"], ["o_totalprice"], "deleted")
+    merge_on_read(spark, p, changes, ["o_orderkey"], ["o_totalprice"], "deleted")
+    b = read_version(spark, p)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     # deletes include keys in BOTH %7 and %11 (e.g. 77): delete wins
     assert a.filter(F.col("o_orderkey") % 11 == 0).count() == 0
-
-
-def test_partitioned_merge_is_copy_on_write(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    base = spark.range(0, 1000).select(
-        F.col("id").alias("k"),
-        (F.col("id") % 5).alias("p"),
-        (F.col("id") * 2).alias("v"),
-    )
-    base.write.partitionBy("p").parquet(path)
-    before = {
-        f: os.path.getmtime(os.path.join(d, f))
-        for d, _, fs in os.walk(path) for f in fs if f.endswith(".parquet")
-        for f in [os.path.join(d, f)]
-    }
-    # changes touch partitions 1 and 3 only
-    changes = spark.createDataFrame(
-        [Row(k=11, p=1, v=-1), Row(k=33, p=3, v=-3), Row(k=2001, p=3, v=-9)]
-    )
-    touched = merge_into_partitioned(spark, path, changes, ["k"], "p", update_cols=["v"])
-    assert sorted(touched) == [1, 3]
-    after_files = [
-        os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs if f.endswith(".parquet")
-    ]
-    untouched_kept = [f for f in after_files if f in before and ("p=1" not in f and "p=3" not in f)]
-    # untouched partitions: same files, unmodified (dynamic overwrite never rewrote them)
-    assert untouched_kept, "untouched partition files should survive"
-    assert all(os.path.getmtime(f) == before[f] for f in untouched_kept)
-    got = spark.read.parquet(path)
-    assert got.count() == 1001  # 1000 base + 1 insert
-    assert {r.k: r.v for r in got.filter(F.col("k").isin(11, 33, 2001)).collect()} == {
-        11: -1, 33: -3, 2001: -9,
-    }
-    # rows in untouched partitions are intact
-    assert got.filter((F.col("p") == 2) & (F.col("v") != F.col("k") * 2)).count() == 0
 
 
 def test_broadcast_strategy_never_shuffles_base(spark):
@@ -148,12 +115,11 @@ def test_validate_null_counts_as_violation(spark):
 def test_duplicate_live_change_keys_raise(spark):
     base = spark.createDataFrame([Row(k=1, v="a")])
     changes = spark.createDataFrame([Row(k=1, v="X"), Row(k=1, v="Y")])
-    for strategy in ("broadcast", "shuffle"):
-        try:
-            merge_upsert(base, changes, ["k"], update_cols=["v"], strategy=strategy)
-            raise AssertionError("expected ValueError on duplicate change keys")
-        except ValueError as e:
-            assert "multiple live change rows" in str(e), strategy
+    try:
+        merge_upsert(base, changes, ["k"], update_cols=["v"])
+        raise AssertionError("expected ValueError on duplicate change keys")
+    except ValueError as e:
+        assert "multiple live change rows" in str(e)
 
 
 def test_delete_plus_update_same_key_stays_legal(spark):
@@ -180,12 +146,11 @@ def test_last_wins_reduces_to_latest_state(spark):
             Row(k=3, v="z1", seq=2, deleted=False),   # delete then re-insert → lives
         ]
     )
-    for strategy in ("broadcast", "shuffle"):
-        out = merge_upsert(
-            base, changes, ["k"], update_cols=["v"], delete_flag="deleted",
-            strategy=strategy, on_duplicate_keys="last_wins", order_col="seq",
-        )
-        assert {r.k: r.v for r in out.collect()} == {1: "x2", 3: "z1"}, strategy
+    out = merge_upsert(
+        base, changes, ["k"], update_cols=["v"], delete_flag="deleted",
+        on_duplicate_keys="last_wins", order_col="seq",
+    )
+    assert {r.k: r.v for r in out.collect()} == {1: "x2", 3: "z1"}
 
 
 def test_last_wins_requires_order_col(spark):

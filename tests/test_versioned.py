@@ -1270,12 +1270,15 @@ def test_delete_where_prunes_match_scan(spark, tmp_path):
 
 
 def test_merge_on_read_prunes_and_gates_broadcast(spark, tmp_path, monkeypatch):
-    """VERDICT r10 #7 + #3: merge_on_read's match scan prunes by the
-    change set's key bounds, and a change set above
-    _MOR_BROADCAST_MAX_ROWS takes the shuffle-join path — identical
-    results either way."""
-    import fdf_spark.sources.versioned as V
+    """merge_on_read's match scan prunes by the change set's key bounds,
+    and a change set above the merge core's _BROADCAST_MAX_ROWS takes
+    the shuffle-join path in both merge_on_read and merge_upsert —
+    identical results either way."""
+    import fdf_spark.operators.merge as M
     from fdf_spark.sources.versioned import _read_manifest, merge_on_read
+
+    def hinted(df):
+        return "strategy=broadcast" in df._jdf.queryExecution().analyzed().toString()
 
     pa, pb = str(tmp_path / "bc"), str(tmp_path / "sh")
     base = _orders_df(spark, 1000).repartitionByRange(4, "k")
@@ -1286,9 +1289,12 @@ def test_merge_on_read_prunes_and_gates_broadcast(spark, tmp_path, monkeypatch):
         "k long, v long, g long, is_del boolean",
     )
     va = merge_on_read(spark, pa, ch, ["k"], delete_flag="is_del")
-    monkeypatch.setattr(V, "_MOR_BROADCAST_MAX_ROWS", 0)  # force the shuffle path
+    ua = M.merge_upsert(base, ch, ["k"], delete_flag="is_del")
+    monkeypatch.setattr(M, "_BROADCAST_MAX_ROWS", 0)  # force the shuffle path
     vb = merge_on_read(spark, pb, ch, ["k"], delete_flag="is_del")
+    ub = M.merge_upsert(base, ch, ["k"], delete_flag="is_del")
     monkeypatch.undo()
+    assert hinted(ua) and not hinted(ub)
     ma, mb = (_read_manifest(pa, va)["meta"]["merge_on_read"],
               _read_manifest(pb, vb)["meta"]["merge_on_read"])
     assert ma["broadcast"] is True and mb["broadcast"] is False
@@ -1298,6 +1304,7 @@ def test_merge_on_read_prunes_and_gates_broadcast(spark, tmp_path, monkeypatch):
     got_b = sorted(map(tuple, read_version(spark, pb).collect()))
     assert got_a == got_b and len(got_a) == 1000  # -1 delete +1 insert
     assert (995, 5555, 0) in got_a and (2000, 42, 1) in got_a
+    assert sorted(map(tuple, ua.collect())) == sorted(map(tuple, ub.collect())) == got_a
 
 
 def test_metadata_count_exact_under_deletion_vectors(spark, tmp_path):
@@ -1665,7 +1672,7 @@ def test_metadata_aggregate_through_ref(spark, tmp_path):
     got = metadata_aggregate(spark, p, ["k"], ref="snap")
     assert got["count"] == 10 and got["max"]["k"] == 9
     assert got["source"] == "metadata"
-    with pytest.raises(ValueError, match="not both"):
+    with pytest.raises(ValueError, match="at most one"):
         metadata_aggregate(spark, p, version=1, ref="snap")
 
 

@@ -293,7 +293,7 @@ def main() -> None:
     timed("semantic dedup (N14)", n, semantic_dedup(corpus, num_cells=64, threshold=0.95))
 
     # 16c) CDC merge (N15): 100M-row base, 1M-row change batch (0.5%
-    # updates + deletes + inserts) — broadcast strategy: base is scanned
+    # updates + deletes + inserts) — broadcast joins: base is scanned
     # twice but NEVER shuffled; the only exchanges carry change-sized data
     from fdf_spark.operators.merge import merge_upsert
 
