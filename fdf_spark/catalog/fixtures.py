@@ -36,10 +36,10 @@ def _time_grid(rng: np.random.Generator, n: int, uniform: bool, t0: float = 0.0,
     return t0 + np.cumsum(steps)
 
 
-def generate(data_dir: str, shots: tuple[int, ...] = DEFAULT_SHOTS, seed: int = 42, scale: float = 1.0) -> str:
+def generate(data_dir: str, shots: tuple[int, ...] = DEFAULT_SHOTS, seed: int = 42) -> str:
     os.makedirs(data_dir, exist_ok=True)
     rng = np.random.default_rng(seed)
-    n = lambda base: max(8, int(base * scale))
+    n = lambda base: max(8, int(base))
 
     frames: dict[str, pd.DataFrame] = {}
 

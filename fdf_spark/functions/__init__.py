@@ -3,7 +3,4 @@ from fdf_spark.functions.scalar import (  # noqa: F401
     decode_shot_bytes,
     dsum,
     encode_shot_bytes,
-    pad_width,
-    rundate_to_date,
-    zero_pad,
 )

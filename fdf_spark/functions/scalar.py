@@ -273,42 +273,6 @@ def _scaled6_int_exact(v: float) -> int:
     return k
 
 
-# --- unit conversions (reference post-process hooks) -----------------------
-
-def cm_to_m(col: Column) -> Column:
-    """cm → m (modules/mpts/_postprocess.py:11 — ``data/100``)."""
-    return col / F.lit(100.0)
-
-
-def ms_to_s(col: Column) -> Column:
-    """ms → s (ip/plot.py:19, vloop/plot.py:18 — ``t/1000``)."""
-    return col / F.lit(1000.0)
-
-
-# --- dates ------------------------------------------------------------------
-
-def rundate_to_date(col: Column) -> Column:
-    """Decode a ``YYYYMMDD`` int to DATE (factory.py:589-593)."""
-    return F.to_date(col.cast("string"), "yyyyMMdd")
-
-
-def date_to_rundate(col: Column) -> Column:
-    """Inverse encode, DATE → YYYYMMDD int."""
-    return F.date_format(col, "yyyyMMdd").cast("int")
-
-
-# --- strings ----------------------------------------------------------------
-
-def zero_pad(col: Column, width: int) -> Column:
-    """``str(n).zfill(w)`` (factory.py:951-959 channel names)."""
-    return F.lpad(col.cast("string"), width, "0")
-
-
-def pad_width(maxval: Column) -> Column:
-    """``int(ceil(log10(n)))`` pad-width inference (factory.py:949)."""
-    return F.ceil(F.log10(maxval)).cast("int")
-
-
 # --- byte packing (event payload codec, factory.py:295-320) -----------------
 
 def encode_shot_bytes(shot: Column) -> Column:

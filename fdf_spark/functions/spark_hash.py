@@ -22,6 +22,7 @@ public domain (Austin Appleby).
 from __future__ import annotations
 
 _MASK32 = 0xFFFFFFFF
+_SEED = 42  # the seed of Spark's hash()
 
 
 def _rotl(x: int, r: int) -> int:
@@ -55,25 +56,25 @@ def _signed32(x: int) -> int:
     return x - (1 << 32) if x >= (1 << 31) else x
 
 
-def hash_int(value: int, seed: int = 42) -> int:
+def hash_int(value: int) -> int:
     """Spark ``hash()`` of an int/short/byte column value."""
-    return _signed32(_fmix(_mix_h1(seed & _MASK32, _mix_k1(value & _MASK32)), 4))
+    return _signed32(_fmix(_mix_h1(_SEED, _mix_k1(value & _MASK32)), 4))
 
 
-def hash_long(value: int, seed: int = 42) -> int:
+def hash_long(value: int) -> int:
     """Spark ``hash()`` of a long column value (also what int literals
     widened to long hash as — Spark hashes by the column's data type)."""
     v = value & 0xFFFFFFFFFFFFFFFF
-    h1 = _mix_h1(seed & _MASK32, _mix_k1(v & _MASK32))
+    h1 = _mix_h1(_SEED, _mix_k1(v & _MASK32))
     h1 = _mix_h1(h1, _mix_k1((v >> 32) & _MASK32))
     return _signed32(_fmix(h1, 8))
 
 
-def hash_bytes(data: bytes, seed: int = 42) -> int:
+def hash_bytes(data: bytes) -> int:
     """Spark ``hash()`` of a string (UTF-8 bytes) / binary value —
     ``hashUnsafeBytes``: whole little-endian words through the block
     mix, then each trailing byte (SIGNED) through its own block mix."""
-    h1 = seed & _MASK32
+    h1 = _SEED
     n = len(data)
     aligned = n - (n % 4)
     for i in range(0, aligned, 4):
@@ -87,7 +88,7 @@ def hash_bytes(data: bytes, seed: int = 42) -> int:
     return _signed32(_fmix(h1, n))
 
 
-def spark_hash(value, spark_type: str, seed: int = 42) -> int:
+def spark_hash(value, spark_type: str) -> int:
     """Spark ``hash()`` of one value of Spark SQL type ``spark_type``.
 
     Supports the types the ``bucket`` partition transform accepts:
@@ -96,16 +97,16 @@ def spark_hash(value, spark_type: str, seed: int = 42) -> int:
     prune, never guessing.
     """
     if value is None:
-        return seed  # Spark: null contributes the seed unchanged
+        return _SEED  # Spark: null contributes the seed unchanged
     t = spark_type.lower()
     if t in ("int", "integer", "short", "smallint", "byte", "tinyint"):
-        return hash_int(int(value), seed)
+        return hash_int(int(value))
     if t in ("long", "bigint"):
-        return hash_long(int(value), seed)
+        return hash_long(int(value))
     if t in ("string", "varchar"):
-        return hash_bytes(str(value).encode("utf-8"), seed)
+        return hash_bytes(str(value).encode("utf-8"))
     if t == "binary":
-        return hash_bytes(bytes(value), seed)
+        return hash_bytes(bytes(value))
     raise TypeError(f"spark_hash does not support type {spark_type!r}")
 
 

@@ -20,7 +20,6 @@ from fdf_spark.llm.dedup import (  # noqa: F401
     minhash_signatures,
     ngram_jaccard_pairs,
     simhash,
-    word_shingles,
 )
 from fdf_spark.llm.lmscore import score_docs, train_unigram_lm  # noqa: F401
 from fdf_spark.llm.mixing import mix_corpus  # noqa: F401

@@ -28,10 +28,9 @@ def chunk_documents(
     docs: DataFrame,
     chunk_chars: int = 200,
     overlap: int = 50,
-    text: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Fixed-size overlapping character chunks with offsets.
+    """Fixed-size overlapping character chunks of each (doc_id, text)
+    document, with offsets.
 
     Chunk ``i`` of a document covers ``[i*stride, i*stride+chunk_chars)``
     with ``stride = chunk_chars - overlap``; the last chunk may be
@@ -42,15 +41,17 @@ def chunk_documents(
     if overlap >= chunk_chars:
         raise ValueError("overlap must be < chunk_chars")
     stride = chunk_chars - overlap
-    t = F.col(text)
+    t = F.col("text")
     n = F.length(t)
     starts = F.when(n > 0, F.sequence(F.lit(0), n - 1, F.lit(stride))).otherwise(
         F.array()
     )
     return (
-        docs.select(F.col(id_col), t.alias("__text"), F.posexplode(starts).alias("chunk_id", "start"))
+        docs.select(
+            F.col("doc_id"), t.alias("__text"), F.posexplode(starts).alias("chunk_id", "start")
+        )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("chunk_id"),
             F.col("start"),
             F.col("__text").substr(F.col("start") + 1, F.lit(chunk_chars)).alias("chunk"),
@@ -63,10 +64,8 @@ def pack_blocks(
     docs: DataFrame,
     capacity: int = 512,
     n_shards: int = 32,
-    text: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Greedy stream packing: concatenate documents in ``id_col`` order
+    """Greedy stream packing: concatenate documents in ``doc_id`` order
     into one token stream, cut into ``capacity``-token blocks.
 
     A document occupying stream interval ``[offset-tokens, offset)``
@@ -88,14 +87,14 @@ def pack_blocks(
     """
     from fdf_spark.llm.words import corpus_words
 
-    words = corpus_words(text)
+    words = corpus_words("text")
     base = docs.select(
-        F.col(id_col),
-        (F.col(id_col) / F.lit(n_shards)).cast("bigint").alias("shard"),
+        F.col("doc_id"),
+        (F.col("doc_id") / F.lit(n_shards)).cast("bigint").alias("shard"),
         F.size(words).cast("bigint").alias("tokens"),
     )
 
-    local_w = Window.partitionBy("shard").orderBy(id_col)
+    local_w = Window.partitionBy("shard").orderBy("doc_id")
     local = base.withColumn("local_cum", F.sum("tokens").over(local_w))
 
     shard_tot = base.groupBy("shard").agg(F.sum("tokens").alias("shard_tokens"))
@@ -110,7 +109,7 @@ def pack_blocks(
     placed = (
         local.join(F.broadcast(shard_prefix), "shard")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("tokens"),
             (F.col("shard_prefix") + F.col("local_cum")).alias("end_off"),
         )
@@ -120,7 +119,7 @@ def pack_blocks(
 
     cap = F.lit(capacity).cast("bigint")
     spans = placed.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "start_off",
         "end_off",
         F.explode(
@@ -134,7 +133,7 @@ def pack_blocks(
     blk_hi = blk_lo + cap
     per_block = spans.select(
         "block_id",
-        F.col(id_col),
+        F.col("doc_id"),
         (F.least(F.col("end_off"), blk_hi) - F.greatest(F.col("start_off"), blk_lo)).alias("tok_in_block"),
         ((F.col("start_off") < blk_lo) | (F.col("end_off") > blk_hi)).cast("int").alias("spanning"),
     )

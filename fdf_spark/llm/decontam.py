@@ -35,8 +35,6 @@ def decontaminate(
     benchmark: DataFrame,
     n: int = 3,
     threshold: float = 0.2,
-    text: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-document benchmark-overlap profile.
 
@@ -50,21 +48,21 @@ def decontaminate(
     # a 2^-60 collision is mirrored by the oracle's identical hashing,
     # never a mismatch), so the only corpus exchange in the operator is
     # the final per-document aggregation
-    corpus_sh = gram_hash_rows(docs, text=text, id_col=id_col, n=n)
+    corpus_sh = gram_hash_rows(docs, n=n)
     bench_src = (
         benchmark
-        if id_col in benchmark.columns
-        else benchmark.select(F.lit(0).cast("long").alias(id_col), F.col(text))
+        if "doc_id" in benchmark.columns
+        else benchmark.select(F.lit(0).cast("long").alias("doc_id"), F.col("text"))
     )
     bench_sh = (
-        gram_hash_rows(bench_src, text=text, id_col=id_col, n=n)
+        gram_hash_rows(bench_src, n=n)
         .select("sh")
         .distinct()
         .withColumn("__hit", F.lit(1))
     )
     profile = (
         corpus_sh.join(F.broadcast(bench_sh), "sh", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_shingles"),
             F.coalesce(F.sum("__hit"), F.lit(0)).alias("n_hits"),
@@ -74,9 +72,9 @@ def decontaminate(
         )
     )
     # documents too short to have any n-gram still get a row
-    base = docs.select(F.col(id_col)).join(profile, id_col, "left")
+    base = docs.select(F.col("doc_id")).join(profile, "doc_id", "left")
     return base.select(
-        id_col,
+        "doc_id",
         F.coalesce("n_shingles", F.lit(0)).alias("n_shingles"),
         F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
         F.coalesce("contamination", F.lit(0.0)).alias("contamination"),
@@ -90,10 +88,6 @@ def semantic_decontaminate_indexed(
     benchmark: DataFrame,
     threshold: float = 0.9,
     nprobe: int = 2,
-    bench_id: str = "bench_id",
-    bench_vec: str = "bench_vec",
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
 ) -> DataFrame:
     """Semantic decontamination against a PERSISTED IVF index
     (``llm/similarity.write_ivf_index``'s cell-partitioned layout) —
@@ -105,7 +99,7 @@ def semantic_decontaminate_indexed(
     ~``|benchmark| × nprobe / num_cells`` of the corpus — a
     partition-pruned range query, not a scan.
 
-    Returns ``(corpus_id, best_bench, max_cos, contaminated=true)``
+    Returns ``(vec_id, best_bench, max_cos, contaminated=true)``
     for corpus rows whose cosine against some PROBED benchmark item
     reaches ``threshold`` (argmax over the probed pairs, ties to the
     smaller benchmark id).  ANN semantics: a within-threshold pair
@@ -120,19 +114,19 @@ def semantic_decontaminate_indexed(
     from fdf_spark.llm.similarity import _ivf_index_probes, cosine
 
     probes, cells = _ivf_index_probes(
-        spark, index_path, benchmark, bench_id, bench_vec, nprobe
+        spark, index_path, benchmark, "bench_id", "bench_vec", nprobe
     )
     corpus = spark.read.parquet(f"{index_path}/corpus").filter(F.col("cell").isin(cells))
     scored = (
         corpus.join(F.broadcast(probes), "cell")
-        .withColumn("cos", cosine(F.col(corpus_vec), F.col(bench_vec)))
+        .withColumn("cos", cosine(F.col("embedding"), F.col("bench_vec")))
         .filter(F.col("cos") >= threshold)
     )
-    best = scored.groupBy(corpus_id).agg(
-        F.max(F.struct(F.col("cos"), (-F.col(bench_id)).alias("nid"))).alias("b")
+    best = scored.groupBy("vec_id").agg(
+        F.max(F.struct(F.col("cos"), (-F.col("bench_id")).alias("nid"))).alias("b")
     )
     return best.select(
-        corpus_id,
+        "vec_id",
         (-F.col("b.nid")).cast("long").alias("best_bench"),
         F.col("b.cos").alias("max_cos"),
         F.lit(True).alias("contaminated"),
@@ -143,17 +137,13 @@ def semantic_decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,
     threshold: float = 0.9,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    bench_id: str = "bench_id",
-    bench_vec: str = "bench_vec",
 ) -> DataFrame:
     """Embedding-level decontamination — the SEMANTIC twin of the
     n-gram pass: a paraphrased or translated benchmark question shares
     few n-grams with its training-set leak but sits next to it in
     embedding space, so production pipelines run BOTH passes.
 
-    Returns ``(corpus_id, best_bench, max_cos, contaminated)`` — each
+    Returns ``(vec_id, best_bench, max_cos, contaminated)`` — each
     corpus vector's nearest benchmark item by cosine (ties to the
     smaller benchmark id), flagged at ``max_cos >= threshold``.  EVERY
     corpus row gets exactly one verdict, duplicate ids included: a row
@@ -161,7 +151,7 @@ def semantic_decontaminate(
     set, or NULL/NaN cosine against every benchmark vector) comes back
     ``(NULL, NULL, false)`` rather than silently vanishing — a
     decontamination pass that DROPS unmatched rows would discard the
-    whole corpus on an empty benchmark (ADVICE r8).
+    whole corpus on an empty benchmark.
 
     The benchmark is collected EAGERLY while the plan is built (one
     Spark job): it is thousands of items against a 100 TB corpus, so
@@ -182,17 +172,17 @@ def semantic_decontaminate(
     from fdf_spark.functions.kernels import arrow_kernel, vectors
     from fdf_spark.llm.similarity import _centroids, _cosines
 
-    bench = [(r[0], r[1]) for r in benchmark.select(bench_id, bench_vec).collect()]
-    ids, C, cn = _centroids(bench, bench_vec)  # ascending bench ids
+    bench = [(r[0], r[1]) for r in benchmark.select("bench_id", "bench_vec").collect()]
+    ids, C, cn = _centroids(bench, "bench_vec")  # ascending bench ids
 
     def score(batch):
         n = len(batch)
         best, top = np.zeros(n, dtype=np.int64), np.full(n, -np.inf)
-        vec = batch[corpus_vec]
+        vec = batch["embedding"]
         ok = np.flatnonzero(vec.is_valid().to_numpy(zero_copy_only=False))  # NULL → no score
         if len(ids) and len(ok):
             with np.errstate(divide="ignore", invalid="ignore"):
-                cos = _cosines(vectors(vec.take(ok), corpus_vec), C, cn)
+                cos = _cosines(vectors(vec.take(ok), "embedding"), C, cn)
             # non-finite scores never win; argmax takes the FIRST max
             # over ascending bench ids == ties to the smaller id
             masked = np.where(np.isfinite(cos), cos, -np.inf)
@@ -202,9 +192,9 @@ def semantic_decontaminate(
         return {"best_bench": pa.array(best, mask=miss), "max_cos": pa.array(top, mask=miss)}
 
     best = arrow_kernel(
-        corpus.select(corpus_id, corpus_vec),
+        corpus.select("vec_id", "embedding"),
         score,
-        f"{corpus_id}, best_bench long, max_cos double",
+        "vec_id, best_bench long, max_cos double",
     )
     return best.withColumn(
         "contaminated", F.coalesce(F.col("max_cos") >= threshold, F.lit(False))

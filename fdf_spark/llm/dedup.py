@@ -86,22 +86,6 @@ def minhash_coeff(i: int) -> tuple[int, int]:
     return (1103515245 * (i + 1) + 12345) % MINHASH_P, ((i + 1) * 12345) % MINHASH_P
 
 
-def word_shingles(df: DataFrame, text: str = "text", id_col: str = "doc_id", n: int = 3, distinct: bool = True) -> DataFrame:
-    """→ (id_col, shingle): lowercase word n-grams of each document."""
-    from fdf_spark.sources.tables import spread
-
-    df = spread(df)
-    words = F.split(F.lower(F.col(text)), r"\s+")
-    idx = F.sequence(F.lit(1), F.size(words) - (n - 1))
-    # guard: sequence(1, 0) would infer step -1 and yield [1, 0]
-    shingles = F.when(
-        F.size(words) >= n,
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i, n))),
-    ).otherwise(F.array().cast("array<string>"))
-    out = df.select(F.col(id_col), F.explode(shingles).alias("shingle"))
-    return out.distinct() if distinct else out
-
-
 def _py_gram_hashes(text: str | None, n: int):
     """Per-document DISTINCT word-n-gram hashes, first occurrence first
     — the values the SQL oracles compute with ``split(lower(text),
@@ -134,12 +118,10 @@ def _py_gram_hashes(text: str | None, n: int):
 
 def gram_hash_rows(
     df: DataFrame,
-    text: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
     with_size: bool = False,
 ) -> DataFrame:
-    """→ (``id_col``, [``sz``,] ``sh``): one row per DISTINCT word-n-gram
+    """(doc_id, text) → (``doc_id``, [``sz``,] ``sh``): one row per DISTINCT word-n-gram
     hash of each document (``sz`` = the document's full distinct-set
     size, the jaccard denominator term — free at explode time).
 
@@ -153,7 +135,7 @@ def gram_hash_rows(
 
     def gen(batch):
         rows, szs, shs = [], [], []
-        for i, txt in enumerate(batch[text].to_pylist()):
+        for i, txt in enumerate(batch["text"].to_pylist()):
             hs = _py_gram_hashes(txt, n)
             if hs:
                 rows += [i] * len(hs)
@@ -162,25 +144,25 @@ def gram_hash_rows(
         return {"sz": szs, "sh": shs}, rows
 
     sz_part = ", sz int" if with_size else ""
-    return arrow_kernel(spread(df).select(id_col, text), gen, f"{id_col}{sz_part}, sh long")
+    return arrow_kernel(spread(df).select("doc_id", "text"), gen, f"doc_id{sz_part}, sh long")
 
 
-def exact_dedup(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """N1: keep the smallest id per sha2-256 content hash.
 
-    Returns (id_col, content_hash, n_copies). One hash-shuffle; at
+    Returns (doc_id, content_hash, n_copies). One hash-shuffle; at
     scale prefer hashing to raw-text groupBy (64-byte keys, stable
     distribution).
     """
     # shuffle the 32-byte binary digest, not the 64-char hex string —
     # half the key bytes through the exchange; re-hex on the way out
     # (lower(hex(unhex(x))) == x for sha2's lowercase hex)
-    key = F.unhex(F.sha2(F.col(text), 256)).alias("__k")
+    key = F.unhex(F.sha2(F.col("text"), 256)).alias("__k")
     return (
-        df.select(F.col(id_col), key)
+        df.select(F.col("doc_id"), key)
         .groupBy("__k")
-        .agg(F.min(id_col).alias(id_col), F.count("*").alias("n_copies"))
-        .select(id_col, F.lower(F.hex("__k")).alias("content_hash"), "n_copies")
+        .agg(F.min("doc_id").alias("doc_id"), F.count("*").alias("n_copies"))
+        .select("doc_id", F.lower(F.hex("__k")).alias("content_hash"), "n_copies")
     )
 
 
@@ -188,17 +170,14 @@ def incremental_dedup(
     spark,
     new_docs: DataFrame,
     index_path: str,
-    text: str = "text",
-    id_col: str = "doc_id",
     ingest_id: str | None = None,
 ) -> DataFrame:
     """N1, continuous-ingest tier: dedup a NEW batch against the landed
     corpus without ever rescanning it.
 
-    The landed state is a VERSIONED TABLE at ``index_path`` (VERDICT
-    r9 #2 — the same seam as :func:`incremental_near_dup`'s
-    fingerprint index): one (content_hash binary, doc_id, hb) row per
-    unique document ever accepted, with ``hb`` = first hash byte as
+    The landed state is a VERSIONED TABLE at ``index_path`` (the same
+    seam as :func:`incremental_near_dup`'s fingerprint index): one
+    (content_hash binary, doc_id, hb) row per unique document ever accepted, with ``hb`` = first hash byte as
     the table's partition-spec column, so new index files are
     range-clustered by hb and the per-batch probe prunes by
     MEMBERSHIP (``read_version(prune=("hb", values))``) to only the
@@ -219,7 +198,7 @@ def incremental_dedup(
     both land it (the one-live-row-per-key contract).  Without the
     pin, a racer landing before ``commit_version``'s own head read
     would let this commit slide in one version later with no
-    conflict (r10 review finding).  Pass ``ingest_id`` to make
+    conflict.  Pass ``ingest_id`` to make
     at-least-once replays loud (:class:`DuplicateIngestError`) —
     the id check runs inside the same pinned loop, so a replay
     racing its original also loses the commit race and re-raises on
@@ -246,18 +225,18 @@ def incremental_dedup(
             f"ingest {ingest_id!r} already landed in {index_path}; its "
             "survivors were returned by the original run (replayed batch)"
         )
-    key = F.unhex(F.sha2(F.col(text), 256))
+    key = F.unhex(F.sha2(F.col("text"), 256))
     hb_of = lambda k: F.pmod(  # noqa: E731 — shared with the commit below
         F.conv(F.hex(k).substr(1, 2), 16, 10).cast("int"), F.lit(256)
     )
     # persist: the batch aggregate feeds the hbs collect AND the
     # anti-join/checkpoint below — without it the full new_docs
     # hash+groupBy runs twice per ingest (and once more per retry)
-    own_pins: list[int | None] = []  # OUR checkpoint ids only (ADVICE r12)
+    own_pins: list[int | None] = []  # OUR checkpoint ids only
     batch = (
         new_docs.withColumn("__k", key)
         .groupBy("__k")
-        .agg(F.min(id_col).alias(id_col))
+        .agg(F.min("doc_id").alias("doc_id"))
     ).persist()
     meta = {"ingest_id": ingest_id} if ingest_id is not None else None
     try:
@@ -267,7 +246,7 @@ def incremental_dedup(
             if ingest_id is not None and ingest_id in applied_ingest_ids(index_path):
                 # re-checked on every retry: a replay racing its original
                 # loses the expected_parent pin below, lands here, and
-                # raises instead of double-landing (ADVICE r10)
+                # raises instead of double-landing
                 raise DuplicateIngestError(
                     f"ingest {ingest_id!r} already landed in {index_path}; its "
                     "survivors were returned by the original run (replayed batch)"
@@ -298,15 +277,14 @@ def incremental_dedup(
             # Checkpoint ids tracked PER ITERATION: a LOST race's stale
             # checkpoint is released before the re-probe, so success-
             # after-N-retries leaves exactly ONE pinned checkpoint
-            # (code-review r12 — the success path leaked N-1 under
-            # contention); ids are OUR OWN, never a session-global diff
-            # that could unpersist a concurrent ingest's checkpoint
-            # (ADVICE r12)
+            # (tracking them per call leaked N-1 under contention); ids
+            # are OUR OWN, never a session-global diff that could
+            # unpersist a concurrent ingest's checkpoint
             fresh = fresh.localCheckpoint(eager=True)
             own_pins.append(_checkpoint_rdd_id(fresh))
             rows = fresh.select(
                 F.col("__k").alias("content_hash"),
-                F.col(id_col),
+                F.col("doc_id"),
                 hb_of(F.col("__k")).alias("hb"),
             )
             if bootstrap:
@@ -318,8 +296,7 @@ def incremental_dedup(
                 # END: a racer landing during the localCheckpoint job above
                 # (long — it materializes the anti-join) moves the head, so
                 # this publish raises even when the next version number is
-                # still free (r10 review finding; the pin was built for
-                # exactly this caller)
+                # still free (the pin was built for exactly this caller)
                 commit_version(
                     rows, index_path, mode="append", meta=meta,
                     expected_parent=head,
@@ -335,7 +312,7 @@ def incremental_dedup(
     except BaseException:
         # a replayed-ingest raise, a commit I/O failure, a killed job:
         # nothing this call pinned (batch cache, probe checkpoints) may
-        # survive into the caller's long-lived session (VERDICT r11 #5)
+        # survive into the caller's long-lived session
         _unpersist_rdd_ids(spark, own_pins)
         raise
     finally:
@@ -349,8 +326,8 @@ def incremental_dedup(
             except ConcurrentCommitError:
                 continue
     return new_docs.join(
-        fresh.select(F.col(id_col).alias("__keep")),
-        new_docs[id_col] == F.col("__keep"),
+        fresh.select(F.col("doc_id").alias("__keep")),
+        new_docs["doc_id"] == F.col("__keep"),
         "left_semi",
     )
 
@@ -367,13 +344,11 @@ DEFAULT_MAX_SHINGLE_FREQ = 256
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     threshold: float = 0.2,
     max_shingle_freq: int | None = DEFAULT_MAX_SHINGLE_FREQ,
 ) -> DataFrame:
-    """N2 (exact): document pairs with word-n-gram Jaccard ≥ threshold.
+    """N2 (exact): ``(doc_id, text)`` document pairs with word-3-gram
+    Jaccard ≥ threshold.
 
     → (id_a, id_b, jaccard), id_a < id_b. ``max_shingle_freq`` drops
     shingles shared by more than that many documents before the
@@ -390,7 +365,7 @@ def ngram_jaccard_pairs(
     # because the oracle hashes identically, exactly mirrored there).
     # Per-document dedup is map-LOCAL (gram_hash_rows) — no corpus-wide
     # (id, sh) distinct exchange.
-    # r14: the document's shingle-set SIZE rides along each exploded row
+    # the document's shingle-set SIZE rides along each exploded row
     # (``size()`` of the same per-row array — free at explode time), so
     # the jaccard denominator needs NO per-id size aggregation and NO
     # re-join: the old plan's two groupBy exchanges + two broadcast
@@ -402,20 +377,17 @@ def ngram_jaccard_pairs(
     # thins intersection candidates, so a capped shingle now lowers the
     # affected pair's jaccard instead of silently shrinking both set
     # sizes — strictly closer to the exact relation.
-    sh = gram_hash_rows(
-        df, text=text, id_col=id_col, n=n, with_size=True
-    ).withColumnRenamed(id_col, "id")
+    sh = gram_hash_rows(df, with_size=True).withColumnRenamed("doc_id", "id")
     if max_shingle_freq is not None:
         # frequency filter as an unbounded window count, not groupBy+join:
         # one hash-exchange on sh (measured cheapest of the three cap
         # plans at sf0.1: window 1.8 s vs group+join 2.1 s vs broadcast
         # anti-join over a pre-cap persist 2.3 s), and the filter runs
         # before the persist below so the cache holds the capped relation.
-        # r6 settled-machine re-check (same session, min-of-3, sf0.1):
-        # this plan 1.45 s — UNDER its r1 bench time (1.55 s; the 1.7 s
-        # bench readings are in-suite load noise, not creep) — vs
-        # 1.89 s for the collect_list(ids)-per-shingle + pair-explode
-        # alternative that fuses cap+pairing into one groupBy exchange.
+        # A settled-machine re-check (same session, min-of-3, sf0.1):
+        # this plan 1.45 s vs 1.89 s for the collect_list(ids)-per-
+        # shingle + pair-explode alternative that fuses cap+pairing
+        # into one groupBy exchange.
         sh = (
             sh.withColumn("__f", F.count(F.lit(1)).over(W.partitionBy("sh")))
             .filter(F.col("__f") <= max_shingle_freq)
@@ -449,38 +421,27 @@ def ngram_jaccard_pairs(
     )
 
 
-def near_dedup(
-    df: DataFrame,
-    text: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.5,
-    pairs: DataFrame | None = None,
-) -> DataFrame:
-    """Corpus-level near-dup REMOVAL: drop every document that has a
-    near-duplicate partner with a smaller id (deterministic survivor
+def near_dedup(df: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """Corpus-level near-dup REMOVAL over ``(doc_id, text)``: drop every
+    document whose word-3-gram Jaccard (:func:`ngram_jaccard_pairs`)
+    against a smaller id reaches ``threshold`` (deterministic survivor
     rule: the earliest of each duplicate group survives; pair relation
     is id_a < id_b, so removing all id_b keeps exactly the minimal
-    elements).
-
-    ``pairs`` defaults to the exact shingle-Jaccard relation; at 100 TB
-    pass LSH-verified candidates instead — same removal rule, linear
-    candidate generation.
+    elements).  At 100 TB the same removal rule applies to LSH-verified
+    candidates (:func:`lsh_candidate_pairs`) — linear candidate
+    generation.
     """
-    if pairs is None:
-        pairs = ngram_jaccard_pairs(df, text, id_col, n, threshold)
-    removed = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(removed, id_col, "left_anti")
+    pairs = ngram_jaccard_pairs(df, threshold=threshold)
+    removed = pairs.select(F.col("id_b").alias("doc_id")).distinct()
+    return df.join(removed, "doc_id", "left_anti")
 
 
 def minhash_signatures(
     df: DataFrame,
-    text: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 16,
     n: int = 3,
 ) -> DataFrame:
-    """N2 (sketch): long-format MinHash signature → (id_col, seed, minhash).
+    """N2 (sketch): long-format MinHash signature → (doc_id, seed, minhash).
 
     Universal-hash family over one base md5 hash per shingle:
     ``h_i(x) = (a_i*x + b_i) mod 2^31-1`` with ``x = md5_60(shingle) mod p``
@@ -503,7 +464,7 @@ def minhash_signatures(
 
     def gen(batch):
         rows, mins = [], []
-        for i, txt in enumerate(batch[text].to_pylist()):
+        for i, txt in enumerate(batch["text"].to_pylist()):
             hs = _py_gram_hashes(txt, n)
             if not hs:
                 continue
@@ -516,13 +477,12 @@ def minhash_signatures(
         return {"seed": seeds, "minhash": sig}, idx
 
     return arrow_kernel(
-        spread(df).select(id_col, text), gen, f"{id_col}, seed int, minhash long"
+        spread(df).select("doc_id", "text"), gen, "doc_id, seed int, minhash long"
     )
 
 
 def lsh_candidate_pairs(
     signatures: DataFrame,
-    id_col: str = "doc_id",
     num_hashes: int = 16,
     bands: int = 4,
 ) -> DataFrame:
@@ -530,7 +490,7 @@ def lsh_candidate_pairs(
     collide on at least one full band → (id_a, id_b).
 
     The banded join touches only colliding buckets: linear in corpus
-    size + output, never all-pairs — and since r9, linear in DISTINCT
+    size + output, never all-pairs — and linear in DISTINCT
     signatures: exact duplicates (and boilerplate near-identical
     documents, which take identical MinHash signatures with high
     probability) collapse to one row per distinct full signature
@@ -554,7 +514,7 @@ def lsh_candidate_pairs(
     # contiguous seed set 0..num_hashes-1 — a relation missing a middle
     # seed (or carrying extras) would silently band the WRONG minhashes
     # and lose candidates, so the contract is enforced INSIDE the plan
-    # (ADVICE r9; the hamming width-guard discipline): any violating
+    # (the hamming width-guard discipline): any violating
     # document fails the job loudly instead of degrading recall.
     structs = F.array_sort(F.collect_list(F.struct("seed", "minhash")))
     seeds = F.transform(structs, lambda s: s["seed"].cast("int"))
@@ -572,12 +532,12 @@ def lsh_candidate_pairs(
             )
         )
     )
-    full = signatures.groupBy(id_col).agg(checked.alias("__sig"))
+    full = signatures.groupBy("doc_id").agg(checked.alias("__sig"))
     groups = full.groupBy("__sig").agg(
-        F.min(id_col).alias("__rep"), F.count("*").alias("__n")
+        F.min("doc_id").alias("__rep"), F.count("*").alias("__n")
     )
     mem = full.join(groups, "__sig").select(
-        F.col("__rep"), F.col(id_col).alias("__mid")
+        F.col("__rep"), F.col("doc_id").alias("__mid")
     )
     banded = groups.select(
         F.col("__rep"),
@@ -622,11 +582,9 @@ def lsh_candidate_pairs(
 
 def simhash(
     df: DataFrame,
-    text: str = "text",
-    id_col: str = "doc_id",
     bits: int = 48,
 ) -> DataFrame:
-    """N2: SimHash fingerprint → (id_col, simhash).
+    """N2: SimHash fingerprint → (doc_id, simhash).
 
     Classic Charikar scheme over the token multiset: each token votes
     ±1 on every bit of its hash; the fingerprint's bit b is 1 iff the
@@ -636,7 +594,7 @@ def simhash(
     from fdf_spark.sources.tables import spread
 
     tokens = spread(df).select(
-        F.col(id_col), F.explode(F.split(F.lower(F.col(text)), r"\s+")).alias("tok")
+        F.col("doc_id"), F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok")
     )
     hashed = tokens.withColumn("h", portable_hash60(F.col("tok")))
     # one wide agg of `bits` vote sums, NOT a posexplode to (doc, bit)
@@ -646,8 +604,8 @@ def simhash(
     # The per-bit expressions are PARSED (F.expr), not Column-composed:
     # each Column operator is a py4j round trip, and bits×~9 calls of
     # construction cost more driver time than the query's execution
-    # (r14 — same finding as similarity._lit_vec; values identical,
-    # the parsed tree is the same expression).
+    # (same finding as similarity._lit_vec; values identical, the
+    # parsed tree is the same expression).
     votes = [
         F.expr(
             f"sum(CASE WHEN (shiftright(h, {b}) & 1) = 1 THEN 1 ELSE -1 END)"
@@ -657,8 +615,8 @@ def simhash(
     fingerprint = F.expr(
         " + ".join(f"shiftleft(cast((_v{b} >= 0) as bigint), {b})" for b in range(bits))
     )
-    return hashed.groupBy(id_col).agg(*votes).select(
-        F.col(id_col), fingerprint.alias("simhash")
+    return hashed.groupBy("doc_id").agg(*votes).select(
+        F.col("doc_id"), fingerprint.alias("simhash")
     )
 
 

@@ -58,7 +58,7 @@ def _chunk(tag: bytes, data: bytes) -> bytes:
 # encoder's filter and the decoder's unfilter below.
 
 
-def encode_png(arr: np.ndarray, filter_type: int = 0, level: int = 9) -> bytes:
+def encode_png(arr: np.ndarray, filter_type: int = 0) -> bytes:
     """Encode an ``uint8`` array (H×W gray, H×W×3 RGB, or H×W×4 RGBA)
     as a real PNG: bit depth 8, no interlace, every scanline filtered
     with ``filter_type`` (0..4 — None/Sub/Up/Average/Paeth, applied
@@ -106,7 +106,7 @@ def encode_png(arr: np.ndarray, filter_type: int = 0, level: int = 9) -> bytes:
     return (
         _PNG_SIG
         + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(bytes(out), level))
+        + _chunk(b"IDAT", zlib.compress(bytes(out), 9))
         + _chunk(b"IEND", b"")
     )
 

@@ -51,8 +51,6 @@ def _words(df: DataFrame, text: str, id_col: str) -> DataFrame:
 
 def train_unigram_lm(
     docs: DataFrame,
-    text: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Train the smoothed unigram LM.
 
@@ -62,7 +60,7 @@ def train_unigram_lm(
     occurrence-level groupBy (map-side combined) + a 1-row totals agg
     broadcast back.
     """
-    toks = _words(docs, text, id_col)
+    toks = _words(docs, "text", "doc_id")
     counts = toks.groupBy("token").agg(F.count("*").alias("cnt"))
     totals = counts.agg(
         F.sum("cnt").alias("n_total"), F.count("*").alias("v_size")
@@ -81,23 +79,21 @@ def train_unigram_lm(
 def score_docs(
     docs: DataFrame,
     lm: DataFrame,
-    text: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-document mean token log-prob under ``lm``.
 
-    Returns ``(id_col, n_tokens bigint, avg_logp double)``; tokens
+    Returns ``(doc_id, n_tokens bigint, avg_logp double)``; tokens
     absent from the LM take the shared OOV log-prob. ``lm`` is
     broadcast; the only shuffle is the one-row-per-doc aggregate.
     """
-    toks = _words(docs, text, id_col)
+    toks = _words(docs, "text", "doc_id")
     oov = lm.agg(F.min("oov_logp").alias("oov_logp"))
     scored = (
         toks.join(F.broadcast(lm.select("token", "logp")), "token", "left")
         .crossJoin(F.broadcast(oov))
-        .select(id_col, F.coalesce(F.col("logp"), F.col("oov_logp")).alias("logp"))
+        .select("doc_id", F.coalesce(F.col("logp"), F.col("oov_logp")).alias("logp"))
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count("*").alias("n_tokens"),
         F.round(dsum("logp") / F.count("*"), 6).alias("avg_logp"),
     )

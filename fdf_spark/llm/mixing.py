@@ -45,39 +45,37 @@ def mix_corpus(
     docs: DataFrame,
     weights: Mapping[str, float],
     budget_tokens: int,
-    text: str = "text",
-    source: str = "source",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """→ (id_col, source, n_tokens): the deterministic mixture sample.
+    """(doc_id, source, text) → (doc_id, source, n_tokens): the
+    deterministic mixture sample.
 
     Tokens are whitespace words of the lowercased text (the same
     tokenization as the dedup tiers).
     """
-    toks = F.size(F.split(F.lower(F.col(text)), r"\s+")).cast("bigint")
-    d = docs.select(F.col(id_col), F.col(source), toks.alias("n_tokens"))
+    toks = F.size(F.split(F.lower(F.col("text")), r"\s+")).cast("bigint")
+    d = docs.select(F.col("doc_id"), F.col("source"), toks.alias("n_tokens"))
     wmap = F.create_map(
         *[x for k, v in weights.items() for x in (F.lit(k), F.lit(float(v)))]
     )
     stats = (
-        d.filter(F.col(source).isin(list(weights)))
-        .groupBy(source)
+        d.filter(F.col("source").isin(list(weights)))
+        .groupBy("source")
         .agg(F.sum("n_tokens").alias("_T"))
     )
     rates = stats.select(
-        source,
+        "source",
         F.least(
             F.lit(1.0),
-            wmap[F.col(source)] * F.lit(float(budget_tokens)) / F.col("_T"),
+            wmap[F.col("source")] * F.lit(float(budget_tokens)) / F.col("_T"),
         ).alias("_rate"),
     )
     return (
-        d.join(F.broadcast(rates), source)
+        d.join(F.broadcast(rates), "source")
         .filter(
-            portable_hash60(F.col(id_col).cast("string")) % MIX_DENOM
+            portable_hash60(F.col("doc_id").cast("string")) % MIX_DENOM
             < F.floor(F.col("_rate") * MIX_DENOM)
         )
-        .select(id_col, source, "n_tokens")
+        .select("doc_id", "source", "n_tokens")
     )
 
 
@@ -85,15 +83,13 @@ def split_corpus(
     docs: DataFrame,
     fractions: Mapping[str, float],
     by: str | None = None,
-    id_col: str = "doc_id",
-    seed: int = 0,
 ) -> DataFrame:
     """Deterministic train/val/test assignment (N7 tier 3): adds a
-    ``split`` column from a hash of the row id (or of ``by``).
+    ``split`` column from a hash of ``doc_id`` (or of ``by``).
 
     ``fractions`` maps split name → fraction, in insertion order; the
     hash bucket ``u ∈ [0, 1M)`` falls into cumulative ranges, so every
-    row's split is a pure function of (seed, key) — reproducible across
+    row's split is a pure function of its key — reproducible across
     engines, retries and repartitionings, and a doc NEVER migrates
     between splits when the corpus grows (the property ``rand()`` or
     modulo-on-row-number splits lack).
@@ -107,8 +103,8 @@ def split_corpus(
     consumers filter ``split = 'train'`` and the predicate pushes down
     if the corpus is later written partitioned by ``split``.
     """
-    key = F.col(by) if by is not None else F.col(id_col)
-    u = portable_hash60(key.cast("string"), seed) % MIX_DENOM
+    key = F.col(by) if by is not None else F.col("doc_id")
+    u = portable_hash60(key.cast("string"), 0) % MIX_DENOM
     names = list(fractions)
     cum, bounds = 0.0, []
     for name in names[:-1]:
@@ -120,14 +116,14 @@ def split_corpus(
     return docs.withColumn("split", expr)
 
 
-def sql_split_corpus(fractions: Mapping[str, float], seed: int = 0) -> str:
+def sql_split_corpus(fractions: Mapping[str, float]) -> str:
     """DuckDB twin of the :func:`split_corpus` assignment expression
     (over ``documents``, keyed on doc_id)."""
     names = list(fractions)
     cum, cases = 0.0, []
     hash_expr = (
-        f"CAST('0x' || substr(md5(CAST({seed} AS VARCHAR) || ':' || "
-        f"CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % {MIX_DENOM}"
+        "CAST('0x' || substr(md5('0:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) "
+        f"% {MIX_DENOM}"
     )
     for name in names[:-1]:
         cum += float(fractions[name])

@@ -726,10 +726,10 @@ def decode_audit(assets: DataFrame) -> DataFrame:
     )
 
 
-def synth_wav_voice_assets(docs: DataFrame, win: int = 16) -> DataFrame:
+def synth_wav_voice_assets(docs: DataFrame) -> DataFrame:
     """Mono PCM WAV fixtures with a PLANTED silence span (q145).
 
-    Each doc is ``8 + doc_id % 5`` windows of ``win`` samples at a
+    Each doc is ``8 + doc_id % 5`` windows of 16 samples at a
     constant voiced amplitude ``100 + doc_id % 50``, except windows
     ``[2 + doc_id % 3, 2 + doc_id % 3 + 1 + doc_id % 2)`` which are
     all-zero — so the voiced/silent ground truth per window, and the
@@ -740,7 +740,7 @@ def synth_wav_voice_assets(docs: DataFrame, win: int = 16) -> DataFrame:
         nw, amp = 8 + d % 5, 100 + d % 50
         s0 = 2 + d % 3
         s1 = s0 + 1 + d % 2
-        samples = [0 if s0 <= (i // win) < s1 else amp for i in range(nw * win)]
+        samples = [0 if s0 <= (i // 16) < s1 else amp for i in range(nw * 16)]
         return "audio", encode_wav(8000, samples)
 
     return _synth_assets(docs, payload_of)

@@ -39,7 +39,7 @@ def redact_text(text: Column) -> Column:
     return out
 
 
-def detect_pii(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
+def detect_pii(df: DataFrame, text: str = "text") -> DataFrame:
     """Per-document PII profile + scrubbed text.
 
     Returns ``(doc_id, n_email, n_ip, n_phone, n_pii, redacted)``.
@@ -57,5 +57,5 @@ def detect_pii(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> Dat
         total = total + c
         cur = F.regexp_replace(cur, pattern, token)
     return df.select(
-        F.col(id_col), *counts, total.alias("n_pii"), cur.alias("redacted")
+        F.col("doc_id"), *counts, total.alias("n_pii"), cur.alias("redacted")
     )

@@ -71,10 +71,6 @@ def bm25_topk(
     docs: DataFrame,
     terms: Sequence[str],
     k: int = 20,
-    k1: float = DEFAULT_K1,
-    b: float = DEFAULT_B,
-    text: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Top-``k`` documents by BM25 score against ``terms``.
 
@@ -84,7 +80,7 @@ def bm25_topk(
     from fdf_spark.functions.scalar import davg
 
     words = F.filter(
-        F.split(F.lower(F.col(text)), WORD_SPLIT_RE), lambda w: w != F.lit("")
+        F.split(F.lower(F.col("text")), WORD_SPLIT_RE), lambda w: w != F.lit("")
     )
     def tf(term: str):
         # closure factory, NOT a default-arg lambda: a 2-param lambda
@@ -92,7 +88,7 @@ def bm25_topk(
         return F.size(F.filter(F.col("__w"), lambda w: w == F.lit(term)))
 
     tf_names = _term_cols(len(terms))
-    # r15, two fixes measured together 1.35 s → 0.65 s at sf0.1
+    # two fixes, measured together 1.35 s → 0.65 s at sf0.1
     # (output identical):
     # - stage the token array ONCE (__w): the split+filter chain is
     #   CodegenFallback with no CSE, so referencing `words` in dl and
@@ -103,10 +99,10 @@ def bm25_topk(
     #   twice.  base is (id, dl, |terms| ints) — tens of bytes per doc,
     #   the small decision relation (guide §5), never the text.
     base = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         words.alias("__w"),
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("__w").alias("dl"),
         *[tf(t).alias(name) for name, t in zip(tf_names, terms)],
     ).localCheckpoint()
@@ -123,22 +119,16 @@ def bm25_topk(
     scored = base.crossJoin(F.broadcast(stats))
     return (
         scored.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("dl"),
-            F.expr(bm25_score_sql(len(terms), k1, b)).alias("bm25"),
+            F.expr(bm25_score_sql(len(terms), DEFAULT_K1, DEFAULT_B)).alias("bm25"),
         )
-        .orderBy(F.col("bm25").desc(), F.col(id_col))
+        .orderBy(F.col("bm25").desc(), F.col("doc_id"))
         .limit(k)
     )
 
 
-def inverted_index(
-    docs: DataFrame,
-    text: str = "text",
-    id_col: str = "doc_id",
-    num_segments: int = 1,
-    tf_mode: str = "map_side",
-) -> DataFrame:
+def inverted_index(docs: DataFrame, num_segments: int = 1) -> DataFrame:
     """Segment-sharded inverted index: one row per (term, segment) with
     document frequency, collection frequency and a doc_id-sorted postings
     list of (doc_id, tf) structs — the Lucene storage model as a relation.
@@ -150,47 +140,28 @@ def inverted_index(
     query-time reader merges (and the natural partition key for the
     parquet sink).
 
-    Two tf strategies with a CPU-vs-shuffle crossover:
-
-    - ``tf_mode="map_side"`` (default; SHORT docs): per-doc term
-      frequencies as map-side array expressions — ONE exchange carrying
-      a row per (doc, distinct term).  CPU is O(distinct × length) per
-      doc — fine for titles/short docs, quadratic for 1000-word pages.
-    - ``tf_mode="explode"`` (LONG docs): explode tokens and count via
-      groupBy(term, segment, doc) — linear CPU; the partial (map-side)
-      aggregate collapses occurrences before the wire, so the first
-      exchange also carries ~one row per (doc, distinct term), at the
-      price of a second (same-sized) exchange for the postings build.
+    Term frequencies come from exploding the tokens and counting per
+    (term, segment, doc) — linear CPU; the partial (map-side) aggregate
+    collapses occurrences before the wire, so the first exchange
+    carries ~one row per (doc, distinct term), and a second
+    (same-sized) exchange builds the postings.  A map-side tier (per-doc
+    ``array_distinct`` × filter-count expressions, one exchange) measured
+    2.35 s against this plan's 0.68 s on q112 at sf0.1 even on ~54-word
+    docs: the interpreted HOF tree costs more than the extra exchange.
     """
     words = F.filter(
-        F.split(F.lower(F.col(text)), WORD_SPLIT_RE), lambda w: w != F.lit("")
+        F.split(F.lower(F.col("text")), WORD_SPLIT_RE), lambda w: w != F.lit("")
     )
-    seg = (F.col(id_col) % num_segments).alias("segment")
-    if tf_mode == "explode":
-        toks = (
-            docs.select(F.col(id_col), seg, F.explode(words).alias("term"))
-            .groupBy("term", "segment", id_col)
-            .agg(F.count("*").alias("tf"))
-        )
-    elif tf_mode == "map_side":
-        per_term = F.transform(
-            F.array_distinct(words),
-            lambda t: F.struct(
-                t.alias("term"),
-                F.size(F.filter(words, lambda w: w == t)).cast("bigint").alias("tf"),
-            ),
-        )
-        toks = docs.select(
-            F.col(id_col),
-            seg,
-            F.explode(per_term).alias("tt"),
-        ).select(id_col, "segment", "tt.term", "tt.tf")
-    else:
-        raise ValueError(f"unknown tf_mode {tf_mode!r}")
+    seg = (F.col("doc_id") % num_segments).alias("segment")
+    toks = (
+        docs.select(F.col("doc_id"), seg, F.explode(words).alias("term"))
+        .groupBy("term", "segment", "doc_id")
+        .agg(F.count("*").alias("tf"))
+    )
     return toks.groupBy("term", "segment").agg(
         F.count("*").alias("df"),
         F.sum("tf").alias("cf"),
-        F.sort_array(F.collect_list(F.struct(F.col(id_col).alias("doc_id"), "tf"))).alias(
+        F.sort_array(F.collect_list(F.struct("doc_id", "tf"))).alias(
             "postings"
         ),
     )

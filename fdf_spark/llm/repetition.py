@@ -22,7 +22,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 
-def repetition_stats(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Per-document repetition profile → (id_col, n_words,
     dup_word_ratio, top_2gram_frac, dup_2gram_frac), ratios rounded to
     6 dp (oracle-portable int/int divisions).
@@ -51,7 +51,7 @@ def repetition_stats(df: DataFrame, text: str = "text", id_col: str = "doc_id") 
 
     def counters(batch):
         cols = {c: [] for c in ("n_words", "n_distinct_words", "total2", "top2", "distinct2")}
-        for txt in batch[text].to_pylist():
+        for txt in batch["text"].to_pylist():
             w = [] if txt is None else ws.split(txt.lower())
             pairs = Counter(zip(w, w[1:]))
             row = (None, None) if txt is None else (len(w), len(set(w)))
@@ -61,12 +61,12 @@ def repetition_stats(df: DataFrame, text: str = "text", id_col: str = "doc_id") 
         return cols
 
     out = arrow_kernel(
-        spread(df).select(id_col, text),
+        spread(df).select("doc_id", "text"),
         counters,
-        f"{id_col}, n_words int, n_distinct_words int, total2 long, top2 long, distinct2 long",
+        "doc_id, n_words int, n_distinct_words int, total2 long, top2 long, distinct2 long",
     )
     return out.select(
-        id_col,
+        "doc_id",
         "n_words",
         F.round(1.0 - F.col("n_distinct_words") / F.col("n_words"), 6).alias("dup_word_ratio"),
         F.round(F.col("top2") / F.col("total2"), 6).alias("top_2gram_frac"),
@@ -84,13 +84,13 @@ FUNNEL_RULES = (
 )
 
 
-def quality_funnel(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
+def quality_funnel(df: DataFrame) -> DataFrame:
     """Ordered keep/drop funnel over :func:`repetition_stats` →
     (stage, rule, n_dropped, n_remaining), one row per rule plus the
     final ``kept`` row. ``n_remaining`` is the survivor count after the
     stage; attribution is first-failing-rule, so ``sum(n_dropped) +
     kept == total``."""
-    stats = repetition_stats(df, text, id_col)
+    stats = repetition_stats(df)
     first_fail = (
         F.when(F.col("n_words") < 20, F.lit("too_short"))
         .when(F.col("dup_word_ratio") > 0.6, F.lit("dup_words"))

@@ -47,8 +47,6 @@ DEFAULT_BUCKET_DOCS = 4096
 def assign_token_shards(
     docs: DataFrame,
     n_shards: int,
-    text: str = "text",
-    id_col: str = "doc_id",
     bucket_docs: int = DEFAULT_BUCKET_DOCS,
     tokens_col: str | None = None,
 ) -> DataFrame:
@@ -67,17 +65,17 @@ def assign_token_shards(
     from fdf_spark.llm.words import corpus_words
 
     weight = (
-        F.col(tokens_col) if tokens_col is not None else F.size(corpus_words(text))
+        F.col(tokens_col) if tokens_col is not None else F.size(corpus_words("text"))
     )
     base = docs.select(
-        F.col(id_col),
-        (F.col(id_col) / F.lit(bucket_docs)).cast("bigint").alias("__bucket"),
+        F.col("doc_id"),
+        (F.col("doc_id") / F.lit(bucket_docs)).cast("bigint").alias("__bucket"),
         weight.cast("bigint").alias("tokens"),
     )
     # end-exclusive local prefix within each id-range bucket
     local_w = (
         Window.partitionBy("__bucket")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     local = base.withColumn(
@@ -94,7 +92,7 @@ def assign_token_shards(
         local.join(F.broadcast(bucket_prefix), "__bucket")
         .crossJoin(F.broadcast(total))
         .select(
-            id_col,
+            "doc_id",
             "tokens",
             F.when(
                 F.col("__total") > 0,
@@ -116,8 +114,6 @@ def write_training_shards(
     docs: DataFrame,
     path: str,
     n_shards: int,
-    text: str = "text",
-    id_col: str = "doc_id",
 ) -> dict:
     """Export the corpus as token-balanced shards + a JSON manifest.
 
@@ -126,8 +122,8 @@ def write_training_shards(
     grand totals — what the dataloader reads instead of scanning data.
     Returns the manifest dict.
     """
-    assigned = assign_token_shards(docs, n_shards, text=text, id_col=id_col)
-    out = docs.join(assigned.select(id_col, "shard"), id_col)
+    assigned = assign_token_shards(docs, n_shards)
+    out = docs.join(assigned.select("doc_id", "shard"), "doc_id")
     out.write.partitionBy("shard").mode("overwrite").parquet(os.path.join(path, "data"))
     stats = (
         assigned.groupBy("shard")

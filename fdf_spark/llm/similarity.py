@@ -61,52 +61,43 @@ def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
 
 
-def cosine(a: Column, b: Column, decimals: int | None = 6) -> Column:
-    c = _dot(a, b) / (_norm(a) * _norm(b))
-    return F.round(c, decimals) if decimals is not None else c
+def cosine(a: Column, b: Column) -> Column:
+    return F.round(_dot(a, b) / (_norm(a) * _norm(b)), 6)
 
 
-def cosine_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    query_vec: str = "query_vec",
-    corpus_vec: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Exact top-k cosine neighbors per query → (query_id, vec_id, cos_sim, rank)."""
-    joined = corpus.join(F.broadcast(queries))
-    if exclude_self:
-        joined = joined.filter(F.col(query_id) != F.col(corpus_id))
-    scored = joined.withColumn("cos_sim", cosine(F.col(query_vec), F.col(corpus_vec)))
-    w = W.partitionBy(query_id).orderBy(F.col("cos_sim").desc(), F.col(corpus_id))
+def _topk(cand: DataFrame, k: int) -> DataFrame:
+    """Score ``(query_id, query_vec, vec_id, embedding)`` candidates by
+    :func:`cosine`, a query never matching its own id, and keep each
+    query's ``k`` best → (query_id, vec_id, cos_sim, rank)."""
+    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        cand.filter(F.col("query_id") != F.col("vec_id"))
+        .withColumn("cos_sim", cosine(F.col("query_vec"), F.col("embedding")))
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cos_sim", "rank")
+        .select("query_id", "vec_id", "cos_sim", "rank")
     )
 
 
-def knn_predict(
-    topk: DataFrame,
-    labels: DataFrame,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    label: str = "label",
-) -> DataFrame:
-    """Majority label among each query's neighbors → (query_id, pred_label)."""
+def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5) -> DataFrame:
+    """Exact top-k cosine neighbors of each ``(query_id, query_vec)``
+    among the ``(vec_id, embedding)`` corpus → (query_id, vec_id,
+    cos_sim, rank)."""
+    return _topk(corpus.join(F.broadcast(queries)), k)
+
+
+def knn_predict(topk: DataFrame, labels: DataFrame) -> DataFrame:
+    """Majority ``label`` among each query's neighbors → (query_id, pred_label)."""
     counts = (
-        topk.join(labels.select(corpus_id, label), corpus_id)
-        .groupBy(query_id, label)
+        topk.join(labels.select("vec_id", "label"), "vec_id")
+        .groupBy("query_id", "label")
         .agg(F.count("*").alias("votes"))
     )
-    w = W.partitionBy(query_id).orderBy(F.col("votes").desc(), F.col(label))
+    w = W.partitionBy("query_id").orderBy(F.col("votes").desc(), F.col("label"))
     return (
         counts.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select(query_id, F.col(label).alias("pred_label"))
+        .select("query_id", F.col("label").alias("pred_label"))
     )
 
 
@@ -153,44 +144,35 @@ def _cosines(x, C, cn):
     return _round6_np(dot / (_norms(x)[:, None] * cn[None, :]))
 
 
-def _assign(
-    corpus: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    corpus_id: str,
-    corpus_vec: str,
-) -> DataFrame:
-    """Arrow-batched nearest-centroid assignment → (id, vec, cell).
+def _assign(corpus: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFrame:
+    """Arrow-batched nearest-centroid assignment → (vec_id, embedding, cell).
 
     Numeric contract (the one the SQL oracles replay): :func:`_cosines`,
     and argmax-first-occurrence over ascending-id centroids gives ties
     to the smaller centroid id."""
     import numpy as np
 
-    ids, C, cn = _centroids(cents, corpus_vec)
+    ids, C, cn = _centroids(cents, "embedding")
 
     def assign(batch):
-        cos = _cosines(vectors(batch[corpus_vec], corpus_vec), C, cn)
+        cos = _cosines(vectors(batch["embedding"], "embedding"), C, cn)
         return {"cell": ids[np.argmax(cos, axis=1)]}
 
     return arrow_kernel(
-        corpus.select(corpus_id, corpus_vec), assign, f"{corpus_id}, {corpus_vec}, cell long"
+        corpus.select("vec_id", "embedding"), assign, "vec_id, embedding, cell long"
     )
 
 
 def all_pairs_cosine(
-    corpus: DataFrame,
-    threshold: float,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    max_rows: int = 1_000_000,
+    corpus: DataFrame, threshold: float, max_rows: int = 1_000_000
 ) -> DataFrame:
-    """Exact all-pairs cosine ≥ ``threshold`` → (id_a, id_b, cos_sim),
-    id_a < id_b — the oracle-checkable twin of the LSH/IVF candidate
-    tiers (r14, replacing the BroadcastNestedLoopJoin + per-pair HOF
-    fold that evaluated three interpreted 64-element array passes per
-    pair, cosine re-running in both the join condition and the
-    projection: measured 187 s → 1.0 s at 2 k vectors / sf0.1 with
-    bit-identical output).
+    """Exact all-pairs cosine ≥ ``threshold`` over ``(vec_id,
+    embedding)`` → (id_a, id_b, cos_sim), id_a < id_b — the
+    oracle-checkable twin of the LSH/IVF candidate tiers.  It replaces
+    a BroadcastNestedLoopJoin + per-pair HOF fold that evaluated three
+    interpreted 64-element array passes per pair, cosine re-running in
+    both the join condition and the projection: measured 187 s → 1.0 s
+    at 2 k vectors / sf0.1 with bit-identical output.
 
     Numeric contract (the same one :func:`_assign` pins): elements
     widen to float64 exactly like the fold's per-element
@@ -230,15 +212,15 @@ def all_pairs_cosine(
             f"or raise max_rows explicitly if the driver truly has the "
             f"memory."
         )
-    rows = corpus.select(corpus_id, corpus_vec).collect()
-    bc = corpus.sparkSession.sparkContext.broadcast(_centroids(rows, corpus_vec))
+    rows = corpus.select("vec_id", "embedding").collect()
+    bc = corpus.sparkSession.sparkContext.broadcast(_centroids(rows, "embedding"))
     # rows per score-matrix block: ~32 MB of float64 against the corpus
     blk = max(1, (4 << 20) // max(1, len(rows)))
 
     def gen(batch):
         ids_b, B, bn = bc.value
-        X = vectors(batch[corpus_vec], corpus_vec)
-        ida = batch[corpus_id].to_numpy(zero_copy_only=False).astype(np.int64)
+        X = vectors(batch["embedding"], "embedding")
+        ida = batch["vec_id"].to_numpy(zero_copy_only=False).astype(np.int64)
         pairs = []
         for lo in range(0, len(X), blk):
             cos = _cosines(X[lo : lo + blk], B, bn)
@@ -249,17 +231,15 @@ def all_pairs_cosine(
         return {"id_a": a, "id_b": b, "cos_sim": c}
 
     return arrow_kernel(
-        spread(corpus.select(corpus_id, corpus_vec)), gen, "id_a long, id_b long, cos_sim double"
+        spread(corpus.select("vec_id", "embedding")), gen, "id_a long, id_b long, cos_sim double"
     )
 
 
 def ivf_assign(
-    corpus: DataFrame,
-    num_cells: int = 16,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
+    corpus: DataFrame, num_cells: int = 16
 ) -> tuple[list[tuple[int, list[float]]], DataFrame]:
-    """IVF index build: (centroids, corpus-with-cell).
+    """IVF index build over ``(vec_id, embedding)``: (centroids,
+    corpus-with-cell).
 
     Centroids are the ``num_cells`` smallest-id corpus vectors —
     deterministic, so the whole index replays in a SQL oracle (a
@@ -272,9 +252,9 @@ def ivf_assign(
     """
     cents = [
         (r[0], r[1])
-        for r in corpus.orderBy(corpus_id).limit(num_cells).select(corpus_id, corpus_vec).collect()
+        for r in corpus.orderBy("vec_id").limit(num_cells).select("vec_id", "embedding").collect()
     ]
-    return cents, _assign(corpus, cents, corpus_id, corpus_vec)
+    return cents, _assign(corpus, cents)
 
 
 def ivf_ann_topk(
@@ -283,11 +263,6 @@ def ivf_ann_topk(
     k: int = 5,
     num_cells: int = 16,
     nprobe: int = 2,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    query_vec: str = "query_vec",
-    corpus_vec: str = "embedding",
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Approximate top-k via an inverted-file (IVF) coarse quantizer.
 
@@ -299,33 +274,20 @@ def ivf_ann_topk(
     scan. Deterministic centroids ⇒ unlike LSH, this variant has a
     full DuckDB oracle (q73).
     """
-    cents, assigned = ivf_assign(corpus, num_cells, corpus_id, corpus_vec)
-    probes = _probe_cells(queries, cents, nprobe, query_id, query_vec)
-    cand = assigned.join(F.broadcast(probes), "cell")
-    if exclude_self:
-        cand = cand.filter(F.col(query_id) != F.col(corpus_id))
-    w = W.partitionBy(query_id).orderBy(F.col("cos_sim").desc(), F.col(corpus_id))
-    return (
-        cand.withColumn("cos_sim", cosine(F.col(query_vec), F.col(corpus_vec)))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cos_sim", "rank")
-    )
+    cents, assigned = ivf_assign(corpus, num_cells)
+    probes = _probe_cells(queries, cents, nprobe, "query_id", "query_vec")
+    return _topk(assigned.join(F.broadcast(probes), "cell"), k)
 
 
 def semantic_dedup(
-    corpus: DataFrame,
-    num_cells: int = 16,
-    threshold: float = 0.3,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
+    corpus: DataFrame, num_cells: int = 16, threshold: float = 0.3
 ) -> DataFrame:
     """Embedding-level near-duplicate removal (N14) — SemDeDup,
     Abbas et al. 2023 (arXiv:2303.09540): cluster the corpus coarsely,
     call two documents semantic duplicates when their embeddings'
     cosine within a cluster reaches ``threshold``, keep one per
     duplicate group (smallest id — the same survivor rule as the
-    text-level ``near_dedup``). Returns surviving (corpus_id, cell).
+    text-level ``near_dedup``). Returns surviving (vec_id, cell).
 
     Scale shape: cell assignment reuses :func:`ivf_assign` (centroids
     on the driver, corpus scanned once, NO shuffle); the pairwise stage
@@ -340,9 +302,9 @@ def semantic_dedup(
     import pandas as pd
     import pyarrow as pa
 
-    _, assigned = ivf_assign(corpus, num_cells, corpus_id, corpus_vec)
+    _, assigned = ivf_assign(corpus, num_cells)
 
-    # Within-cell pairwise stage, vectorized (r14): the old cell-keyed
+    # Within-cell pairwise stage, vectorized: the old cell-keyed
     # self-join scored every within-cell pair with the interpreted HOF
     # cosine fold (3 × dim lambda passes per pair — measured 6.3 s of
     # the query's 6.6 s at sf0.1; 0.4 s vectorized, identical removed
@@ -354,9 +316,9 @@ def semantic_dedup(
     # a skewed giant cell bounds its score matrix instead of
     # materializing |cell|² at once.
     def cell_removed(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(corpus_id)
-        ids = pdf[corpus_id].to_numpy(dtype=np.int64)
-        X = vectors(pa.array(pdf[corpus_vec]), corpus_vec)
+        pdf = pdf.sort_values("vec_id")
+        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+        X = vectors(pa.array(pdf["embedding"]), "embedding")
         n = _norms(X)
         blk = max(1, (4 << 20) // max(1, len(ids)))
         hit = np.zeros(len(ids), dtype=bool)
@@ -364,23 +326,17 @@ def semantic_dedup(
             cos = _cosines(X[lo : lo + blk], X, n)
             mask = (ids[lo : lo + blk, None] < ids[None, :]) & (cos >= threshold)
             hit |= mask.any(axis=0)
-        return pd.DataFrame({corpus_id: ids[hit]})
+        return pd.DataFrame({"vec_id": ids[hit]})
 
     removed = (
-        assigned.select("cell", corpus_id, corpus_vec)
+        assigned.select("cell", "vec_id", "embedding")
         .groupBy("cell")
-        .applyInPandas(cell_removed, schema=f"{corpus_id} long")
+        .applyInPandas(cell_removed, schema="vec_id long")
     )  # ids are unique per cell and cells partition the corpus — no distinct needed
-    return assigned.join(removed, corpus_id, "left_anti").select(corpus_id, "cell")
+    return assigned.join(removed, "vec_id", "left_anti").select("vec_id", "cell")
 
 
-def write_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    num_cells: int = 16,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-) -> None:
+def write_ivf_index(corpus: DataFrame, path: str, num_cells: int = 16) -> None:
     """Materialize the IVF index as a **cell-partitioned** parquet layout.
 
     ``<path>/corpus/cell=N/`` holds each inverted list as its own
@@ -391,10 +347,10 @@ def write_ivf_index(
     """
     from fdf_spark.sources.tables import local_df
 
-    cents, assigned = ivf_assign(corpus, num_cells, corpus_id, corpus_vec)
+    cents, assigned = ivf_assign(corpus, num_cells)
     assigned.write.partitionBy("cell").mode("overwrite").parquet(f"{path}/corpus")
     spark = corpus.sparkSession
-    # r14: Arrow-backed local frame — coalesce(1) over the pickle-RDD
+    # Arrow-backed local frame — coalesce(1) over the pickle-RDD
     # form computed its 32 parent partitions sequentially through
     # Python workers (~5 s for 16 rows, every build)
     local_df(
@@ -405,16 +361,7 @@ def write_ivf_index(
 
 
 def ivf_probe_pruned(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 2,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    query_vec: str = "query_vec",
-    corpus_vec: str = "embedding",
-    exclude_self: bool = True,
+    spark, index_path: str, queries: DataFrame, k: int = 5, nprobe: int = 2
 ) -> DataFrame:
     """Probe a :func:`write_ivf_index` layout with static partition pruning.
 
@@ -427,18 +374,9 @@ def ivf_probe_pruned(
     ``tests/test_sinks.py::test_ivf_index_partition_pruned_probe``
     pins both the equivalence and the pruned plan.
     """
-    probes, cells = _ivf_index_probes(spark, index_path, queries, query_id, query_vec, nprobe)
+    probes, cells = _ivf_index_probes(spark, index_path, queries, "query_id", "query_vec", nprobe)
     corpus = spark.read.parquet(f"{index_path}/corpus").filter(F.col("cell").isin(cells))
-    cand = corpus.join(F.broadcast(probes), "cell")
-    if exclude_self:
-        cand = cand.filter(F.col(query_id) != F.col(corpus_id))
-    w = W.partitionBy(query_id).orderBy(F.col("cos_sim").desc(), F.col(corpus_id))
-    return (
-        cand.withColumn("cos_sim", cosine(F.col(query_vec), F.col(corpus_vec)))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cos_sim", "rank")
-    )
+    return _topk(corpus.join(F.broadcast(probes), "cell"), k)
 
 
 def _ivf_index_probes(
@@ -464,13 +402,9 @@ def _ivf_index_probes(
     return probes, cells
 
 
-def embedding_quantize(
-    corpus: DataFrame,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-) -> DataFrame:
-    """Per-dimension linear int8 quantization of an embedding column →
-    (corpus_id, codes array<int>, mse double rounded to 10 dp).
+def embedding_quantize(corpus: DataFrame) -> DataFrame:
+    """Per-dimension linear int8 quantization of the ``embedding``
+    column → (vec_id, codes array<int>, mse double rounded to 10 dp).
 
     The standard storage/IO reduction for vector corpora (4 bytes →
     1 byte per dim): per-dim [min, max] over the corpus defines the
@@ -483,11 +417,11 @@ def embedding_quantize(
     the stats pass is a cheap extra scan and the pack is map-local.
     """
     pos = corpus.select(
-        F.col(corpus_id), F.posexplode(F.col(corpus_vec)).alias("pos", "x")
+        F.col("vec_id"), F.posexplode(F.col("embedding")).alias("pos", "x")
     ).withColumn("x", F.col("x").cast("double"))
     stats = pos.groupBy("pos").agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
     q = pos.join(F.broadcast(stats), "pos").select(
-        corpus_id,
+        "vec_id",
         "pos",
         "x",
         (F.round((F.col("x") - F.col("mn")) / (F.col("mx") - F.col("mn")) * 255) - 128)
@@ -499,7 +433,7 @@ def embedding_quantize(
     deq = (F.col("code") + 128) / 255.0 * (F.col("mx") - F.col("mn")) + F.col("mn")
     per_el = q.withColumn("sqerr", (F.col("x") - deq) * (F.col("x") - deq))
     return (
-        per_el.groupBy(corpus_id)
+        per_el.groupBy("vec_id")
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "code"))), lambda s: s["code"]
@@ -561,27 +495,22 @@ def lsh_ann_topk(
     num_planes: int = 8,
     num_tables: int = 4,
     dim: int = 64,
-    seed: int = 42,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    query_vec: str = "query_vec",
-    corpus_vec: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k via multi-table random-hyperplane LSH.
 
     ``num_tables`` independent tables of ``num_planes`` sign bits each
-    (planes generated driver-side from ``seed`` and shipped to the
+    (planes generated driver-side by :func:`lsh_planes` and shipped to the
     Arrow signature kernel :func:`_lsh_sig` — tiny). Candidates share
     a full bucket in ANY table, or any 1-bit multiprobe flip of the
     query's bucket; exact cosine re-rank on the candidate set only.
     Recall/cost dial: more tables → higher recall, more candidates;
     fewer planes → bigger buckets.
     """
-    tables = lsh_planes(num_planes, num_tables, dim, seed)
+    tables = lsh_planes(num_planes, num_tables, dim)
     # only (id, vec) ever reach the output/re-rank — project early
     # (guide §2.3) so the opaque Arrow stage ships two columns
-    c = _lsh_sig(corpus.select(corpus_id, corpus_vec), tables, corpus_id, corpus_vec)
-    qsig = _lsh_sig(queries.select(query_id, query_vec), tables, query_id, query_vec)
+    c = _lsh_sig(corpus, tables, "vec_id", "embedding")
+    qsig = _lsh_sig(queries, tables, "query_id", "query_vec")
     # query rows fan out to their bucket plus every 1-bit flip of it
     q = qsig.withColumn(
         "__b",
@@ -592,26 +521,12 @@ def lsh_ann_topk(
             )
         ),
     )
-    cand = c.join(F.broadcast(q), ["__tbl", "__b"]).filter(
-        F.col(query_id) != F.col(corpus_id)
-    ).drop("__tbl", "__b")
-    scored = cand.withColumn(
-        "cos_sim", cosine(F.col(query_vec), F.col(corpus_vec))
-    ).dropDuplicates([query_id, corpus_id])
-    w = W.partitionBy(query_id).orderBy(F.col("cos_sim").desc(), F.col(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cos_sim", "rank")
-    )
+    cand = c.join(F.broadcast(q), ["__tbl", "__b"]).dropDuplicates(["query_id", "vec_id"])
+    return _topk(cand, k)
 
 
 def kmeans_refine(
-    corpus: DataFrame,
-    num_cells: int = 16,
-    iters: int = 2,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
+    corpus: DataFrame, num_cells: int = 16, iters: int = 2
 ) -> tuple[list[tuple[int, list[float]]], DataFrame]:
     """Lloyd k-means refinement of the deterministic IVF seed centroids.
 
@@ -633,21 +548,21 @@ def kmeans_refine(
     per-dimension row fan-out. Empty cells drop out of the model,
     mirroring the SQL replay.
     """
-    cents, assigned = ivf_assign(corpus, num_cells, corpus_id, corpus_vec)
+    cents, assigned = ivf_assign(corpus, num_cells)
     for _ in range(iters):
-        means = dsum_means(_cell_sums(assigned, corpus_vec).collect())
+        means = dsum_means(_cell_sums(assigned).collect())
         cents = sorted((c, v) for (c,), v in means.items())
-        assigned = _assign(corpus, cents, corpus_id, corpus_vec)
+        assigned = _assign(corpus, cents)
     return cents, assigned
 
 
-def _cell_sums(assigned: DataFrame, corpus_vec: str) -> DataFrame:
+def _cell_sums(assigned: DataFrame) -> DataFrame:
     """Exact per-task per-cell vector sums of ``assigned``
     (:func:`dsum_partials`), the k-means mean-update partials."""
     def batch(b):
-        return [((b["cell"].to_numpy(),), vectors(b[corpus_vec], corpus_vec))]
+        return [((b["cell"].to_numpy(),), vectors(b["embedding"], "embedding"))]
 
-    return dsum_partials(assigned.select("cell", corpus_vec), "cell long", batch)
+    return dsum_partials(assigned.select("cell", "embedding"), "cell long", batch)
 
 
 def _l2(a: Column, b: Column, decimals: int | None = 6) -> Column:
@@ -662,15 +577,21 @@ def _l2(a: Column, b: Column, decimals: int | None = 6) -> Column:
     return F.round(d, decimals) if decimals is not None else d
 
 
-def _pq_dists_np(x, books_np):
+def _pq_dists_np(x, books_np, name: str):
     """(rows, m, ks) squared distances of each row's ``m`` subvectors
     to every codeword: accumulated SEQUENTIALLY over the subvector (the
     ``list_sum`` fold order of the ``_l2_sql`` replay in
     ``queries/llm.py``) and rounded 6 dp like ``F.round``
-    (:func:`_round6_np`; distances are ≥ 0, so half-away == half-up)."""
+    (:func:`_round6_np`; distances are ≥ 0, so half-away == half-up).
+    Rows whose width is not the codebooks' ``m · sub`` raise
+    ``ValueError`` naming the ``name`` column."""
     import numpy as np
 
     m, ks, sub = books_np.shape
+    if x.shape[1] != m * sub:
+        raise ValueError(
+            f"{name} vectors have {x.shape[1]} values; the PQ codebooks cover {m * sub}"
+        )
     out = np.empty((len(x), m, ks))
     for j in range(m):
         xj = x[:, j * sub : (j + 1) * sub]
@@ -686,17 +607,17 @@ def pq_encode(
     corpus: DataFrame,
     m: int = 8,
     ks: int = 16,
-    corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
-    dim: int = 64,
     keep: tuple[str, ...] = (),
     codebooks: list[list[list[float]]] | None = None,
 ) -> tuple[list[list[list[float]]], DataFrame]:
-    """Product-quantization encode: split each vector into ``m``
-    subvectors of ``dim/m`` components; quantize each against a
-    per-subspace codebook of ``ks`` centroids; a vector becomes ``m``
-    small integer codes (here ≤1 byte each — a 64-float embedding
-    compresses 32:1).
+    """Product-quantization encode of ``(vec_id, corpus_vec)``: split
+    each vector into ``m`` subvectors of ``width/m`` components;
+    quantize each against a per-subspace codebook of ``ks`` centroids;
+    a vector becomes ``m`` small integer codes (here ≤1 byte each — a
+    64-float embedding compresses 32:1).  The width is the data's: the
+    seed vectors' length, or ``m · len(codebooks[0][0])`` for supplied
+    codebooks; a vector of another width raises ``ValueError``.
 
     Codebooks are deterministic (the ``ks`` smallest-id vectors'
     subvectors, same convention as :func:`ivf_assign` — no rand(), so
@@ -715,32 +636,41 @@ def pq_encode(
     """
     import numpy as np
 
-    sub = dim // m
     if codebooks is not None:
         books = codebooks  # externally supplied (trained, or residual-seeded)
     else:
-        books = _pq_seed_books(corpus, corpus_vec, corpus_id, m, ks, sub)
+        books = _pq_seed_books(corpus, corpus_vec, m, ks)
     books_np = np.array(books)  # (m, ks, sub)
-    cols = (corpus_id, corpus_vec, *keep)
+    cols = ("vec_id", corpus_vec, *keep)
 
     def encode(batch):
         x = vectors(batch[corpus_vec], corpus_vec)
-        return {"code": np.argmin(_pq_dists_np(x, books_np), axis=2).astype(np.int32)}
+        return {"code": np.argmin(_pq_dists_np(x, books_np, corpus_vec), axis=2).astype(np.int32)}
 
     return books, arrow_kernel(corpus.select(*cols), encode, ", ".join(cols) + ", code array<int>")
 
 
 def _pq_seed_books(
-    df: DataFrame, vec_col: str, id_col: str, m: int, ks: int, sub: int, skip: int = 0
+    df: DataFrame, vec_col: str, m: int, ks: int, skip: int = 0
 ) -> list[list[list[float]]]:
-    """Deterministic seed codebooks: the ``ks`` smallest-id rows'
-    subvectors, optionally skipping the first ``skip`` rows (the
+    """Deterministic seed codebooks: the ``ks`` smallest-``vec_id``
+    rows' subvectors, optionally skipping the first ``skip`` rows (the
     residual tier skips the IVF centroid rows, whose residuals are
-    exactly zero — an all-zero codebook ties every distance)."""
+    exactly zero — an all-zero codebook ties every distance).  The
+    seeds' common width sets the subvector length ``width / m``; seeds
+    of unequal widths, or a width ``m`` does not divide, raise
+    ``ValueError``."""
     seeds = [
         list(r[vec_col])
-        for r in df.orderBy(id_col).limit(ks + skip).select(vec_col).collect()[skip:]
+        for r in df.orderBy("vec_id").limit(ks + skip).select(vec_col).collect()[skip:]
     ]
+    widths = {len(v) for v in seeds}
+    if len(widths) > 1 or (widths and next(iter(widths)) % m):
+        raise ValueError(
+            f"{vec_col} seed vectors have widths {sorted(widths)}; "
+            f"need one width divisible by m={m}"
+        )
+    sub = next(iter(widths), 0) // m
     return [[[float(v[j * sub + i]) for i in range(sub)] for v in seeds] for j in range(m)]
 
 
@@ -783,7 +713,7 @@ def train_pq_codebooks(
 
         def batch(b):
             x = vectors(b[vec_col], vec_col)
-            codes = np.argmin(_pq_dists_np(x, books_np), axis=2)
+            codes = np.argmin(_pq_dists_np(x, books_np, vec_col), axis=2)
             return [
                 ((np.full(len(x), j), codes[:, j]), x[:, j * sub : (j + 1) * sub])
                 for j in range(m)
@@ -799,25 +729,20 @@ def pq_ann_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    m: int = 8,
-    ks: int = 16,
     rerank: int = 0,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    query_vec: str = "query_vec",
-    corpus_vec: str = "embedding",
-    dim: int = 64,
-    exclude_self: bool = True,
     exact_decimal: bool = True,
 ) -> DataFrame:
-    """ANN top-k by PQ asymmetric distance (ADC): per query, a lookup
-    table of (subspace, centroid) → partial distance is precomputed
-    once, and scoring a corpus vector is ``m`` table lookups summed —
-    no float vector math on the scan.
+    """ANN top-k of each ``(query_id, query_vec)`` among the ``(vec_id,
+    embedding)`` corpus by PQ asymmetric distance (ADC, ``m = 8``
+    subspaces of ``ks = 16`` codewords): per query, a lookup table of
+    (subspace, centroid) → partial distance is precomputed once, and
+    scoring a corpus vector is ``m`` table lookups summed — no float
+    vector math on the scan.  A query never matches its own id.
 
     Visibly eager on the queries: the build collects them (one job) and
     computes each LUT on the driver with :func:`_pq_dists_np`, the
-    encoder's kernel; a bad query vector raises ``ValueError`` there.
+    encoder's kernel; a bad query vector, or one whose width is not the
+    corpus's, raises ``ValueError`` there.
     Scale shape: the LUTs (queries × m × ks doubles, KB) are broadcast;
     the corpus side reads the CODES relation (32x smaller than the
     embeddings), stays map-side through scoring, and only the
@@ -835,43 +760,43 @@ def pq_ann_topk(
     hot cost at millions of rows; measured in tools/stress.py) — the
     production setting.
     """
-    books, codes = pq_encode(corpus, m, ks, corpus_id, corpus_vec, dim)
-    scored = codes.join(F.broadcast(_query_luts(queries, books, query_id, query_vec, dim)))
-    return _adc_score_topk(
-        scored, queries, corpus, k, m, rerank,
-        query_id, corpus_id, query_vec, corpus_vec, exclude_self, exact_decimal,
-    )
+    books, codes = pq_encode(corpus, 8, 16)
+    scored = codes.join(F.broadcast(_query_luts(queries, books)))
+    return _adc_score_topk(scored, queries, corpus, k, 8, rerank, exact_decimal)
 
 
-def _query_luts(queries: DataFrame, books, query_id: str, query_vec: str, dim: int) -> DataFrame:
+def _query_luts(queries: DataFrame, books) -> DataFrame:
     """Per-query ADC lookup tables as a local ``(query_id, lut)``
     relation: the queries are collected once (the broadcast puts them on
     the driver anyway) and each LUT is :func:`_pq_dists_np` of the query
-    vector.  A NULL vector, one shorter than ``dim``, or a NULL or
-    non-finite element raises ``ValueError`` naming the query id."""
+    vector.  A NULL vector, one whose length is not the codebooks'
+    width, or a NULL or non-finite element raises ``ValueError`` naming
+    the query id."""
     import numpy as np
 
     from fdf_spark.sources.tables import local_df
 
-    rows = queries.select(query_id, query_vec).collect()
+    books_np = np.array(books)  # (m, ks, sub)
+    dim = books_np.shape[0] * books_np.shape[2]
+    rows = queries.select("query_id", "query_vec").collect()
     x = np.full((len(rows), dim), np.nan)
     for i, (qid, v) in enumerate(rows):
-        head = np.asarray((v or [])[:dim], dtype=np.float64)
-        x[i, : len(head)] = head
+        if v is not None and len(v) == dim:
+            x[i] = np.asarray(v, dtype=np.float64)
         if not np.isfinite(x[i]).all():
             got = (
                 "NULL" if v is None
-                else f"length {len(v)}" if len(v) < dim
+                else f"length {len(v)}" if len(v) != dim
                 else "a NULL or non-finite element"
             )
             raise ValueError(
-                f"pq_ann_topk: query {qid!r} has {query_vec} {got}; expected {dim} finite values"
+                f"pq_ann_topk: query {qid!r} has query_vec {got}; expected {dim} finite values"
             )
-    id_type = queries.schema[query_id].dataType.simpleString()
+    id_type = queries.schema["query_id"].dataType.simpleString()
     return local_df(
         queries.sparkSession,
-        [(r[0], lut) for r, lut in zip(rows, _pq_dists_np(x, np.array(books)).tolist())],
-        f"{query_id} {id_type}, lut array<array<double>>",
+        [(r[0], lut) for r, lut in zip(rows, _pq_dists_np(x, books_np, "query_vec").tolist())],
+        f"query_id {id_type}, lut array<array<double>>",
     )
 
 
@@ -882,18 +807,13 @@ def _adc_score_topk(
     k: int,
     m: int,
     rerank: int,
-    query_id: str,
-    corpus_id: str,
-    query_vec: str,
-    corpus_vec: str,
-    exclude_self: bool,
     exact_decimal: bool,
 ) -> DataFrame:
-    """Shared ADC tail: fold the m LUT lookups into adist, take the
-    per-query top-k, optionally re-rank exactly (pq_ann_topk and
-    ivf_pq_ann_topk differ only in how candidates reach ``scored``)."""
-    if exclude_self:
-        scored = scored.filter(F.col(query_id) != F.col(corpus_id))
+    """Shared ADC tail: drop each query's own id, fold the m LUT lookups
+    into adist, take the per-query top-k, optionally re-rank exactly
+    (pq_ann_topk and ivf_pq_ann_topk differ only in how candidates reach
+    ``scored``)."""
+    scored = scored.filter(F.col("query_id") != F.col("vec_id"))
 
     def lookup(j):
         return F.element_at(F.element_at("lut", j + 1), F.element_at("code", j + 1) + 1)
@@ -911,27 +831,27 @@ def _adc_score_topk(
     # project down to 3 narrow columns BEFORE the top-k window: the
     # exchange must carry (qid, vid, adist), never the 1 KB lut / code /
     # vector payload (measured 4x on the 1M-vector stress run: 54->14 s)
-    scored = scored.select(F.col(query_id), F.col(corpus_id), adist.alias("adist"))
-    w = W.partitionBy(query_id).orderBy(F.col("adist").asc(), F.col(corpus_id))
+    scored = scored.select("query_id", "vec_id", adist.alias("adist"))
+    w = W.partitionBy("query_id").orderBy(F.col("adist").asc(), F.col("vec_id"))
     pool = max(k, rerank * k) if rerank else k
     top = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= pool)
     if not rerank:
-        return top.select(query_id, corpus_id, "adist", "rank")
+        return top.select("query_id", "vec_id", "adist", "rank")
     # exact re-rank: broadcast the tiny candidate pool back against the
     # corpus (BHJ — the corpus is scanned, never shuffled) and the
     # query vectors, then re-window inside the pool
-    cand = top.select(query_id, corpus_id)
+    cand = top.select("query_id", "vec_id")
     exact = (
-        corpus.select(corpus_id, corpus_vec)
-        .join(F.broadcast(cand), corpus_id)
-        .join(F.broadcast(queries.select(query_id, query_vec)), query_id)
-        .withColumn("edist", _l2(F.col(query_vec), F.col(corpus_vec)))
+        corpus.select("vec_id", "embedding")
+        .join(F.broadcast(cand), "vec_id")
+        .join(F.broadcast(queries.select("query_id", "query_vec")), "query_id")
+        .withColumn("edist", _l2(F.col("query_vec"), F.col("embedding")))
     )
-    w2 = W.partitionBy(query_id).orderBy(F.col("edist").asc(), F.col(corpus_id))
+    w2 = W.partitionBy("query_id").orderBy(F.col("edist").asc(), F.col("vec_id"))
     return (
         exact.withColumn("rank", F.row_number().over(w2))
         .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "edist", "rank")
+        .select("query_id", "vec_id", "edist", "rank")
     )
 
 
@@ -961,12 +881,6 @@ def ivf_pq_ann_topk(
     m: int = 8,
     ks: int = 16,
     rerank: int = 0,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    query_vec: str = "query_vec",
-    corpus_vec: str = "embedding",
-    dim: int = 64,
-    exclude_self: bool = True,
     exact_decimal: bool = True,
     by_residual: bool = False,
     train_iters: int = 0,
@@ -1004,15 +918,17 @@ def ivf_pq_ann_topk(
     Equally SQL-replayable: the residual is exact double arithmetic
     in both engines (q152's oracle).
     """
-    cents, books, codes = _ivf_pq_build(
-        corpus, num_cells, m, ks, dim, by_residual, train_iters, corpus_id, corpus_vec
-    )
-    probes = _ivf_pq_probes(queries, cents, books, nprobe, by_residual, query_id, query_vec)
+    cents, books, codes = _ivf_pq_build(corpus, num_cells, m, ks, by_residual, train_iters)
+    probes = _ivf_pq_probes(queries, cents, books, nprobe, by_residual)
     scored = codes.join(F.broadcast(probes), "cell")
-    return _adc_score_topk(
-        scored, queries, corpus, k, m, rerank,
-        query_id, corpus_id, query_vec, corpus_vec, exclude_self, exact_decimal,
-    )
+    return _adc_score_topk(scored, queries, corpus, k, m, rerank, exact_decimal)
+
+
+def _residual_src(assigned: DataFrame, cents) -> DataFrame:
+    """``(vec_id, __rvec, cell)``: each assigned vector minus its cell's
+    centroid, the input residual PQ encodes."""
+    rcol = _residual(F.col("embedding"), _centroid_array(cents, F.col("cell")))
+    return assigned.select("vec_id", rcol.alias("__rvec"), "cell")
 
 
 def _ivf_pq_build(
@@ -1020,41 +936,31 @@ def _ivf_pq_build(
     num_cells: int,
     m: int,
     ks: int,
-    dim: int,
     by_residual: bool,
     train_iters: int,
-    corpus_id: str,
-    corpus_vec: str,
 ) -> tuple[list, list, DataFrame]:
     """IVF-PQ index construction — (centroids, codebooks, codes with
     cell).  ONE corpus scan builds both structures map-side; shared by
     the inline query path (:func:`ivf_pq_ann_topk`) and the persisted
     index writer (:func:`write_ivf_pq_index`)."""
-    cents, assigned = ivf_assign(corpus, num_cells, corpus_id, corpus_vec)
+    cents, assigned = ivf_assign(corpus, num_cells)
     if by_residual:
-        rcol = _residual(F.col(corpus_vec), _centroid_array(cents, F.col("cell")))
-        src, vcol = assigned.select(corpus_id, rcol.alias("__rvec"), "cell"), "__rvec"
+        src, vcol = _residual_src(assigned, cents), "__rvec"
         seed_skip = num_cells  # the centroid rows' residuals are exactly zero
     else:
-        src, vcol, seed_skip = assigned, corpus_vec, 0
+        src, vcol, seed_skip = assigned, "embedding", 0
     # Seed books need only the ks+skip smallest-id rows, and assignment/
     # residual are row-wise — so take the head off the RAW corpus scan
     # (TakeOrdered, no full-corpus assignment pass: collecting seeds
     # from ``src`` forced every row through cell assignment just to
-    # keep 16-32 of them; r14, measured as the dominant build job) and
+    # keep 16-32 of them, measured as the dominant build job) and
     # transform just those rows. Identical rows, identical books.
-    head = corpus.select(corpus_id, corpus_vec).orderBy(corpus_id).limit(ks + seed_skip)
-    if by_residual:
-        head_src = _assign(head, cents, corpus_id, corpus_vec).select(
-            corpus_id,
-            _residual(F.col(corpus_vec), _centroid_array(cents, F.col("cell"))).alias(vcol),
-        )
-    else:
-        head_src = head
-    books = _pq_seed_books(head_src, vcol, corpus_id, m, ks, dim // m, skip=seed_skip)
+    head = corpus.select("vec_id", "embedding").orderBy("vec_id").limit(ks + seed_skip)
+    head_src = _residual_src(_assign(head, cents), cents) if by_residual else head
+    books = _pq_seed_books(head_src, vcol, m, ks, skip=seed_skip)
     if train_iters:
         books = train_pq_codebooks(src, vcol, books, train_iters)
-    books, codes = pq_encode(src, m, ks, corpus_id, vcol, dim, keep=("cell",), codebooks=books)
+    books, codes = pq_encode(src, m, ks, vcol, keep=("cell",), codebooks=books)
     return cents, books, codes
 
 
@@ -1088,15 +994,7 @@ def _probe_cells(
     return arrow_kernel(df.select(id_col, vec_col), gen, f"{id_col}, {vec_col}, cell long")
 
 
-def _ivf_pq_probes(
-    queries: DataFrame,
-    cents,
-    books,
-    nprobe: int,
-    by_residual: bool,
-    query_id: str,
-    query_vec: str,
-) -> DataFrame:
+def _ivf_pq_probes(queries: DataFrame, cents, books, nprobe: int, by_residual: bool) -> DataFrame:
     """Per-query probe relation (query_id, query_vec, cell, lut) —
     shared by the inline and persisted-index paths.
 
@@ -1109,15 +1007,15 @@ def _ivf_pq_probes(
     books_np = np.array(books)  # (m, ks, sub)
 
     def gen(batch):
-        x = vectors(batch[query_vec], query_vec)
+        x = vectors(batch["query_vec"], "query_vec")
         rows, ci = _probe_order(_cosines(x, C, cn), nprobe)
         src = x[rows] - C[ci] if by_residual else x[rows]
-        return {"cell": ids[ci], "lut": _pq_dists_np(src, books_np)}, rows
+        return {"cell": ids[ci], "lut": _pq_dists_np(src, books_np, "query_vec")}, rows
 
     return arrow_kernel(
-        queries.select(query_id, query_vec),
+        queries.select("query_id", "query_vec"),
         gen,
-        f"{query_id}, {query_vec}, cell long, lut array<array<double>>",
+        "query_id, query_vec, cell long, lut array<array<double>>",
     )
 
 
@@ -1127,20 +1025,17 @@ def write_ivf_pq_index(
     num_cells: int = 16,
     m: int = 8,
     ks: int = 16,
-    dim: int = 64,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
     by_residual: bool = False,
-    train_iters: int = 0,
 ) -> int:
     """Persist an IVF-PQ index as a VERSIONED TABLE — the build-once /
     probe-many contract every production ANN deployment runs (FAISS
     builds codes+codebooks once and serves thousands of probes; the
     reference's analog is the compile-once memoized catalog,
-    factory.py:651,673-679).  VERDICT r8's #1 gap.
+    factory.py:651,673-679).
 
     Layout: ONE versioned table at ``path`` whose rows are the PQ
-    codes ``(corpus_id, cell, code array<int>)`` — range-clustered by
+    codes ``(vec_id, cell, code array<int>)`` of the ``(vec_id,
+    embedding)`` corpus — range-clustered by
     ``cell`` so each data file covers ~one cell and the manifest's
     per-file [min, max] stats make a probe a partition-pruned scan
     (``read_version(prune=("cell", cells))`` hands Spark ONLY the
@@ -1161,10 +1056,8 @@ def write_ivf_pq_index(
         set_partition_spec,
     )
 
-    cents, books, codes = _ivf_pq_build(
-        corpus, num_cells, m, ks, dim, by_residual, train_iters, corpus_id, corpus_vec
-    )
-    out = codes.select(corpus_id, "cell", "code")
+    cents, books, codes = _ivf_pq_build(corpus, num_cells, m, ks, by_residual, 0)
+    out = codes.select("vec_id", "cell", "code")
     # the layout rides the table's PARTITION SPEC: every writer — this
     # build, ivf_pq_add, or a plain commit_version — cell-clusters its
     # new files through commit_version's one spec mechanism.  Only a
@@ -1182,11 +1075,7 @@ def write_ivf_pq_index(
         "ivf_pq": {
             "cents": [[int(cid), [float(x) for x in vec]] for cid, vec in cents],
             "books": books,
-            "params": {
-                "num_cells": num_cells, "m": m, "ks": ks, "dim": dim,
-                "corpus_id": corpus_id, "by_residual": by_residual,
-                "train_iters": train_iters,
-            },
+            "params": {"num_cells": num_cells, "m": m, "ks": ks, "by_residual": by_residual},
         }
     }
     v = commit_version(out, path, mode="overwrite", meta=meta)
@@ -1230,13 +1119,9 @@ def read_ivf_pq_meta(path: str, version: int | None = None) -> dict:
     raise ValueError(f"{path} v{v} is not an IVF-PQ index (no ivf_pq meta in chain)")
 
 
-def ivf_pq_add(
-    path: str,
-    new_vectors: DataFrame,
-    corpus_vec: str = "embedding",
-) -> int:
+def ivf_pq_add(path: str, new_vectors: DataFrame) -> int:
     """Incrementally extend a persisted IVF-PQ index — FAISS ``add``:
-    assign new vectors to the EXISTING cells, encode with the EXISTING
+    assign new ``(vec_id, embedding)`` vectors to the EXISTING cells, encode with the EXISTING
     codebooks, commit the new codes as an append.  No retraining, no
     rewrite of prior files; the appended files are cell-clustered like
     the originals so probes stay partition-pruned across commits, and
@@ -1249,18 +1134,13 @@ def ivf_pq_add(
     idx = read_ivf_pq_meta(path)
     p = idx["params"]
     cents = [(cid, vec) for cid, vec in idx["cents"]]
-    corpus_id = p["corpus_id"]
-    assigned = _assign(new_vectors, cents, corpus_id, corpus_vec)
+    assigned = _assign(new_vectors, cents)
     if p["by_residual"]:
-        rcol = _residual(F.col(corpus_vec), _centroid_array(cents, F.col("cell")))
-        src, vcol = assigned.select(corpus_id, rcol.alias("__rvec"), "cell"), "__rvec"
+        src, vcol = _residual_src(assigned, cents), "__rvec"
     else:
-        src, vcol = assigned, corpus_vec
-    _, codes = pq_encode(
-        src, p["m"], p["ks"], corpus_id, vcol, p["dim"],
-        keep=("cell",), codebooks=idx["books"],
-    )
-    out = codes.select(corpus_id, "cell", "code")
+        src, vcol = assigned, "embedding"
+    _, codes = pq_encode(src, p["m"], p["ks"], vcol, keep=("cell",), codebooks=idx["books"])
+    out = codes.select("vec_id", "cell", "code")
     # the index's PARTITION SPEC normally makes commit_version
     # range-cluster the new files by cell (one clustering contract for
     # every writer); an index persisted BEFORE the spec wiring has no
@@ -1282,16 +1162,16 @@ def sync_ivf_pq_index(
     corpus_path: str,
     index_path: str,
     consumer_id: str = "ivf-pq-sync",
-    corpus_vec: str = "embedding",
 ) -> dict:
-    """Keep a persisted IVF-PQ index FOLLOWING a versioned corpus via
-    the change feed (r14 — the composition the 100 TB embedding
-    pipeline actually runs: the corpus table takes appends/updates/
-    deletes all day; the index must track it without rebuilds).
+    """Keep a persisted IVF-PQ index FOLLOWING a versioned ``(vec_id,
+    embedding)`` corpus via the change feed (the composition the 100 TB
+    embedding pipeline actually runs: the corpus table takes
+    appends/updates/deletes all day; the index must track it without
+    rebuilds).
 
     One sync = one poll of the corpus's per-commit feed
-    (:func:`fdf_spark.sources.versioned.poll_changes`, keyed on the
-    index's ``corpus_id``), then:
+    (:func:`fdf_spark.sources.versioned.poll_changes`, keyed on
+    ``vec_id``), then:
 
     1. EVERY changed id is equality-deleted from the index — the key
        relation is the tombstone, zero index scan; the sequence rule
@@ -1320,17 +1200,16 @@ def sync_ivf_pq_index(
     """
     from fdf_spark.sources.versioned import ack_changes, delete_keys, poll_changes
 
-    idx = read_ivf_pq_meta(index_path)
-    corpus_id = idx["params"]["corpus_id"]
-    feed, thru = poll_changes(spark, corpus_path, consumer_id, keys=[corpus_id])
+    read_ivf_pq_meta(index_path)  # fails loudly unless index_path is an index
+    feed, thru = poll_changes(spark, corpus_path, consumer_id, keys=["vec_id"])
     if feed is None:
         return {"synced_through": thru, "added": 0, "deleted": 0}
     feed = feed.persist()
     try:
-        changed = feed.select(corpus_id).distinct()
+        changed = feed.select("vec_id").distinct()
         n_changed = changed.count()
         if n_changed:
-            delete_keys(spark, index_path, changed, [corpus_id])
+            delete_keys(spark, index_path, changed, ["vec_id"])
         # the poll may span MANY commits, so one id can appear several
         # times (inserted in one commit, updated in a later one): the
         # index gets each id's FINAL image only — the newest
@@ -1341,7 +1220,7 @@ def sync_ivf_pq_index(
             .withColumn(
                 "__rn",
                 F.row_number().over(
-                    W.partitionBy(corpus_id).orderBy(
+                    W.partitionBy("vec_id").orderBy(
                         F.col("_commit_version").desc()
                     )
                 ),
@@ -1350,10 +1229,10 @@ def sync_ivf_pq_index(
         )
         adds = last.filter(
             F.col("_change_type").isin("insert", "update_postimage")
-        ).select(corpus_id, corpus_vec)
+        ).select("vec_id", "embedding")
         n_add = adds.count()
         if n_add:
-            ivf_pq_add(index_path, adds, corpus_vec=corpus_vec)
+            ivf_pq_add(index_path, adds)
     finally:
         feed.unpersist()  # own pin only
     ack_changes(corpus_path, consumer_id, thru)
@@ -1369,10 +1248,6 @@ def ivf_pq_probe_index(
     version: int | None = None,
     rerank: int = 0,
     corpus: DataFrame | None = None,
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    corpus_vec: str = "embedding",
-    exclude_self: bool = True,
     exact_decimal: bool = True,
 ) -> DataFrame:
     """Probe a persisted IVF-PQ index (:func:`write_ivf_pq_index`) —
@@ -1402,7 +1277,7 @@ def ivf_pq_probe_index(
     # cell whose files were pruned away, and the query pipeline is not
     # computed twice
     probes = _ivf_pq_probes(
-        queries, cents, idx["books"], nprobe, p["by_residual"], query_id, query_vec
+        queries, cents, idx["books"], nprobe, p["by_residual"]
     ).localCheckpoint()
     # the probed-cell set (bounded: ≤ num_cells values) prunes the
     # manifest file list before Spark ever plans the codes scan
@@ -1411,7 +1286,4 @@ def ivf_pq_probe_index(
         F.col("cell").isin(cells)
     )
     scored = codes.join(F.broadcast(probes), "cell")
-    return _adc_score_topk(
-        scored, queries, corpus, k, p["m"], rerank,
-        query_id, p["corpus_id"], query_vec, corpus_vec, exclude_self, exact_decimal,
-    )
+    return _adc_score_topk(scored, queries, corpus, k, p["m"], rerank, exact_decimal)

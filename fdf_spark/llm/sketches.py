@@ -55,7 +55,6 @@ def cm_bucket(token: Column, row: int, width: int) -> Column:
 
 def countmin_sketch(
     tokens: DataFrame,
-    token_col: str = "token",
     depth: int = DEFAULT_DEPTH,
     width: int = DEFAULT_WIDTH,
 ) -> DataFrame:
@@ -66,7 +65,7 @@ def countmin_sketch(
     the ×depth cell fan-out happens inside the row (array + explode),
     never as repeated scans.
     """
-    t = F.col(token_col)
+    t = F.col("token")
     cells = F.explode(
         F.array(
             *[
@@ -105,7 +104,6 @@ def cm_merge(*sketches: DataFrame) -> DataFrame:
 def cm_estimate(
     sketch: DataFrame,
     probes: DataFrame,
-    token_col: str = "token",
     depth: int = DEFAULT_DEPTH,
     width: int = DEFAULT_WIDTH,
 ) -> DataFrame:
@@ -117,7 +115,7 @@ def cm_estimate(
     with no sketch cell means count 0 (only possible for tokens absent
     from the sketched corpus); the min-fold treats it as 0.
     """
-    t = F.col(token_col)
+    t = F.col("token")
     addr = F.explode(
         F.array(
             *[
@@ -129,12 +127,12 @@ def cm_estimate(
             ]
         )
     ).alias("a")
-    addressed = probes.select(t.alias(token_col), addr).select(
-        token_col, F.col("a.row").alias("row"), F.col("a.bucket").alias("bucket")
+    addressed = probes.select(t.alias("token"), addr).select(
+        "token", F.col("a.row").alias("row"), F.col("a.bucket").alias("bucket")
     )
     joined = addressed.join(F.broadcast(sketch), ["row", "bucket"], "left")
     return (
-        joined.groupBy(token_col)
+        joined.groupBy("token")
         .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias("est_cnt"))
     )
 
@@ -189,7 +187,6 @@ def _bloom_addrs(key: Column, k: int, m_bits: int) -> Column:
 
 def bloom_build(
     keys: DataFrame,
-    key_col: str = "key",
     m_bits: int = DEFAULT_BLOOM_BITS,
     k: int = DEFAULT_BLOOM_K,
 ) -> DataFrame:
@@ -199,7 +196,7 @@ def bloom_build(
     most ``m_bits/32`` rows.  One scan; the ×k bit fan-out happens
     in-row; the groupBy bit_or combines map-side.
     """
-    addr = _bloom_addrs(F.col(key_col), k, m_bits).alias("a")
+    addr = _bloom_addrs(F.col("key"), k, m_bits).alias("a")
     # the SQL shiftleft/shiftright accept a COLUMN shift amount (the
     # python wrappers restrict to int literals — call_function routes
     # around that)
@@ -227,7 +224,6 @@ def bloom_merge(*filters: DataFrame) -> DataFrame:
 def bloom_might_contain(
     bloom: DataFrame,
     probes: DataFrame,
-    key_col: str = "key",
     m_bits: int = DEFAULT_BLOOM_BITS,
     k: int = DEFAULT_BLOOM_K,
 ) -> DataFrame:
@@ -238,10 +234,10 @@ def bloom_might_contain(
     set.  A missing word means bit unset.  No false negatives: a key
     that was built in always returns true (property-tested).
     """
-    key = F.col(key_col)
+    key = F.col("key")
     addr = _bloom_addrs(key, k, m_bits).alias("a")
-    addressed = probes.select(key.alias(key_col), addr).select(
-        key_col,
+    addressed = probes.select(key.alias("key"), addr).select(
+        "key",
         F.col("a.word").alias("word"),
         F.col("a.bit").alias("bit"),
     )
@@ -255,7 +251,7 @@ def bloom_might_contain(
         == 1
     )
     return (
-        joined.groupBy(key_col)
+        joined.groupBy("key")
         .agg((F.min(hit.cast("int")) == 1).alias("might_contain"))
     )
 
@@ -333,20 +329,20 @@ def bloom_prefilter(
 DEFAULT_HLL_P = 12  # 4096 registers, ~1.6% standard error
 
 
-def hll_sketch(df: DataFrame, col: str, p: int = DEFAULT_HLL_P) -> DataFrame:
+def hll_sketch(df: DataFrame, col: str) -> DataFrame:
     """Build the register relation ``(register int, maxrank int)``.
 
     register = hash mod 2^p; rank = leading zeros of the remaining
     60−p hash bits + 1 (via bit-length: portable to any engine with a
     binary-string function).  At most 2^p rows.
     """
-    m = 1 << p
+    m = 1 << DEFAULT_HLL_P
     h = portable_hash60(F.col(col))
     # exact integer shift, not (h / m).cast: double division rounds h
     # for values >= 2^53 and can push w across a power-of-two boundary,
     # breaking the bit-reproducibility contract vs the oracle's h // m
-    w = F.shiftright(h, p)  # the top 60-p bits
-    width = 60 - p
+    w = F.shiftright(h, DEFAULT_HLL_P)  # the top 60-p bits
+    width = 60 - DEFAULT_HLL_P
     rank = F.when(w == 0, F.lit(width + 1)).otherwise(
         F.lit(width) - F.length(F.bin(w)) + 1
     )
@@ -370,7 +366,7 @@ def hll_merge(*sketches: DataFrame) -> DataFrame:
     return out.groupBy("register").agg(F.max("maxrank").alias("maxrank"))
 
 
-def hll_estimate(sketch: DataFrame, p: int = DEFAULT_HLL_P) -> DataFrame:
+def hll_estimate(sketch: DataFrame) -> DataFrame:
     """One-row ``(estimate double)`` from the register relation.
 
     Standard HLL estimator: E = α_m · m² / Σ 2^−M_j with the
@@ -379,8 +375,8 @@ def hll_estimate(sketch: DataFrame, p: int = DEFAULT_HLL_P) -> DataFrame:
     integers 2^(60−p+1−M)·…) so both engines agree bit-for-bit; the
     result rounds to 6 dp HALF_UP.
     """
-    m = 1 << p
-    width = 60 - p
+    m = 1 << DEFAULT_HLL_P
+    width = 60 - DEFAULT_HLL_P
     alpha = 0.7213 / (1.0 + 1.079 / m)
     # absent registers contribute 2^0 = 1 each, i.e. scale 2^(width+1-0)
     # relative to scale factor 2^(width+1); present register M_j
@@ -655,16 +651,16 @@ def quantile_estimate_by(
 
 
 def hll_sketch_by(
-    df: DataFrame, keys: Sequence[str], col: str, p: int = DEFAULT_HLL_P
+    df: DataFrame, keys: Sequence[str], col: str
 ) -> DataFrame:
     """Per-key HLL register relation ``(*keys, register, maxrank)`` —
     ≤ 2^p rows per key, same portable-hash determinism as
     :func:`hll_sketch`; one map-side-combining groupBy on
     (keys, register)."""
-    m = 1 << p
+    m = 1 << DEFAULT_HLL_P
     h = portable_hash60(F.col(col))
-    w = F.shiftright(h, p)
-    width = 60 - p
+    w = F.shiftright(h, DEFAULT_HLL_P)
+    width = 60 - DEFAULT_HLL_P
     rank = F.when(w == 0, F.lit(width + 1)).otherwise(
         F.lit(width) - F.length(F.bin(w)) + 1
     )
@@ -688,13 +684,13 @@ def hll_merge_by(*sketches: DataFrame, keys: Sequence[str]) -> DataFrame:
 
 
 def hll_estimate_by(
-    sketch: DataFrame, keys: Sequence[str], p: int = DEFAULT_HLL_P
+    sketch: DataFrame, keys: Sequence[str]
 ) -> DataFrame:
     """Per-key estimates ``(*keys, estimate)`` — the :func:`hll_estimate`
     closed form (exact DECIMAL harmonic sum, small-range correction,
     6-dp round) applied per group in one groupBy."""
-    m = 1 << p
-    width = 60 - p
+    m = 1 << DEFAULT_HLL_P
+    width = 60 - DEFAULT_HLL_P
     alpha = 0.7213 / (1.0 + 1.079 / m)
     scale = float(2 ** (width + 1))
     agg = sketch.groupBy(*keys).agg(

@@ -38,12 +38,10 @@ from fdf_spark.llm.hashing import portable_hash60
 
 def dup_spans(
     df: DataFrame,
-    text: str = "text",
-    id_col: str = "doc_id",
     n: int = 8,
     min_count: int = 2,
 ) -> DataFrame:
-    """→ (id_col, span_start, span_end, n_grams): merged word-offset
+    """→ (doc_id, span_start, span_end, n_grams): merged word-offset
     intervals covered by ``n``-grams occurring ≥ ``min_count`` times
     corpus-wide (all occurrences count, including within one document).
 
@@ -52,7 +50,7 @@ def dup_spans(
     """
     from fdf_spark.sources.tables import spread
 
-    words = F.split(F.lower(F.col(text)), r"\s+")
+    words = F.split(F.lower(F.col("text")), r"\s+")
     idx = F.sequence(F.lit(1), F.size(words) - (n - 1))
     grams = F.when(
         F.size(words) >= n,
@@ -61,9 +59,9 @@ def dup_spans(
     # positions from posexplode are the 0-based word offsets
     sh = (
         spread(df)
-        .select(F.col(id_col), F.posexplode(grams).alias("pos", "g"))
+        .select(F.col("doc_id"), F.posexplode(grams).alias("pos", "g"))
         .select(
-            id_col,
+            "doc_id",
             F.col("pos").cast("bigint").alias("pos"),
             portable_hash60(F.col("g")).alias("h"),
         )
@@ -75,11 +73,11 @@ def dup_spans(
     hits = (
         sh.withColumn("__c", F.count(F.lit(1)).over(W.partitionBy("h")))
         .filter(F.col("__c") >= min_count)
-        .select(id_col, "pos", (F.col("pos") + n).alias("e"))
+        .select("doc_id", "pos", (F.col("pos") + n).alias("e"))
     )
     # gaps-and-islands: a hit starts a new island iff it begins past the
     # running max end of every earlier hit in the document
-    w = W.partitionBy(id_col).orderBy("pos")
+    w = W.partitionBy("doc_id").orderBy("pos")
     prev_max_end = F.max("e").over(w.rowsBetween(W.unboundedPreceding, -1))
     marked = hits.withColumn(
         "new_island", (F.col("pos") > F.coalesce(prev_max_end, F.lit(-1))).cast("int")
@@ -88,7 +86,7 @@ def dup_spans(
         "island", F.sum("new_island").over(w.rowsBetween(W.unboundedPreceding, 0))
     )
     return (
-        islands.groupBy(id_col, "island")
+        islands.groupBy("doc_id", "island")
         .agg(
             F.min("pos").alias("span_start"),
             F.max("e").alias("span_end"),
@@ -98,15 +96,16 @@ def dup_spans(
     )
 
 
-def sql_dup_spans(n: int = 8, min_count: int = 2) -> str:
-    """DuckDB twin of :func:`dup_spans` over the ``documents`` view."""
+def sql_dup_spans() -> str:
+    """DuckDB twin of :func:`dup_spans` (``n=8``, ``min_count=2``) over
+    the ``documents`` view."""
     return f"""
     WITH docs AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS w FROM documents),
     sh AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
-                  CAST('0x' || substr(md5(array_to_string(w[i+1:i+{n}], ' ')), 1, 15) AS BIGINT) AS h
-           FROM docs, LATERAL unnest(range(greatest(len(w) - {n - 1}, 0))) t(i)),
-    dup AS (SELECT h FROM sh GROUP BY h HAVING COUNT(*) >= {min_count}),
-    hits AS (SELECT doc_id, pos, pos + {n} AS e FROM sh JOIN dup USING (h)),
+                  CAST('0x' || substr(md5(array_to_string(w[i+1:i+8], ' ')), 1, 15) AS BIGINT) AS h
+           FROM docs, LATERAL unnest(range(greatest(len(w) - 7, 0))) t(i)),
+    dup AS (SELECT h FROM sh GROUP BY h HAVING COUNT(*) >= 2),
+    hits AS (SELECT doc_id, pos, pos + 8 AS e FROM sh JOIN dup USING (h)),
     marked AS (
       SELECT doc_id, pos, e,
              CASE WHEN pos > COALESCE(MAX(e) OVER (PARTITION BY doc_id ORDER BY pos

@@ -27,20 +27,20 @@ def _words(text: Column) -> Column:
     return F.split(F.lower(text), TOKEN_SPLIT)
 
 
-def text_stats(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
+def text_stats(df: DataFrame) -> DataFrame:
     """Per-document stats: token/char counts, word-length, ratios,
     and a deterministic linear quality score."""
-    t = F.col(text)
+    t = F.col("text")
     words = _words(t)
-    # r14: the stopword counter is a lambda-filter (CodegenFallback, no
+    # the stopword counter is a lambda-filter (CodegenFallback, no
     # CSE) referenced by BOTH stopword_ratio and quality_score — stage
     # it (and the token count) into their own projection so the
     # interpreted array pass runs once per row, not twice (same
     # two-stage pattern as language_id; measured 0.54 s → 0.45 s
     # min-of-4 on 5k docs at sf0.1). The regexp/length terms stay
     # inline — they are codegen'd and subexpression-eliminated.
-    df = df.select(F.col(id_col), t, words.alias("__w")).select(
-        F.col(id_col),
+    df = df.select(F.col("doc_id"), t, words.alias("__w")).select(
+        F.col("doc_id"),
         t,
         F.size("__w").alias("__n"),
         F.size(F.filter(F.col("__w"), lambda w: w.isin(EN_STOPWORDS))).alias("__stop"),
@@ -60,7 +60,7 @@ def text_stats(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> Dat
         6,
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_tokens.alias("n_tokens"),
         bpe_tokens.alias("n_bpe_tokens"),
         n_chars.alias("n_chars_calc"),
@@ -72,8 +72,8 @@ def text_stats(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> Dat
     )
 
 
-def language_id(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Heuristic language ID → (id_col, pred_lang, lang_score).
+def language_id(df: DataFrame) -> DataFrame:
+    """Heuristic language ID → (doc_id, pred_lang, lang_score).
 
     CJK codepoints → 'zh'; otherwise argmax of per-language stopword-
     marker hit ratios (deterministic tie-break by language code).
@@ -81,7 +81,7 @@ def language_id(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> Da
     the *shape* (scored multi-way CASE over token sets), which scales
     to real char-n-gram profile tables joined in as data.
     """
-    # r14 two-stage projection: the scored CASE chain below references
+    # two-stage projection: the scored CASE chain below references
     # each language score ~5x (greatest + per-language tie-break + the
     # score column), and the lambda-filter hit counters are
     # CodegenFallback expressions — no common-subexpression
@@ -94,7 +94,7 @@ def language_id(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> Da
     # scores from the integer hit columns, where re-evaluation is a
     # division. Same expressions, same rounding — bit-identical
     # output, 0.44 s after (5x).
-    words = _words(F.col(text))
+    words = _words(F.col("text"))
 
     def marker_hits(markers):
         # closure factory: a default-arg lambda would have 2 params and
@@ -102,13 +102,13 @@ def language_id(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> Da
         return F.size(F.filter(F.col("__w"), lambda w: w.isin(markers)))
 
     staged = df.select(
-        F.col(id_col),
-        F.col(text),
+        F.col("doc_id"),
+        F.col("text"),
         words.alias("__w"),
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("__w").alias("__n"),
-        (F.regexp_count(F.col(text), F.lit("[\\x{4e00}-\\x{9fff}]")) > 0).alias("__cjk"),
+        (F.regexp_count(F.col("text"), F.lit("[\\x{4e00}-\\x{9fff}]")) > 0).alias("__cjk"),
         *[marker_hits(m).alias(f"__h_{lang}") for lang, m in LANG_MARKERS.items()],
     )
     scores = {
@@ -121,19 +121,19 @@ def language_id(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> Da
     pred = F.when(best_score <= 0, F.lit("unknown")).otherwise(pred)
     has_cjk = F.col("__cjk")
     return staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.when(has_cjk, F.lit("zh")).otherwise(pred).alias("pred_lang"),
         F.round(F.when(has_cjk, F.lit(1.0)).otherwise(best_score), 6).alias("lang_score"),
     )
 
 
-def fingerprint(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Normalized-content fingerprint (md5 of lowercased, punctuation-
-    stripped, whitespace-collapsed text) → (id_col, fp). The standard
+    stripped, whitespace-collapsed text) → (doc_id, fp). The standard
     'same modulo formatting' dedup key."""
     norm = F.trim(
         F.regexp_replace(
-            F.regexp_replace(F.lower(F.col(text)), "[^a-z0-9\\s]", ""), "\\s+", " "
+            F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9\\s]", ""), "\\s+", " "
         )
     )
-    return df.select(F.col(id_col), F.md5(norm).alias("fp"))
+    return df.select(F.col("doc_id"), F.md5(norm).alias("fp"))

@@ -31,45 +31,48 @@ from pyspark.sql import functions as F
 
 UNK_ID = 0
 
+#: vocab size from which :func:`tokenize_vocab` runs its Arrow kernel
+#: instead of the map-literal expression.  Measured on 5,000 sf0.1
+#: documents (noop sink, min of 3, local[4]): the expression costs about
+#: 0.7 ms more per vocab entry (0.35 s at 66 entries, 0.43 s at 256,
+#: 0.88 s at 1,024, 1.62 s at 2,048) while the kernel stays at
+#: 0.25-0.29 s, so the expression is kept only while it is within
+#: ~0.2 s of the kernel
+_ARROW_MIN_VOCAB = 256
+
 
 def _word_split(text: Column) -> Column:
     return F.filter(F.split(F.lower(text), r"[^a-z0-9]+"), lambda w: w != F.lit(""))
 
 
-def tokenize_vocab(
-    df: DataFrame,
-    vocab: dict[str, int],
-    text: str = "text",
-    id_col: str = "doc_id",
-    mode: str = "expr",
-) -> DataFrame:
-    """→ (id_col, token_ids array<int>): greedy word-level encode with
-    per-character fallback — word in vocab → its id; else each char's
-    id; unknown chars → UNK_ID (0).  ``vocab`` ids must be ≥ 1.
+def tokenize_vocab(df: DataFrame, vocab: dict[str, int]) -> DataFrame:
+    """(doc_id, text) → (doc_id, token_ids array<int>): greedy
+    word-level encode with per-character fallback — word in vocab → its
+    id; else each char's id; unknown chars → UNK_ID (0).  ``vocab`` ids
+    must be ≥ 1.
 
-    Both modes are one scan, zero shuffles; the split is vocab SIZE:
+    Both tiers are one scan, zero shuffles; ``len(vocab)`` picks one:
 
-    - ``mode="expr"``: pure column algebra over a ``create_map``
-      literal — no Python anywhere, exactly SQL-replayable.  Only for
-      small vocabs: Catalyst chokes on a 50k-entry map literal
-      (analysis/codegen blow up — measured a >10 min hang at 100k
-      expressions), so this tier is for the oracle-checked shape and
-      char-level/POC vocabs.
-    - ``mode="arrow"``: an Arrow kernel
+    - below ``_ARROW_MIN_VOCAB`` entries: pure column algebra over a
+      ``create_map`` literal — no Python anywhere, exactly
+      SQL-replayable (the oracle-checked q118 shape, char-level/POC
+      vocabs).  Catalyst chokes on a large map literal (analysis/codegen
+      blow up — measured a >10 min hang at 100k expressions);
+    - from ``_ARROW_MIN_VOCAB`` entries: an Arrow kernel
       (:func:`~fdf_spark.functions.kernels.arrow_kernel`) with the vocab
       dict closure-shipped (pickled once per task, like a broadcast
-      var) — the production tier for real 50k+ vocabs; equivalence to
-      expr mode is pytest-asserted on a shared small vocab.
+      var) — the tier for real 50k+ vocabs.  Equivalence of the two is
+      pytest-asserted on a shared small vocab.
     """
     if any(v <= UNK_ID for v in vocab.values()):
         raise ValueError("vocab ids must be >= 1 (0 is reserved for UNK)")
-    if mode == "arrow":
+    if len(vocab) >= _ARROW_MIN_VOCAB:
         from fdf_spark.functions.kernels import arrow_kernel
 
         def encode(batch):
             get = vocab.get
             out = []
-            for t in batch[text].to_pylist():
+            for t in batch["text"].to_pylist():
                 ids: list[int] = []
                 for w in _py_word_split(t):
                     wid = get(w)
@@ -81,12 +84,10 @@ def tokenize_vocab(
             return {"token_ids": out}
 
         return arrow_kernel(
-            df.select(id_col, text), encode, f"{id_col}, token_ids array<int>"
+            df.select("doc_id", "text"), encode, "doc_id, token_ids array<int>"
         )
-    if mode != "expr":
-        raise ValueError(f"unknown mode {mode!r}")
     vmap = F.create_map(*[F.lit(x) for kv in vocab.items() for x in kv])
-    words = _word_split(F.col(text))
+    words = _word_split(F.col("text"))
     per_word = F.transform(
         words,
         lambda w: F.when(vmap[w].isNotNull(), F.array(vmap[w].cast("int"))).otherwise(
@@ -96,7 +97,7 @@ def tokenize_vocab(
             )
         ),
     )
-    return df.select(F.col(id_col), F.flatten(per_word).alias("token_ids"))
+    return df.select(F.col("doc_id"), F.flatten(per_word).alias("token_ids"))
 
 
 # --- real BPE ---------------------------------------------------------------
@@ -121,10 +122,9 @@ def _bpe_encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
 def tokenize_bpe(
     df: DataFrame,
     merges: list[tuple[str, str]],
-    text: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """→ (id_col, pieces array<string>): byte-pair encoding with the
+    """(doc_id, text) → (doc_id, pieces array<string>): byte-pair
+    encoding with the
     learned ``merges`` list (rank = list position), Arrow-batched.
 
     The merge loop is per-word iterative — the honest UDF case.  The
@@ -138,7 +138,7 @@ def tokenize_bpe(
 
     def encode(batch):
         out = []
-        for t in batch[text].to_pylist():
+        for t in batch["text"].to_pylist():
             pieces: list[str] = []
             for w in _py_word_split(t):
                 got = cache.get(w)
@@ -148,7 +148,7 @@ def tokenize_bpe(
             out.append(pieces)
         return {"pieces": out}
 
-    return arrow_kernel(df.select(id_col, text), encode, f"{id_col}, pieces array<string>")
+    return arrow_kernel(df.select("doc_id", "text"), encode, "doc_id, pieces array<string>")
 
 
 def _py_word_split(t: str) -> list[str]:
@@ -172,7 +172,7 @@ def _pruned_vocab(df: DataFrame, text: str, min_count: int) -> DataFrame:
 
 
 def learn_bpe(
-    df: DataFrame, num_merges: int = 50, text: str = "text", min_count: int = 1
+    df: DataFrame, num_merges: int = 50, min_count: int = 1
 ) -> list[tuple[str, str]]:
     """Learn a BPE merge list from the corpus: ``num_merges`` rounds of
     (count adjacent pairs weighted by word frequency, merge the most
@@ -197,7 +197,7 @@ def learn_bpe(
     """
     merges: list[tuple[str, str]] = []
     word_counts = [
-        (r["w"], r["count"]) for r in _pruned_vocab(df, text, min_count).collect()
+        (r["w"], r["count"]) for r in _pruned_vocab(df, "text", min_count).collect()
     ]
     # the vocab of distinct words is tiny relative to the corpus (Zipf);
     # the merge loop itself runs driver-side over (word, count) pairs —

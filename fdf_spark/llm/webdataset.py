@@ -149,7 +149,6 @@ def stream_webdataset_sink(
     stream: DataFrame,
     path: str,
     prefix: str = "shard",
-    shard_max_bytes: int = 256 * 1024 * 1024,
     checkpoint: str | None = None,
 ):
     """Continuous shard landing: every micro-batch's samples become tar
@@ -175,10 +174,7 @@ def stream_webdataset_sink(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        manifest = write_webdataset(
-            batch_df, path, prefix=f"{prefix}-b{batch_id:06d}",
-            shard_max_bytes=shard_max_bytes,
-        ).collect()
+        manifest = write_webdataset(batch_df, path, prefix=f"{prefix}-b{batch_id:06d}").collect()
         entry = {
             "batch_id": batch_id,
             "shards": [r.shard for r in manifest],

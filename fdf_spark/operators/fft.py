@@ -89,9 +89,9 @@ def fft_power_batched(
     time: str = "time",
     by: Sequence[str] = ("shot", "channel"),
     n_bins: int | None = None,
-    detrend: bool = True,
 ) -> DataFrame:
-    """Same spectrum as :func:`fft_power`, shaped for HIGH-CARDINALITY
+    """Same spectrum as :func:`fft_power` (mean removed, DC bin
+    dropped), shaped for HIGH-CARDINALITY
     SMALL groups (many series × few samples — e.g. per-user event
     traces): the group's samples are gathered and time-sorted JVM-side
     (``collect_list`` + ``array_sort``, map-side partial aggregation),
@@ -144,14 +144,12 @@ def fft_power_batched(
             if n < 2:
                 out.append([])
                 continue
-            if detrend:
-                x = x - x.mean()
+            x = x - x.mean()
             dt = float(np.median(np.diff(t))) or 1.0
             spec = np.fft.rfft(x)
             power = (spec.real**2 + spec.imag**2) / n
             freqs = np.fft.rfftfreq(n, d=dt)
-            start = 1 if detrend else 0
-            k = slice(start, None if n_bins is None else start + n_bins)
+            k = slice(1, None if n_bins is None else 1 + n_bins)
             bins = np.arange(len(power))[k]
             out.append(
                 [

@@ -42,7 +42,6 @@ def gradient(
     axis: str = "time",
     by: Sequence[str] = ("shot",),
     out: str = "grad",
-    round_to: int | None = None,
 ) -> DataFrame:
     """Append column ``out`` = d(value)/d(axis) per ``by`` series.
 
@@ -69,8 +68,6 @@ def gradient(
         .when(xp.isNull(), backward)
         .otherwise(interior)
     )
-    if round_to is not None:
-        g = F.round(g, round_to)
     return df.withColumn(out, g)
 
 

@@ -33,13 +33,11 @@ from pyspark.sql import functions as F
 
 def connected_components(
     edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
     nodes: DataFrame | None = None,
     node_col: str | None = None,
     max_iter: int = 25,
 ) -> DataFrame:
-    """Components of the undirected graph → (node, component).
+    """Components of the undirected ``(id_a, id_b)`` edge graph → (node, component).
 
     ``component`` is the smallest node id reachable from ``node``
     (including itself). ``nodes`` (optional) adds isolated vertices,
@@ -49,10 +47,10 @@ def connected_components(
     # directions and the vertex set from the blocks — the old shape
     # checkpointed the union (each branch re-ran the upstream pair
     # pipeline: 2 runs) and built labels from the raw plan (a 3rd run).
-    # r15 profile on q154: those duplicate runs were ~half the
+    # Profiled on q154, those duplicate runs were ~half the
     # operator's wall time; values identical either way.
     directed = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
+        F.col("id_a").alias("u"), F.col("id_b").alias("v")
     ).localCheckpoint(eager=True)
     und = directed.unionByName(
         directed.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -60,7 +58,7 @@ def connected_components(
     vertices = und.select(F.col("u").alias("node"))
     if nodes is not None:
         vertices = vertices.unionByName(
-            nodes.select(F.col(node_col or src).alias("node"))
+            nodes.select(F.col(node_col or "id_a").alias("node"))
         )
     labels = vertices.distinct().withColumn("component", F.col("node"))
     labels = labels.localCheckpoint(eager=True)
@@ -96,19 +94,15 @@ def connected_components(
 
 def pagerank(
     edges: DataFrame,
-    damping: float = 0.85,
     iters: int = 3,
-    src: str = "src",
-    dst: str = "dst",
-    decimals: int = 9,
 ) -> DataFrame:
-    """Fixed-point PageRank → (node, rank) after ``iters`` power
-    iterations (simplified variant: dangling mass is dropped, the
+    """Fixed-point PageRank of ``(src, dst)`` edges, damping 0.85 →
+    (node, rank) after ``iters`` power iterations (simplified variant: dangling mass is dropped, the
     common formulation when ranking within a link graph whose dangling
     tail is cut).
 
     Determinism contract (what makes an unrolled SQL oracle replay it
-    bit-for-bit): per-edge contributions round at ``decimals`` dp, the
+    bit-for-bit): per-edge contributions round at 9 dp, the
     per-node sum accumulates in exact decimal, and the new rank rounds
     again — a fixed-point iteration, so the result is independent of
     partition count and join order on ANY engine.
@@ -122,24 +116,24 @@ def pagerank(
     ``iters``; at the default 3 the plan stays shallow without it.
     """
     nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
+        edges.select(F.col("src").alias("node"))
+        .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
     n = nodes.count()
-    deg = edges.groupBy(src).agg(F.count("*").alias("deg"))
+    deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     # base/init built from Column arithmetic (Spark HALF_UP round), not
     # Python round() (banker's) — the SQL oracle does the same division
-    base = F.round((F.lit(1.0) - F.lit(damping)) / F.lit(float(n)), decimals)
-    acc = f"decimal(25,{decimals})"
-    ranks = nodes.withColumn("rank", F.round(F.lit(1.0) / F.lit(float(n)), decimals))
+    base = F.round((F.lit(1.0) - F.lit(0.85)) / F.lit(float(n)), 9)
+    acc = "decimal(25,9)"
+    ranks = nodes.withColumn("rank", F.round(F.lit(1.0) / F.lit(float(n)), 9))
     for _ in range(iters):
         contrib = (
-            edges.join(ranks.withColumnRenamed("node", src), src)
-            .join(deg, src)
+            edges.join(ranks.withColumnRenamed("node", "src"), "src")
+            .join(deg, "src")
             .select(
-                F.col(dst).alias("node"),
-                F.round(F.col("rank") / F.col("deg"), decimals).alias("c"),
+                F.col("dst").alias("node"),
+                F.round(F.col("rank") / F.col("deg"), 9).alias("c"),
             )
         )
         summed = contrib.groupBy("node").agg(
@@ -147,7 +141,7 @@ def pagerank(
         )
         ranks = nodes.join(summed, "node", "left").select(
             "node",
-            F.round(base + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0)), decimals).alias(
+            F.round(base + F.lit(0.85) * F.coalesce(F.col("s"), F.lit(0.0)), 9).alias(
                 "rank"
             ),
         )

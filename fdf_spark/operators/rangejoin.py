@@ -31,7 +31,6 @@ def range_join(
     hi_col: str,
     bucket_width: float,
     by: Sequence[str] = (),
-    how: str = "inner",
 ) -> DataFrame:
     """Join each point row to interval rows with lo <= p < hi.
 
@@ -48,7 +47,7 @@ def range_join(
         F.floor(F.col(hi_col) / F.lit(bucket_width)).cast("long"),
     )
     ivs = intervals.withColumn("__bucket", F.explode(span))
-    out = pts.join(ivs, by + ["__bucket"], how).filter(
+    out = pts.join(ivs, by + ["__bucket"], "inner").filter(
         (F.col(point_col) >= F.col(lo_col)) & (F.col(point_col) < F.col(hi_col))
     )
     return out.drop("__bucket")

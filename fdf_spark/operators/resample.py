@@ -34,7 +34,6 @@ def resample_linear(
     axis: str,
     grid: DataFrame,
     by: Sequence[str] = (),
-    value: str = "value",
 ) -> DataFrame:
     """Linear interpolation of ``value`` onto ``grid``'s axis points.
 
@@ -47,7 +46,7 @@ def resample_linear(
     window sees them).
     """
     by = list(by)
-    s = df.select(*by, F.col(axis).alias("__t"), F.col(value).alias("__v")).withColumn(
+    s = df.select(*by, F.col(axis).alias("__t"), F.col("value").alias("__v")).withColumn(
         "__is_grid", F.lit(0)
     )
     g = grid.select(*by, F.col(axis).alias("__t")).withColumn(
@@ -79,5 +78,5 @@ def resample_linear(
     )
     return (
         u.filter(F.col("__is_grid") == 1)
-        .select(*by, F.col("__t").alias(axis), interp.alias(value))
+        .select(*by, F.col("__t").alias(axis), interp.alias("value"))
     )

@@ -49,7 +49,6 @@ def salted_join(
     right: DataFrame,
     on: Sequence[str],
     salt_n: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
     """Equi-join with the left side's hot keys spread over ``salt_n``
     sub-keys and the right side replicated ``salt_n`` times.
@@ -65,5 +64,5 @@ def salted_join(
     rhs = right.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_n - 1)))
     )
-    out = lhs.join(rhs, on + ["__salt"], how)
+    out = lhs.join(rhs, on + ["__salt"], "inner")
     return out.drop("__salt")

@@ -11,8 +11,7 @@ Scale shape: all row rules evaluate as `sum(case when ...)` columns in
 a SINGLE aggregate over one scan — map-side partials, a 1-row result.
 Key-uniqueness needs a shuffle by definition (duplicate detection is a
 groupBy on the key); it shares the same output schema so the audit is
-one relation. The violation SAMPLE (for debugging) is a separate
-bounded query, not part of the audit scan.
+one relation.
 """
 
 from __future__ import annotations
@@ -64,19 +63,3 @@ def validate(
         )
         long = dup if long is None else long.unionByName(dup)
     return long.orderBy("rule")
-
-
-def violation_sample(
-    df: DataFrame, rules: Mapping[str, Column], n: int = 20
-) -> DataFrame:
-    """Bounded sample of offending rows per rule (debugging aid):
-    → rule + the offending row columns, ≤ ``n`` rows per rule."""
-    out = None
-    for name, pred in rules.items():
-        bad = (
-            df.filter(~F.coalesce(pred, F.lit(False)))
-            .limit(n)
-            .select(F.lit(name).alias("rule"), "*")
-        )
-        out = bad if out is None else out.unionByName(bad)
-    return out

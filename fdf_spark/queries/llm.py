@@ -1432,9 +1432,9 @@ def q134_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys = orders.select(
         F.col("o_custkey").cast("string").alias("key")
     ).distinct()
-    bloom = bloom_build(keys, "key", m_bits=_BLOOM_M, k=_BLOOM_K)
+    bloom = bloom_build(keys, m_bits=_BLOOM_M, k=_BLOOM_K)
     probes = cust.select(F.col("c_custkey").cast("string").alias("key"))
-    verdict = bloom_might_contain(bloom, probes, "key", m_bits=_BLOOM_M, k=_BLOOM_K)
+    verdict = bloom_might_contain(bloom, probes, m_bits=_BLOOM_M, k=_BLOOM_K)
     return (
         verdict.join(keys.withColumn("is_member", F.lit(True)), "key", "left")
         .select(
@@ -2615,7 +2615,7 @@ def q103_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
         ).alias("aug"),
     )
-    return detect_pii(aug, text="aug", id_col="doc_id").orderBy("doc_id")
+    return detect_pii(aug, text="aug").orderBy("doc_id")
 
 
 from fdf_spark.llm.spans import sql_dup_spans as _sql_dup_spans  # noqa: E402
@@ -2623,7 +2623,7 @@ from fdf_spark.llm.spans import sql_dup_spans as _sql_dup_spans  # noqa: E402
 
 @query(
     "q104_dup_spans",
-    _sql_dup_spans(n=8, min_count=2),
+    _sql_dup_spans(),
     operators=("N2",),
     doc="Span-level exact substring dedup (Lee et al. 2022, "
     "arXiv:2107.06499): merged [start,end) word-offset intervals covered "
@@ -2851,22 +2851,16 @@ def q111_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators=("N10", "N9"),
     doc="Segment-sharded inverted index (Lucene storage model as a "
     "relation): per (term, doc-bucket segment) the df/cf stats and the "
-    "doc_id-sorted postings string. Term frequencies are map-side array "
-    "expressions — the only shuffle carries one row per (doc, distinct "
-    "term), never per token occurrence; 2 segments split every hot "
+    "doc_id-sorted postings string. Term frequencies are an exploded "
+    "token count whose map-side partial aggregate ships one row per (doc, "
+    "distinct term), never per token occurrence; 2 segments split every hot "
     "term's reduce across buckets (at 100 TB: segments bound skew AND "
     "row width, and are the parquet partition key).",
 )
 def q112_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fdf_spark.llm.ranking import inverted_index
 
-    # r15: tf_mode="explode" — the map-side tf pass is an interpreted
-    # HOF tree (distinct × filter-count per doc, no CSE) that measured
-    # 2.35 s vs 0.68 s for the explode plan at sf0.1 even on these
-    # ~54-word docs; the explode plan's extra exchange carries one row
-    # per (doc, distinct term) (map-side partial agg) and is pure
-    # codegen. Output identical (asserted in pytest; oracle green).
-    idx = inverted_index(T(spark, sf_dir, "documents"), num_segments=2, tf_mode="explode")
+    idx = inverted_index(T(spark, sf_dir, "documents"), num_segments=2)
     return idx.select(
         "term",
         "segment",
@@ -4208,7 +4202,7 @@ def q187_index_sync_via_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         cp, ip = f"{d}/corpus", f"{d}/index"
         commit_version(emb.filter(F.col("vec_id") >= 10), cp)
-        write_ivf_pq_index(read_version(spark, cp), ip, corpus_id="vec_id")
+        write_ivf_pq_index(read_version(spark, cp), ip)
         commit_version(emb.filter(F.col("vec_id") < 10), cp)
         delete_where(spark, cp, "vec_id % 17 = 3")
         merge_on_read(

@@ -37,7 +37,8 @@ DEFAULT_LOCAL_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 #: per-batch deltas (snapshot upload moves to background maintenance).
 #: Bounded-state operators (``watermark_dedup``, windowed aggs — state
 #: expires with the watermark) run fine on either provider; pass
-#: ``rocksdb_state=True`` to :func:`get_spark` for the unbounded tier.
+#: ``extra_conf=ROCKSDB_STATE_CONF`` to :func:`get_spark` for the
+#: unbounded tier.
 #: No conf here changes query SEMANTICS — only where state lives.
 ROCKSDB_STATE_CONF: dict[str, str] = {
     "spark.sql.streaming.stateStore.providerClass":
@@ -51,7 +52,6 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    rocksdb_state: bool = False,
 ) -> SparkSession:
     """Create (or reuse) the tuned SparkSession.
 
@@ -91,9 +91,6 @@ def get_spark(
         # conf is left default — there, split count comes from file
         # count/size and a floor this low is a no-op.
         builder = builder.config("spark.sql.files.minPartitionNum", str(cpus))
-    if rocksdb_state:
-        for k, v in ROCKSDB_STATE_CONF.items():
-            builder = builder.config(k, v)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

@@ -256,6 +256,10 @@ def _probe_hashes(entry: dict, v) -> tuple[int, int]:
     raise TypeError(f"unknown bloom sidecar type {t!r}")
 
 
+#: target false-positive rate of every sidecar built by :func:`build_blooms`
+_FPP = 0.01
+
+
 def _params(n_rows: int, fpp: float) -> tuple[int, int]:
     """(m bits, k hashes) for ``n_rows`` at target false-positive rate."""
     n = max(1, n_rows)
@@ -507,8 +511,6 @@ def build_blooms(
     spark: SparkSession,
     path: str,
     cols,
-    fpp: float = 0.01,
-    version: int | None = None,
 ) -> dict:
     """Build missing ``<file>.bloom.json`` sidecars for a snapshot's
     live files — ONE Spark job over exactly the uncovered files (an
@@ -518,8 +520,8 @@ def build_blooms(
 
     Executor side: the uncovered files are read under an EXPLICIT
     physical schema derived from the manifest (pre-evolution files
-    yield NULL for later-added columns instead of failing inference —
-    ADVICE r12), projected to ``cols`` + ``_metadata.file_path``,
+    yield NULL for later-added columns instead of failing inference),
+    projected to ``cols`` + ``_metadata.file_path``,
     grouped per file; each group folds its values into the bitset with
     vectorized numpy (splitmix64 for int/date/timestamp, two-basis
     FNV-1a for strings — the SAME functions the driver-side probe
@@ -527,8 +529,7 @@ def build_blooms(
     data file (tmp + ``os.replace`` — atomic rename; a retried or
     speculative task simply replaces an identical sidecar).  Only a
     ``(file, built)`` row per file returns to the driver: a backfill
-    over 10^12 rows holds no bitset bytes in driver memory
-    (VERDICT r12 #1).
+    over 10^12 rows holds no bitset bytes in driver memory.
 
     Concurrency note: two builds racing on the SAME file for DIFFERENT
     column sets are last-writer-wins on the sidecar (each merges with
@@ -536,7 +537,7 @@ def build_blooms(
     superset guarantee (a missing bloom only costs pruning, never
     rows), self-healing (``_covered`` reports the gap and the next
     incremental run rebuilds it, as does ``plan_maintenance``), and
-    unchanged from the pre-r13 driver-side writer.
+    the same as under a driver-side writer.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructField, StructType
@@ -552,7 +553,7 @@ def build_blooms(
     versions = list_versions(path)
     if not versions:
         raise FileNotFoundError(f"no versions at {path}")
-    v = versions[-1] if version is None else version
+    v = versions[-1]
     m = _read_manifest(path, v)
     schema = _logical_schema(m)
     if schema is not None:
@@ -573,8 +574,8 @@ def build_blooms(
     def _covered(f: str) -> bool:
         # a sidecar counts only if it carries EVERY requested column —
         # adding a bloom on a new column must rebuild existing files'
-        # sidecars too (code-review r12 finding: mere existence let a
-        # second build_blooms call silently index nothing); params-only
+        # sidecars too (mere existence would let a second build_blooms
+        # call silently index nothing); params-only
         # read — no bitset decode, no cache churn
         sc = sidecar_meta(f)
         return sc is not None and all(p in sc for p in phys)
@@ -583,7 +584,6 @@ def build_blooms(
     if not todo:
         return {"built": 0, "skipped": len(m["files"]), "cols": cols}
 
-    fpp_ = fpp
     phys_ = list(phys)
 
     def _fold(tbl):
@@ -591,7 +591,7 @@ def build_blooms(
         # int64-with-nulls exactly (validity mask), where a pandas
         # handler would promote the column to float64 and hash "7.0"
         # through the string path — a bloom false NEGATIVE, i.e. silent
-        # row loss on probe (code-review r12 finding).
+        # row loss on probe.
         import base64 as b64
         import hashlib
         import json as _json
@@ -602,7 +602,7 @@ def build_blooms(
 
         fname = tbl.column("__file")[0].as_py()
         n = tbl.num_rows
-        mbits, k = _params(n, fpp_)
+        mbits, k = _params(n, _FPP)
         sidecar = {}
         for pc in phys_:
             col = tbl.column(pc).combine_chunks()
@@ -616,7 +616,7 @@ def build_blooms(
             vals = col.drop_null()
             bits = np.zeros(mbits // 8, dtype=np.uint8)
             entry = {
-                "m": mbits, "k": k, "n": int(n), "fpp": fpp_,
+                "m": mbits, "k": k, "n": int(n), "fpp": _FPP,
                 "type": ctype, "algo": "splitmix64",
             }
             if pa.types.is_integer(col.type):
@@ -677,7 +677,8 @@ def build_blooms(
             entry["bits"] = b64.b64encode(bits.tobytes()).decode("ascii")
             sidecar[pc] = entry
 
-        # EXECUTOR-SIDE sidecar write (VERDICT r12 #1): merge with any
+        # EXECUTOR-SIDE sidecar write (no bitset bytes reach the
+        # driver): merge with any
         # pre-existing sidecar (keep columns an earlier build indexed
         # that this call didn't request), then the atomic stage+replace
         # seam (_write_sidecar_atomic — last-writer-wins by design; a
@@ -699,7 +700,7 @@ def build_blooms(
 
     from fdf_spark.sources.versioned import _norm_file_path
 
-    # explicit PHYSICAL schema (ADVICE r12): a first-listed file that
+    # explicit PHYSICAL schema: a first-listed file that
     # predates a schema evolution must yield NULL columns, not fail
     # schema inference — same discipline as versioned._load_files
     reader = spark.read
@@ -726,7 +727,7 @@ def build_blooms(
     flagged = [r["file"] for r in df.collect() if r["built"]]
     for f in todo:
         _SIDECAR_CACHE.pop(f + BLOOM_SUFFIX, None)  # never serve stale decodes
-    # driver-side visibility verification (ADVICE r13): an executor that
+    # driver-side visibility verification: an executor that
     # wrote to non-shared storage would still flag built=True — count
     # only sidecars the DRIVER can reach, so coverage reporting
     # (table_blooms, plan_maintenance, this return) never promises

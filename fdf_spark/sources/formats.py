@@ -51,7 +51,6 @@ def write_table_as(
     df: DataFrame,
     path: str,
     fmt: str,
-    mode: str = "overwrite",
     compression: str | None = None,
 ) -> None:
     """Write ``df`` at ``path`` in ``fmt`` with roundtrip-safe options
@@ -66,7 +65,7 @@ def write_table_as(
     splittable at ~10x the CPU).
     """
     _check_fmt(fmt)
-    w = df.write.mode(mode)
+    w = df.write.mode("overwrite")
     if fmt == "csv":
         w = w.options(header=True, escape='"', timestampFormat=_TS_FMT)
     elif fmt == "json":

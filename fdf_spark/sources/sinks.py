@@ -32,7 +32,6 @@ def write_table(
     partition_by: Sequence[str] = ("shot",),
     sort_by: Sequence[str] = ("time",),
     mode: str = "overwrite",
-    fmt: str = "parquet",
     options: dict | None = None,
     bucket_by: tuple[str | Sequence[str], int] | None = None,
     table: str | None = None,
@@ -66,7 +65,7 @@ def write_table(
         missing = [c for c in key_cols if c not in df.columns]
         if missing:
             raise ValueError(f"bucket_by columns not in dataframe: {missing}")
-        writer = df.write.mode(mode).format(fmt)
+        writer = df.write.mode(mode).format("parquet")
         if options:
             writer = writer.options(**options)
         part_cols = [c for c in partition_by if c in df.columns]
@@ -83,7 +82,7 @@ def write_table(
         cols = [c for c in sort_by if c in df.columns]
         if cols:
             out = out.sortWithinPartitions(*[c for c in partition_by if c in df.columns], *cols)
-    writer = out.write.mode(mode).format(fmt)
+    writer = out.write.mode(mode).format("parquet")
     if options:
         writer = writer.options(**options)
     part_cols = [c for c in partition_by if c in df.columns]
@@ -96,12 +95,10 @@ def compact_table(
     spark,
     path: str,
     target_bytes: int = 128 * 1024 * 1024,
-    partition_by: Sequence[str] = ("shot",),
-    sort_by: Sequence[str] = ("time",),
 ) -> dict:
-    """Small-file compaction: rewrite a partitioned table so each
-    partition holds ~``target_bytes`` files, preserving the layout
-    contract (hive partitioning + within-file sort).
+    """Small-file compaction: rewrite a ``shot``-partitioned table so
+    each partition holds ~``target_bytes`` files, preserving the layout
+    contract (hive partitioning + within-file ``time`` sort).
 
     Streaming sinks and incremental appends degrade a table into
     thousands of KB-sized files per partition; at 100 TB that is the
@@ -130,7 +127,7 @@ def compact_table(
     before = _walk(path)
     total_bytes = sum(os.path.getsize(f) for f in before)
     df = spark.read.parquet(path)
-    part_cols = [c for c in partition_by if c in df.columns]
+    part_cols = ["shot"] if "shot" in df.columns else []
     # bytes/row from the listing + parquet footer row counts (count() on
     # a raw parquet scan is metadata-only) → maxRecordsPerFile, the
     # writer's deterministic sequential splitter: each partition dir
@@ -145,13 +142,7 @@ def compact_table(
         max(1, math.ceil(total_bytes / target_bytes))
     )
     tmp = path.rstrip("/") + ".__compact_tmp__"
-    write_table(
-        out,
-        tmp,
-        partition_by=partition_by,
-        sort_by=sort_by,
-        options={"maxRecordsPerFile": str(rows_per_file)},
-    )
+    write_table(out, tmp, options={"maxRecordsPerFile": str(rows_per_file)})
     old = path.rstrip("/") + ".__compact_old__"
     os.rename(path, old)
     os.rename(tmp, path)
@@ -161,16 +152,3 @@ def compact_table(
         "files_after": len(_walk(path)),
         "bytes": total_bytes,
     }
-
-
-def write_stream_sink(df: DataFrame, path: str, checkpoint: str, fmt: str = "parquet"):
-    """S8-adjacent: append a streaming DataFrame to a partitioned table
-    (the durable twin of the memory/foreachBatch sinks in
-    fdf_spark.streaming.events)."""
-    return (
-        df.writeStream.format(fmt)
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )

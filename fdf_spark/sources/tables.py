@@ -241,7 +241,7 @@ def _is_scan_like(df: DataFrame) -> bool:
     return True
 
 
-def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Repartition a narrow RAW SCAN up to the session's parallelism.
 
     Small fixture tables arrive as ONE parquet file → one input split →
@@ -262,7 +262,7 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """
     if not _is_scan_like(df):
         return df
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

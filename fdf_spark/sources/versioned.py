@@ -951,18 +951,26 @@ _TABLE_STATE = {
     "partition_specs": lambda: {"0": {"cols": []}},
     "current_spec": int,
     "file_specs": dict,
+    "stream_batches": dict,
 }
 
 
 def _successor(head: dict | None, version: int, mode: str, meta: dict, **changed) -> dict:
     """The manifest of ``version`` succeeding ``head`` (``None`` for a
-    table's first version): the head's table state, then ``changed``."""
+    table's first version): the head's table state, then ``changed``.
+
+    A commit whose ``meta`` names a ``stream_id`` and ``batch_id`` (a
+    streaming fold's micro-batch) records that batch as the stream's
+    high-water mark in ``stream_batches``, so the mark survives every
+    later commit, whichever writer makes it."""
     h = head or {}
     m = {"version": version, "parent": version - 1 if head is not None else None, "mode": mode}
     m.update((k, h[k] if k in h else make()) for k, make in _TABLE_STATE.items())
     if "schema" in h:
         m["schema"] = h["schema"]
     m["meta"] = meta
+    if "stream_id" in meta and "batch_id" in meta:
+        m["stream_batches"] = {**m["stream_batches"], meta["stream_id"]: meta["batch_id"]}
     m.update(changed)
     return m
 
@@ -1702,10 +1710,10 @@ def _cluster_by_spec(
     return out.sortWithinPartitions(*sort_cols)
 
 
-def partition_spec(path: str, version: int | None = None) -> dict:
-    """The spec in force at ``version`` (latest if None):
+def partition_spec(path: str) -> dict:
+    """The spec in force at the head:
     ``{"spec_id": int, "cols": [...], "buckets": int | None}``."""
-    spec_id, spec = _current_spec(_head(path, version)[1])
+    spec_id, spec = _current_spec(_head(path)[1])
     return {"spec_id": spec_id, "cols": list(spec["cols"]), "buckets": spec.get("buckets")}
 
 
@@ -2538,8 +2546,6 @@ def register_versioned_view(
     name: str,
     version: int | None = None,
     ref: str | None = None,
-    as_of_ts: float | None = None,
-    snapshots: bool = True,
     follow: str | bool | None = None,
     metadata_tables: bool = False,
 ) -> int:
@@ -2553,16 +2559,16 @@ def register_versioned_view(
     SNAPSHOT: commits landing after registration never leak into it
     (pinned by pytest), and the pinned files survive vacuum while any
     surviving manifest references them (pin a :func:`create_tag` ref
-    for retention beyond that).  ``version`` / ``ref`` / ``as_of_ts``
-    select the snapshot exactly as in :func:`read_version` (at most
-    one; default = current head).
+    for retention beyond that).  ``version`` / ``ref`` select the
+    snapshot exactly as in :func:`read_version` (at most one; default =
+    current head).
 
     ``metadata_tables=True`` additionally registers the full
     operability surface as views — ``<name>_files`` / ``_refs`` /
     ``_partitions`` / ``_eq_deletes`` / ``_blooms``; follower
     registrations re-materialize them on every refresh.
 
-    ``snapshots=True`` additionally registers ``<name>_snapshots`` —
+    ``<name>_snapshots`` is registered too —
     the commit-history metadata relation (:func:`metatables.
     table_history`: one row per version with modes, stamps, row/file
     deltas, delete debt), the Iceberg ``snapshots`` table analog.  It
@@ -2588,9 +2594,9 @@ def register_versioned_view(
     """
     if not _NAME_RE.match(name):
         raise ValueError(f"invalid view name {name!r}")
-    if follow is not None and (version is not None or ref is not None or as_of_ts is not None):
-        raise ValueError("follow is exclusive with version / as_of_ts / ref")
-    version = _snapshot_version(path, version, as_of_ts, ref)
+    if follow is not None and (version is not None or ref is not None):
+        raise ValueError("follow is exclusive with version / ref")
+    version = _snapshot_version(path, version, None, ref)
     if follow is not None:
         if follow in (True, "head"):
             follow = "head"
@@ -2603,10 +2609,9 @@ def register_versioned_view(
             version = resolve_ref(path, follow)
     v = _head(path, version)[0]
     read_version(spark, path, version=v).createOrReplaceTempView(name)
-    if snapshots:
-        from fdf_spark.sources.metatables import table_history
+    from fdf_spark.sources.metatables import table_history
 
-        table_history(spark, path).createOrReplaceTempView(f"{name}_snapshots")
+    table_history(spark, path).createOrReplaceTempView(f"{name}_snapshots")
     if metadata_tables:
         _register_metadata_views(spark, path, name, v)
     import weakref
@@ -2616,7 +2621,7 @@ def register_versioned_view(
             _FOLLOW_VIEWS[name] = {
                 "path": os.path.abspath(path), "follow": follow,
                 "spark": weakref.ref(spark), "version": v,
-                "snapshots": snapshots, "metadata": metadata_tables,
+                "metadata": metadata_tables,
             }
         else:
             # a pinned registration under the same name replaces (and
@@ -2681,10 +2686,9 @@ def _refresh_one_follow_view(spark: SparkSession, name: str, e: dict) -> int:
     )
     if v != e["version"]:
         read_version(spark, e["path"], version=v).createOrReplaceTempView(name)
-        if e.get("snapshots"):
-            from fdf_spark.sources.metatables import table_history
+        from fdf_spark.sources.metatables import table_history
 
-            table_history(spark, e["path"]).createOrReplaceTempView(f"{name}_snapshots")
+        table_history(spark, e["path"]).createOrReplaceTempView(f"{name}_snapshots")
         if e.get("metadata"):
             _register_metadata_views(spark, e["path"], name, v)
         with _FOLLOW_LOCK:
@@ -3375,10 +3379,10 @@ def drop_column(path: str, col: str) -> int:
     )
 
 
-def add_column(path: str, col: str, type_str: str, nullable: bool = True) -> int:
+def add_column(path: str, col: str, type_str: str) -> int:
     """Add a column as a MANIFEST-ONLY commit — zero bytes rewritten
-    (VERDICT r13 missing #2: Delta/Iceberg users add columns as
-    metadata-only DDL BEFORE any data carrying them lands).
+    (Delta/Iceberg users add columns as metadata-only DDL BEFORE any
+    data carrying them lands).
 
     The field appends to the logical schema; every existing file reads
     NULL for it (the explicit-physical-schema read path already serves
@@ -3407,7 +3411,7 @@ def add_column(path: str, col: str, type_str: str, nullable: bool = True) -> int
         path, parent, m, "add_column",
         {"add_column": {"column": col, "type": new_dt.simpleString()}},
         schema=json.dumps(
-            StructType(list(schema.fields) + [StructField(col, new_dt, nullable)]).jsonValue()
+            StructType(list(schema.fields) + [StructField(col, new_dt, True)]).jsonValue()
         ),
         column_mapping=mapping,
     )
@@ -3783,7 +3787,7 @@ def _read_staged(path: str, wap_id: str) -> dict:
 
 
 def stage_commit(
-    df: DataFrame, path: str, wap_id: str, mode: str = "append", meta: dict | None = None,
+    df: DataFrame, path: str, wap_id: str, mode: str = "append"
 ) -> str:
     """WRITE-AUDIT-PUBLISH, step 1: build a full snapshot (data files +
     manifest) that NO reader sees — it lives under ``_staged/<wap_id>``,
@@ -3802,7 +3806,7 @@ def stage_commit(
     head = _read_manifest(path, parent) if parent is not None else None
     version = (parent or 0) + 1
     bind, staged, _ = _stage_files_and_builder(
-        df, path, mode, meta, head, version, stage_prefix="w"
+        df, path, mode, None, head, version, stage_prefix="w"
     )
     m = bind(head, version)
     m["ts"] = time.time()  # audit-time stamp; publish re-stamps (as_of sees publish time)
@@ -3956,8 +3960,6 @@ def clone_table(
     path: str,
     dst: str,
     version: int | None = None,
-    ref: str | None = None,
-    as_of_ts: float | None = None,
     deep: bool = False,
 ) -> int:
     """Delta ``CLONE``: materialize a snapshot of this table as a NEW
@@ -3979,12 +3981,11 @@ def clone_table(
     DEEP copies every referenced file under ``dst`` first — O(bytes),
     fully self-contained (no tag, no shared fate).
 
-    Snapshot selection by ``version`` / ``ref`` / ``as_of_ts`` exactly
-    as :func:`read_version` (default: current head).
+    ``version`` selects the snapshot (default: current head).
     """
     import shutil
 
-    v, m = _head(path, _snapshot_version(path, version, as_of_ts, ref))
+    v, m = _head(path, version)
     if list_versions(dst):
         raise ValueError(f"clone destination {dst} already has versions")
     out = {k: val for k, val in m.items() if k != "ts"}
@@ -4111,7 +4112,6 @@ def optimize(
     zorder: list[str] | tuple[str, ...] | None = None,
     target_bytes: int = 128 * 1024 * 1024,
     small_bytes: int | None = None,
-    zorder_bits: int = 12,
     where: str | None = None,
 ) -> dict:
     """OPTIMIZE: bin-pack small files — optionally Z-ORDER reclustered —
@@ -4145,7 +4145,7 @@ def optimize(
     round-robin (bin-pack) exchange of those same bytes, footer-only
     stats on the new files — cost is O(rewritten bytes), never
     O(table); the small-file cutoff keeps steady-state OPTIMIZE runs
-    incremental the way Delta's are.  ``where`` (r14, Databricks'
+    incremental the way Delta's are.  ``where`` (Databricks'
     ``OPTIMIZE t WHERE …``) scopes BOTH modes to files whose manifest
     stats overlap the predicate's conservative bounds — the hot recent
     range of a 100 TB table re-clusters in O(that range); stat-less
@@ -4163,7 +4163,7 @@ def optimize(
     sizes = {f: os.path.getsize(f) for f in files}
     dvmap = _delete_map(m)
     eqmap = _eq_map(m)
-    # SCOPED OPTIMIZE (r14, Databricks' `OPTIMIZE t WHERE …`): the
+    # SCOPED OPTIMIZE (Databricks' `OPTIMIZE t WHERE …`): the
     # predicate's conservative bounds select only OVERLAPPING files as
     # rewrite candidates — a 100 TB table re-clusters its hot recent
     # range in O(that range), never O(table).  Files without stats for
@@ -4264,7 +4264,7 @@ def optimize(
 
             def _znum(c: str):
                 # temporal columns enter the Morton key as epoch-day /
-                # epoch-micros numbers (r13: a raw date→double cast is
+                # epoch-micros numbers (a raw date→double cast is
                 # an AnalysisException, so zorder=["event_date", …]
                 # failed outright); order-preserving, so clustering and
                 # the tightened manifest stats are unaffected
@@ -4292,7 +4292,7 @@ def optimize(
                     *[F.max(_znum(c)).alias(f"hi_{i}") for i, c in enumerate(zorder)],
                 ).collect()[0]
                 per_col = [(row[f"lo_{i}"], row[f"hi_{i}"]) for i in range(len(zorder))]
-            top = (1 << zorder_bits) - 1
+            top = (1 << 12) - 1
 
             def scaled(i: int, c: str):
                 lo, hi = per_col[i]
@@ -4301,14 +4301,14 @@ def optimize(
                 return F.least(F.lit(top), F.greatest(F.lit(0), x.cast("bigint")))
 
             if len(zorder) == 2:
-                key = morton_key(scaled(0, zorder[0]), scaled(1, zorder[1]), bits=zorder_bits)
+                key = morton_key(scaled(0, zorder[0]), scaled(1, zorder[1]), bits=12)
             else:
                 from fdf_spark.functions.scalar import morton_key_n
 
                 # 3-4 dims: same bit layout generalized (col j → bit
                 # i*N+j); 12 bits × 4 cols = 48-bit key, still one long
                 key = morton_key_n(
-                    [scaled(i, c) for i, c in enumerate(zorder)], bits=zorder_bits
+                    [scaled(i, c) for i, c in enumerate(zorder)], bits=12
                 )
         out = (
             df.withColumn(zkey, key)
@@ -4360,7 +4360,7 @@ def optimize(
         schema=m["schema"] if "schema" in m else json.dumps(df.schema.jsonValue()),
     )
     _stage_and_publish_manifest(path, version, manifest)
-    # bloom coverage FOLLOWS the rewrite (r12): see _follow_bloom_coverage
+    # bloom coverage FOLLOWS the rewrite: see _follow_bloom_coverage
     blooms_rebuilt = _follow_bloom_coverage(spark, path, rewrite, m)
     return {
         "version": version,
@@ -4784,19 +4784,15 @@ def stream_merge_sink(
     update_cols=None,
     delete_flag: str | None = None,
     checkpoint: str | None = None,
-    order_col: str | None = None,
     bloom_cols=None,
 ):
     """Streaming CDC upsert sink: every micro-batch is merged into the
     versioned table as one commit (``foreachBatch`` → merge_upsert →
     overwrite-commit).
 
-    A micro-batch can naturally carry SEVERAL change rows for one key
-    (rapid updates within the trigger interval).  Pass ``order_col``
-    (a per-change sequence number / event time) to reduce each batch to
-    its last state per key before merging (``merge_upsert``
-    last-wins semantics); without it the merge errors loudly on
-    duplicate live keys rather than silently duplicating base rows.
+    A micro-batch that carries SEVERAL live change rows for one key
+    (rapid updates within the trigger interval) makes the merge error
+    loudly rather than silently duplicate base rows.
 
     This is the production landing pattern for a change stream at
     100 TB: per batch, the base is never shuffled (broadcast merge),
@@ -4826,8 +4822,7 @@ def stream_merge_sink(
         if not batch_df.isEmpty():
             merge_versioned(
                 batch_df.sparkSession, path, batch_df, keys, update_cols, delete_flag,
-                on_duplicate_keys="last_wins" if order_col is not None else "error",
-                order_col=order_col,
+                on_duplicate_keys="error",
             )
             if bloom_cols:
                 from fdf_spark.sources.bloomskip import build_blooms
@@ -4838,7 +4833,7 @@ def stream_merge_sink(
                     # deterministic misconfiguration (unknown column,
                     # unsupported type) would otherwise be swallowed on
                     # EVERY batch and the feature silently dead — fail
-                    # the stream loudly (code-review r12)
+                    # the stream loudly
                     raise
                 except Exception:
                     pass  # transient build failure — coverage gap only

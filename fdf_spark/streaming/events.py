@@ -91,11 +91,11 @@ def event_stream(spark: SparkSession, path: str) -> DataFrame:
 
 # --- windowed aggregations (batch & streaming share the body) ---------------
 
-def tumbling_agg(events: DataFrame, width: str = "1 hour") -> DataFrame:
-    """ST3: tumbling window per event_type → (window_start, window_end,
-    event_type, n_events, total_value)."""
+def tumbling_agg(events: DataFrame) -> DataFrame:
+    """ST3: 1-hour tumbling window per event_type → (window_start,
+    window_end, event_type, n_events, total_value)."""
     return (
-        events.groupBy(F.window("ts", width).alias("w"), "event_type")
+        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), dsum("value").alias("total_value"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -107,10 +107,11 @@ def tumbling_agg(events: DataFrame, width: str = "1 hour") -> DataFrame:
     )
 
 
-def sliding_agg(events: DataFrame, width: str = "1 hour", slide: str = "30 minutes") -> DataFrame:
-    """ST3: sliding window (each event lands in width/slide windows)."""
+def sliding_agg(events: DataFrame) -> DataFrame:
+    """ST3: 1-hour windows sliding by 30 minutes (each event lands in
+    two windows)."""
     return (
-        events.groupBy(F.window("ts", width, slide).alias("w"), "event_type")
+        events.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), dsum("value").alias("total_value"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -122,14 +123,14 @@ def sliding_agg(events: DataFrame, width: str = "1 hour", slide: str = "30 minut
     )
 
 
-def session_agg(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """ST3: session windows per user (gap-based) → session bounds + stats.
+def session_agg(events: DataFrame) -> DataFrame:
+    """ST3: session windows per user (30-minute gap) → session bounds + stats.
 
     Spark's ``session_window`` end = last event + gap; the relational
     twin is lag/cumsum sessionization (see q52's oracle).
     """
     return (
-        events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"), dsum("value").alias("total_value"))
         .select(
             F.col("w.start").alias("session_start"),
@@ -235,15 +236,11 @@ def wfevent(spark: SparkSession, bus_dir: str, name: str, timeout_sec: float = 1
 
 def stream_stream_join(
     events: DataFrame,
-    left_type: str = "click",
-    right_type: str = "purchase",
-    within: str = "30 minutes",
-    watermark: str = "10 minutes",
     how: str = "inner",
 ) -> DataFrame:
-    """ST3: stream-stream interval self-join — pair each ``left_type``
-    event with the same user's ``right_type`` events that follow it
-    within ``within``.
+    """ST3: stream-stream interval self-join — pair each ``click``
+    event with the same user's ``purchase`` events that follow it
+    within 30 minutes (both sides watermarked at 10 minutes).
 
     Both branches carry a watermark and the join condition carries the
     time bound, so Spark can expire buffered rows: per-side state is
@@ -255,8 +252,8 @@ def stream_stream_join(
     ``how="left_outer"`` is the funnel shape ("clicks with NO
     purchase"): a click emits with NULL purchase columns — but only
     when the join state expires, i.e. when the global watermark
-    (min over both branches of max-event-time − ``watermark``) passes
-    the click's last possible match time ``l_ts + within``.  Clicks
+    (min over both branches of max-event-time − 10 minutes) passes
+    the click's last possible match time ``l_ts + 30 minutes``.  Clicks
     younger than that horizon at end-of-input are still waiting for a
     match and emit NOTHING — that is the semantics of an unbounded
     stream, where "no purchase yet" can never be distinguished from
@@ -266,27 +263,27 @@ def stream_stream_join(
     oracle-checked contract rather than a streaming quirk.
     """
     l = (
-        events.filter(F.col("event_type") == left_type)
+        events.filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("l_id"),
             F.col("user_id").alias("l_user"),
             F.col("ts").alias("l_ts"),
         )
-        .withWatermark("l_ts", watermark)
+        .withWatermark("l_ts", "10 minutes")
     )
     r = (
-        events.filter(F.col("event_type") == right_type)
+        events.filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("r_id"),
             F.col("user_id").alias("r_user"),
             F.col("ts").alias("r_ts"),
         )
-        .withWatermark("r_ts", watermark)
+        .withWatermark("r_ts", "10 minutes")
     )
     cond = (
         (F.col("l_user") == F.col("r_user"))
         & (F.col("r_ts") > F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {within}"))
+        & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 30 minutes"))
     )
     return l.join(r, cond, how).select(
         F.col("l_id").alias("click_id"),
@@ -296,7 +293,7 @@ def stream_stream_join(
     )
 
 
-def enrich_stream(stream: DataFrame, dim: DataFrame, on, how: str = "inner") -> DataFrame:
+def enrich_stream(stream: DataFrame, dim: DataFrame, on) -> DataFrame:
     """Stream-static enrichment join (the production 'decorate events
     with a dimension' shape).
 
@@ -308,4 +305,4 @@ def enrich_stream(stream: DataFrame, dim: DataFrame, on, how: str = "inner") -> 
     broadcast size the right fix is a slowly-changing-dimension table
     fed by its own stream, not a bigger broadcast.
     """
-    return stream.join(F.broadcast(dim), on, how)
+    return stream.join(F.broadcast(dim), on, "inner")

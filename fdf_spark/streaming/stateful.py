@@ -18,8 +18,7 @@ Two operators:
   batch ``exact_dedup`` (N1) for continuous ingest pipelines.
 
 State size is bounded by key cardinality (monitor) / hash retention
-(dedup); production deployments add timeouts to expire idle keys —
-``shot_monitor`` demonstrates ``GroupStateTimeout.ProcessingTimeTimeout``.
+(dedup).
 """
 
 from __future__ import annotations
@@ -33,69 +32,50 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from fdf_spark.sources.tables import local_df
 
 MONITOR_STATE_SCHEMA = "n_events long, last_shot long"
-MONITOR_OUT_SCHEMA = "event_name string, n_events long, last_shot long, expired boolean"
+MONITOR_OUT_SCHEMA = "event_name string, n_events long, last_shot long"
 
 
-def shot_monitor(events: DataFrame, idle_timeout_ms: int | None = None) -> DataFrame:
-    """Per-event-name arrival monitor with optional idle expiry.
+def shot_monitor(events: DataFrame) -> DataFrame:
+    """Per-event-name arrival monitor.
 
     Input schema: (event_name string, shot long). Emits
-    (event_name, n_events, last_shot, expired) on every update; with
-    ``idle_timeout_ms`` set, a key with no traffic for that long has its
-    state dropped and a final ``expired=true`` row emitted. Note:
-    processing-time timeouts keep scheduling no-data micro-batches, so
-    they pair with a processing-time trigger (never availableNow).
+    (event_name, n_events, last_shot) on every update.
     """
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         (name,) = key
-        if state.hasTimedOut:
-            n, last = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [{"event_name": name, "n_events": n, "last_shot": last, "expired": True}]
-            )
-            return
         n, last = state.get if state.exists else (0, -1)
         for pdf in pdfs:
             if len(pdf):
                 n += len(pdf)
                 last = int(pdf["shot"].iloc[-1])
         state.update((n, last))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(
-            [{"event_name": name, "n_events": n, "last_shot": last, "expired": False}]
-        )
+        yield pd.DataFrame([{"event_name": name, "n_events": n, "last_shot": last}])
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if idle_timeout_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
     return events.groupBy("event_name").applyInPandasWithState(
         update,
         outputStructType=MONITOR_OUT_SCHEMA,
         stateStructType=MONITOR_STATE_SCHEMA,
         outputMode="update",
-        timeoutConf=timeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
 DEDUP_OUT_SCHEMA = "bucket int, doc_id long, content_hash string"
 
 
-def running_dedup(docs: DataFrame, n_buckets: int = 64) -> DataFrame:
+def running_dedup(docs: DataFrame) -> DataFrame:
     """Streaming first-seen filter: emits a row only the first time a
     content hash appears. Input: (bucket int, doc_id long, content_hash
-    string) where ``bucket = hash % n_buckets`` bounds per-key state and
-    spreads it across the state store.
+    string) where ``bucket`` (a hash of the content modulo a bucket
+    count the caller picks) bounds per-key state and spreads it across
+    the state store.
 
     At 100 TB the retained-hash set is the real design decision: state
     is sharded by bucket (this operator), stored in RocksDB
-    (``session.ROCKSDB_STATE_CONF`` / ``get_spark(rocksdb_state=True)``
+    (``get_spark(extra_conf=session.ROCKSDB_STATE_CONF)``
     — this operator's state grows with corpus key cardinality, past any
     executor heap; disk-backed state is the production tier, see
     SCALE.md "Streaming"), and expired by retention policy; the emitted
@@ -162,7 +142,6 @@ def stream_sketch_sink(
     path: str,
     depth: int = 4,
     width: int = 1024,
-    token_col: str = "token",
     checkpoint: str | None = None,
 ):
     """Continuous Count–Min sketching of a token stream (N20 × ST).
@@ -201,7 +180,7 @@ def stream_sketch_sink(
 
     stream_id = checkpoint if checkpoint else f"run-{uuid.uuid4().hex}"
     writer = tokens.writeStream.foreachBatch(
-        make_sketch_fold(path, depth=depth, width=width, token_col=token_col, stream_id=stream_id)
+        make_sketch_fold(path, depth=depth, width=width, stream_id=stream_id)
     ).outputMode("update")
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
@@ -212,7 +191,6 @@ def make_sketch_fold(
     path: str,
     depth: int = 4,
     width: int = 1024,
-    token_col: str = "token",
     stream_id: str = "run",
 ):
     """The foreachBatch fold behind :func:`stream_sketch_sink`,
@@ -228,11 +206,11 @@ def make_sketch_fold(
         spark = batch_df.sparkSession
         if _replayed(path, stream_id, batch_id):
             return  # replayed batch of THIS lineage — already folded
-        batch_sketch = countmin_sketch(batch_df, token_col=token_col, depth=depth, width=width)
+        batch_sketch = countmin_sketch(batch_df, depth=depth, width=width)
         if list_versions(path):
             batch_sketch = cm_merge(read_version(spark, path), batch_sketch)
         # materialize before the overwrite-commit reads the prior version
-        # (Arrow-backed local frame, r14: coalesce(1) over a pickle-RDD
+        # (Arrow-backed local frame: coalesce(1) over a pickle-RDD
         # frame ran its partitions sequentially through Python workers)
         merged = local_df(
             spark, batch_sketch.collect(), "row int, bucket bigint, cnt bigint"
@@ -245,18 +223,20 @@ def make_sketch_fold(
 
 
 def _replayed(path, stream_id: str, batch_id: int) -> bool:
-    """The manifest-meta replay guard shared by every sketch/view fold:
-    True iff the landed head already folded this (stream_id, batch_id)."""
+    """The replay guard shared by every sketch/view fold: True iff the
+    head's ``stream_batches`` high-water mark for ``stream_id`` (set by
+    each fold commit's manifest meta and carried through every later
+    commit, ``versioned._successor``) is at or past ``batch_id``."""
     from fdf_spark.sources.versioned import _read_manifest, list_versions
 
     versions = list_versions(path)
     if not versions:
         return False
-    meta = _read_manifest(path, versions[-1]).get("meta", {})
-    return meta.get("stream_id") == stream_id and meta.get("batch_id", -1) >= batch_id
+    marks = _read_manifest(path, versions[-1]).get("stream_batches", {})
+    return marks.get(stream_id, -1) >= batch_id
 
 
-def make_hll_fold(path: str, col: str = "k", p: int = 12, stream_id: str = "run"):
+def make_hll_fold(path: str, col: str = "k", stream_id: str = "run"):
     """foreachBatch fold behind :func:`stream_hll_sink`: per-batch HLL
     register relation merged (register-wise MAX) into the landed
     sketch, one versioned snapshot per batch. Unlike the Count–Min
@@ -272,7 +252,7 @@ def make_hll_fold(path: str, col: str = "k", p: int = 12, stream_id: str = "run"
         spark = batch_df.sparkSession
         if _replayed(path, stream_id, batch_id):
             return
-        sk = hll_sketch(batch_df, col, p=p)
+        sk = hll_sketch(batch_df, col)
         if list_versions(path):
             sk = hll_merge(read_version(spark, path), sk)
         merged = local_df(
@@ -288,8 +268,6 @@ def make_hll_fold(path: str, col: str = "k", p: int = 12, stream_id: str = "run"
 def stream_hll_sink(
     keyed: DataFrame,
     path: str,
-    col: str = "k",
-    p: int = 12,
     checkpoint: str | None = None,
 ):
     """Continuous distinct-count sketching (N5 × ST): the streaming
@@ -303,7 +281,7 @@ def stream_hll_sink(
 
     stream_id = checkpoint if checkpoint else f"run-{uuid.uuid4().hex}"
     writer = keyed.writeStream.foreachBatch(
-        make_hll_fold(path, col=col, p=p, stream_id=stream_id)
+        make_hll_fold(path, stream_id=stream_id)
     ).outputMode("update")
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
@@ -341,9 +319,6 @@ def make_quantile_fold(
 def stream_quantile_sink(
     rows: DataFrame,
     path: str,
-    col: str = "v",
-    id_col: str = "rid",
-    k: int = 1024,
     checkpoint: str | None = None,
 ):
     """Continuous quantile sketching (N5 × ST): the streaming tier of
@@ -356,7 +331,7 @@ def stream_quantile_sink(
 
     stream_id = checkpoint if checkpoint else f"run-{uuid.uuid4().hex}"
     writer = rows.writeStream.foreachBatch(
-        make_quantile_fold(path, col=col, id_col=id_col, k=k, stream_id=stream_id)
+        make_quantile_fold(path, stream_id=stream_id)
     ).outputMode("update")
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
@@ -367,7 +342,6 @@ def make_view_fold(
     path: str,
     keys,
     measure: str,
-    sign: str = "sign",
     stream_id: str = "run",
 ):
     """foreachBatch fold behind :func:`stream_view_sink` (factored out
@@ -388,7 +362,7 @@ def make_view_fold(
         else:
             # empty view in the maintained shape (keys…, sum_acc, n_rows)
             view = agg_view(batch_df.limit(0), keys, measure)
-        refreshed = incremental_refresh(view, batch_df, keys, measure, sign)
+        refreshed = incremental_refresh(view, batch_df, keys, measure)
         commit_version(
             refreshed, path, mode="overwrite", meta={"stream_id": stream_id, "batch_id": batch_id}
         )
@@ -401,7 +375,6 @@ def stream_view_sink(
     path: str,
     keys,
     measure: str,
-    sign: str = "sign",
     checkpoint: str | None = None,
 ):
     """Streaming MATERIALIZED-VIEW maintenance (N23 × ST): a signed CDC
@@ -430,7 +403,7 @@ def stream_view_sink(
 
     stream_id = checkpoint if checkpoint else f"run-{uuid.uuid4().hex}"
     writer = changes.writeStream.foreachBatch(
-        make_view_fold(path, keys, measure, sign=sign, stream_id=stream_id)
+        make_view_fold(path, keys, measure, stream_id=stream_id)
     ).outputMode("update")
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)

@@ -745,18 +745,6 @@ def test_inverted_index_segments_split_hot_terms(spark):
     idx.unpersist()
 
 
-def test_inverted_index_tf_modes_agree(spark):
-    from fdf_spark.llm.ranking import inverted_index
-
-    docs = spark.read.parquet(f"{SMOKE_DIR}/documents.parquet")
-    flat = lambda df: df.select(  # noqa: E731
-        "term", "segment", "df", "cf", F.to_json("postings").alias("p")
-    )
-    a = flat(inverted_index(docs, num_segments=2, tf_mode="map_side"))
-    b = flat(inverted_index(docs, num_segments=2, tf_mode="explode"))
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
 def test_pq_ann_recall_and_rerank(spark):
     # ADC with seed codebooks must beat random top-k by a wide margin,
     # and exact re-ranking of 4x candidates must not lower recall
@@ -823,8 +811,8 @@ def test_pq_query_luts_match_expression_lut(spark, emb):
     )
     want = {16: "38384dc0a088ac1d", 8: "a8b621866773faee"}
     for ks, digest in want.items():
-        books = _pq_seed_books(emb, "embedding", "vec_id", 8, ks, 8)
-        rows = _query_luts(qs, books, "query_id", "query_vec", 64).collect()
+        books = _pq_seed_books(emb, "embedding", 8, ks)
+        rows = _query_luts(qs, books).collect()
         rel = [
             (r["query_id"], tuple(tuple(_struct.pack("<d", x) for x in s) for s in r["lut"]))
             for r in rows
@@ -850,6 +838,45 @@ def test_pq_ann_topk_rejects_bad_query_vectors(spark, emb):
     empty = pq_ann_topk(spark.createDataFrame([], schema), emb, k=3)
     assert empty.columns == ["query_id", "vec_id", "adist", "rank"]
     assert empty.collect() == []
+
+
+def test_pq_width_is_the_data_width(spark):
+    # 128-d vectors that agree on their first 64 components: only the
+    # last 64 tell the rows apart, so PQ must encode all 128 (a fixed
+    # 64-d width scores every candidate 0 and ranks them by id)
+    import numpy as np
+
+    from fdf_spark.llm.similarity import pq_ann_topk
+
+    rng = np.random.default_rng(7)
+    head = rng.normal(size=64)
+    rows = []
+    for j in range(8):  # row 2j+1 is a near copy of row 2j
+        x = rng.normal(size=64)
+        rows.append((2 * j, [float(v) for v in np.concatenate([head, x])]))
+        y = x + 1e-3 * rng.normal(size=64)
+        rows.append((2 * j + 1, [float(v) for v in np.concatenate([head, y])]))
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    qs = corpus.filter(F.col("vec_id").isin(2, 4, 6)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    got = pq_ann_topk(qs, corpus, k=3).collect()
+    assert len(got) == 9
+    assert {r.query_id: r.vec_id for r in got if r.rank == 1} == {2: 3, 4: 5, 6: 7}
+
+
+def test_pq_rejects_vectors_of_another_width(spark, emb):
+    from fdf_spark.llm.similarity import pq_ann_topk, pq_encode
+
+    qs = emb.filter("vec_id < 2").select(
+        F.col("vec_id").alias("query_id"),
+        F.concat("embedding", "embedding").alias("query_vec"),  # 128 wide
+    )
+    with pytest.raises(ValueError, match="query 0 has query_vec length 128; expected 64"):
+        pq_ann_topk(qs, emb, k=3)
+    narrow = emb.select("vec_id", F.slice("embedding", 1, 60).alias("embedding"))
+    with pytest.raises(ValueError, match="widths \\[60\\]; need one width divisible by m=8"):
+        pq_encode(narrow)
 
 
 def test_pagerank_hub_and_mass(spark):
@@ -902,14 +929,17 @@ def test_tokenize_vocab_char_fallback(spark):
     assert ids == [100, UNK_ID, 1, UNK_ID, 3, 30, 20]
 
 
-def test_tokenize_vocab_modes_agree(spark, docs):
+def test_tokenize_vocab_modes_agree(spark, docs, monkeypatch):
+    from fdf_spark.llm import tokenize
     from fdf_spark.llm.tokenize import tokenize_vocab
 
     vocab = {**{chr(c): c - 96 for c in range(97, 123)},
              **{chr(c): c - 21 for c in range(48, 58)},
              "the": 100, "table": 101, "query": 102}
-    a = {r.doc_id: list(r.token_ids) for r in tokenize_vocab(docs, vocab, mode="expr").collect()}
-    b = {r.doc_id: list(r.token_ids) for r in tokenize_vocab(docs, vocab, mode="arrow").collect()}
+    monkeypatch.setattr(tokenize, "_ARROW_MIN_VOCAB", len(vocab) + 1)
+    a = {r.doc_id: list(r.token_ids) for r in tokenize_vocab(docs, vocab).collect()}
+    monkeypatch.setattr(tokenize, "_ARROW_MIN_VOCAB", len(vocab))
+    b = {r.doc_id: list(r.token_ids) for r in tokenize_vocab(docs, vocab).collect()}
     assert a == b and any(100 in v for v in a.values())
 
 
@@ -996,10 +1026,8 @@ def test_ivf_pq_probe_modes_agree(spark, emb):
              (6, 2), (6, 6), (6, 7)]
     want = {False: "a2a4b9eed035f900", True: "1881fbb3e13daedd"}
     for by_residual in (False, True):
-        cents, books, _ = _ivf_pq_build(
-            emb, 8, 8, 8, 64, by_residual, 0, "vec_id", "embedding"
-        )
-        rows = _ivf_pq_probes(qs, cents, books, 3, by_residual, "query_id", "query_vec").collect()
+        cents, books, _ = _ivf_pq_build(emb, 8, 8, 8, by_residual, 0)
+        rows = _ivf_pq_probes(qs, cents, books, 3, by_residual).collect()
         rel = [
             (
                 r["query_id"],
@@ -2584,7 +2612,7 @@ def test_train_pq_codebooks_reduces_quantization_error(spark):
         rows.append((i, [float(x) for x in v]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
-    initial = _pq_seed_books(df, "embedding", "vec_id", m, ks, sub)
+    initial = _pq_seed_books(df, "embedding", m, ks)
     trained = train_pq_codebooks(df, "embedding", initial, iters=3)
 
     x = np.array([r[1] for r in rows])
@@ -2763,7 +2791,7 @@ def test_ivf_pq_persisted_probe_pruned(spark, tmp_path):
     one_q = qs.filter(F.col("query_id") == 0)
     narrow = ivf_pq_probe_index(s2, d, one_q, k=3, nprobe=1)
     cents = [(cid, vec) for cid, vec in meta["cents"]]
-    probes = _ivf_pq_probes(one_q, cents, meta["books"], 1, False, "query_id", "query_vec")
+    probes = _ivf_pq_probes(one_q, cents, meta["books"], 1, False)
     cells = {r["cell"] for r in probes.select("cell").distinct().collect()}
     # inputFiles covers the whole plan (the query side scans the
     # embeddings table too) — the pin is about the INDEX files
@@ -2824,18 +2852,16 @@ def test_ivf_pq_add_incremental(spark, tmp_path):
     meta = read_ivf_pq_meta(d)
     cents = [(cid, vec) for cid, vec in meta["cents"]]
     books = meta["books"]
-    a_half = _assign(half, cents, "vec_id", "embedding")
-    a_rest = _assign(rest, cents, "vec_id", "embedding")
+    a_half = _assign(half, cents)
+    a_rest = _assign(rest, cents)
     codes = None
     for part in (a_half, a_rest):
-        _, c = pq_encode(part, 8, 8, "vec_id", "embedding", 64,
-                         keep=("cell",), codebooks=books)
+        _, c = pq_encode(part, 8, 8, "embedding", keep=("cell",), codebooks=books)
         c = c.select("vec_id", "cell", "code")
         codes = c if codes is None else codes.unionByName(c)
-    probes = _ivf_pq_probes(qs, cents, books, 2, False, "query_id", "query_vec")
+    probes = _ivf_pq_probes(qs, cents, books, 2, False)
     ref = _adc_score_topk(
-        codes.join(F.broadcast(probes), "cell"), qs, emb, 5, 8, 0,
-        "query_id", "vec_id", "query_vec", "embedding", True, True,
+        codes.join(F.broadcast(probes), "cell"), qs, emb, 5, 8, 0, True
     ).orderBy("query_id", "rank").collect()
     assert got == ref
     assert got != before  # the add actually changed the answer set
@@ -3296,7 +3322,7 @@ def test_sync_ivf_pq_index_follows_corpus_feed(spark, tmp_path):
     V.commit_version(
         emb.filter(F.col("vec_id") >= 10).select("vec_id", "embedding"), cp
     )
-    write_ivf_pq_index(V.read_version(spark, cp), ip, corpus_id="vec_id")
+    write_ivf_pq_index(V.read_version(spark, cp), ip)
     # corpus mutates: insert, delete, update (negated vectors)
     V.commit_version(
         emb.filter(F.col("vec_id") < 10).select("vec_id", "embedding"), cp
@@ -3341,7 +3367,7 @@ def test_sync_ivf_pq_index_follows_corpus_feed(spark, tmp_path):
     got = ivf_pq_probe_index(
         spark, ip, qs, k=5, nprobe=64, rerank=10**6, corpus=corpus_now
     )
-    want = cosine_topk(qs, corpus_now, k=5, corpus_id="vec_id")
+    want = cosine_topk(qs, corpus_now, k=5)
     assert [
         (r.query_id, r.vec_id, r.rank)
         for r in got.orderBy("query_id", "rank").collect()
@@ -3526,7 +3552,7 @@ def test_kmeans_partials_one_row_per_cell_per_task(spark, emb):
     spark.conf.set(key, "50")
     try:
         _, assigned = ivf_assign(emb, 8)
-        assert _cell_sums(assigned, "embedding").count() <= 8 * emb.rdd.getNumPartitions()
+        assert _cell_sums(assigned).count() <= 8 * emb.rdd.getNumPartitions()
         cents, _ = kmeans_refine(emb, num_cells=8, iters=2)
     finally:
         spark.conf.set(key, old)
@@ -3591,15 +3617,15 @@ def test_scaled6_int_exact_past_2_53(spark):
 
 def test_llm_operators_have_no_tier_flags():
     # one implementation per operator: no public llm callable may grow
-    # a `mode` / `*_mode` switch except the two that pick a tier from a
-    # property of the input (vocabulary size, document length)
+    # a `mode` / `*_mode` switch (a tier is picked from the input, as
+    # tokenize_vocab does from the vocabulary size)
     import importlib
     import inspect
     import pkgutil
 
     import fdf_spark.llm as llm
 
-    allowed = {("tokenize_vocab", "mode"), ("inverted_index", "tf_mode")}
+    allowed = set()
     found = set()
     for info in pkgutil.iter_modules(llm.__path__):
         mod = importlib.import_module(f"fdf_spark.llm.{info.name}")
@@ -3660,15 +3686,15 @@ def test_vector_kernels_reject_null_and_ragged_vectors(spark):
     for bad in ([1.0, 2.0], None):
         df = spark.createDataFrame(good + [(9, bad)], ddl).coalesce(1)
         for run in (
-            lambda: _assign(df, cents, "vec_id", "embedding"),
+            lambda: _assign(df, cents),
             lambda: _probe_cells(df, cents, 1, "vec_id", "embedding"),
-            lambda: pq_encode(df, m=1, ks=2, dim=3, codebooks=books)[1],
+            lambda: pq_encode(df, m=1, ks=2, codebooks=books)[1],
         ):
             with pytest.raises(PythonException, match="ValueError: embedding: row 4"):
                 run().collect()
     wide = spark.createDataFrame([(i, [1.0, 2.0, 3.0, 4.0]) for i in range(3)], ddl)
     with pytest.raises(PythonException, match="vectors have 4 values; the centroids have 3"):
-        _assign(wide, cents, "vec_id", "embedding").collect()
+        _assign(wide, cents).collect()
     seeds = spark.createDataFrame([(0, None)] + good[1:], ddl)
     with pytest.raises(ValueError, match="embedding: row 0 is a NULL vector"):
         ivf_assign(seeds, 2)
@@ -3771,7 +3797,7 @@ def test_train_pq_codebooks_modes_agree(spark, emb):
 
     from fdf_spark.llm.similarity import _pq_seed_books, train_pq_codebooks
 
-    seeds = _pq_seed_books(emb, "embedding", "vec_id", 4, 8, 16)
+    seeds = _pq_seed_books(emb, "embedding", 4, 8)
     books = train_pq_codebooks(emb, "embedding", seeds, iters=1)
     packed = [[tuple(struct.pack("<d", x) for x in c) for c in b] for b in books]
     assert hashlib.sha256(repr(packed).encode()).hexdigest()[:16] == "7c5011cfe596d4b0"

@@ -546,7 +546,7 @@ def main() -> None:
     base = len(vocab) + 1
     # the 50k known words are the lowercase base-36 forms of 0..49999
     vocab.update({b36(w): base + w for w in range(50_000)})
-    timed("vocab tokenize (N19)", n, tokenize_vocab(docs, vocab, mode="arrow"))
+    timed("vocab tokenize (N19)", n, tokenize_vocab(docs, vocab))
 
     # 17) streaming stateful dedup (ST5): 4 micro-batches x 1.25M rows,
     # 64 state buckets, 20% dups (hash = id % 4M, and 4M % 64 == 0 keeps

@@ -1,7 +1,7 @@
 """Print the size of the ``fdf_spark`` surface: lines by kind and
 defaulted public parameters.
 
-Run from anywhere: ``python tools/surface.py [PACKAGE_DIR]`` (default:
+Run from anywhere: ``python tools/surface.py [--unused] [PACKAGE_DIR]`` (default:
 the ``fdf_spark`` next to this script's directory).  Pass another
 checkout's package directory to compare two trees.
 
@@ -21,6 +21,20 @@ Defaulted public parameters — parameters with a default value
 every *public function*: a ``def`` at module level or directly in a
 module-level class, whose own name and whose class's name do not start
 with ``_`` (so dunder methods and closures are not counted).
+
+``--unused`` prints, one per line as ``module function param``, every
+defaulted public parameter that no caller passes.  The callers are
+every call site in ``fdf_spark``, ``tests``, ``tools``, ``perfbench``,
+``bench.py`` and ``__spark_entry__.py``.  The scan is by name: a call
+whose callee is a bare name or an attribute equal to the function's
+name (``f(...)``, ``mod.f(...)``, ``obj.f(...)``, or
+``functools.partial(f, ...)``; a name bound by ``from m import f as g``
+counts as ``f``) passes a parameter when it names it as a
+keyword, when it has at least as many positional arguments as the
+parameter's position (``self``/``cls`` not counted for methods), or
+when it has a ``*`` argument (positional parameters) or a ``**``
+argument (every parameter).  Names are shared across modules, so a hit
+is a candidate, not a proof: check each by hand.
 """
 
 from __future__ import annotations
@@ -82,8 +96,88 @@ def defaulted_public_params(path: Path) -> tuple[int, int]:
     return len(public), n_def
 
 
+def _public_defs(tree: ast.Module):
+    """``(function node, is_method)`` for every public function."""
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            if not node.name.startswith("_"):
+                yield node, False
+        elif isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
+            for n in node.body:
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)) and n.name[0] != "_":
+                    deco = {d.id for d in n.decorator_list if isinstance(d, ast.Name)}
+                    yield n, "staticmethod" not in deco
+
+
+def _call_shapes(paths: list[Path]) -> dict[str, list[tuple[set[str], int, bool, bool]]]:
+    """Callee name -> ``(keywords, n_positional, has_star, has_double_star)`` per call."""
+    calls: dict[str, list[tuple[set[str], int, bool, bool]]] = {}
+    for path in paths:
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        alias = {
+            a.asname: a.name
+            for n in ast.walk(tree) if isinstance(n, ast.ImportFrom)
+            for a in n.names if a.asname
+        }
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            func, args = node.func, node.args
+            name = func.id if isinstance(func, ast.Name) else getattr(func, "attr", None)
+            name = alias.get(name, name)
+            if name == "partial" and args and isinstance(args[0], (ast.Name, ast.Attribute)):
+                name = args[0].id if isinstance(args[0], ast.Name) else args[0].attr
+                args = args[1:]
+            if name is None:
+                continue
+            calls.setdefault(name, []).append((
+                {k.arg for k in node.keywords if k.arg},
+                sum(not isinstance(a, ast.Starred) for a in args),
+                any(isinstance(a, ast.Starred) for a in args),
+                any(k.arg is None for k in node.keywords),
+            ))
+    return calls
+
+
+def unused_params(pkg: Path) -> list[tuple[str, str, str]]:
+    """``(module, function, param)`` for each defaulted public parameter no caller passes."""
+    root = pkg.resolve().parent
+    traffic = [
+        p for d in ("fdf_spark", "tests", "tools", "perfbench") for p in sorted((root / d).rglob("*.py"))
+    ]
+    traffic += [root / f for f in ("bench.py", "__spark_entry__.py") if (root / f).exists()]
+    calls = _call_shapes(traffic)
+    out = []
+    for path in sorted(pkg.rglob("*.py")):
+        module = ".".join(path.relative_to(root).with_suffix("").parts)
+        for f, is_method in _public_defs(ast.parse(path.read_text(encoding="utf-8"))):
+            positional = f.args.posonlyargs + f.args.args
+            first = len(positional) - len(f.args.defaults)
+            defaulted = [(a.arg, i) for i, a in enumerate(positional) if i >= first]
+            kw = zip(f.args.kwonlyargs, f.args.kw_defaults)
+            defaulted += [(a.arg, None) for a, d in kw if d is not None]
+            for param, pos in defaulted:
+                if pos is not None and is_method:
+                    pos -= 1
+                passed = any(
+                    param in kw or dstar or (pos is not None and (npos > pos or star))
+                    for kw, npos, star, dstar in calls.get(f.name, [])
+                )
+                if not passed:
+                    out.append((module, f.name, param))
+    return out
+
+
 def main(argv: list[str]) -> None:
+    unused = "--unused" in argv
+    argv = [a for a in argv if a != "--unused"]
     pkg = Path(argv[0]) if argv else Path(__file__).resolve().parent.parent / "fdf_spark"
+    if unused:
+        hits = unused_params(pkg)
+        for row in hits:
+            print(*row)
+        print(f"{len(hits)} never-passed defaulted public params", file=sys.stderr)
+        return
     files = sorted(pkg.rglob("*.py"))
     totals = {"code": 0, "docstring": 0, "comment": 0, "blank": 0}
     n_funcs = n_defaults = 0
