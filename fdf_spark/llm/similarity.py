@@ -465,7 +465,9 @@ def _lsh_sig(df: DataFrame, tables, id_col: str, vec_col: str) -> DataFrame:
     sequential per-dimension fold (``acc += x[i]·p[i]`` from 0.0, the
     :func:`_assign` convention) compared ``>= 0`` (IEEE: −0.0
     qualifies, as in the SQL replay); a signature is the exact integer
-    sum of its bits."""
+    sum of its bits.  A vector whose width is not the planes' ``dim``
+    raises ``ValueError`` — folding only a prefix would hash unlike
+    vectors together."""
     import numpy as np
 
     P = np.array(tables, dtype=np.float64)  # (tables, planes, dim)
@@ -473,6 +475,8 @@ def _lsh_sig(df: DataFrame, tables, id_col: str, vec_col: str) -> DataFrame:
 
     def gen(batch):
         x = vectors(batch[vec_col], vec_col)
+        if len(x) and x.shape[1] != d:
+            raise ValueError(f"{vec_col}: vectors have {x.shape[1]} values; dim is {d}")
         sigs = np.zeros((len(x), n_tables), dtype=np.int64)
         for t in range(n_tables):
             for j in range(n_planes):

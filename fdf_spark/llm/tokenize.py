@@ -6,9 +6,8 @@ Two tiers, mirroring the repo's oracle discipline:
 
 - :func:`tokenize_vocab` — word-level vocabulary encode with
   character fallback (each word → its vocab id, else its characters'
-  ids, else UNK).  Fully declarative (map literal + higher-order array
-  functions, zero Python row code, zero shuffles) and exactly
-  replayable in a DuckDB oracle — the driver-checkable tier.
+  ids, else UNK).  One Arrow kernel pass, zero shuffles; its result is
+  exactly replayable in a DuckDB oracle — the driver-checkable tier.
 - :func:`tokenize_bpe` — real byte-pair-encoding with a learned merge
   list, an Arrow kernel (``functions.kernels.arrow_kernel``; the
   merge loop is inherently iterative per word — not expressible as
@@ -31,15 +30,6 @@ from pyspark.sql import functions as F
 
 UNK_ID = 0
 
-#: vocab size from which :func:`tokenize_vocab` runs its Arrow kernel
-#: instead of the map-literal expression.  Measured on 5,000 sf0.1
-#: documents (noop sink, min of 3, local[4]): the expression costs about
-#: 0.7 ms more per vocab entry (0.35 s at 66 entries, 0.43 s at 256,
-#: 0.88 s at 1,024, 1.62 s at 2,048) while the kernel stays at
-#: 0.25-0.29 s, so the expression is kept only while it is within
-#: ~0.2 s of the kernel
-_ARROW_MIN_VOCAB = 256
-
 
 def _word_split(text: Column) -> Column:
     return F.filter(F.split(F.lower(text), r"[^a-z0-9]+"), lambda w: w != F.lit(""))
@@ -51,53 +41,37 @@ def tokenize_vocab(df: DataFrame, vocab: dict[str, int]) -> DataFrame:
     id; else each char's id; unknown chars → UNK_ID (0).  ``vocab`` ids
     must be ≥ 1.
 
-    Both tiers are one scan, zero shuffles; ``len(vocab)`` picks one:
-
-    - below ``_ARROW_MIN_VOCAB`` entries: pure column algebra over a
-      ``create_map`` literal — no Python anywhere, exactly
-      SQL-replayable (the oracle-checked q118 shape, char-level/POC
-      vocabs).  Catalyst chokes on a large map literal (analysis/codegen
-      blow up — measured a >10 min hang at 100k expressions);
-    - from ``_ARROW_MIN_VOCAB`` entries: an Arrow kernel
-      (:func:`~fdf_spark.functions.kernels.arrow_kernel`) with the vocab
-      dict closure-shipped (pickled once per task, like a broadcast
-      var) — the tier for real 50k+ vocabs.  Equivalence of the two is
-      pytest-asserted on a shared small vocab.
+    One scan, zero shuffles: an Arrow kernel
+    (:func:`~fdf_spark.functions.kernels.arrow_kernel`) with the vocab
+    dict closure-shipped (pickled once per task, like a broadcast var).
+    Over 5,000 sf0.1 documents (noop sink, min of 3, ``local[4]``) it
+    measured faster than a ``create_map``-literal column expression at
+    every vocab size from 66 to 2,048 entries (0.25-0.29 s against
+    0.35-1.62 s), and Catalyst chokes on a large map literal (a >10 min
+    hang at 100k expressions), so every vocab takes this one path; on a
+    few hundred documents the kernel's fixed per-task cost (about 0.1 s
+    at q118's size) outweighs the expression's.
     """
+    from fdf_spark.functions.kernels import arrow_kernel
+
     if any(v <= UNK_ID for v in vocab.values()):
         raise ValueError("vocab ids must be >= 1 (0 is reserved for UNK)")
-    if len(vocab) >= _ARROW_MIN_VOCAB:
-        from fdf_spark.functions.kernels import arrow_kernel
 
-        def encode(batch):
-            get = vocab.get
-            out = []
-            for t in batch["text"].to_pylist():
-                ids: list[int] = []
-                for w in _py_word_split(t):
-                    wid = get(w)
-                    if wid is not None:
-                        ids.append(wid)
-                    else:
-                        ids.extend(get(c, UNK_ID) for c in w)
-                out.append(ids)
-            return {"token_ids": out}
+    def encode(batch):
+        get = vocab.get
+        out = []
+        for t in batch["text"].to_pylist():
+            ids: list[int] = []
+            for w in _py_word_split(t):
+                wid = get(w)
+                if wid is not None:
+                    ids.append(wid)
+                else:
+                    ids.extend(get(c, UNK_ID) for c in w)
+            out.append(ids)
+        return {"token_ids": out}
 
-        return arrow_kernel(
-            df.select("doc_id", "text"), encode, "doc_id, token_ids array<int>"
-        )
-    vmap = F.create_map(*[F.lit(x) for kv in vocab.items() for x in kv])
-    words = _word_split(F.col("text"))
-    per_word = F.transform(
-        words,
-        lambda w: F.when(vmap[w].isNotNull(), F.array(vmap[w].cast("int"))).otherwise(
-            F.transform(
-                F.split(w, ""),
-                lambda c: F.coalesce(vmap[c].cast("int"), F.lit(UNK_ID)),
-            )
-        ),
-    )
-    return df.select(F.col("doc_id"), F.flatten(per_word).alias("token_ids"))
+    return arrow_kernel(df.select("doc_id", "text"), encode, "doc_id, token_ids array<int>")
 
 
 # --- real BPE ---------------------------------------------------------------

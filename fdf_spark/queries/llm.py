@@ -2980,9 +2980,9 @@ _CHAR_VOCAB = {**{chr(c): c - 96 for c in range(97, 123)}, **{chr(c): c - 21 for
     doc="Tokenization to token IDS (SURVEY §2.11 N19, driver tier): "
     "word-level vocabulary encode with per-character fallback — vocab "
     "= corpus top-20 words by (freq desc, word), ids 37+, chars a-z/"
-    "0-9 = 1..36, UNK=0. Pure column algebra over a broadcast map "
-    "literal: one scan, zero shuffles, zero Python; the oracle "
-    "rebuilds the vocab and replays the encode relationally. The real "
+    "0-9 = 1..36, UNK=0. One Arrow kernel pass over the documents "
+    "with the vocab shipped to each task: one scan, zero shuffles; the "
+    "oracle rebuilds the vocab and replays the encode relationally. The real "
     "BPE tier (learned merges, iterative per-word loop) is "
     "tokenize_bpe — Arrow-batched, property-tested vs a pure-Python "
     "reference in pytest (not SQL-expressible).",

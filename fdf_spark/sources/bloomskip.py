@@ -1,4 +1,4 @@
-"""Per-file BLOOM-FILTER skipping for versioned tables (r12) — point
+"""Per-file BLOOM-FILTER skipping for versioned tables — point
 lookups on columns the layout does NOT cluster.
 
 Manifest [min, max] stats prune range probes, and hidden bucket
@@ -25,11 +25,11 @@ Shape (Iceberg's compute-stats action, not a write-path tax):
   manifest's create-if-absent ``publish_atomic`` because sidecars are
   non-authoritative derived metadata).  Executors must share the data
   files' filesystem; the driver VERIFIES sidecar visibility after the
-  job and reports unreachable files as not built (ADVICE r13), so
+  job and reports unreachable files as not built, so
   coverage reporting never promises pruning that will not engage.
   Only a tiny ``(file, built)`` row per file rides back to the
   driver, so a one-time backfill over 10^12 rows never funnels
-  bitsets through driver memory (VERDICT r12 #1).  Vacuum removes
+  bitsets through driver memory.  Vacuum removes
   sidecars with their data files.
 - Probe side: ``read_version(spark, path, prune=(col, values))``
   consults sidecars AFTER stats/transform pruning, dropping any file
@@ -44,16 +44,16 @@ Hashing is double-hashed splitmix64 (ints, dates, timestamps — the
 temporal types map losslessly onto int64 epoch-day / epoch-micros;
 AWARE probe datetimes are exact instants, NAIVE ones canonicalize only
 when the session and OS timezones agree on the offset and otherwise
-skip the consult — see :func:`_resolve_naive_ts`, VERDICT r13 #1)
+skip the consult — see :func:`_resolve_naive_ts`)
 and a two-basis FNV-1a-64 + splitmix finalizer for strings, batched
 executor-side as vectorized numpy over the Arrow string buffers; md5
 remains as the long-string fallback (values over
 :data:`_FNV_MAX_LEN` bytes, where the per-position vector loop loses
-to C md5) and as the probe path for pre-r13 sidecars.  Every sidecar
-column records the ``type`` it was BUILT under and the ``algo`` used,
+to C md5) and as the probe path for legacy untyped sidecars.  Every
+sidecar column records the ``type`` it was BUILT under and the ``algo`` used,
 and probes refuse cross-type values (keep the file) — a string-typed
 probe against an int-built bloom must never silently hash to a false
-negative (ADVICE r12).  Build and probe paths are property-pinned
+negative.  Build and probe paths are property-pinned
 against each other.
 
 Reference parity: none (read-only client); this is engine-native
@@ -74,16 +74,16 @@ BLOOM_SUFFIX = ".bloom.json"
 #: Hard cap on probed values per bloom consult: a probe list past this
 #: is a scan wearing a point-lookup's clothes — the writers' key-scope
 #: paths and read_version's prune all degrade to "keep every file"
-#: (superset guarantee) instead of stalling the driver (VERDICT r12 #2).
+#: (superset guarantee) instead of stalling the driver.
 BLOOM_PROBE_CAP = 1024
 
 #: Strings longer than this hash through md5 (C speed) instead of the
 #: vectorized FNV path, whose per-byte-position vector loop is built
 #: for key-sized values; the choice is recorded per sidecar column, so
 #: mixed corpora dispatch correctly on probe.  MEASURED crossover
-#: (VERDICT r13 #3), full build path (hash + bit sets) on this box:
+#: on the full build path (hash + bit sets):
 #: at 64 B the FNV path is 2.4× faster, at 128 B 1.2× faster, at 192 B
-#: md5 wins 1.1×, at 512 B md5 wins 3.2×, at 1 KB 3.9× — the r13 cap
+#: md5 wins 1.1×, at 512 B md5 wins 3.2×, at 1 KB 3.9× — an earlier cap
 #: of 4096 paid ~4× on 1-4 KB values.  160 sits at the measured
 #: break-even; dispatch is per (column, file) on the batch's MAX
 #: length, so uuid/url-sized keys stay vectorized and document-sized
@@ -114,7 +114,7 @@ def _hash_pair_int(v: int) -> tuple[int, int]:
 
 
 def _hash_pair_str_md5(v: str) -> tuple[int, int]:
-    """md5 halves — pre-r13 sidecars and the long-string build path."""
+    """md5 halves — legacy untyped sidecars and the long-string build path."""
     import hashlib
 
     d = hashlib.md5(v.encode("utf-8")).digest()
@@ -175,7 +175,7 @@ def _session_tzinfo():
 
 def _resolve_naive_ts(v):
     """A NAIVE probe datetime → the aware instant it denotes, or None
-    when that is AMBIGUOUS (VERDICT r13 #1 / ADVICE r13).
+    when that is AMBIGUOUS.
 
     A naive value's provenance decides its zone and the engine cannot
     see provenance: a classic ``collect()``/``F.lit()`` round-trip is
@@ -223,7 +223,7 @@ def _canon_probe_value(v):
 
 
 def _hash_pair(v) -> tuple[int, int]:
-    """Legacy runtime-typed dispatch (pre-r13 sidecars carry no
+    """Legacy runtime-typed dispatch (legacy sidecars carry no
     ``type``/``algo``): splitmix for ints, md5 for strings."""
     if isinstance(v, bool):
         raise TypeError("bloom columns must be int or string, not bool")
@@ -237,12 +237,11 @@ def _hash_pair(v) -> tuple[int, int]:
 def _probe_hashes(entry: dict, v) -> tuple[int, int]:
     """Hash one probe value under a sidecar column's recorded build
     type/algo; TypeError on a cross-type probe (callers keep the file
-    — a mismatched probe must never manufacture a false negative,
-    ADVICE r12)."""
+    — a mismatched probe must never manufacture a false negative)."""
     v = _canon_probe_value(v)
     t = entry.get("type")
     if t is None:
-        return _hash_pair(v)  # pre-r13 sidecar: runtime dispatch
+        return _hash_pair(v)  # legacy untyped sidecar: runtime dispatch
     if t in ("int", "date", "timestamp"):
         if isinstance(v, bool) or not isinstance(v, int):
             raise TypeError(f"bloom built as {t}, probed with {type(v).__name__}")
@@ -318,9 +317,8 @@ def sidecar_meta(data_file: str) -> dict | None:
     """Sidecar PARAMETERS only ({col: {m, k, n, fpp, type, algo}}) —
     JSON parse without the base64/numpy bitset decode and without
     touching the probe cache, for metadata consumers (table_blooms,
-    coverage checks) that never probe (code-review r12: decoding
-    bitsets to read six scalars, and caching soon-dead files, was
-    waste)."""
+    coverage checks) that never probe (decoding bitsets to read six
+    scalars, and caching soon-dead files, would be waste)."""
     sp = data_file + BLOOM_SUFFIX
     if not os.path.exists(sp):
         return None
@@ -369,7 +367,7 @@ def bloom_prune(files: list[str], phys_col: str, values) -> list[str]:
 
 
 #: declared-type families build_blooms accepts, and what probe values
-#: coerce to under each (ADVICE r12: hash under the DECLARED type,
+#: coerce to under each (hash under the DECLARED type,
 #: never the probe value's runtime Python type)
 _INT_TYPES = {"tinyint", "smallint", "int", "bigint"}
 _TEMPORAL_TYPES = {"date", "timestamp", "timestamp_ntz"}
@@ -383,7 +381,7 @@ def coerce_probe_values(declared_type: str, values) -> list | None:
     value cannot represent the declared family (callers skip the
     bloom: Spark's own join/filter coercion may still match such a
     value, so pruning on a differently-typed hash would silently lose
-    rows — ADVICE r12's false-negative scenario)."""
+    rows — a false negative)."""
     import datetime as _dt
 
     out = []
@@ -440,7 +438,7 @@ def coerce_probe_values(declared_type: str, values) -> list | None:
 
 
 def _write_sidecar_atomic(sidecar_path: str, payload: str) -> None:
-    """THE sidecar write seam (VERDICT r13 #2), executor-side: stage the
+    """THE sidecar write seam, executor-side: stage the
     fully-serialized JSON next to the data file, then ``os.replace`` —
     readers observe whole sidecars or none, concurrent builders are
     LAST-WRITER-WINS (deliberately weaker than the manifest's
@@ -450,7 +448,7 @@ def _write_sidecar_atomic(sidecar_path: str, payload: str) -> None:
     an UNCONDITIONAL PUT of the whole object — same visibility, same
     last-writer-wins.
 
-    REQUIREMENT (ADVICE r13): executors must share the data files'
+    REQUIREMENT: executors must share the data files'
     filesystem (true wherever the engine itself runs — the data file
     the sidecar sits next to was written through the same paths).  If
     a deployment ever routed data to shared storage but scratch to
@@ -539,13 +537,11 @@ def build_blooms(
     incremental run rebuilds it, as does ``plan_maintenance``), and
     the same as under a driver-side writer.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructField, StructType
-
     from fdf_spark.sources.versioned import (
         _logical_schema,
         _mapping,
         _read_manifest,
+        _scan,
         list_versions,
     )
 
@@ -698,29 +694,12 @@ def build_blooms(
         _write_sidecar_atomic(sp, _json.dumps(sidecar))
         return pa.table({"file": [fname], "built": [True]})
 
-    from fdf_spark.sources.versioned import _norm_file_path
-
-    # explicit PHYSICAL schema: a first-listed file that
-    # predates a schema evolution must yield NULL columns, not fail
-    # schema inference — same discipline as versioned._load_files
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(
-            StructType(
-                [
-                    StructField(
-                        mapping.get(f.name, f.name), f.dataType, f.nullable
-                    )
-                    for f in schema.fields
-                ]
-            )
-        )
+    # the raw bytes of every row (masked ones included — a bloom only
+    # needs a superset) under the physical schema: a file that predates
+    # a schema evolution yields NULL columns instead of failing inference
     df = (
-        reader.parquet(*todo)
-        .select(
-            *[F.col(p) for p in phys_],
-            _norm_file_path(F.col("_metadata.file_path")).alias("__file"),
-        )
+        _scan(spark, m, todo, pos=True)
+        .select(*phys_, "__file")
         .groupBy("__file")
         .applyInArrow(_fold, schema="file string, built boolean")
     )

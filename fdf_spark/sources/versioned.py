@@ -259,10 +259,10 @@ def _resolve_manifest(path: str, m: dict) -> dict:
 def applied_ingest_ids(path: str) -> set:
     """Every ``meta["ingest_id"]`` any commit at ``path`` has recorded.
 
-    The replay-detection primitive for at-least-once ingest loops
-    (ADVICE r9): a caller that stamps each batch commit with an ingest
-    id can detect a retried batch BEFORE re-landing it.  The check
-    alone is check-then-act, NOT atomic — two concurrent replays of
+    The replay-detection primitive for at-least-once ingest loops:
+    a caller that stamps each batch commit with an ingest id can
+    detect a retried batch BEFORE re-landing it.  The check alone is
+    check-then-act, NOT atomic — two concurrent replays of
     the same id can both pass it.  Atomicity comes from pairing it
     with ``commit_version(expected_parent=head)`` inside a retry loop
     (see ``llm.dedup.incremental_dedup``): the loser of the pinned
@@ -305,26 +305,31 @@ def _logical_schema(m: dict) -> StructType | None:
     return StructType.fromJson(json.loads(m["schema"])) if "schema" in m else None
 
 
-def _load_files(spark: SparkSession, m: dict, files: list[str]) -> DataFrame:
-    """Read a manifest's files with the PHYSICAL schema (missing
-    columns in pre-evolution files yield NULLs; dropped columns are
-    never even requested — column pruning at the scan), then alias to
-    the logical names readers see."""
+def _scan(spark: SparkSession, m: dict, files: list[str], pos: bool = False) -> DataFrame:
+    """THE data-file read: ``files`` under the manifest's PHYSICAL
+    schema (missing columns in pre-evolution files yield NULLs; dropped
+    columns are never even requested — column pruning at the scan).
+    ``pos`` adds ``(__file, __pos)`` — the row-position identity a
+    deletion vector addresses.  Raw bytes: no delete mask applies
+    (:func:`_live` is the masked, logical read)."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructField
 
     schema = _logical_schema(m)
-    if schema is None:
-        return spark.read.parquet(*files)
-    mapping = _mapping(m)
-    phys = StructType(
-        [StructField(mapping.get(f.name, f.name), f.dataType, f.nullable) for f in schema.fields]
-    )
-    df = spark.read.schema(phys).parquet(*files)
-    if not mapping:
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(
+            StructType(
+                [StructField(_physical(m, f.name), f.dataType, f.nullable) for f in schema.fields]
+            )
+        )
+    df = reader.parquet(*files)
+    if not pos:
         return df
     return df.select(
-        *[F.col(mapping.get(f.name, f.name)).alias(f.name) for f in schema.fields]
+        "*",
+        _norm_file_path(F.col("_metadata.file_path")).alias("__file"),
+        F.col("_metadata.row_index").alias("__pos"),
     )
 
 
@@ -364,39 +369,33 @@ def _delete_map(m: dict) -> dict:
     return m.get("delete_files", {})
 
 
-def _load_physical_with_pos(spark: SparkSession, m: dict, files: list[str]) -> DataFrame:
-    """Files under their PHYSICAL schema plus ``(__file, __pos)`` — the
-    row-position identity a deletion vector addresses."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructField
+def _mask(
+    spark: SparkSession, files, cols=None, scope: dict | None = None
+) -> DataFrame:
+    """A delete mask read from its own ``files``, broadcast when they
+    total under 32 MB — the sizes are known locally (no job), and a
+    mask is usually orders smaller than the data it masks.  The mask is
+    the ``(file, pos)`` tombstone relation, or with ``cols`` an
+    equality-delete entry's key columns.  ``scope`` ({tombstone file:
+    data files}) keeps each tombstone's positions for its listed data
+    files only."""
+    from functools import reduce
 
-    schema = _logical_schema(m)
-    reader = spark.read
-    if schema is not None:
-        mapping = _mapping(m)
-        reader = reader.schema(
-            StructType(
-                [StructField(mapping.get(f.name, f.name), f.dataType, f.nullable) for f in schema.fields]
-            )
-        )
-    return reader.parquet(*files).select(
-        "*",
-        _norm_file_path(F.col("_metadata.file_path")).alias("__file"),
-        F.col("_metadata.row_index").alias("__pos"),
-    )
-
-
-def _read_tombstones(spark: SparkSession, tomb_files) -> DataFrame:
-    """The (file, pos) tombstone relation, broadcast when small — the
-    sizes are known locally (no job), and a delete mask is usually
-    orders smaller than the data it masks."""
     from pyspark.sql import functions as F
 
-    tombs = sorted(tomb_files)
-    td = spark.read.schema(_DELETE_SCHEMA).parquet(*tombs)
-    if sum(os.path.getsize(t) for t in tombs) < (32 << 20):
-        td = F.broadcast(td)
-    return td
+    files = sorted(files)
+    if cols is not None:
+        df = spark.read.parquet(*files).select(*cols)
+    elif scope is None:
+        df = spark.read.schema(_DELETE_SCHEMA).parquet(*files)
+    else:
+        df = reduce(DataFrame.unionByName, [
+            spark.read.schema(_DELETE_SCHEMA).parquet(t).filter(F.col("file").isin(scope[t]))
+            for t in files
+        ])
+    if sum(os.path.getsize(f) for f in files) < (32 << 20):
+        df = F.broadcast(df)
+    return df
 
 
 #: per-tombstone-file position counts ({data file -> rows}) — immutable
@@ -411,7 +410,7 @@ def _tomb_counts_footer(tomb_file: str) -> dict:
     must count only rows attributed to that file.  Commit time records
     the result in the manifest (``tomb_rows``) so metadata tables
     never re-read tombstones; this stays the fallback for pre-upgrade
-    manifests (VERDICT r11 #4)."""
+    manifests."""
     hit = _TOMB_COUNTS_CACHE.get(tomb_file)
     if hit is not None:
         return hit
@@ -428,15 +427,9 @@ def _tomb_counts_footer(tomb_file: str) -> dict:
     return c
 
 
-def _anti_join_positions(df: DataFrame, td: DataFrame) -> DataFrame:
-    return df.join(
-        td, (df["__file"] == td["file"]) & (df["__pos"] == td["pos"]), "left_anti"
-    )
-
-
 # --- equality deletes (delete-by-key, ZERO data scan at write) --------------
 #
-# The second tombstone tier (VERDICT r10 #6; Iceberg's equality deletes):
+# The second tombstone tier (Iceberg's equality deletes):
 # ``delete_keys`` writes the KEY RELATION itself — no base-table scan, no
 # position attribution, O(keys) bytes — and readers apply it as one more
 # broadcast anti-join on the key columns.  Scoping is Iceberg's sequence
@@ -461,18 +454,6 @@ def _eq_entries(m: dict) -> dict:
     return m.get("eq_deletes", {})
 
 
-def _read_eq_keys(spark: SparkSession, entry: dict) -> DataFrame:
-    """One equality-delete entry's key relation, broadcast when small
-    (same locally-known size gate as :func:`_read_tombstones`)."""
-    from pyspark.sql import functions as F
-
-    files = sorted(entry["files"])
-    kd = spark.read.parquet(*files).select(*entry["cols"])
-    if sum(os.path.getsize(f) for f in files) < (32 << 20):
-        kd = F.broadcast(kd)
-    return kd
-
-
 def _apply_eq_masks(
     spark: SparkSession, m: dict, df: DataFrame, files: list[str]
 ) -> DataFrame:
@@ -494,9 +475,9 @@ def _apply_eq_masks(
         return df
     # one read/broadcast per ENTRY, shared across every file group that
     # scopes it — overlapping groups otherwise re-read and re-broadcast
-    # the same key relation once per group (code-review finding)
+    # the same key relation once per group
     key_dfs = {
-        eid: _read_eq_keys(spark, eqd[eid])
+        eid: _mask(spark, eqd[eid]["files"], cols=eqd[eid]["cols"])
         for eids in groups
         for eid in eids
     }
@@ -518,55 +499,38 @@ def _apply_eq_masks(
     return out
 
 
-def _to_logical(df: DataFrame, m: dict, extra: tuple[str, ...] = ()) -> DataFrame:
-    """Physical columns → the logical names readers see (+ passthroughs)."""
+def _live(spark: SparkSession, m: dict, files: list[str], pos: bool = False) -> DataFrame:
+    """The snapshot's LIVE rows over ``files`` under their LOGICAL
+    names (plus ``(__file, __pos)`` with ``pos`` — what a new
+    delete/update commit tombstones): clean files stream through the
+    plain scan path (zero masking overhead — same plan as a DV-free
+    table), files with deletion vectors anti-join their tombstone
+    positions, files scoped by equality deletes anti-join the key
+    relations."""
+    from functools import reduce
+
     from pyspark.sql import functions as F
 
-    schema = _logical_schema(m)
-    if schema is None:
-        return df
-    mapping = _mapping(m)
-    return df.select(
-        *[F.col(mapping.get(f.name, f.name)).alias(f.name) for f in schema.fields],
-        *[F.col(c) for c in extra],
-    )
-
-
-def _effective_rows(spark: SparkSession, m: dict, files: list[str]) -> DataFrame:
-    """The snapshot's LIVE rows over ``files``: clean files stream
-    through the plain scan path (zero masking overhead — same plan as a
-    DV-free table), files with deletion vectors anti-join their
-    tombstone positions, files scoped by equality deletes anti-join the
-    key relations."""
     dv, eqa = _delete_map(m), _eq_map(m)
     dirty = [f for f in files if dv.get(f) or eqa.get(f)]
     clean = [f for f in files if not (dv.get(f) or eqa.get(f))]
-    parts = []
-    if clean:
-        parts.append(_load_files(spark, m, clean))
+    parts = [_scan(spark, m, clean, pos)] if clean else []
     if dirty:
-        masked = _load_physical_with_pos(spark, m, dirty)
-        pos_dirty = {t for f in dirty for t in dv.get(f, [])}
-        if pos_dirty:
-            masked = _anti_join_positions(masked, _read_tombstones(spark, pos_dirty))
-        masked = _apply_eq_masks(spark, m, masked, dirty)
-        parts.append(_to_logical(masked.drop("__file", "__pos"), m))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _effective_with_pos(spark: SparkSession, m: dict, files: list[str]) -> DataFrame:
-    """Live rows with their ``(__file, __pos)`` identity — what a new
-    delete/update commit tombstones."""
-    df = _load_physical_with_pos(spark, m, files)
-    dv = _delete_map(m)
-    tombs = {t for f in files for t in dv.get(f, [])}
-    if tombs:
-        df = _anti_join_positions(df, _read_tombstones(spark, tombs))
-    df = _apply_eq_masks(spark, m, df, files)
-    return _to_logical(df, m, extra=("__file", "__pos"))
+        df = _scan(spark, m, dirty, pos=True)
+        tombs = {t for f in dirty for t in dv.get(f, [])}
+        if tombs:
+            td = _mask(spark, tombs)
+            df = df.join(td, (df["__file"] == td["file"]) & (df["__pos"] == td["pos"]), "left_anti")
+        df = _apply_eq_masks(spark, m, df, dirty)
+        parts.append(df if pos else df.drop("__file", "__pos"))
+    out = reduce(DataFrame.unionByName, parts)
+    schema, mapping = _logical_schema(m), _mapping(m)
+    if schema is None or not mapping:
+        return out
+    return out.select(
+        *[F.col(mapping.get(f.name, f.name)).alias(f.name) for f in schema.fields],
+        *(["__file", "__pos"] if pos else []),
+    )
 
 
 def _write_tombstones(
@@ -591,7 +555,7 @@ def _write_tombstones(
 def _predicate_bounds(spark: SparkSession, schema: StructType, cond) -> dict:
     """Conservative per-column [lo, hi] bounds implied by a predicate —
     the data-skipping translation Delta/Iceberg run before a DELETE's
-    match scan (VERDICT r10 #3).
+    match scan.
 
     The predicate is ANALYZED against an empty frame with the table
     schema, then the resolved Catalyst tree (its JSON form — public
@@ -635,7 +599,7 @@ def _predicate_bounds(spark: SparkSession, schema: StructType, cond) -> dict:
     # 53 — long→double does NOT: cast(2^53+1 as double) collides with
     # 2^53, so bounds derived through it would wrongly prune files).
     # Narrowing casts (long→int wraps) are never accepted — a predicate
-    # carrying one contributes nothing (code-review finding).
+    # carrying one contributes nothing.
     _EXACT_WIDENING = {
         ("byte", "short"), ("byte", "integer"), ("byte", "long"),
         ("short", "integer"), ("short", "long"),
@@ -691,7 +655,7 @@ def _predicate_bounds(spark: SparkSession, schema: StructType, cond) -> dict:
                 return str(v)
             if dt == "boolean":
                 return v if isinstance(v, bool) else str(v).lower() == "true"
-            # temporal literals (r14): Catalyst's toJSON renders a date
+            # temporal literals: Catalyst's toJSON renders a date
             # literal as 'YYYY-MM-DD' and a timestamp literal as its
             # SESSION-timezone wall string (the analyzer already
             # resolved the user's text under the session zone, so
@@ -782,7 +746,7 @@ def _stat_checks(m: dict, col: str, values, lo, hi) -> list[tuple]:
     can't map the probe driver-side contributes nothing — the superset
     guarantee is untouched.  THE one place probe-through-transform
     logic lives: read_version's prune and every write-side match scan
-    call through here (code-review finding: three near-copies)."""
+    call through here, so the three share one rule."""
     pc = _physical(m, col)
     checks: list[tuple] = [(pc, values, lo, hi)]
     schema = _logical_schema(m)
@@ -826,7 +790,7 @@ def _files_passing(m: dict, files: list[str], checks: list[tuple]) -> list[str]:
             try:
                 if vals is not None:
                     # canonicalize probes into the recorded stat domain
-                    # (dates → epoch-day ints, r13); a value that can't
+                    # (dates → epoch-day ints); a value that can't
                     # canonicalize makes the whole check unevaluable —
                     # keep the file
                     cv = [_canon_stat_probe(x) for x in vals]
@@ -1038,8 +1002,8 @@ def _publish_row_level(
 
 
 def _bloom_scope(m: dict, files: list[str], logical_col: str, values) -> list[str]:
-    """Bloom-sidecar consult under the table's DECLARED column type
-    (ADVICE r12): probe values are cast to the declared type family
+    """Bloom-sidecar consult under the table's DECLARED column type:
+    probe values are cast to the declared type family
     BEFORE hashing — a string-typed ``"7"`` against an int column must
     hash as the int the build hashed, and any value that cannot
     represent the family skips the bloom entirely (Spark's own
@@ -1089,7 +1053,7 @@ def _bloom_prune_equalities(m: dict, files: list[str], bounds: dict) -> list[str
 def delete_where(spark: SparkSession, path: str, condition) -> int:
     """Row-level DELETE as a MERGE-ON-READ commit: writes a tombstone
     relation naming the deleted (file, position) pairs — zero data
-    files rewritten (VERDICT r9 #1).  Returns the new version (the
+    files rewritten.  Returns the new version (the
     parent version, unchanged, when nothing matched).
 
     ``condition`` is a Column or SQL string over the table's LOGICAL
@@ -1099,7 +1063,7 @@ def delete_where(spark: SparkSession, path: str, condition) -> int:
     O(matching rows) — a 1-row delete on a wide table costs one tiny
     tombstone file, not a data-file rewrite (measured in
     tools/stress.py).  Readers of this and later versions apply the
-    mask (:func:`_effective_rows`); pinned readers of older versions
+    mask (:func:`_live`); pinned readers of older versions
     are untouched; :func:`optimize` folds tombstones away; the change
     feed emits the deleted rows exactly as a copy-on-write delete
     would.  Same optimistic-commit seam as every writer — and a LOST
@@ -1120,7 +1084,7 @@ def delete_where(spark: SparkSession, path: str, condition) -> int:
         raise TypeError("condition must be a Column or SQL string")
     parent, m = _head(path)
     version = parent + 1
-    # manifest-stats pruning BEFORE the match scan (VERDICT r10 #3): on
+    # manifest-stats pruning BEFORE the match scan: on
     # a spec-clustered table a keyed delete reads only the files whose
     # [min, max] overlap the predicate's bounds — the same skipping the
     # read path gets from read_version(prune=...), applied to the write
@@ -1131,7 +1095,7 @@ def delete_where(spark: SparkSession, path: str, condition) -> int:
     if not scan_files:
         return parent  # no file can contain a matching row
     matches = (
-        _effective_with_pos(spark, m, scan_files)
+        _live(spark, m, scan_files, pos=True)
         .filter(cond)
         .select(F.col("__file").alias("file"), F.col("__pos").alias("pos"))
     )
@@ -1156,8 +1120,8 @@ def delete_where(spark: SparkSession, path: str, condition) -> int:
 
 def delete_keys(spark: SparkSession, path: str, keys_df: DataFrame, key_cols) -> int:
     """Row-level DELETE by KEY as an EQUALITY-DELETE commit — writes the
-    key relation itself, with NO base-table scan at all (VERDICT r10
-    #6; Iceberg's equality deletes).  Returns the new version (the
+    key relation itself, with NO base-table scan at all (Iceberg's
+    equality deletes).  Returns the new version (the
     parent, unchanged, when ``keys_df`` is empty).
 
     Where :func:`delete_where` scans the (pruned) table to attribute
@@ -1227,7 +1191,7 @@ def delete_keys(spark: SparkSession, path: str, keys_df: DataFrame, key_cols) ->
                 if a is None:
                     continue
                 s = col.statistics
-                # date/datetime allowed since r14: staged key files are
+                # date/datetime allowed: staged key files are
                 # written via _write_parquet_micros, so timestamp stats
                 # come back as AWARE UTC instants and canonicalize
                 # exactly in _canon_stat_probe (naive ones degrade to
@@ -1263,9 +1227,9 @@ def delete_keys(spark: SparkSession, path: str, keys_df: DataFrame, key_cols) ->
         # probe values come from the STAGED key files, not from a
         # re-evaluation of the caller's plan — a nondeterministic
         # keys_df source could otherwise stage one key set and
-        # bloom-scope by another, silently losing deletes (code-review
-        # r12 finding); footer-sized pyarrow reads, zero Spark jobs.
-        # _bloom_scope hashes under the DECLARED key type (ADVICE r12)
+        # bloom-scope by another, silently losing deletes; footer-sized
+        # pyarrow reads, zero Spark jobs.  _bloom_scope hashes under the
+        # DECLARED key type
         for kc, p in zip(key_cols, phys):
             vals: list = []
             for f in eq_files:
@@ -1354,7 +1318,7 @@ def update_where(spark: SparkSession, path: str, condition, set_exprs: dict) -> 
     # one persist serves the tombstone write AND the updated images —
     # the snapshot is pinned so recompute would be consistent, but not
     # re-scanning the matched files twice is the point
-    matches = _effective_with_pos(spark, m, scan_files).filter(cond).persist()
+    matches = _live(spark, m, scan_files, pos=True).filter(cond).persist()
     try:
         mapping = _mapping(m)
         upd = matches.select(*[sets.get(c, F.col(c)).alias(c) for c in names])
@@ -1545,7 +1509,7 @@ def _file_stats(file_path: str) -> dict:
                 stats.pop(name, None)
                 continue
             if isinstance(lo, _datetime.datetime):
-                # epoch-micros ints (r14): recorded ONLY for columns the
+                # epoch-micros ints: recorded ONLY for columns the
                 # logical type marks isAdjustedToUTC — exact instants,
                 # so range/equality probes prune through the same
                 # [min, max] machinery (probe datetimes canonicalize via
@@ -1559,7 +1523,7 @@ def _file_stats(file_path: str) -> dict:
                 lo = _ts_to_micros(lo)
                 hi = _ts_to_micros(hi)
             if isinstance(lo, _datetime.date):
-                # epoch-day ints (r13): order-preserving, so date range
+                # epoch-day ints: order-preserving, so date range
                 # probes prune through the same [min, max] machinery
                 # (_files_passing canonicalizes probe dates the same way)
                 lo = lo.toordinal() - _EPOCH_DAY0
@@ -1585,7 +1549,7 @@ def _canon_stat_probe(v):
     session-timezone override), which callers treat as "skip this
     check" (superset guarantee)."""
     if isinstance(v, _datetime.datetime):
-        # epoch-micros ints (r14): aware datetimes are exact instants;
+        # epoch-micros ints: aware datetimes are exact instants;
         # naive ones canonicalize only when the session and OS zones
         # agree on the offset (the provenance rule of
         # ``bloomskip._resolve_naive_ts``) — ambiguous values make the
@@ -1685,7 +1649,7 @@ def _cluster_by_spec(
             # probe paths (_batch_bucket_memberships, _stat_checks)
             # evaluate under the declared type, so a castable-but-
             # narrower append batch (int key vs long column) must write
-            # bucket stats in the same hash domain (ADVICE r11)
+            # bucket stats in the same hash domain
             if schema is not None and t.source in {f.name for f in schema.fields}:
                 stype = schema[t.source].dataType.simpleString()
             else:
@@ -1719,8 +1683,8 @@ def partition_spec(path: str) -> dict:
 
 def set_partition_spec(path: str, cols, buckets: int | None = None) -> int:
     """Change the partition layout of FUTURE writes — a MANIFEST-ONLY
-    commit, zero bytes rewritten (VERDICT r8 #6; the Iceberg
-    spec-evolution axis after rename/drop/widen).
+    commit, zero bytes rewritten (the Iceberg spec-evolution
+    axis after rename/drop/widen).
 
     Subsequent :func:`commit_version` calls range-cluster their new
     files on ``cols`` (into ``buckets`` files when given, else the
@@ -1778,7 +1742,7 @@ def add_check_constraint(spark: SparkSession, path: str, name: str, expr: str) -
     version is recorded, and after the constraint file publishes, any
     commit that landed in the validate-to-publish window is
     RE-VALIDATED (rolling the constraint back on violation) until the
-    head is stable across the check (ADVICE r11 — the TOCTOU where a
+    head is stable across the check (closing the TOCTOU where a
     racing write was never gated).  Residual window: a write that read
     the constraint list before our publish and commits after the
     stability check; Delta closes it by carrying constraints in the
@@ -1822,7 +1786,7 @@ def add_check_constraint(spark: SparkSession, path: str, name: str, expr: str) -
     # rather than spinning O(table)-per-commit forever; ANY validation
     # failure (not just a violation — e.g. a racing drop_column making
     # the expr unresolvable) also rolls back, so the constraint can
-    # never survive over commits it did not validate (code-review r12).
+    # never survive over commits it did not validate.
     for _ in range(5):
         versions = list_versions(path)
         head_now = versions[-1] if versions else None
@@ -1911,7 +1875,7 @@ def _recheck_staged(
     now satisfy."""
     if not files or list_check_constraints(path) == checked:
         return checked
-    return _enforce_constraints(path, _load_files(spark, manifest, list(files)))
+    return _enforce_constraints(path, _live(spark, manifest, list(files)))
 
 
 def commit_version(
@@ -2147,7 +2111,7 @@ def _stage_and_publish_manifest(path: str, version: int, manifest: dict) -> None
     # tolerated by the reader's monotonic-by-version rule, never
     # "fixed" at write time (version order is the truth)
     manifest.setdefault("ts", time.time())
-    # delete-debt stats ride the manifest (VERDICT r11 #4): per
+    # delete-debt stats ride the manifest: per
     # referenced tombstone file, the {data file -> masked rows} counts
     # — inherited from the parent where known (tombstones are
     # immutable), footer-read once for new ones (the writer just wrote
@@ -2173,7 +2137,7 @@ def _stage_and_publish_manifest(path: str, version: int, manifest: dict) -> None
     # inherited from the parent for carried files (data files are
     # immutable), one os.stat for new ones — the metadata tables and
     # plan_maintenance then answer size questions with zero filesystem
-    # walks even after files are gone (r13)
+    # walks even after files are gone
     known_b: dict = dict(manifest.get("file_bytes") or {})
     if (set(manifest["files"]) - set(known_b)) and manifest.get("parent") is not None:
         try:
@@ -2191,7 +2155,7 @@ def _stage_and_publish_manifest(path: str, version: int, manifest: dict) -> None
     # table-level column statistics (ANALYZE) and table properties
     # persist until changed — inherited centrally like file_bytes so
     # full-manifest checkpoints cannot drop them and no writer can
-    # forget them (r14)
+    # forget them
     pm = None
     if manifest.get("parent") is not None:
         try:
@@ -2370,7 +2334,7 @@ def metadata_aggregate(
         if missing:
             raise ValueError(f"no columns {missing} (have {names})")
 
-    def _scan() -> dict:
+    def _fallback() -> dict:
         df = read_version(spark, path, v)
         aggs = [F.count(F.lit(1)).alias("__n")] + [
             g for c in cols for g in (F.min(c).alias(f"__lo_{c}"), F.max(c).alias(f"__hi_{c}"))
@@ -2384,12 +2348,12 @@ def metadata_aggregate(
         }
 
     if any(_eq_map(m).get(f) for f in files):
-        return _scan()
+        return _fallback()
     dvm = _delete_map(m)
     has_dv = any(dvm.get(f) for f in files)
     if has_dv:
         if cols:
-            return _scan()
+            return _fallback()
         rows_map0 = m.get("file_rows", {})
         live = sum(
             (rows_map0[f] if f in rows_map0 else _file_row_count(f)) for f in files
@@ -2406,9 +2370,9 @@ def metadata_aggregate(
     # fallback would discard; a legacy manifest without a recorded
     # schema cannot prove a column numeric, so it scans too
     if cols and schema is None:
-        return _scan()
+        return _fallback()
     if any(schema[c].dataType.typeName() not in _NUMERIC | _TEMPORAL for c in cols):
-        return _scan()
+        return _fallback()
     rows_map = m.get("file_rows", {})
     per_file_rows = {f: (rows_map[f] if f in rows_map else _file_row_count(f)) for f in files}
     count = sum(per_file_rows.values())
@@ -2423,7 +2387,7 @@ def metadata_aggregate(
             if st is None:
                 if per_file_rows[f] == 0:
                     continue  # an empty file contributes no extremes
-                return _scan()
+                return _fallback()
             bounds.append(st)
         clo = min((b[0] for b in bounds), default=None)
         chi = max((b[1] for b in bounds), default=None)
@@ -2432,7 +2396,7 @@ def metadata_aggregate(
             if not all(
                 isinstance(b[0], int) and isinstance(b[1], int) for b in bounds
             ):
-                return _scan()  # older manifests' stats in a foreign domain
+                return _fallback()  # older manifests' stats in a foreign domain
             # pyspark's own fromInternal — the exact value a scan's
             # collect() hands back for the same extreme row
             clo, chi = (
@@ -2537,7 +2501,7 @@ def read_version(
         raise FileNotFoundError(f"version {v} is empty")
     # merge-on-read: files with deletion vectors anti-join their
     # tombstones; a DV-free snapshot takes the identical plan as before
-    return _effective_rows(spark, m, files)
+    return _live(spark, m, files)
 
 
 def register_versioned_view(
@@ -2632,7 +2596,7 @@ def register_versioned_view(
 
 def _register_metadata_views(spark: SparkSession, path: str, name: str, v: int) -> None:
     """The full operability surface as SQL views next to the data view
-    (``metadata_tables=True``, r13): ``<name>_files`` / ``_refs`` /
+    (``metadata_tables=True``): ``<name>_files`` / ``_refs`` /
     ``_partitions`` / ``_eq_deletes`` / ``_blooms`` — so a SQL-only
     session can answer "how much delete debt", "which buckets are
     skewed", "what still needs build_blooms" without touching the
@@ -2792,20 +2756,24 @@ def diff_versions(
         f for f in f_from & f_to
         if sorted(eqa_to.get(f, [])) != sorted(eqa_from.get(f, []))
     )
-    # shared files whose deletion-vector list GREW between the snapshots
-    # (tombstones only accumulate on a live file; shrinking happens via
-    # OPTIMIZE/overwrite, which replace the file — the added/removed
-    # paths): their delta is exactly the rows at the newly-masked
-    # positions, read back at O(new tombstones + affected files).
-    # eq-changed files are excluded — the generic path covers their
-    # positional growth too.
-    newly_masked: dict[str, set[str]] = {}
+    # shared files whose deletion-vector list CHANGED between the
+    # snapshots: a tombstone only v_to carries masks rows that were live
+    # at v_from (deletes); one only v_from carries — a restore to an
+    # older snapshot, or a diff run backwards — masked rows that are
+    # live again at v_to (inserts).  Either delta is exactly the rows at
+    # those positions, read back at O(those tombstones + affected
+    # files).  eq-changed files are excluded — the generic path covers
+    # their positional changes too.
+    gained: dict[str, set[str]] = {}
+    lost: dict[str, set[str]] = {}
     for f in sorted((f_from & f_to) - set(eq_changed)):
-        extra = set(dv_to.get(f, [])) - set(dv_from.get(f, []))
-        if extra:
-            newly_masked[f] = extra
+        a, b = set(dv_from.get(f, [])), set(dv_to.get(f, []))
+        if b - a:
+            gained[f] = b - a
+        if a - b:
+            lost[f] = a - b
 
-    def _eff(files: list[str], dv: dict, eqa: dict, eqd: dict) -> DataFrame | None:
+    def _rows(files: list[str], masks: dict, pos: bool = False) -> DataFrame | None:
         if not files:
             return None
         # both sides through the v_to manifest: its schema AND mapping
@@ -2813,46 +2781,31 @@ def diff_versions(
         # are invisible on both sides) — but each side's OWN delete
         # masks, positional and equality (a removed file's masked rows
         # were never live at v_from and must not surface as deletes)
-        return _diff_scan_cap(
-            _effective_rows(
-                spark,
-                {**m_to, "delete_files": dv, "eq_applies": eqa, "eq_deletes": eqd},
-                files,
-            ),
-            files,
-        )
+        own = {k: masks.get(k, {}) for k in ("delete_files", "eq_applies", "eq_deletes")}
+        return _diff_scan_cap(_live(spark, {**m_to, **own}, files, pos), files)
 
-    new_rows = _eff(added + eq_changed, dv_to, eqa_to, _eq_entries(m_to))
-    old_rows = _eff(removed + eq_changed, dv_from, eqa_from, _eq_entries(m_from))
+    def _at(marks: dict[str, set[str]], masks: dict) -> DataFrame:
+        # the rows AT the marked positions — kept by a semi-join with
+        # just those tombstones' rows for these files — under ``masks``
+        nm = sorted(marks)
+        tombs = {t for ts in marks.values() for t in ts}
+        tomb = _mask(spark, tombs, scope={t: [f for f in nm if t in marks[f]] for t in tombs})
+        rows = _rows(nm, masks, pos=True)
+        return rows.join(
+            tomb, (rows["__file"] == tomb["file"]) & (rows["__pos"] == tomb["pos"]), "left_semi"
+        ).drop("__file", "__pos")
+
+    def _plus(df: DataFrame | None, more: DataFrame) -> DataFrame:
+        return more if df is None else df.unionByName(more)
+
+    new_rows = _rows(added + eq_changed, m_to)
+    old_rows = _rows(removed + eq_changed, m_from)
     from pyspark.sql import functions as F
 
-    if newly_masked:
-        parts_t = []
-        for t in sorted({t for ts in newly_masked.values() for t in ts}):
-            valid = [f for f, ts in newly_masked.items() if t in ts]
-            parts_t.append(
-                spark.read.schema(_DELETE_SCHEMA).parquet(t)
-                .filter(F.col("file").isin(valid))
-            )
-        tomb = parts_t[0]
-        for p in parts_t[1:]:
-            tomb = tomb.unionByName(p)
-        all_t = {t for ts in newly_masked.values() for t in ts}
-        if sum(os.path.getsize(t) for t in all_t) < (32 << 20):
-            tomb = F.broadcast(tomb)
-        rows = _diff_scan_cap(
-            _load_physical_with_pos(spark, m_to, sorted(newly_masked)),
-            sorted(newly_masked),
-        )
-        dv_deleted = _to_logical(
-            rows.join(
-                tomb,
-                (rows["__file"] == tomb["file"]) & (rows["__pos"] == tomb["pos"]),
-                "left_semi",
-            ).drop("__file", "__pos"),
-            m_to,
-        )
-        old_rows = dv_deleted if old_rows is None else old_rows.unionByName(dv_deleted)
+    if gained:  # live at v_from by construction: read unmasked
+        old_rows = _plus(old_rows, _at(gained, {}))
+    if lost:  # through v_to's other masks, which may still hide them
+        new_rows = _plus(new_rows, _at(lost, m_to))
     if new_rows is None and old_rows is None:
         raise ValueError(f"versions {v_from} and {v_to} share all files — empty diff")
 
@@ -2867,6 +2820,36 @@ def diff_versions(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
+
+
+def _commit_delta(spark: SparkSession, path: str, v: int) -> DataFrame | None:
+    """Commit ``v``'s row-level delta against its parent — the
+    :func:`diff_versions` relation, ``change`` column and all; a table's
+    first commit contributes its rows as inserts.  ``None`` for a commit
+    that changes no rows, decided from the two manifests alone (no data
+    page read): one that leaves the file set, the deletion vectors and
+    the equality-delete scope as its parent had them (renames, spec,
+    constraint and property edits, ``analyze_table``), or an
+    ``optimize``, whose rewrite preserves content (``diff_versions``
+    over it is empty — pinned by test_optimize_folds_deletion_vectors)
+    and would otherwise be re-read in full to prove it."""
+    from pyspark.sql import functions as F
+
+    m = _read_manifest(path, v)
+    pm = _read_manifest(path, v - 1) if v > 1 else {"files": []}
+    if m.get("mode") == "optimize" or (
+        sorted(pm["files"]) == sorted(m["files"])
+        and _delete_map(pm) == _delete_map(m)
+        and _eq_map(pm) == _eq_map(m)
+    ):
+        return None
+    if v == 1:
+        # capped like any other diff side: the manifest names the
+        # commit's files
+        return _diff_scan_cap(_live(spark, m, m["files"]), m["files"]).withColumn(
+            "change", F.lit("insert")
+        )
+    return diff_versions(spark, path, v - 1, v)
 
 
 def table_changes(
@@ -2899,9 +2882,12 @@ def table_changes(
     (``table_changes(t, 1)`` replays the table from its creation —
     commit 1's changes are the initial rows as inserts), ``v_to``
     defaults to the head, and either endpoint may be a named ref.
-    Metadata-only commits (renames, spec changes, constraint edits,
-    ``add_column``) contribute nothing, by file-set comparison — no
-    data pages are read to discover that.
+    One skip rule, shared with :func:`change_feed_fold`
+    (:func:`_commit_delta`): a commit that leaves the file set,
+    deletion vectors and equality-delete scope unchanged (renames, spec
+    changes, constraint and property edits, ``add_column``) or an
+    ``optimize`` (a content-preserving rewrite) contributes nothing —
+    decided from manifests, no data pages are read to discover that.
 
     Scale: each step is a :func:`diff_versions` call — O(that commit's
     changed files), never O(table) — and steps union lazily into one
@@ -2934,23 +2920,9 @@ def table_changes(
 
     steps = []
     for v in range(v_from, v_to + 1):
-        m_prev = _read_manifest(path, v - 1) if v > 1 else {"files": []}
-        m_cur = _read_manifest(path, v)
-        if (
-            sorted(m_prev["files"]) == sorted(m_cur["files"])
-            and _delete_map(m_prev) == _delete_map(m_cur)
-            and _eq_map(m_prev) == _eq_map(m_cur)
-        ):
-            continue  # metadata-only commit — nothing happened to rows
-        if v == 1:
-            # commit 1's "diff" is the table's initial rows; cap its
-            # task count like any other diff side (the v1 manifest
-            # names the commit's files)
-            d = _diff_scan_cap(
-                read_version(spark, path, version=1), m_cur["files"]
-            ).withColumn("change", F.lit("insert"))
-        else:
-            d = diff_versions(spark, path, v - 1, v)
+        d = _commit_delta(spark, path, v)
+        if d is None:
+            continue
         if keys:
             missing = [k for k in keys if k not in d.columns]
             if missing:
@@ -3116,8 +3088,7 @@ def analyze_table(
     column statistics (NDV, null count, string/binary byte lengths) in
     ONE aggregate pass over the head snapshot, recorded as a
     METADATA-ONLY commit that every later commit inherits until the
-    next ANALYZE (Delta keeps ANALYZE output the same way; the r14
-    operability axis).
+    next ANALYZE (Delta keeps ANALYZE output the same way).
 
     ``mode='approx'`` (default) computes NDV with HyperLogLog++
     (``approx_count_distinct``, ``rsd`` relative error) — one scan,
@@ -3556,7 +3527,7 @@ def vacuum(
     writer is still staging (same retention idea as Delta's vacuum
     grace period).
 
-    ``dry_run=True`` (Delta's ``VACUUM … DRY RUN``, r14) returns the
+    ``dry_run=True`` (Delta's ``VACUUM … DRY RUN``) returns the
     files the SAME retention/ownership/orphan rules would delete —
     touching nothing: no file removed, no dead manifest dropped, no
     delta materialized.  One rule, two modes — the estimate can never
@@ -3837,7 +3808,7 @@ def read_staged(spark: SparkSession, path: str, wap_id: str) -> DataFrame:
     if not m["files"]:
         schema = _logical_schema(m)
         return spark.createDataFrame([], schema)
-    return _effective_rows(spark, m, m["files"])
+    return _live(spark, m, m["files"])
 
 
 def publish_staged(spark: SparkSession, path: str, wap_id: str) -> int:
@@ -3861,7 +3832,7 @@ def publish_staged(spark: SparkSession, path: str, wap_id: str) -> int:
     # but a CHECK attached between stage and publish must still gate
     # the fast-forward (the staged bytes predate it)
     if new_files and list_check_constraints(path):
-        _enforce_constraints(path, _load_files(spark, m, new_files), _logical_schema(m))
+        _enforce_constraints(path, _live(spark, m, new_files), _logical_schema(m))
     # an entry staged without batch_schema re-binds its whole staged schema
     batch = StructType.fromJson(json.loads(wap.get("batch_schema", m["schema"])))
     phys = {f.name: _physical(m, f.name) for f in batch.fields}
@@ -4069,8 +4040,7 @@ def _follow_bloom_coverage(spark, path: str, replaced_files, pm: dict) -> list[s
     """Rebuild bloom sidecars after a REWRITE replaced covered files —
     the one hook every rewriter (OPTIMIZE, copy-on-write merge) shares,
     so no rewrite path can silently erode point-lookup pruning
-    (code-review r12: the fix belongs on the rewrite seam, not on one
-    caller).  Columns = union of the replaced files' indexed columns
+    (the fix belongs on the rewrite seam, not on one caller).  Columns = union of the replaced files' indexed columns
     (params-only sidecar reads, no bitset decode), mapped back to
     logical names still in the schema; the incremental
     :func:`bloomskip.build_blooms` then covers exactly the uncovered
@@ -4210,33 +4180,15 @@ def optimize(
     rw = set(rewrite)
     kept = [f for f in files if f not in rw]
     spec_id, spec_now = _current_spec(m)
-    # read AND rewrite under PHYSICAL names: rewritten files must stay
-    # consistent with the table's one mapping, so the rewrite never
-    # aliases — only the zorder key names translate logical->physical
-    reader = spark.read
-    schema = _logical_schema(m)
-    if schema is not None:
-        from pyspark.sql.types import StructField
-
-        mp = _mapping(m)
-        reader = reader.schema(
-            StructType(
-                [StructField(mp.get(f.name, f.name), f.dataType, f.nullable) for f in schema.fields]
-            )
-        )
-    dirty = [f for f in rewrite if dvmap.get(f) or eqmap.get(f)]
-    if dirty:
-        # fold: the rewrite reads the EFFECTIVE rows (tombstoned
-        # positions AND equality-deleted keys masked), so the new
-        # files carry no delete debt of either kind
-        raw = _load_physical_with_pos(spark, m, rewrite)
-        pos_tombs = {t for f in dirty for t in dvmap.get(f, [])}
-        if pos_tombs:
-            raw = _anti_join_positions(raw, _read_tombstones(spark, pos_tombs))
-        raw = _apply_eq_masks(spark, m, raw, rewrite)
-        df = raw.drop("__file", "__pos")
-    else:
-        df = reader.parquet(*rewrite)
+    # fold: the rewrite reads the LIVE rows (tombstoned positions AND
+    # equality-deleted keys masked), so the new files carry no delete
+    # debt of either kind — and writes them back under PHYSICAL names:
+    # rewritten files must stay consistent with the table's one mapping,
+    # so only the zorder key names translate logical->physical
+    df = _live(spark, m, rewrite)
+    mp = _mapping(m)
+    if mp:
+        df = df.select(*[F.col(c).alias(mp.get(c, c)) for c in df.columns])
     zorder_logical = list(zorder) if zorder else []
     if zorder:
         zorder = [_physical(m, c) for c in zorder]
@@ -4407,7 +4359,7 @@ def merge_versioned(
     v = commit_version(merged, path, mode="overwrite")
     if replaced and pm is not None:
         # the overwrite replaced every covered file — bloom coverage
-        # follows the rewrite, same hook as OPTIMIZE (code-review r12)
+        # follows the rewrite, same hook as OPTIMIZE
         _follow_bloom_coverage(spark, path, replaced, pm)
     return v
 
@@ -4480,7 +4432,7 @@ def merge_on_read(
     version = parent + 1
     schema = _logical_schema(m)
     if schema is None:  # legacy manifest without a recorded schema
-        schema = _load_files(spark, m, m["files"][:1]).schema
+        schema = _scan(spark, m, m["files"][:1]).schema
     # one cache serves the uniqueness check, the bounds/count agg, and
     # every join below — without it the change plan re-evaluates per use
     src = changes.persist()
@@ -4537,7 +4489,7 @@ def merge_on_read(
                     scan_files = _bloom_scope(m, scan_files, kc, vals)
         # an all-pruned scan still needs a base relation for the hit
         # set — read (at most) one file's plan, it matches zero keys
-        base = _effective_with_pos(spark, m, scan_files or m["files"][:1])
+        base = _live(spark, m, scan_files or m["files"][:1], pos=True)
 
         # positions to tombstone: every live base row whose key the change
         # set touches (an update's old image and a delete both die here);
@@ -4602,7 +4554,7 @@ def merge_on_read(
                 memberships_h = _batch_bucket_memberships(hm, cs.changes, keys)
                 probed = _prune_files_by_bounds(hm, head_new, bounds, memberships_h)
                 if probed:
-                    racer = _effective_with_pos(spark, hm, probed)
+                    racer = _live(spark, hm, probed, pos=True)
                     racer_touched = racer.join(cs.hint(cs.touched), keys, "left_semi").persist()
                     try:
                         tomb2 = racer_touched.select(
@@ -4613,10 +4565,7 @@ def merge_on_read(
                         # insert) is stale — tombstone it and restage a
                         # corrected image over the racer's values
                         corrected = _merge_images(racer_touched, cs, schema, inserts=False)
-                        staged_rows = _to_logical(
-                            _load_physical_with_pos(spark, m, new_files), m,
-                            extra=("__file", "__pos"),
-                        )
+                        staged_rows = _live(spark, m, new_files, pos=True)
                         stale = staged_rows.join(
                             cs.hint(corrected.select(*keys).distinct()), keys, "left_semi"
                         ).select(F.col("__file").alias("file"), F.col("__pos").alias("pos"))
@@ -4668,7 +4617,7 @@ def merge_on_read(
 
 def stream_version_events(spark: SparkSession, path: str) -> DataFrame:
     """Streaming CHANGE-DATA-FEED source over a versioned table — the
-    commit stream (VERDICT r8 #3): a ``readStream`` that tails the
+    commit stream: a ``readStream`` that tails the
     manifest chain and emits one row ``(version, parent, mode)`` per
     NEW commit.  Downstream incremental consumers (the N23 view
     maintainer) subscribe to this instead of re-diffing the table.
@@ -4702,48 +4651,23 @@ def change_feed_fold(path: str, apply_delta):
     out so delta ordering/skip rules are directly testable).
 
     For each new manifest (in version order — a micro-batch may carry
-    several commits), computes the row-level delta of that commit and
-    hands it to ``apply_delta(delta_df, version)``:
-
-    - first version → the full snapshot as ``change='insert'`` rows;
-    - data commits → :func:`diff_versions` (parent, v): inserts +
-      deletes, an update arriving as the delete+insert pair;
-    - metadata-only commits (rename/drop/widen) and commits that share
-      every file with their parent → skipped (no row delta by
-      definition);
-    - ``optimize`` → skipped as well: it is a logical no-op
-      (``diff_versions`` over it is empty — tested in
-      test_versioned.py) and computing that emptiness would read all
-      rewritten bytes for nothing.
+    several commits), hands that commit's row-level delta
+    (:func:`_commit_delta`) to ``apply_delta(delta_df, version)``: the
+    first version as the full snapshot of ``change='insert'`` rows,
+    every later commit as :func:`diff_versions` (parent, v) — inserts
+    and deletes, an update arriving as the delete+insert pair.  One
+    skip rule, shared with :func:`table_changes`: a commit that leaves
+    the file set, deletion vectors and equality-delete scope unchanged
+    (whatever its mode), or an ``optimize`` (a content-preserving
+    rewrite), changes no rows and is skipped without reading data.
     """
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         spark = batch_df.sparkSession
-        rows = sorted(
-            batch_df.select("version", "parent", "mode").collect(),
-            key=lambda r: r["version"],
-        )
-        for r in rows:
-            v, parent, mode = r["version"], r["parent"], r["mode"]
-            if mode in ("rename", "drop", "widen", "set-spec", "optimize"):
-                continue
-            if parent is None:
-                delta = read_version(spark, path, v).withColumn(
-                    "change", F.lit("insert")
-                )
-            else:
-                try:
-                    delta = diff_versions(spark, path, parent, v)
-                except ValueError as e:
-                    # ONLY the documented empty-delta signal is a skip;
-                    # any other ValueError is a real failure and must
-                    # not be silently treated as 'no changes'
-                    if "share all files" not in str(e):
-                        raise
-                    continue
-            apply_delta(delta, v)
+        for v in sorted(r["version"] for r in batch_df.select("version").collect()):
+            delta = _commit_delta(spark, path, v)
+            if delta is not None:
+                apply_delta(delta, v)
 
     return _fold
 
@@ -4765,6 +4689,11 @@ def stream_changes_sink(
     exactly-once end-to-end.  ``events`` is
     :func:`stream_version_events`'s stream.  Returns the
     StreamingQuery.
+
+    Commits that change no rows are skipped by the one rule
+    :func:`change_feed_fold` shares with :func:`table_changes`: the
+    file set, deletion vectors and equality-delete scope are the
+    parent's, or the commit is an ``optimize``.
 
     The 100 TB shape: per commit the consumer reads only the files
     present in exactly one of the two snapshots — under copy-on-write

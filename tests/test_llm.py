@@ -929,20 +929,6 @@ def test_tokenize_vocab_char_fallback(spark):
     assert ids == [100, UNK_ID, 1, UNK_ID, 3, 30, 20]
 
 
-def test_tokenize_vocab_modes_agree(spark, docs, monkeypatch):
-    from fdf_spark.llm import tokenize
-    from fdf_spark.llm.tokenize import tokenize_vocab
-
-    vocab = {**{chr(c): c - 96 for c in range(97, 123)},
-             **{chr(c): c - 21 for c in range(48, 58)},
-             "the": 100, "table": 101, "query": 102}
-    monkeypatch.setattr(tokenize, "_ARROW_MIN_VOCAB", len(vocab) + 1)
-    a = {r.doc_id: list(r.token_ids) for r in tokenize_vocab(docs, vocab).collect()}
-    monkeypatch.setattr(tokenize, "_ARROW_MIN_VOCAB", len(vocab))
-    b = {r.doc_id: list(r.token_ids) for r in tokenize_vocab(docs, vocab).collect()}
-    assert a == b and any(100 in v for v in a.values())
-
-
 def test_assign_modes_agree_and_kmeans_arrow(spark, emb):
     # cell assignment must keep the retired expression argmin's answer
     # (sequential dot/norm order, half-away rounding, tie-to-smaller-id)
@@ -3445,6 +3431,25 @@ def test_lsh_sig_modes_agree(spark, emb):
         for r in lsh_ann_topk(qs, emb, k=5).collect()
     ]
     assert len(rel) == 35 and _digest(rel) == "a836860743810f53"
+
+
+def test_lsh_rejects_vectors_wider_than_dim(spark):
+    # a 64-d query against a 128-d corpus whose rows agree on their first
+    # 64 components: folding only that prefix gave every corpus row the
+    # same signatures and returned rows; the kernel must refuse instead
+    from pyspark.sql.utils import PythonException
+
+    from fdf_spark.llm.similarity import lsh_ann_topk
+
+    head = [float(i % 7) for i in range(64)]
+    corpus = spark.createDataFrame(
+        [(i, head + [float(i)] * 64) for i in range(6)], "vec_id long, embedding array<double>"
+    )
+    queries = spark.createDataFrame(
+        [(i, head) for i in range(3)], "query_id long, query_vec array<double>"
+    )
+    with pytest.raises(PythonException, match="ValueError: embedding: vectors have 128 values; dim is 64"):
+        lsh_ann_topk(queries, corpus, k=3).collect()
 
 
 def test_gram_hash_modes_agree_adversarial(spark):

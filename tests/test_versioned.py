@@ -4,6 +4,7 @@ travel, snapshot isolation, atomic publish, vacuum, merge-as-commit."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import Row
@@ -2411,6 +2412,135 @@ def test_table_changes_refs_timestamps_and_empty_range(spark, tmp_path):
         table_changes(spark, p, 3, 2)
     with pytest.raises(ValueError):
         table_changes(spark, p, 0, 2)
+
+
+def test_table_changes_restore_unmasks_deleted_rows(spark, tmp_path):
+    # a restore to the snapshot before a merge-on-read delete keeps every
+    # file and drops the tombstone: the deleted rows are live again, and
+    # the feed shows them as inserts, batch and streaming fold alike
+    from fdf_spark.sources.versioned import (
+        change_feed_fold,
+        delete_where,
+        restore_table,
+        table_changes,
+    )
+
+    p = str(tmp_path / "t")
+    commit_version(_df(spark, 0, 10), p)                         # v1
+    delete_where(spark, p, "k < 3")                              # v2
+    restore_table(p, version=1)                                  # v3
+    feed = table_changes(spark, p, 3)
+    want = [(0, "insert"), (1, "insert"), (2, "insert")]
+    assert sorted((r["k"], r["_change_type"]) for r in feed.collect()) == want
+    seen = []
+    fold = change_feed_fold(p, lambda d, v: seen.append((v, sorted((r["k"], r["change"]) for r in d.collect()))))
+    fold(spark.createDataFrame([(3, 2, "overwrite")], "version long, parent long, mode string"), 0)
+    assert seen == [(3, want)]
+
+
+def test_change_feed_fold_skips_metadata_commits_of_any_mode(spark, tmp_path):
+    # the skip rule reads manifests, not mode names: property edits and
+    # ANALYZE (modes no name list ever held) contribute no delta, and
+    # the data commits around them still arrive in version order
+    from fdf_spark.sources.versioned import (
+        _read_manifest,
+        analyze_table,
+        change_feed_fold,
+        set_properties,
+    )
+
+    p = str(tmp_path / "t")
+    commit_version(_df(spark, 0, 5), p)                          # v1
+    set_properties(p, {"owner": "etl"})                          # v2
+    analyze_table(spark, p, ["k"])                               # v3
+    commit_version(_df(spark, 5, 7), p)                          # v4
+    modes = [_read_manifest(p, v)["mode"] for v in (2, 3)]
+    assert modes == ["set-properties", "analyze"]
+    seen = []
+    fold = change_feed_fold(p, lambda d, v: seen.append((v, sorted(map(tuple, d.collect())))))
+    events = spark.createDataFrame(
+        [(v, v - 1 if v > 1 else None, _read_manifest(p, v)["mode"]) for v in (4, 3, 2, 1)],
+        "version long, parent long, mode string",
+    )
+    fold(events, 0)
+    assert [v for v, _ in seen] == [1, 4]
+    assert seen[1][1] == [(5, 10, "insert"), (6, 12, "insert")]
+
+
+def test_table_changes_skips_optimize_without_reading_it(spark, tmp_path):
+    # an OPTIMIZE commit preserves content: the feed over a range that
+    # holds one has exactly the rows of the commits around it (the
+    # optimize's own diff is empty), and no file it wrote is scanned
+    from fdf_spark.sources.versioned import (
+        _read_manifest,
+        delete_where,
+        diff_versions,
+        optimize,
+        table_changes,
+    )
+
+    p = str(tmp_path / "t")
+    commit_version(_df(spark, 0, 10).repartition(2), p)          # v1
+    delete_where(spark, p, "k < 3")                              # v2: tombstones
+    res = optimize(spark, p, target_bytes=1 << 20, small_bytes=1)  # v3: folds them
+    commit_version(_df(spark, 100, 102), p)                      # v4
+    assert res["version"] == 3 and diff_versions(spark, p, 2, 3).count() == 0
+    written = set(_read_manifest(p, 3)["files"]) - set(_read_manifest(p, 2)["files"])
+    assert written
+    feed = table_changes(spark, p, 2, 4)
+    scanned = {re.sub(r"^[a-z]+:/+", "/", f) for f in feed.inputFiles()}
+    assert scanned and not scanned & written
+    got = sorted((r["k"], r["_change_type"], r["_commit_version"]) for r in feed.collect())
+    assert got == [
+        (0, "delete", 2), (1, "delete", 2), (2, "delete", 2),
+        (100, "insert", 4), (101, "insert", 4),
+    ]
+
+
+def test_versioned_reads_use_the_scan_seam():
+    # every data-file read in the versioned-table sources goes through
+    # _scan (the one physical read schema) and every delete-mask read
+    # through _mask (the one broadcast gate); the other StructFields are
+    # the logical-schema edits.  change_feed_fold keeps no mode-name
+    # list and matches no error text
+    import ast
+    from collections import Counter
+    from pathlib import Path
+
+    import fdf_spark
+
+    root = Path(fdf_spark.__file__).parent / "sources"
+    found = Counter()
+    for name in ("versioned.py", "bloomskip.py"):
+        for fn in ast.parse((root / name).read_text()).body:
+            if not isinstance(fn, ast.FunctionDef) or fn.name == "_write_parquet_micros":
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Call):
+                    f = node.func
+                    attr = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                    if attr in ("StructField", "parquet", "broadcast"):
+                        found[(name, fn.name, attr)] += 1
+    assert found == Counter({
+        ("versioned.py", "_scan", "StructField"): 1,
+        ("versioned.py", "_scan", "parquet"): 1,
+        ("versioned.py", "_mask", "parquet"): 3,
+        ("versioned.py", "_mask", "broadcast"): 1,
+        ("versioned.py", "rename_column", "StructField"): 1,
+        ("versioned.py", "add_column", "StructField"): 1,
+        ("versioned.py", "widen_column", "StructField"): 1,
+    })
+    fold = next(
+        n for n in ast.walk(ast.parse((root / "versioned.py").read_text()))
+        if isinstance(n, ast.FunctionDef) and n.name == "change_feed_fold"
+    )
+    for node in ast.walk(fold):
+        assert not isinstance(node, (ast.Try, ast.ExceptHandler)), "fold catches an error"
+        if isinstance(node, ast.Compare):
+            for c in node.comparators:
+                assert not isinstance(c, (ast.Tuple, ast.List, ast.Set)), "fold tests a mode list"
+        if isinstance(node, ast.Call):
+            assert getattr(node.func, "id", None) != "str", "fold matches an error message"
 
 
 # ---------------------------------------------------------------------------
